@@ -34,19 +34,6 @@ def mi_from_contingency(table: np.ndarray, unit: str = "bit") -> float:
     return mi / log_base
 
 
-def entropy_from_counts(counts: np.ndarray, unit: str = "nat") -> float:
-    """H from a 1-D count vector (guarded log, natural units by default)."""
-    n = counts.sum()
-    if n <= 0:
-        return 0.0
-    p = counts.astype(np.float64) / n
-    p = p[p > _EPS_MI]
-    h = float(-np.sum(p * np.log(p)))
-    if unit == "bit":
-        h /= math.log(2.0)
-    return h
-
-
 def chi2_stats_from_observed(
     observed: np.ndarray, class_freqs: np.ndarray, n_samples: float
 ) -> np.ndarray:

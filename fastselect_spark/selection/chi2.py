@@ -61,14 +61,3 @@ def chi2(
     pvals = chi2_sf(stats, dof=n_classes - 1)
     return stats, pvals
 
-
-def chi2_df(
-    df: DataFrame, feature_cols: list[str], label_col: str = "label"
-) -> "DataFrame":
-    """DataFrame-returning variant (feature, chi2, p_value) for pipelines."""
-    stats, pvals = chi2(df, feature_cols, label_col)
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(c, float(s), float(pv)) for c, s, pv in zip(feature_cols, stats, pvals)],
-        schema="feature string, chi2 double, p_value double",
-    )

@@ -9,21 +9,50 @@ Criterion:
 i.e. a candidate is worth what it still tells you about the label after
 conditioning on its most-redundant already-selected partner. By the chain
 rule  I(f;Y|s) = I((f,s);Y) - I(s;Y),  so the whole selection runs off the
-SAME single-pass joint tables JMI builds (``jmi._joint_tables``: one
-groupBy-all-columns cube, or the melt fallback above the cell cap) — zero
-extra cluster work, driver-side greedy loop. Seed = argmax I(X_f; Y);
-ties break to the lowest feature index (strict ``>`` update, ascending
-scan), matching the mRMR tie-break convention.
+SAME joint-MI statistics JMI uses (``jmi.joint_mi_matrices`` over
+``jmi._joint_tables``: one value cube, or the melt fallback above the cell
+cap) — zero extra cluster work. The greedy loop (:func:`cmim_loop`) is
+shared with the wide-matrix ``cmim_select_matrix``. Seed = argmax
+I(X_f; Y); ties break to the lowest feature index, matching the mRMR
+tie-break convention.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 from pyspark.sql import DataFrame
 
-from fastselect_spark.selection._stats import mi_from_contingency
 from fastselect_spark.selection._validate import validate_transform_input
-from fastselect_spark.selection.jmi import _joint_tables
+from fastselect_spark.selection.jmi import joint_mi_matrices
+
+
+def cmim_loop(
+    relevance: np.ndarray,
+    column: Callable[[int, np.ndarray], np.ndarray],
+    n_select: int,
+) -> list[int]:
+    """The CMIM greedy loop. ``column(s, cand)`` returns I((X_f, X_s); Y)
+    for every f in ``cand``, the candidates still unselected after s was
+    picked; the running min needs exactly one new column per step."""
+    p = len(relevance)
+    if not (0 < n_select <= p):
+        raise ValueError("n_select out of range")
+    selected = [int(np.argmax(relevance))]
+    remaining = np.ones(p, dtype=bool)
+    remaining[selected[0]] = False
+    score = np.full(p, np.inf, dtype=np.float64)
+    while len(selected) < n_select:
+        s = selected[-1]
+        cand = np.where(remaining)[0]
+        # I(f;Y|s) = I((f,s);Y) - I(s;Y)
+        col = column(s, cand) - relevance[s]
+        score[cand] = np.minimum(score[cand], col)
+        best = int(cand[np.argmax(score[cand])])
+        selected.append(best)
+        remaining[best] = False
+    return selected
 
 
 def cmim_select(
@@ -35,33 +64,8 @@ def cmim_select(
 ) -> list[int]:
     """Greedy CMIM selection; returns selected feature INDICES in pick
     order. One distributed pass (shared with JMI), then a driver loop."""
-    p = len(feature_cols)
-    if not (0 < n_select <= p):
-        raise ValueError("n_select out of range")
-    rel_t, pair_t, k, ky = _joint_tables(df, feature_cols, label_col)
-    relevance = np.array(
-        [mi_from_contingency(rel_t[f], unit=unit) for f in range(p)]
-    )
-    pairs = [(i, j) for i in range(p) for j in range(i + 1, p)]
-    joint_mi = np.zeros((p, p))
-    for n, (i, j) in enumerate(pairs):
-        m = mi_from_contingency(pair_t[n], unit=unit)
-        joint_mi[i, j] = joint_mi[j, i] = m
-
-    # I(f;Y|s) = I((f,s);Y) - I(s;Y)
-    cond_mi = joint_mi - relevance[None, :]
-
-    selected = [int(np.argmax(relevance))]
-    while len(selected) < n_select:
-        best, best_score = -1, -np.inf
-        for f in range(p):
-            if f in selected:
-                continue
-            score = float(min(cond_mi[f, s] for s in selected))
-            if score > best_score:
-                best_score, best = score, f
-        selected.append(best)
-    return selected
+    relevance, joint_mi = joint_mi_matrices(df, feature_cols, label_col, unit)
+    return cmim_loop(relevance, lambda s, cand: joint_mi[cand, s], n_select)
 
 
 class CMIMSelector:

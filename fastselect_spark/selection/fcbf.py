@@ -5,7 +5,8 @@ SU(f; Y), then remove every feature that has a *predominant* selected
 feature more correlated with it than it is with the label.
 
 Distributed strategy: ONE pass builds the joint tables (reusing
-``jmi._joint_tables`` — cube-first, melt fallback); SU(f;Y) comes from each
+``jmi._joint_tables`` — one value cube, or the melt fallback above the cell
+cap); SU(f;Y) comes from each
 feature's class contingency and SU(fi;fj) from the pair table marginalized
 over the label. The scalar SU is ``cfs.symmetrical_uncertainty`` — the same
 function CFS's oracle-verified merit uses, so the two filters are

@@ -9,51 +9,50 @@ JMI criterion (Yang & Moody 1999; Brown et al. 2012 framework):
 i.e. a candidate is scored by the joint information its pairing with each
 already-selected feature carries about the label. Seed = argmax I(X_f; Y).
 
-Distributed strategy: ONE pass builds every pairwise joint histogram
-count[(i, j), x_i, x_j, y] for i<j (same melt + hash-aggregation shape as
-``mi.mi_matrices(impl='sql')``, fused code = (x_i*k + x_j)*k_y + y);
-relevance I(X_f; Y) reuses the same pass. The greedy loop then runs on the
-driver over the merged tables — no cluster round-trips per step.
+Distributed strategy: ONE value cube (``mi.value_cube``) marginalized into
+every pairwise joint histogram count[(i, j), x_i, x_j, y] for i<j (fused
+code = (x_i*k + x_j)*k_y + y), with separate feature and label
+vocabularies; relevance I(X_f; Y) reuses the same pass. Above the cube's
+cell cap, one melt + hash aggregation builds the same integer tables. The
+greedy loop (:func:`jmi_loop`, shared with the wide-matrix
+``jmi_select_matrix``) then runs on the driver — no cluster round-trips
+per step.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastselect_spark.selection._stats import mi_from_contingency
-from fastselect_spark.selection.mi import MAX_STATES, shared_vocabulary
+from fastselect_spark.selection.mi import (
+    _pair_index,
+    check_states,
+    shared_vocabulary,
+    value_cube,
+)
 from fastselect_spark.selection._validate import validate_transform_input
-
-
-_CUBE_CELL_CAP = 2_000_000
 
 
 def _joint_tables_cube(
     df: DataFrame, feature_cols: list[str], label_col: str
 ) -> tuple[np.ndarray, np.ndarray, int, int] | None:
-    """Cube-first build (same single-pass shape as mi.py / pipeline.py):
-    ONE groupBy(all columns).count(), vocabularies derived FROM the cube,
-    every relevance/pair table a weighted-bincount marginalization. Returns
-    None when the joint cube exceeds the cap (caller falls back to melt)."""
+    """Cube-first build: ONE value cube, vocabularies derived FROM the
+    cube, every relevance/pair table a weighted-bincount marginalization.
+    Returns None when the joint cube exceeds the cap (caller falls back to
+    melt)."""
     p = len(feature_cols)
-    cols = list(feature_cols) + [label_col]
-    pdf = (
-        df.groupBy(*[F.col(c).cast("double").alias(c) for c in cols])
-        .count()
-        .limit(_CUBE_CELL_CAP + 1)
-        .toPandas()
-    )
-    if len(pdf) > _CUBE_CELL_CAP:
+    cube = value_cube(df, list(feature_cols) + [label_col])
+    if cube is None:
         return None
-    raw = pdf[cols].to_numpy(dtype=np.float64)
-    counts = pdf["count"].to_numpy(dtype=np.int64)
+    raw, counts = cube
     fvocab = np.unique(raw[:, :p])
     yvocab = np.unique(raw[:, p])
     k, ky = len(fvocab), len(yvocab)
-    if k > MAX_STATES:
-        raise ValueError(f"feature vocabulary too large for JMI ({k} states)")
+    check_states(k)
     fcodes = np.searchsorted(fvocab, raw[:, :p])
     ycodes = np.searchsorted(yvocab, raw[:, p])
     rel = np.zeros((p, k, ky), dtype=np.int64)
@@ -61,7 +60,7 @@ def _joint_tables_cube(
         rel[f] = np.bincount(
             fcodes[:, f] * ky + ycodes, weights=counts, minlength=k * ky
         ).reshape(k, ky)
-    pairs = [(i, j) for i in range(p) for j in range(i + 1, p)]
+    pairs = _pair_index(p)
     pair = np.zeros((len(pairs), k * k, ky), dtype=np.int64)
     for n, (i, j) in enumerate(pairs):
         fused = (fcodes[:, i] * k + fcodes[:, j]) * ky + ycodes
@@ -83,8 +82,7 @@ def _joint_tables(
     fvocab = shared_vocabulary(df, feature_cols)
     yvocab = shared_vocabulary(df, [label_col])
     k, ky = len(fvocab), len(yvocab)
-    if k > MAX_STATES:
-        raise ValueError(f"feature vocabulary too large for JMI ({k} states)")
+    check_states(k)
 
     def code(c: str) -> F.Column:
         col = F.col(c).cast("double")
@@ -100,7 +98,7 @@ def _joint_tables(
         yarr = F.array(*[F.lit(float(v)) for v in yvocab])
         ycode = (F.array_position(yarr, ycol) - 1).cast("long")
 
-    pairs = [(i, j) for i in range(p) for j in range(i + 1, p)]
+    pairs = _pair_index(p)
     slots = []
     for f in range(p):
         slots.append(
@@ -128,6 +126,46 @@ def _joint_tables(
     return rel, pair, k, ky
 
 
+def joint_mi_matrices(
+    df: DataFrame, feature_cols: list[str], label_col: str, unit: str = "bit"
+) -> tuple[np.ndarray, np.ndarray]:
+    """(relevance[p], joint_mi[p, p]) with relevance[f] = I(X_f; Y) and
+    joint_mi[i, j] = I((X_i, X_j); Y), symmetric, from one joint-table
+    pass."""
+    p = len(feature_cols)
+    rel_t, pair_t, _, _ = _joint_tables(df, feature_cols, label_col)
+    relevance = np.array([mi_from_contingency(rel_t[f], unit=unit) for f in range(p)])
+    joint_mi = np.zeros((p, p))
+    for n, (i, j) in enumerate(_pair_index(p)):
+        m = mi_from_contingency(pair_t[n], unit=unit)
+        joint_mi[i, j] = joint_mi[j, i] = m
+    return relevance, joint_mi
+
+
+def jmi_loop(
+    relevance: np.ndarray,
+    column: Callable[[int, np.ndarray], np.ndarray],
+    n_select: int,
+) -> list[int]:
+    """The JMI greedy loop. ``column(s, cand)`` returns I((X_f, X_s); Y) for
+    every f in ``cand``, the candidates still unselected after s was picked.
+    Seed = argmax relevance; ties break to the lowest index."""
+    p = len(relevance)
+    if not (0 < n_select <= p):
+        raise ValueError("n_select out of range")
+    selected = [int(np.argmax(relevance))]
+    remaining = np.ones(p, dtype=bool)
+    remaining[selected[0]] = False
+    acc = np.zeros(p, dtype=np.float64)
+    while len(selected) < n_select:
+        cand = np.where(remaining)[0]
+        acc[cand] += column(selected[-1], cand)
+        best = int(cand[np.argmax(acc[cand])])
+        selected.append(best)
+        remaining[best] = False
+    return selected
+
+
 def jmi_select(
     df: DataFrame,
     feature_cols: list[str],
@@ -136,29 +174,8 @@ def jmi_select(
     unit: str = "bit",
 ) -> list[int]:
     """Greedy JMI selection; returns selected feature INDICES in pick order."""
-    p = len(feature_cols)
-    if not (0 < n_select <= p):
-        raise ValueError("n_select out of range")
-    rel_t, pair_t, k, ky = _joint_tables(df, feature_cols, label_col)
-    relevance = np.array([mi_from_contingency(rel_t[f], unit=unit) for f in range(p)])
-    pairs = [(i, j) for i in range(p) for j in range(i + 1, p)]
-    pair_idx = {pr: n for n, pr in enumerate(pairs)}
-    joint_mi = np.zeros((p, p))
-    for (i, j), n in pair_idx.items():
-        m = mi_from_contingency(pair_t[n], unit=unit)
-        joint_mi[i, j] = joint_mi[j, i] = m
-
-    selected = [int(np.argmax(relevance))]
-    while len(selected) < n_select:
-        best, best_score = -1, -np.inf
-        for f in range(p):
-            if f in selected:
-                continue
-            score = float(sum(joint_mi[f, s] for s in selected))
-            if score > best_score:
-                best_score, best = score, f
-        selected.append(best)
-    return selected
+    relevance, joint_mi = joint_mi_matrices(df, feature_cols, label_col, unit)
+    return jmi_loop(relevance, lambda s, cand: joint_mi[cand, s], n_select)
 
 
 class JMISelector:

@@ -46,9 +46,11 @@ from fastselect_spark.selection._stats import (
     chi2_stats_from_observed,
     mi_from_contingency,
 )
-from fastselect_spark.selection.mrmr import mrmr_greedy
+from fastselect_spark.selection.cmim import cmim_loop
+from fastselect_spark.selection.jmi import jmi_loop
+from fastselect_spark.selection.mi import check_states
+from fastselect_spark.selection.mrmr import mrmr_greedy, mrmr_loop
 
-MAX_STATES = 512
 # broadcast budget for the step-wise engine's executor-resident coded matrix
 MAX_BROADCAST_BYTES = 4 << 30
 
@@ -225,8 +227,7 @@ def mi_relevance_matrix(
     mutual_information.py:13-22); the accumulator is the full (p, k, k)
     joint-histogram tensor — independent of n, so this scales to any row
     count."""
-    if n_states > MAX_STATES:
-        raise ValueError(f"n_states {n_states} > {MAX_STATES}")
+    check_states(n_states)
     k = int(n_states)
     proj = df.select(
         F.col(features_col).alias("features"),
@@ -337,7 +338,6 @@ def mi_matrices_broadcast(
     y_codes: np.ndarray,
     unit: str = "bit",
     compute_redundancy: bool = True,
-    chunks_per_core: int = 4,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(relevance[p], redundancy[p, p]) by broadcasting the coded matrix and
     distributing PAIR ranges across tasks — the reference-benchmark regime
@@ -347,8 +347,7 @@ def mi_matrices_broadcast(
     y_codes = np.asarray(y_codes, dtype=np.int64)
     n, p = X_codes.shape
     k = int(max(X_codes.max(initial=0), y_codes.max(initial=0))) + 1
-    if k > MAX_STATES:
-        raise ValueError(f"shared code space has {k} states (> {MAX_STATES})")
+    check_states(k)
 
     n_red = p * (p - 1) // 2 if compute_redundancy else 0
     n_pairs = p + n_red
@@ -406,8 +405,9 @@ def mi_matrices_broadcast(
             yield pd.DataFrame({"id": idx, "mi": out})
 
     # native range partitioning: contiguous id splits are perfectly balanced
-    # (pair cost is homogeneous) and skip repartition's round-robin Exchange
-    n_chunks = min(n_pairs, max(sc.defaultParallelism * chunks_per_core, 2))
+    # (pair cost is homogeneous) and skip repartition's round-robin Exchange;
+    # 4 tasks per core
+    n_chunks = min(n_pairs, max(sc.defaultParallelism * 4, 2))
     res = (
         spark.range(0, n_pairs, 1, n_chunks)
         .mapInPandas(kernel, schema="id long, mi double")
@@ -460,16 +460,12 @@ class BroadcastMIEngine:
         X_codes: np.ndarray,
         y_codes: np.ndarray,
         unit: str = "bit",
-        chunks_per_core: int = 1,
     ) -> None:
         X_codes = np.ascontiguousarray(np.asarray(X_codes, dtype=np.int64))
         y_codes = np.asarray(y_codes, dtype=np.int64)
         self.n, self.p = X_codes.shape
         self.k = int(max(X_codes.max(initial=0), y_codes.max(initial=0))) + 1
-        if self.k > MAX_STATES:
-            raise ValueError(
-                f"shared code space has {self.k} states (> {MAX_STATES})"
-            )
+        check_states(self.k)
         # wide-matrix regime contract: the coded matrix is broadcast once
         # to every executor. Refuse clearly past the budget instead of
         # letting the JVM OOM mid-broadcast — at that size the row-parallel
@@ -486,7 +482,6 @@ class BroadcastMIEngine:
         self.spark = spark
         self.unit = unit
         self.log_base = np.log(2.0) if unit == "bit" else 1.0
-        self.chunks_per_core = chunks_per_core
         sc = spark.sparkContext
         self._bc_X = sc.broadcast(np.ascontiguousarray(X_codes.T))
         self._bc_y = sc.broadcast(y_codes)
@@ -523,10 +518,8 @@ class BroadcastMIEngine:
         # native range partitioning — pair cost is homogeneous, so contiguous
         # splits balance perfectly and skipping repartition's Exchange takes a
         # greedy step from 3.5 s to 0.41 s measured (the shuffle + extra task
-        # wave was ~90% of each step job at p=5000)
-        n_chunks = min(
-            m, max(sc.defaultParallelism * self.chunks_per_core, 2)
-        )
+        # wave was ~90% of each step job at p=5000); one task per core
+        n_chunks = min(m, max(sc.defaultParallelism, 2))
         frame = self.spark.range(0, m, 1, n_chunks).mapInPandas(
             kernel, schema="id long, mi double"
         )
@@ -578,6 +571,12 @@ class BroadcastMIEngine:
         self._bc_X.destroy()
         self._bc_y.destroy()
 
+    def __enter__(self) -> "BroadcastMIEngine":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
 
 # above this many feature pairs the full p×p redundancy matrix costs more
 # kernel time than K step-wise columns plus K job round-trips (~0.1-0.3 s
@@ -611,63 +610,25 @@ def mrmr_select_matrix(
         strategy = (
             "stepwise" if p * (p - 1) // 2 > _STEPWISE_PAIR_THRESHOLD else "full"
         )
+    if strategy not in ("full", "stepwise"):
+        raise ValueError("strategy must be 'auto', 'full' or 'stepwise'")
+    Xc, yc, _ = encode_shared(X, y)
     if strategy == "full":
-        Xc, yc, _ = encode_shared(X, y)
         relevance, redundancy = mi_matrices_broadcast(spark, Xc, yc, unit=unit)
         picked = mrmr_greedy(relevance, redundancy, n_select, method)
         return picked, relevance, redundancy
-    if strategy != "stepwise":
-        raise ValueError("strategy must be 'auto', 'full' or 'stepwise'")
-
-    if not (0 < n_select <= p):
-        raise ValueError(
-            "n_features_to_select must be a positive integer less "
-            "than or equal to the number of features."
-        )
-    Xc, yc, _ = encode_shared(X, y)
-    engine = BroadcastMIEngine(spark, Xc, yc, unit=unit)
-    try:
+    with BroadcastMIEngine(spark, Xc, yc, unit=unit) as engine:
         relevance = engine.relevance()
-        selected = np.zeros(n_select, dtype=np.int32)
-        remaining = np.ones(p, dtype=bool)
         redundancy = np.zeros((p, p), dtype=np.float64)
-        red_sum = np.zeros(p, dtype=np.float64)
 
-        first = int(np.argmax(relevance))
-        selected[0] = first
-        remaining[first] = False
-        rem_idx = np.where(remaining)[0]
-        col = engine.mi_column(first, rem_idx)
-        red_sum[rem_idx] = col
-        redundancy[rem_idx, first] = col
-        redundancy[first, rem_idx] = col
+        def column(s: int, cand: np.ndarray) -> np.ndarray:
+            col = engine.mi_column(s, cand)
+            redundancy[cand, s] = col
+            redundancy[s, cand] = col
+            return col
 
-        for i in range(1, n_select):
-            rem_idx = np.where(remaining)[0]
-            # scoring + tie-break identical to mrmr_greedy (mrmr.py:48-62):
-            # only red_sum over REMAINING candidates is ever read, so the
-            # uncomputed pair entries cannot influence the selection
-            if method == "MID":
-                scores = relevance[rem_idx] - red_sum[rem_idx] / i
-            else:  # MIQ
-                scores = relevance[rem_idx] / (red_sum[rem_idx] / i + 1e-9)
-            max_score = np.max(scores)
-            top = rem_idx[np.isclose(scores, max_score, atol=1e-12)]
-            if top.size > 1:
-                best = int(top[np.argmin(red_sum[top] / i)])
-            else:
-                best = int(top[0])
-            selected[i] = best
-            remaining[best] = False
-            if i + 1 < n_select:
-                rem2 = np.where(remaining)[0]
-                col = engine.mi_column(best, rem2)
-                red_sum[rem2] += col
-                redundancy[rem2, best] = col
-                redundancy[best, rem2] = col
-        return selected, relevance, redundancy
-    finally:
-        engine.close()
+        picked = mrmr_loop(relevance, column, n_select, method)
+        return picked, relevance, redundancy
 
 
 def jmi_select_matrix(
@@ -679,31 +640,15 @@ def jmi_select_matrix(
 ) -> tuple[list[int], np.ndarray]:
     """JMI greedy selection in the wide-matrix regime (n bounded, p large).
 
-    Same criterion as :func:`fastselect_spark.selection.jmi.jmi_select`
+    Same criterion and loop as :func:`fastselect_spark.selection.jmi.jmi_select`
     (J(f) = Σ_{s∈S} I((X_f, X_s); Y), seed = argmax I(X_f; Y), first-max
     tie-break) but the cumulative score is built from step-wise broadcast
     joint-MI columns — O(p·K) pair contingencies instead of the DataFrame
     path's O(p²) cube/melt tables. Returns (selected_indices, relevance)."""
-    p = X.shape[1]
-    if not (0 < n_select <= p):
-        raise ValueError("n_select out of range")
     Xc, yc, _ = encode_shared(X, y)
-    engine = BroadcastMIEngine(spark, Xc, yc, unit=unit)
-    try:
+    with BroadcastMIEngine(spark, Xc, yc, unit=unit) as engine:
         relevance = engine.relevance()
-        selected = [int(np.argmax(relevance))]
-        remaining = np.ones(p, dtype=bool)
-        remaining[selected[0]] = False
-        acc = np.zeros(p, dtype=np.float64)
-        while len(selected) < n_select:
-            cand = np.where(remaining)[0]
-            acc[cand] += engine.joint_mi_column(selected[-1], cand)
-            best = int(cand[np.argmax(acc[cand])])
-            selected.append(best)
-            remaining[best] = False
-        return selected, relevance
-    finally:
-        engine.close()
+        return jmi_loop(relevance, engine.joint_mi_column, n_select), relevance
 
 
 def cmim_select_matrix(
@@ -715,30 +660,12 @@ def cmim_select_matrix(
 ) -> tuple[list[int], np.ndarray]:
     """CMIM greedy selection in the wide-matrix regime.
 
-    Criterion and tie-breaks match
+    Criterion, tie-breaks and loop match
     :func:`fastselect_spark.selection.cmim.cmim_select`
     (J(f) = min_{s∈S} I(X_f; Y | X_s) with the chain-rule identity
     I(f;Y|s) = I((f,s);Y) − I(s;Y)); the running min needs exactly one new
     joint-MI column per step. Returns (selected_indices, relevance)."""
-    p = X.shape[1]
-    if not (0 < n_select <= p):
-        raise ValueError("n_select out of range")
     Xc, yc, _ = encode_shared(X, y)
-    engine = BroadcastMIEngine(spark, Xc, yc, unit=unit)
-    try:
+    with BroadcastMIEngine(spark, Xc, yc, unit=unit) as engine:
         relevance = engine.relevance()
-        selected = [int(np.argmax(relevance))]
-        remaining = np.ones(p, dtype=bool)
-        remaining[selected[0]] = False
-        score = np.full(p, np.inf, dtype=np.float64)
-        while len(selected) < n_select:
-            s = selected[-1]
-            cand = np.where(remaining)[0]
-            col = engine.joint_mi_column(s, cand) - relevance[s]
-            score[cand] = np.minimum(score[cand], col)
-            best = int(cand[np.argmax(score[cand])])
-            selected.append(best)
-            remaining[best] = False
-        return selected, relevance
-    finally:
-        engine.close()
+        return cmim_loop(relevance, engine.joint_mi_column, n_select), relevance

@@ -1,24 +1,32 @@
 """Distributed discrete mutual information (reference O6/O7/O12,
 /root/reference/src/fast_select/mutual_information.py:117-196, mRMR.py:9-27).
 
-Strategy (SURVEY.md §2.2 O7): ONE vectorized pass over the data builds, per
-partition, integer joint-count histograms for every (feature, label) pair and
-every (feature_i, feature_j) i<j pair — ``np.bincount`` on fused codes inside
-Arrow batches — merged by the tree reduction in ``_agg.py``. Because the
-accumulators are exact integer counts, the merged histograms (and therefore
-the MI values) are bit-identical regardless of partitioning. MI arithmetic
-runs on the driver over the tiny merged tables with the reference's exact
-eps placement.
+Every MI scorer here is a function of ONE joint-count table: the value cube
+``groupBy(all code columns).count()`` (:func:`value_cube`), a single
+partial+final hash aggregation bounded by the code-space product, not by
+the row count. Every relevance/redundancy table is a weighted-bincount
+marginalization of that cube on the driver (:func:`cube_mi`), and the MI
+arithmetic runs over the tiny tables with the reference's exact eps
+placement.
 
 Encoding mirrors the reference's shared X∪y vocabulary
-(mRMR.py:90, ``np.searchsorted``): a global distinct-union is collected once
-(``collect_set`` per column — bounded by cardinality, not rows) and
-broadcast into the kernel closure.
+(mRMR.py:90, ``np.searchsorted``). The cube holds every distinct value, so
+the vocabulary is derived from it and the cube path makes exactly one pass
+over the data.
+
+Above the cube's cell cap, :func:`mi_matrices` falls back to ONE vectorized
+treeAggregate pass: per partition, integer joint-count histograms for every
+(feature, label) pair and every (feature_i, feature_j) i<j pair —
+``np.bincount`` on fused codes inside Arrow batches — merged by the tree
+reduction in ``_agg.py``. Its vocabulary is a global distinct-union
+(``collect_set`` per column, bounded by cardinality, not rows) broadcast
+into the kernel closure. Both paths count exact integers, so their tables
+(and therefore the MI values) are identical regardless of partitioning.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,6 +37,9 @@ from fastselect_spark.selection._agg import tree_reduce_ndarrays
 from fastselect_spark.selection._stats import mi_from_contingency
 
 MAX_STATES = 512
+# cells of the joint value cube collected to the driver; above it a caller
+# falls back to a distributed contingency build or asks for binned features
+_CUBE_CELL_CAP = 2_000_000
 
 
 def shared_vocabulary(
@@ -47,14 +58,106 @@ def _pair_index(p: int) -> list[tuple[int, int]]:
     return [(i, j) for i in range(p) for j in range(i + 1, p)]
 
 
+def check_states(k: int) -> None:
+    """Refuse a vocabulary too large for dense k×k contingency tables."""
+    if k > MAX_STATES:
+        raise ValueError(
+            f"vocabulary has {k} states (> {MAX_STATES}); "
+            "discretize/bin continuous features before MI scoring"
+        )
+
+
+def value_cube(
+    df: DataFrame, cols: list[str]
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """The joint value cube: ONE ``groupBy(cols).count()`` over the
+    double-cast values, returned as (raw[cells, len(cols)], counts[cells]).
+    Returns None when the cube exceeds the cell cap.
+
+    Arrow toPandas, not collect(): Row materialization + a Python listcomp
+    over a large cube is a driver-serial hit that caps scaling efficiency.
+    """
+    pdf = (
+        df.groupBy(*[F.col(c).cast("double").alias(c) for c in cols])
+        .count()
+        .limit(_CUBE_CELL_CAP + 1)
+        .toPandas()
+    )
+    if len(pdf) > _CUBE_CELL_CAP:
+        return None
+    raw = pdf[cols].to_numpy(dtype=np.float64)
+    # the cube groups on double-cast codes: integers above 2^53 are not
+    # exactly representable and would SILENTLY collide in the groupBy —
+    # refuse rather than mis-count
+    if len(raw) and np.nanmax(np.abs(raw)) >= 2.0**53:
+        raise ValueError(
+            "feature/label codes with |value| >= 2^53 lose integer "
+            "precision in the double-cast cube groupBy and can collide; "
+            "re-encode codes into a smaller domain first"
+        )
+    return raw, pdf["count"].to_numpy(dtype=np.int64)
+
+
+def _shared_codes(raw: np.ndarray) -> tuple[np.ndarray, int]:
+    """Cube values as codes in their sorted shared X∪y vocabulary
+    (mRMR.py:90), and the vocabulary size."""
+    vocab = np.unique(raw)
+    check_states(len(vocab))
+    return np.searchsorted(vocab, raw), len(vocab)
+
+
+def _cube_table(
+    codes: np.ndarray, counts: np.ndarray, k: int, a: int, b: int
+) -> np.ndarray:
+    """(k, k) joint count table of cube columns ``a`` and ``b``."""
+    return np.bincount(
+        codes[:, a] * k + codes[:, b], weights=counts, minlength=k * k
+    ).reshape(k, k)
+
+
+def _mi_from_tables(
+    table: Callable[[int, int], np.ndarray],
+    p: int,
+    unit: str,
+    pairs: list[tuple[int, int]],
+) -> tuple[np.ndarray, np.ndarray]:
+    """(relevance[p], redundancy[p, p]) from ``table(a, b)``, the contingency
+    of features a and b, where b == p names the label."""
+    relevance = np.array(
+        [mi_from_contingency(table(f, p), unit=unit) for f in range(p)]
+    )
+    redundancy = np.zeros((p, p), dtype=np.float64)
+    for i, j in pairs:
+        mi = mi_from_contingency(table(i, j), unit=unit)
+        redundancy[i, j] = mi
+        redundancy[j, i] = mi
+    return relevance, redundancy
+
+
+def cube_mi(
+    raw: np.ndarray,
+    counts: np.ndarray,
+    unit: str = "bit",
+    compute_redundancy: bool = True,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(relevance[p], redundancy[p, p]) marginalized from a value cube whose
+    last column is the label."""
+    p = raw.shape[1] - 1
+    codes, k = _shared_codes(raw)
+    return _mi_from_tables(
+        lambda a, b: _cube_table(codes, counts, k, a, b),
+        p,
+        unit,
+        _pair_index(p) if compute_redundancy else [],
+    )
+
+
 def mi_matrices(
     df: DataFrame,
     feature_cols: list[str],
     label_col: str = "label",
     unit: str = "bit",
-    vocab: np.ndarray | None = None,
     compute_redundancy: bool = True,
-    impl: str = "auto",
 ) -> tuple[np.ndarray, np.ndarray]:
     """Return (relevance[p], redundancy[p, p]) in the requested unit.
 
@@ -62,48 +165,26 @@ def mi_matrices(
     zero diagonal — matching ``calculate_mi_matrices``
     (mutual_information.py:158-196).
 
-    ``impl``: 'cube' = ONE ``groupBy(all code columns).count()`` over the
-    data + driver marginalization of the tiny cube (works for ANY value
-    domain — the shared vocabulary is derived from the cube itself, so no
-    second data pass is ever made); 'arrow' = the vectorized treeAggregate
-    kernel; 'sql' = pure-JVM melt + hash aggregation (requires a contiguous
-    0..k-1 integer code domain). 'auto' = cube, falling back to sql/arrow
-    only when the joint cube exceeds ~2M cells. All three produce identical
-    integer contingency tables.
+    ONE value cube over the data, marginalized on the driver; it works for
+    any value domain. When the cube exceeds the cell cap, the Arrow
+    treeAggregate kernel builds the same integer contingency tables in one
+    pass (after a collect_set vocabulary scan), for any vocabulary.
     """
     p = len(feature_cols)
     cols = list(feature_cols) + [label_col]
+    cube = value_cube(df, cols)
+    if cube is not None:
+        return cube_mi(*cube, unit=unit, compute_redundancy=compute_redundancy)
+
     pairs = _pair_index(p) if compute_redundancy else []
-
-    if impl in ("auto", "cube"):
-        res = _mi_matrices_cube(df, feature_cols, label_col, unit, pairs, p, vocab)
-        if res is not None:
-            return res
-        impl = "fallback"  # cube too large -> melt / arrow below
-
-    if vocab is None:
-        vocab = shared_vocabulary(df, cols)
+    vocab = shared_vocabulary(df, cols)
     k = len(vocab)
-    if k > MAX_STATES:
-        raise ValueError(
-            f"shared vocabulary has {k} states (> {MAX_STATES}); "
-            "discretize/bin continuous features before MI scoring"
-        )
-    vocab = np.asarray(vocab, dtype=np.float64)
-    coded = bool(
+    check_states(k)
+    # Fast path: a contiguous 0..k-1 integer vocabulary means the values ARE
+    # the codes — skip the float64 conversion + searchsorted per batch.
+    already_coded = bool(
         k > 0 and vocab[0] == 0.0 and vocab[-1] == k - 1 and np.all(np.diff(vocab) == 1.0)
     )
-    if impl == "fallback":
-        impl = "sql" if coded else "arrow"
-    if impl == "sql":
-        if not coded:
-            raise ValueError("impl='sql' requires contiguous 0..k-1 integer codes")
-        return _mi_matrices_sql(df, feature_cols, label_col, unit, k, pairs, p)
-
-    # Arrow treeAggregate kernel. Fast path: a contiguous 0..k-1 integer
-    # vocabulary means the values ARE the codes — skip the float64
-    # conversion + searchsorted per batch.
-    already_coded = coded
     cast_type = "long" if already_coded else "double"
     proj = df.select(*[F.col(c).cast(cast_type) for c in cols])
 
@@ -134,149 +215,13 @@ def mi_matrices(
         return out
 
     merged = tree_reduce_ndarrays(proj, partial)
-    rel_tables = merged["rel"]
-    relevance = np.array(
-        [mi_from_contingency(rel_tables[f], unit=unit) for f in range(p)]
+    slot = {pair: idx for idx, pair in enumerate(pairs)}
+    return _mi_from_tables(
+        lambda a, b: merged["rel"][a] if b == p else merged["red"][slot[a, b]],
+        p,
+        unit,
+        pairs,
     )
-    redundancy = np.zeros((p, p), dtype=np.float64)
-    if pairs:
-        red_tables = merged["red"]
-        for idx, (i, j) in enumerate(pairs):
-            mi = mi_from_contingency(red_tables[idx], unit=unit)
-            redundancy[i, j] = mi
-            redundancy[j, i] = mi
-    return relevance, redundancy
-
-
-_CUBE_CELL_CAP = 2_000_000
-
-
-def _mi_matrices_cube(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    unit: str,
-    pairs: list[tuple[int, int]],
-    p: int,
-    vocab: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """Cheapest contingency build when the joint value cube is small: ONE
-    ``groupBy(all code columns).count()`` over the data (a single partial+
-    final hash aggregation — the same shape and cost as chi2), then every
-    relevance/redundancy table is a weighted-bincount MARGINALIZATION of the
-    tiny cube on the driver. The shared X∪y vocabulary (mRMR.py:90) is
-    derived FROM the cube — it holds every distinct value — so this path
-    makes exactly one pass over the data (a separate collect_set vocabulary
-    scan measured ~18s of a 21s MI stage on a 40M-row input). Returns None
-    when the cube exceeds the cap (caller falls back to melt/arrow).
-
-    Arrow toPandas, not collect(): Row materialization + a Python listcomp
-    over a large cube is a driver-serial hit that caps scaling efficiency.
-    """
-    cols = list(feature_cols) + [label_col]
-    pdf = (
-        df.groupBy(*[F.col(c).cast("double").alias(c) for c in cols])
-        .count()
-        .limit(_CUBE_CELL_CAP + 1)
-        .toPandas()
-    )
-    if len(pdf) > _CUBE_CELL_CAP:
-        return None
-    raw = pdf[cols].to_numpy(dtype=np.float64)
-    counts = pdf["count"].to_numpy(dtype=np.int64)
-    # the cube groups on double-cast codes: integers above 2^53 are not
-    # exactly representable and would SILENTLY collide in the groupBy —
-    # refuse rather than mis-count (CLAUDE.md ANSI/precision rule)
-    if len(raw) and np.nanmax(np.abs(raw)) >= 2.0**53:
-        raise ValueError(
-            "feature/label codes with |value| >= 2^53 lose integer "
-            "precision in the double-cast cube groupBy and can collide; "
-            "re-encode codes into a smaller domain first"
-        )
-    if vocab is None:
-        vocab = np.unique(raw)
-    else:
-        vocab = np.asarray(vocab, dtype=np.float64)
-        if not np.isin(raw.ravel(), vocab).all():
-            raise ValueError(
-                "caller-supplied vocab does not cover all observed values; "
-                "searchsorted would silently mis-bin them"
-            )
-    k = len(vocab)
-    if k > MAX_STATES:
-        raise ValueError(
-            f"shared vocabulary has {k} states (> {MAX_STATES}); "
-            "discretize/bin continuous features before MI scoring"
-        )
-    codes = np.searchsorted(vocab, raw)
-    y = codes[:, p]
-    kk = k * k
-    relevance = np.empty(p, dtype=np.float64)
-    for f in range(p):
-        table = np.bincount(
-            codes[:, f] * k + y, weights=counts, minlength=kk
-        ).reshape(k, k)
-        relevance[f] = mi_from_contingency(table, unit=unit)
-    redundancy = np.zeros((p, p), dtype=np.float64)
-    for i, j in pairs:
-        table = np.bincount(
-            codes[:, i] * k + codes[:, j], weights=counts, minlength=kk
-        ).reshape(k, k)
-        mi = mi_from_contingency(table, unit=unit)
-        redundancy[i, j] = mi
-        redundancy[j, i] = mi
-    return relevance, redundancy
-
-
-def _mi_matrices_sql(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    unit: str,
-    k: int,
-    pairs: list[tuple[int, int]],
-    p: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Pure-JVM contingency build: every (feature, y) and (i, j) pair gets a
-    slot; rows are melted to (slot, fused_code) with ``explode`` and counted
-    by ONE hash aggregation (partial+final, whole-stage codegen, zero Python
-    in the data path). Output is <= n_slots * k^2 tiny rows."""
-    y = F.col(label_col).cast("long")
-    slots = []
-    for f, c in enumerate(feature_cols):
-        slots.append(
-            F.struct(
-                F.lit(f).alias("slot"),
-                (F.col(c).cast("long") * k + y).alias("code"),
-            )
-        )
-    for idx, (i, j) in enumerate(pairs):
-        slots.append(
-            F.struct(
-                F.lit(p + idx).alias("slot"),
-                (
-                    F.col(feature_cols[i]).cast("long") * k
-                    + F.col(feature_cols[j]).cast("long")
-                ).alias("code"),
-            )
-        )
-    melted = df.select(F.explode(F.array(*slots)).alias("x")).select(
-        F.col("x.slot").alias("slot"), F.col("x.code").alias("code")
-    )
-    rows = melted.groupBy("slot", "code").count().collect()
-    tables = np.zeros((p + len(pairs), k, k), dtype=np.int64)
-    for r in rows:
-        s, code = int(r["slot"]), int(r["code"])
-        tables[s, code // k, code % k] = r["count"]
-    relevance = np.array(
-        [mi_from_contingency(tables[f], unit=unit) for f in range(p)]
-    )
-    redundancy = np.zeros((p, p), dtype=np.float64)
-    for idx, (i, j) in enumerate(pairs):
-        mi = mi_from_contingency(tables[p + idx], unit=unit)
-        redundancy[i, j] = mi
-        redundancy[j, i] = mi
-    return relevance, redundancy
 
 
 def mi_pair(
@@ -319,29 +264,18 @@ def gain_ratio(
     shape: the aggregation is bounded by the code-space product, never
     the row count, so no extra cluster work beyond the cube every other
     information scorer already shares."""
-    cols = list(feature_cols) + [label_col]
     p = len(feature_cols)
-    pdf = (
-        df.groupBy(*[F.col(c).cast("double").alias(c) for c in cols])
-        .count()
-        .toPandas()
-    )
-    raw = pdf[cols].to_numpy(dtype=np.float64)
-    counts = pdf["count"].to_numpy(dtype=np.int64)
+    cube = value_cube(df, list(feature_cols) + [label_col])
+    if cube is None:
+        raise ValueError("joint value cube exceeds the cap; bin features first")
+    raw, counts = cube
     n = float(counts.sum())
-    vocab = np.unique(raw)
-    k = len(vocab)
-    codes = np.searchsorted(vocab, raw)
-    y = codes[:, p]
-    kk = k * k
+    codes, k = _shared_codes(raw)
     log_base = np.log(2.0) if unit == "bit" else 1.0
     ig = np.empty(p, dtype=np.float64)
     si = np.empty(p, dtype=np.float64)
     for f in range(p):
-        table = (
-            np.bincount(codes[:, f] * k + y, weights=counts, minlength=kk)
-            .reshape(k, k)
-        )
+        table = _cube_table(codes, counts, k, f, p)
         ig[f] = mi_from_contingency(table, unit=unit)
         marg = table.sum(axis=1)
         px = marg[marg > 0] / n

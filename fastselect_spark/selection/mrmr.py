@@ -17,6 +17,8 @@ Exact semantics reproduced:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 from pyspark.sql import DataFrame
 
@@ -31,6 +33,24 @@ def mrmr_greedy(
     method: str = "MID",
 ) -> np.ndarray:
     """Driver-side greedy loop over precomputed MI matrices."""
+    return mrmr_loop(
+        relevance, lambda s, cand: redundancy[cand, s], n_select, method
+    )
+
+
+def mrmr_loop(
+    relevance: np.ndarray,
+    column: Callable[[int, np.ndarray], np.ndarray],
+    n_select: int,
+    method: str = "MID",
+) -> np.ndarray:
+    """The mRMR greedy loop. ``column(s, cand)`` returns I(X_f; X_s) for
+    every f in ``cand``, the candidates still unselected after s was picked.
+
+    Only the redundancy sums of remaining candidates are ever read, so a
+    callback that computes just those entries (the step-wise engine) picks
+    exactly what the full matrix picks; no column is requested after the
+    last pick."""
     p = len(relevance)
     if not (0 < n_select <= p):
         raise ValueError(
@@ -39,27 +59,22 @@ def mrmr_greedy(
         )
     selected = np.zeros(n_select, dtype=np.int32)
     remaining = np.ones(p, dtype=bool)
+    red_sum = np.zeros(p, dtype=np.float64)
 
-    first = int(np.argmax(relevance))
-    selected[0] = first
-    remaining[first] = False
-    red_sum = redundancy[:, first].copy()
-
+    selected[0] = np.argmax(relevance)
+    remaining[selected[0]] = False
     for i in range(1, n_select):
         rem_idx = np.where(remaining)[0]
+        red_sum[rem_idx] += column(int(selected[i - 1]), rem_idx)
         if method == "MID":
             scores = relevance[rem_idx] - red_sum[rem_idx] / i
         else:  # MIQ
             scores = relevance[rem_idx] / (red_sum[rem_idx] / i + 1e-9)
         max_score = np.max(scores)
         top = rem_idx[np.isclose(scores, max_score, atol=1e-12)]
-        if top.size > 1:
-            best = int(top[np.argmin(red_sum[top] / i)])
-        else:
-            best = int(top[0])
+        best = int(top[np.argmin(red_sum[top] / i)])
         selected[i] = best
         remaining[best] = False
-        red_sum += redundancy[:, best]
     return selected
 
 

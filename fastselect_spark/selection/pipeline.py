@@ -21,16 +21,9 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from fastselect_spark.selection._stats import (
-    chi2_sf,
-    chi2_stats_from_observed,
-    mi_from_contingency,
-)
-
-MAX_STATES = 512
-_CUBE_CELL_CAP = 2_000_000
+from fastselect_spark.selection._stats import chi2_sf, chi2_stats_from_observed
+from fastselect_spark.selection.mi import cube_mi, value_cube
 
 
 def scores_from_cube(
@@ -44,18 +37,11 @@ def scores_from_cube(
     """Returns {'chi2', 'p_values', 'relevance', 'redundancy', 'n'} from one
     aggregation pass. Feature/label values must be discrete (the cube must
     stay under ~2M cells)."""
-    cols = list(feature_cols) + [label_col]
     p = len(feature_cols)
-    pdf = (
-        df.groupBy(*[F.col(c).cast("double").alias(c) for c in cols])
-        .count()
-        .limit(_CUBE_CELL_CAP + 1)
-        .toPandas()
-    )
-    if len(pdf) > _CUBE_CELL_CAP:
+    cube = value_cube(df, list(feature_cols) + [label_col])
+    if cube is None:
         raise ValueError("joint value cube exceeds the cap; bin features first")
-    raw = pdf[cols].to_numpy(dtype=np.float64)
-    counts = pdf["count"].to_numpy(dtype=np.int64)
+    raw, counts = cube
     n = int(counts.sum())
 
     # --- chi2 (value-weighted observed, Chi2.py:49-91 semantics) ---
@@ -79,28 +65,7 @@ def scores_from_cube(
         p_values = chi2_sf(chi2_stats, dof=K - 1)
 
     # --- MI relevance/redundancy (shared X∪y vocabulary, mRMR.py:90) ---
-    vocab = np.unique(raw)
-    k = len(vocab)
-    if k > MAX_STATES:
-        raise ValueError(f"shared vocabulary has {k} states (> {MAX_STATES})")
-    codes = np.searchsorted(vocab, raw)
-    y = codes[:, p]
-    kk = k * k
-    relevance = np.empty(p, dtype=np.float64)
-    for f in range(p):
-        table = np.bincount(
-            codes[:, f] * k + y, weights=counts, minlength=kk
-        ).reshape(k, k)
-        relevance[f] = mi_from_contingency(table, unit=unit)
-    redundancy = np.zeros((p, p), dtype=np.float64)
-    if compute_redundancy:
-        for i in range(p):
-            for j in range(i + 1, p):
-                table = np.bincount(
-                    codes[:, i] * k + codes[:, j], weights=counts, minlength=kk
-                ).reshape(k, k)
-                mi = mi_from_contingency(table, unit=unit)
-                redundancy[i, j] = redundancy[j, i] = mi
+    relevance, redundancy = cube_mi(raw, counts, unit, compute_redundancy)
     return {
         "chi2": chi2_stats,
         "p_values": p_values,

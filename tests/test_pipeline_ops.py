@@ -813,19 +813,31 @@ def test_connected_components_driver_path_matches_distributed(spark):
     assert fast.equals(slow)
 
 
-def test_mi_cube_rejects_unsafe_codes(spark):
+@pytest.mark.parametrize(
+    "scorer", ["mi_matrices", "scores_from_cube", "gain_ratio", "jmi_select"]
+)
+def test_mi_cube_rejects_unsafe_codes(spark, scorer):
     """Codes with |value| >= 2^53 silently collide in the double-cast cube
-    groupBy — must raise instead of mis-counting."""
+    groupBy — every scorer on the shared cube must raise instead of
+    mis-counting."""
     import pandas as pd_
 
-    from fastselect_spark.selection import mi_matrices
+    from fastselect_spark import selection
 
+    calls = {
+        "mi_matrices": lambda df: selection.mi_matrices(
+            df, ["f0"], "y", compute_redundancy=False
+        ),
+        "scores_from_cube": lambda df: selection.scores_from_cube(df, ["f0"], "y"),
+        "gain_ratio": lambda df: selection.gain_ratio(df, ["f0"], "y"),
+        "jmi_select": lambda df: selection.jmi_select(df, ["f0"], "y", n_select=1),
+    }
     big = 2**53 + 1
     df = spark.createDataFrame(
         pd_.DataFrame({"f0": [big, big + 2, big], "y": [0, 1, 0]})
     )
     with pytest.raises(ValueError, match="2\\^53"):
-        mi_matrices(df, ["f0"], "y", compute_redundancy=False)
+        calls[scorer](df)
 
 
 def test_pca_training_parity_and_projection(spark):
