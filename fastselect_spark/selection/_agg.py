@@ -15,6 +15,11 @@ Python (BASELINE.json:6). Shape:
 Accumulators are integer counts or float64 partial sums, so the merged
 result is independent of partitioning (exact for ints; reordered float
 addition only at the final tiny merge).
+
+The pair-parallel axis (n bounded, p large) has no accumulator: every
+pairwise scorer — the full MI matrix, the step-wise MI engine and CFS
+redundancy — runs :func:`pair_job`, one vectorized ``mapInPandas`` kernel
+over a range of pair ids, with :func:`triu_pair` mapping ids to pairs.
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ from contextlib import contextmanager
 import numpy as np
 import pandas as pd
 from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _PARTIAL_SCHEMA = "merge_key int, name string, dtype string, shape string, data binary"
@@ -248,4 +253,65 @@ def _merge_partials(
             out[row["name"]] = out[row["name"]] + arr
         else:
             out[row["name"]] = arr.copy()
+    return out
+
+
+def triu_pair(r: np.ndarray, p: int) -> tuple[np.ndarray, np.ndarray]:
+    """Row-major upper-triangle index -> (i, j), i < j, of a p×p matrix —
+    the order of ``np.triu_indices(p, 1)``. Derived arithmetically so no
+    O(p²) pair table is ever built or broadcast."""
+    r = np.asarray(r, dtype=np.int64)
+    b = 2 * p - 1
+    i = ((b - np.sqrt(b * b - 8.0 * r)) // 2).astype(np.int64)
+    start = i * (2 * p - i - 1) // 2
+    # float-precision fixups
+    over = start > r
+    i[over] -= 1
+    start[over] = i[over] * (2 * p - i[over] - 1) // 2
+    nxt = (i + 1) * (2 * p - i - 2) // 2
+    under = nxt <= r
+    i[under] += 1
+    start[under] = i[under] * (2 * p - i[under] - 1) // 2
+    return i, r - start + i + 1
+
+
+def pair_frame(
+    spark: SparkSession,
+    n_pairs: int,
+    score: Callable[[np.ndarray], np.ndarray],
+    tasks_per_core: int,
+) -> DataFrame:
+    """The pair-parallel job: ids ``0..n_pairs-1`` scored on the executors
+    by ``score(ids) -> float64[]``, which closes over the caller's
+    broadcasts. Native range partitioning — pair cost is homogeneous, so
+    contiguous id splits balance perfectly and the plan has no Exchange
+    (a round-robin ``repartition`` was measured at ~90% of a greedy step
+    job: 3.5 s vs 0.41 s at p=5000)."""
+    cores = spark.sparkContext.defaultParallelism
+    n_chunks = min(n_pairs, max(cores * tasks_per_core, 2))
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf["id"].to_numpy(dtype=np.int64)
+            yield pd.DataFrame({"id": ids, "score": score(ids)})
+
+    return spark.range(0, n_pairs, 1, n_chunks).mapInPandas(
+        kernel, schema="id long, score double"
+    )
+
+
+def pair_job(
+    spark: SparkSession,
+    n_pairs: int,
+    score: Callable[[np.ndarray], np.ndarray],
+    tasks_per_core: int,
+) -> np.ndarray:
+    """Run :func:`pair_frame` and collect it into a dense vector by id."""
+    out = np.zeros(n_pairs, dtype=np.float64)
+    if n_pairs == 0:
+        return out
+    res = pair_frame(spark, n_pairs, score, tasks_per_core).toPandas()
+    out[res["id"].to_numpy(dtype=np.int64)] = res["score"].to_numpy(dtype=np.float64)
     return out

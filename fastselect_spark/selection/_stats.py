@@ -16,6 +16,16 @@ import numpy as np
 _EPS_MI = 1e-12  # matches reference eps placement (mutual_information.py:40-45)
 
 
+def log_base(unit: str) -> float:
+    """Natural log of the MI unit's base: ln 2 for ``"bit"``, 1 for
+    ``"nat"``. Any other unit raises instead of silently returning nats."""
+    if unit == "bit":
+        return math.log(2.0)
+    if unit == "nat":
+        return 1.0
+    raise ValueError(f"unit must be 'bit' or 'nat', got {unit!r}")
+
+
 def mi_from_contingency(table: np.ndarray, unit: str = "bit") -> float:
     """I(a;b) from a joint count table, reproducing the reference's exact
     eps semantics: cells with pxy > 1e-12 contribute
@@ -30,8 +40,7 @@ def mi_from_contingency(table: np.ndarray, unit: str = "bit") -> float:
     denom = px[:, None] * py[None, :] + _EPS_MI
     mask = p > _EPS_MI
     mi = float(np.sum(p[mask] * np.log(p[mask] / denom[mask])))
-    log_base = math.log(2.0) if unit == "bit" else 1.0
-    return mi / log_base
+    return mi / log_base(unit)
 
 
 def chi2_stats_from_observed(

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fastselect_spark.selection._agg import tree_reduce_ndarrays
+from fastselect_spark.selection._agg import pair_job, tree_reduce_ndarrays, triu_pair
 from fastselect_spark.selection._validate import validate_transform_input
 
 
@@ -231,58 +231,54 @@ def kmeans_bin_edges(
     return edges
 
 
+def su_matrix(p: int, table_of) -> np.ndarray:
+    """Symmetric (p, p) SU matrix with a zero diagonal from per-pair count
+    tables: ``table_of(n, i, j)`` is the table of the n-th upper-triangle
+    pair (i, j), in ``np.triu_indices(p, 1)`` order."""
+    iu, ju = np.triu_indices(p, k=1)
+    su = [
+        symmetrical_uncertainty(table_of(n, i, j))
+        for n, (i, j) in enumerate(zip(iu.tolist(), ju.tolist()))
+    ]
+    r = np.zeros((p, p), dtype=np.float64)
+    r[iu, ju] = su
+    r[ju, iu] = su
+    return r
+
+
 def _su_redundancy_broadcast(
-    spark,
-    codes: np.ndarray,
-    n_states: np.ndarray,
-    chunks_per_core: int = 4,
+    spark, codes: np.ndarray, n_states: np.ndarray
 ) -> np.ndarray:
-    """(p, p) symmetrical-uncertainty redundancy by broadcasting the coded
-    matrix and distributing PAIR ranges across tasks — the p-large diet for
-    the redundancy pass (the one-pass cube's flat ff accumulator is
-    Σ k_i·k_j over all p(p−1)/2 pairs: ~100 MB per partition at p=500,
-    allocated AND tree-merged by every worker; here each task ships back
-    only its chunk's SU floats). Each pair's integer contingency table is
-    identical to the cube path's (counts are partition-invariant), and the
-    scalar :func:`symmetrical_uncertainty` is reused per pair, so the SU
-    values are bit-identical — the selection result cannot differ between
-    the two stages."""
+    """(p, p) symmetrical-uncertainty redundancy as one :func:`pair_job`
+    over the upper triangle — the p-large diet for the redundancy pass (the
+    one-pass cube's flat ff accumulator is Σ k_i·k_j over all p(p−1)/2
+    pairs: ~100 MB per partition at p=500, allocated AND tree-merged by
+    every worker). The coded matrix is broadcast once; each task decodes its
+    pair ids with :func:`triu_pair` and ships back only their SU floats.
+    Each pair's integer contingency table is identical to the cube path's
+    (counts are partition-invariant), and the scalar
+    :func:`symmetrical_uncertainty` is reused per pair, so the SU values are
+    bit-identical — the selection result cannot differ between the two
+    stages."""
     codes = np.ascontiguousarray(codes.T)  # (p, n): pair gather = 2 row copies
     p = codes.shape[0]
+    bc = spark.sparkContext.broadcast((codes, n_states.astype(np.int64)))
+
+    def score(ids: np.ndarray) -> np.ndarray:
+        Xt, ns = bc.value
+        out = np.empty(len(ids), dtype=np.float64)
+        for t, (i, j) in enumerate(zip(*triu_pair(ids, p))):
+            ki, kj = int(ns[i]), int(ns[j])
+            table = np.bincount(Xt[i] * kj + Xt[j], minlength=ki * kj).reshape(ki, kj)
+            out[t] = symmetrical_uncertainty(table)
+        return out
+
+    su = pair_job(spark, p * (p - 1) // 2, score, tasks_per_core=4)
+    bc.destroy()
     iu, ju = np.triu_indices(p, k=1)
-    n_pairs = len(iu)
-    sc = spark.sparkContext
-    bc = sc.broadcast((codes, n_states.astype(np.int64), iu, ju))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Xt, ns, iu_, ju_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            idx = pdf["id"].to_numpy(dtype=np.int64)
-            out = np.empty(len(idx), dtype=np.float64)
-            for t, pid in enumerate(idx):
-                i, j = int(iu_[pid]), int(ju_[pid])
-                ki, kj = int(ns[i]), int(ns[j])
-                table = np.bincount(
-                    Xt[i] * kj + Xt[j], minlength=ki * kj
-                ).reshape(ki, kj)
-                out[t] = symmetrical_uncertainty(table)
-            yield pd.DataFrame({"id": idx, "su": out})
-
-    n_chunks = min(n_pairs, max(sc.defaultParallelism * chunks_per_core, 2))
-    res = (
-        spark.range(n_pairs)
-        .repartition(n_chunks)
-        .mapInPandas(kernel, schema="id long, su double")
-        .toPandas()
-    )
-    su = np.zeros(n_pairs, dtype=np.float64)
-    su[res["id"].to_numpy(dtype=np.int64)] = res["su"].to_numpy(dtype=np.float64)
     r_ff = np.zeros((p, p), dtype=np.float64)
     r_ff[iu, ju] = su
     r_ff[ju, iu] = su
-    bc.destroy()
     return r_ff
 
 
@@ -511,13 +507,12 @@ class CFSSelector:
             for i in range(p):
                 table = cf[cf_off[i] : cf_off[i + 1]].reshape(n_states[i], n_y)
                 r_cf[i] = symmetrical_uncertainty(table)
-            r_ff = np.zeros((p, p), dtype=np.float64)
-            for pi, (i, j) in enumerate(pairs):
-                table = ff[ff_off[pi] : ff_off[pi + 1]].reshape(
+            r_ff = su_matrix(
+                p,
+                lambda n, i, j: ff[ff_off[n] : ff_off[n + 1]].reshape(
                     n_states[i], n_states[j]
-                )
-                su = symmetrical_uncertainty(table)
-                r_ff[i, j] = r_ff[j, i] = su
+                ),
+            )
 
         self.r_cf_ = r_cf
         self.r_ff_ = r_ff

@@ -8,7 +8,8 @@ Distributed strategy: ONE pass builds the joint tables (reusing
 ``jmi._joint_tables`` — one value cube, or the melt fallback above the cell
 cap); SU(f;Y) comes from each
 feature's class contingency and SU(fi;fj) from the pair table marginalized
-over the label. The scalar SU is ``cfs.symmetrical_uncertainty`` — the same
+over the label (filled by ``cfs.su_matrix``, as CFS's staged path does).
+The scalar SU is ``cfs.symmetrical_uncertainty`` — the same
 function CFS's oracle-verified merit uses, so the two filters are
 bit-identical on shared inputs by construction. The rank/eliminate loop is
 driver-side (p×p table, same scale as the reference's CFS search).
@@ -20,7 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from fastselect_spark.selection._validate import validate_transform_input
-from fastselect_spark.selection.cfs import symmetrical_uncertainty
+from fastselect_spark.selection.cfs import su_matrix, symmetrical_uncertainty
 from fastselect_spark.selection.jmi import _joint_tables
 
 
@@ -42,12 +43,8 @@ def fcbf_select(
     p = len(feature_cols)
     rel_t, pair_t, k, ky = _joint_tables(df, feature_cols, label_col)
     su_y = np.array([symmetrical_uncertainty(rel_t[f]) for f in range(p)])
-    pairs = [(i, j) for i in range(p) for j in range(i + 1, p)]
-    su_ff = np.zeros((p, p))
-    for n, (i, j) in enumerate(pairs):
-        # pair table is (k*k, ky); marginalize the label, refold to (k, k)
-        table = pair_t[n].sum(axis=1).reshape(k, k)
-        su_ff[i, j] = su_ff[j, i] = symmetrical_uncertainty(table)
+    # pair table is (k*k, ky); marginalize the label, refold to (k, k)
+    su_ff = su_matrix(p, lambda n, i, j: pair_t[n].sum(axis=1).reshape(k, k))
 
     order = sorted(
         (f for f in range(p) if su_y[f] > delta), key=lambda f: (-su_y[f], f)

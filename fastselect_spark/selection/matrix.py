@@ -16,8 +16,11 @@ axes, matching how the work actually scales:
   partition-parallel reduction.
 - **Pair-parallel** (the reference benchmark regime: n bounded, p large):
   the p×p MI redundancy matrix needs a contingency per feature PAIR —
-  p(p−1)/2 of them — so the coded matrix is broadcast once and tasks own
-  contiguous pair ranges (SURVEY.md §3.2 "pair-chunked job"; the distributed
+  p(p−1)/2 of them. :class:`BroadcastMIEngine` broadcasts the coded matrix
+  once and every request — the full matrix, a relevance vector, a
+  step-wise greedy column — is one run of the package's single pair job
+  (``_agg.pair_job``, also behind CFS redundancy): tasks own contiguous
+  pair-id ranges (SURVEY.md §3.2 "pair-chunked job"; the distributed
   equivalent of the reference's ``prange`` over pairs,
   mutual_information.py:56-63). Accumulator-free: each task emits only its
   pairs' MI floats.
@@ -29,8 +32,6 @@ chi2 zero-sum/expected guards per Chi2.py:24-47).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -39,11 +40,14 @@ from pyspark.sql import functions as F
 from fastselect_spark.selection._agg import (
     bounded_arrow_batches,
     list_matrix_view,
+    pair_job,
     tree_reduce_ndarrays_arrow,
+    triu_pair,
 )
 from fastselect_spark.selection._stats import (
     chi2_sf,
     chi2_stats_from_observed,
+    log_base,
     mi_from_contingency,
 )
 from fastselect_spark.selection.cmim import cmim_loop
@@ -271,18 +275,38 @@ def mi_relevance_matrix(
     )
 
 
-def _pair_mi_block(Xt, ym, P, k, log_base):
-    """Vectorized MI for a block of pairs over the SHARED 0..k-1 code space.
+def _mi_rows(X, Y, kx, ky, base):
+    """MI per row of two code arrays broadcasting to (m, n): one bincount
+    of the fused codes ``X*ky + Y`` builds the m (kx, ky) joint tables, then
+    the reference's eps placement (mutual_information.py:40-45) per table.
+    The finalizer both block kernels share."""
+    m, n_rows = X.shape
+    cells = kx * ky
+    eps = 1e-12
+    flat = (np.arange(m, dtype=np.int64)[:, None] * cells + (X * ky + Y)).ravel()
+    T = (
+        np.bincount(flat, minlength=m * cells)
+        .reshape(m, kx, ky)
+        .astype(np.float64)
+    )
+    Pm = T / n_rows
+    px = Pm.sum(axis=2, keepdims=True)
+    py = Pm.sum(axis=1, keepdims=True)
+    denom = px * py + eps
+    mask = Pm > eps
+    contrib = np.zeros_like(Pm)
+    np.log(np.where(mask, Pm / denom, 1.0), out=contrib, where=mask)
+    return (Pm * contrib).sum(axis=(1, 2)) / base
+
+
+def _pair_mi_block(Xt, ym, P, k, base):
+    """I(X_i; X_j) for a block of pairs over the SHARED 0..k-1 code space.
 
     ``Xt`` is the transposed (p, n) coded matrix, ``P`` an (m, 2) int64 pair
     array; a second index of -1 means "the label" (relevance pair). Returns
-    the (m,) MI vector. This is the ONE kernel both the full p×p path
-    (:func:`mi_matrices_broadcast`) and the step-wise greedy engine
-    (:class:`BroadcastMIEngine`) call, so lazy columns are bit-identical to
-    full-matrix columns by construction."""
-    m = len(P)
-    kk = k * k
-    eps = 1e-12
+    the (m,) MI vector. The full p×p matrix and the step-wise columns are
+    both jobs of :class:`BroadcastMIEngine` over this kernel, so lazy
+    columns are bit-identical to full-matrix columns by construction."""
     A = Xt[P[:, 0]]  # (m, n) contiguous row gather
     B = np.empty_like(A)
     feat = P[:, 1] >= 0
@@ -290,46 +314,14 @@ def _pair_mi_block(Xt, ym, P, k, log_base):
         B[feat] = Xt[P[feat, 1]]
     if (~feat).any():
         B[~feat] = ym[None, :]
-    fused = A * k + B  # (m, n)
-    flat = (np.arange(m, dtype=np.int64)[:, None] * kk + fused).ravel()
-    T = np.bincount(flat, minlength=m * kk).reshape(m, k, k).astype(np.float64)
-    n_rows = Xt.shape[1]
-    Pm = T / n_rows
-    px = Pm.sum(axis=2, keepdims=True)
-    py = Pm.sum(axis=1, keepdims=True)
-    denom = px * py + eps
-    mask = Pm > eps
-    contrib = np.zeros_like(Pm)
-    np.log(np.where(mask, Pm / denom, 1.0), out=contrib, where=mask)
-    return (Pm * contrib).sum(axis=(1, 2)) / log_base
+    return _mi_rows(A, B, k, k, base)
 
 
-def _joint_mi_block(Xt, ym, P, k, log_base):
+def _joint_mi_block(Xt, ym, P, k, base):
     """Vectorized I((X_i, X_j); Y) for a block of pairs — the JMI/CMIM
     statistic (Yang & Moody 1999). The fused (x_i, x_j) pair state is one
-    axis (k² states in the shared code space), the label the other; the MI
-    formula is then identical in shape to :func:`_pair_mi_block`'s."""
-    m = len(P)
-    kky = k * k * k
-    eps = 1e-12
-    A = Xt[P[:, 0]]
-    B = Xt[P[:, 1]]
-    fused = (A * k + B) * k + ym[None, :]  # (m, n) triple code
-    flat = (np.arange(m, dtype=np.int64)[:, None] * kky + fused).ravel()
-    T = (
-        np.bincount(flat, minlength=m * kky)
-        .reshape(m, k * k, k)
-        .astype(np.float64)
-    )
-    n_rows = Xt.shape[1]
-    Pm = T / n_rows
-    px = Pm.sum(axis=2, keepdims=True)
-    py = Pm.sum(axis=1, keepdims=True)
-    denom = px * py + eps
-    mask = Pm > eps
-    contrib = np.zeros_like(Pm)
-    np.log(np.where(mask, Pm / denom, 1.0), out=contrib, where=mask)
-    return (Pm * contrib).sum(axis=(1, 2)) / log_base
+    axis (k² states in the shared code space), the label the other."""
+    return _mi_rows(Xt[P[:, 0]] * k + Xt[P[:, 1]], ym[None, :], k * k, k, base)
 
 
 def mi_matrices_broadcast(
@@ -339,91 +331,30 @@ def mi_matrices_broadcast(
     unit: str = "bit",
     compute_redundancy: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(relevance[p], redundancy[p, p]) by broadcasting the coded matrix and
-    distributing PAIR ranges across tasks — the reference-benchmark regime
-    (n bounded, p large; p(p−1)/2 contingencies). Codes must be a shared
-    0..k-1 integer space (use :func:`encode_shared` first)."""
-    X_codes = np.ascontiguousarray(np.asarray(X_codes, dtype=np.int64))
-    y_codes = np.asarray(y_codes, dtype=np.int64)
-    n, p = X_codes.shape
-    k = int(max(X_codes.max(initial=0), y_codes.max(initial=0))) + 1
-    check_states(k)
+    """(relevance[p], redundancy[p, p]) as ONE pair job of
+    :class:`BroadcastMIEngine` — the reference-benchmark regime (n bounded,
+    p large; p(p−1)/2 contingencies). Pair ids below p are the relevance
+    pairs (f, label); the rest walk the upper triangle row-major through
+    :func:`triu_pair`. Codes must be a shared 0..k-1 integer space (use
+    :func:`encode_shared` first)."""
+    with BroadcastMIEngine(spark, X_codes, y_codes, unit=unit) as engine:
+        p = engine.p
 
-    n_red = p * (p - 1) // 2 if compute_redundancy else 0
-    n_pairs = p + n_red
+        def pairs_of(ids: np.ndarray) -> np.ndarray:
+            out = np.full((len(ids), 2), -1, dtype=np.int64)
+            rel = ids < p
+            out[rel, 0] = ids[rel]
+            out[~rel, 0], out[~rel, 1] = triu_pair(ids[~rel] - p, p)
+            return out
 
-    sc = spark.sparkContext
-    # broadcast TRANSPOSED (p, n): a pair gather is then two contiguous row
-    # copies instead of a strided column walk (one cache miss per element —
-    # measured ~10x slower at p=5000)
-    bc_X = sc.broadcast(np.ascontiguousarray(X_codes.T))
-    bc_y = sc.broadcast(y_codes)
-    kk = k * k
-
-    def _decode(t: np.ndarray) -> np.ndarray:
-        """Global pair index -> (i, j) rows; indices < p are the relevance
-        pairs (i, -1), the rest walk the upper triangle row-major. Derived
-        arithmetically so no O(p^2) pair table is ever built or broadcast."""
-        out = np.empty((len(t), 2), dtype=np.int64)
-        rel = t < p
-        out[rel, 0] = t[rel]
-        out[rel, 1] = -1
-        r = t[~rel] - p
-        if len(r):
-            b = 2 * p - 1
-            i = ((b - np.sqrt(b * b - 8.0 * r)) // 2).astype(np.int64)
-            start = i * (2 * p - i - 1) // 2
-            # float-precision fixups
-            over = start > r
-            i[over] -= 1
-            start[over] = i[over] * (2 * p - i[over] - 1) // 2
-            nxt = (i + 1) * (2 * p - i - 2) // 2
-            under = nxt <= r
-            i[under] += 1
-            start[under] = i[under] * (2 * p - i[under] - 1) // 2
-            out[~rel, 0] = i
-            out[~rel, 1] = r - start + i + 1
-        return out
-
-    # pairs per inner block: keep every temp (~n*block int64) around 1MB so
-    # 32 concurrent workers stay inside their malloc arenas — large blocks
-    # mmap/munmap tens of MB per block and page-fault churn across processes
-    # measured 5-8x slower than the same kernel single-process
-    block = max(1, (1 << 14) // kk * max(1, 1000 // max(1, X_codes.shape[0])))
-    log_base = np.log(2.0) if unit == "bit" else 1.0
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Xm, ym = bc_X.value, bc_y.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            idx = pdf["id"].to_numpy(dtype=np.int64)
-            out = np.empty(len(idx), dtype=np.float64)
-            for s in range(0, len(idx), block):
-                sub = idx[s : s + block]
-                out[s : s + block] = _pair_mi_block(Xm, ym, _decode(sub), k, log_base)
-            yield pd.DataFrame({"id": idx, "mi": out})
-
-    # native range partitioning: contiguous id splits are perfectly balanced
-    # (pair cost is homogeneous) and skip repartition's round-robin Exchange;
-    # 4 tasks per core
-    n_chunks = min(n_pairs, max(sc.defaultParallelism * 4, 2))
-    res = (
-        spark.range(0, n_pairs, 1, n_chunks)
-        .mapInPandas(kernel, schema="id long, mi double")
-        .toPandas()
-    )
-    mi = np.zeros(n_pairs, dtype=np.float64)
-    mi[res["id"].to_numpy(dtype=np.int64)] = res["mi"].to_numpy(dtype=np.float64)
-
+        n_red = p * (p - 1) // 2 if compute_redundancy else 0
+        mi = engine._run(p + n_red, pairs_of, joint=False, tasks_per_core=4)
     relevance = mi[:p].copy()
     redundancy = np.zeros((p, p), dtype=np.float64)
     if compute_redundancy:
         iu, ju = np.triu_indices(p, k=1)
         redundancy[iu, ju] = mi[p:]
         redundancy[ju, iu] = mi[p:]
-    bc_X.destroy()
-    bc_y.destroy()
     return relevance, redundancy
 
 
@@ -440,19 +371,18 @@ def encode_shared(X: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray,
 
 
 class BroadcastMIEngine:
-    """Broadcast-once, score-on-demand MI engine for step-wise greedy
-    selection at large p.
+    """Broadcast-once, score-on-demand MI engine: the transposed coded
+    matrix and the labels are broadcast ONCE, then every request is one
+    :func:`pair_job` over the block kernels (:func:`_pair_mi_block` /
+    :func:`_joint_mi_block`).
 
     Greedy selectors (mRMR, JMI, CMIM) never need the full p×p pair
     statistics — each step only scores the remaining candidates against the
     feature just selected, so the whole selection touches O(p·K) pairs, not
-    O(p²). This engine broadcasts the transposed coded matrix ONCE and runs
-    one pair-parallel job per requested column; columns are bit-identical to
-    the full-matrix path because both call the same block kernels
-    (:func:`_pair_mi_block` / :func:`_joint_mi_block`).
-
-    At the reference's mRMR benchmark config (n=1000, p=5000, K=10) this
-    replaces 12.5M pair contingencies with ~50k."""
+    O(p²). At the reference's mRMR benchmark config (n=1000, p=5000, K=10)
+    this replaces 12.5M pair contingencies with ~50k. The full matrix
+    (:func:`mi_matrices_broadcast`) is one job of the same engine, so lazy
+    columns are bit-identical to full-matrix columns."""
 
     def __init__(
         self,
@@ -480,72 +410,52 @@ class BroadcastMIEngine:
                 "DataFrame selectors for row-scale inputs."
             )
         self.spark = spark
-        self.unit = unit
-        self.log_base = np.log(2.0) if unit == "bit" else 1.0
+        self.log_base = log_base(unit)
         sc = spark.sparkContext
+        # broadcast TRANSPOSED (p, n): a pair gather is then two contiguous
+        # row copies instead of a strided column walk (one cache miss per
+        # element — measured ~10x slower at p=5000)
         self._bc_X = sc.broadcast(np.ascontiguousarray(X_codes.T))
         self._bc_y = sc.broadcast(y_codes)
 
-    def job_frame(self, pairs: np.ndarray, joint: bool):
-        """Build (without executing) one pair-parallel step job. Returns
-        (DataFrame, pair_broadcast) — exposed separately from :meth:`_run`
-        so tools/explain_audit.py can assert the physical plan stays
-        Exchange-free (the per-step cost claim rests on that)."""
-        pairs = np.ascontiguousarray(np.asarray(pairs, dtype=np.int64))
-        m = len(pairs)
-        sc = self.spark.sparkContext
-        bc_P = sc.broadcast(pairs)
-        k, n, log_base = self.k, self.n, self.log_base
-        # same ~1MB-temp sizing rule as mi_matrices_broadcast; the joint
-        # kernel's contingency is k× larger (k²·k cells per pair)
-        cells = k * k * (k if joint else 1)
-        block = max(1, (1 << 14) // cells * max(1, 1000 // max(1, n)))
+    def _run(
+        self, n_pairs: int, pairs_of, joint: bool, tasks_per_core: int
+    ) -> np.ndarray:
+        """MI of pair ids ``0..n_pairs-1`` in one :func:`pair_job`;
+        ``pairs_of(ids)`` maps ids to (m, 2) pair rows on the executors."""
+        k, base = self.k, self.log_base
         fn = _joint_mi_block if joint else _pair_mi_block
+        # pairs per inner block: keep every temp (~n*block int64) around 1MB
+        # so concurrent workers stay inside their malloc arenas — large
+        # blocks mmap/munmap tens of MB each and the page-fault churn across
+        # processes measured 5-8x slower than the same kernel
+        # single-process; the joint contingency is k× larger (k²·k cells)
+        cells = k * k * (k if joint else 1)
+        block = max(1, (1 << 14) // cells * max(1, 1000 // max(1, self.n)))
         bc_X, bc_y = self._bc_X, self._bc_y
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Xm, ym, Pall = bc_X.value, bc_y.value, bc_P.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                idx = pdf["id"].to_numpy(dtype=np.int64)
-                out = np.empty(len(idx), dtype=np.float64)
-                for s in range(0, len(idx), block):
-                    sub = idx[s : s + block]
-                    out[s : s + block] = fn(Xm, ym, Pall[sub], k, log_base)
-                yield pd.DataFrame({"id": idx, "mi": out})
+        def score(ids: np.ndarray) -> np.ndarray:
+            Xm, ym = bc_X.value, bc_y.value
+            out = np.empty(len(ids), dtype=np.float64)
+            for s in range(0, len(ids), block):
+                out[s : s + block] = fn(Xm, ym, pairs_of(ids[s : s + block]), k, base)
+            return out
 
-        # native range partitioning — pair cost is homogeneous, so contiguous
-        # splits balance perfectly and skipping repartition's Exchange takes a
-        # greedy step from 3.5 s to 0.41 s measured (the shuffle + extra task
-        # wave was ~90% of each step job at p=5000); one task per core
-        n_chunks = min(m, max(sc.defaultParallelism, 2))
-        frame = self.spark.range(0, m, 1, n_chunks).mapInPandas(
-            kernel, schema="id long, mi double"
-        )
-        return frame, bc_P
+        return pair_job(self.spark, n_pairs, score, tasks_per_core)
 
-    def _run(self, pairs: np.ndarray, joint: bool) -> np.ndarray:
-        """One pair-parallel job over an explicit (m, 2) pair list."""
-        m = len(pairs)
-        if m == 0:
-            return np.zeros(0, dtype=np.float64)
-        frame, bc_P = self.job_frame(pairs, joint)
-        res = frame.toPandas()
-        out = np.zeros(m, dtype=np.float64)
-        out[res["id"].to_numpy(dtype=np.int64)] = res["mi"].to_numpy(
-            dtype=np.float64
-        )
-        bc_P.destroy()
-        return out
+    def _column(self, s: int, cand: np.ndarray, joint: bool) -> np.ndarray:
+        """One greedy-step job over (min, max)-oriented pairs; 1 task per
+        core."""
+        pairs = self._canonical(s, cand)
+        return self._run(len(pairs), lambda ids: pairs[ids], joint, tasks_per_core=1)
 
     def relevance(self) -> np.ndarray:
         """I(X_f; Y) for every feature — one job, p pairs."""
-        pairs = np.stack(
-            [np.arange(self.p, dtype=np.int64), np.full(self.p, -1, np.int64)],
-            axis=1,
-        )
-        return self._run(pairs, joint=False)
+
+        def pairs_of(ids: np.ndarray) -> np.ndarray:
+            return np.stack([ids, np.full(len(ids), -1, np.int64)], axis=1)
+
+        return self._run(self.p, pairs_of, joint=False, tasks_per_core=1)
 
     @staticmethod
     def _canonical(s: int, cand: np.ndarray) -> np.ndarray:
@@ -561,11 +471,11 @@ class BroadcastMIEngine:
 
     def mi_column(self, s: int, cand: np.ndarray) -> np.ndarray:
         """I(X_f; X_s) for f in ``cand`` (mRMR redundancy column)."""
-        return self._run(self._canonical(s, cand), joint=False)
+        return self._column(s, cand, joint=False)
 
     def joint_mi_column(self, s: int, cand: np.ndarray) -> np.ndarray:
         """I((X_f, X_s); Y) for f in ``cand`` (JMI/CMIM column)."""
-        return self._run(self._canonical(s, cand), joint=True)
+        return self._column(s, cand, joint=True)
 
     def close(self) -> None:
         self._bc_X.destroy()

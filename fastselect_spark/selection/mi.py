@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastselect_spark.selection._agg import tree_reduce_ndarrays
-from fastselect_spark.selection._stats import mi_from_contingency
+from fastselect_spark.selection._stats import log_base, mi_from_contingency
 
 MAX_STATES = 512
 # cells of the joint value cube collected to the driver; above it a caller
@@ -265,13 +265,13 @@ def gain_ratio(
     the row count, so no extra cluster work beyond the cube every other
     information scorer already shares."""
     p = len(feature_cols)
+    base = log_base(unit)
     cube = value_cube(df, list(feature_cols) + [label_col])
     if cube is None:
         raise ValueError("joint value cube exceeds the cap; bin features first")
     raw, counts = cube
     n = float(counts.sum())
     codes, k = _shared_codes(raw)
-    log_base = np.log(2.0) if unit == "bit" else 1.0
     ig = np.empty(p, dtype=np.float64)
     si = np.empty(p, dtype=np.float64)
     for f in range(p):
@@ -279,7 +279,7 @@ def gain_ratio(
         ig[f] = mi_from_contingency(table, unit=unit)
         marg = table.sum(axis=1)
         px = marg[marg > 0] / n
-        si[f] = float(-(px * np.log(px)).sum() / log_base)
+        si[f] = float(-(px * np.log(px)).sum() / base)
     ratio = np.where(si > 0, ig / np.where(si > 0, si, 1.0), 0.0)
     return ig, si, ratio
 

@@ -230,3 +230,54 @@ def test_stepwise_engine_rejects_oversize_broadcast(spark, monkeypatch):
         matrix_mod.BroadcastMIEngine(
             spark, np.zeros((8, 4), dtype=np.int64), np.zeros(8, dtype=np.int64)
         )
+
+
+# ---------- shared pair-job pieces ----------
+
+def test_triu_pair_matches_triu_indices():
+    """The pair-id decoder walks np.triu_indices(p, 1) order exactly; at
+    large p the row starts ±1 and the last id exercise the float-sqrt
+    fixups."""
+    from fastselect_spark.selection._agg import triu_pair
+
+    for p in range(2, 301):
+        iu, ju = np.triu_indices(p, k=1)
+        i, j = triu_pair(np.arange(len(iu)), p)
+        np.testing.assert_array_equal(i, iu)
+        np.testing.assert_array_equal(j, ju)
+    for p in (5_000, 100_003, 1_000_003):
+        rows = np.arange(p - 1, dtype=np.int64)
+        starts = rows * (2 * p - rows - 1) // 2
+        n_pairs = p * (p - 1) // 2
+        ids = np.unique(
+            np.concatenate([starts - 1, starts, starts + 1, [n_pairs - 1]])
+        )
+        ids = ids[(ids >= 0) & (ids < n_pairs)]
+        # expected (i, j): the row whose start is the last one <= id
+        want_i = np.searchsorted(starts, ids, side="right") - 1
+        want_j = ids - starts[want_i] + want_i + 1
+        i, j = triu_pair(ids, p)
+        np.testing.assert_array_equal(i, want_i)
+        np.testing.assert_array_equal(j, want_j)
+        assert (i[-1], j[-1]) == (p - 2, p - 1)
+
+
+@pytest.mark.parametrize("scorer", ["mi_matrices", "gain_ratio", "mrmr_select_matrix"])
+def test_unknown_unit_raises(spark, coded, scorer):
+    """A unit typo must raise, not silently return nats."""
+    import pandas as pd
+
+    from fastselect_spark.selection import gain_ratio, mi_matrices
+
+    X, y, _ = coded
+    cols = [f"f{i}" for i in range(X.shape[1])]
+    pdf = pd.DataFrame(X, columns=cols)
+    pdf["label"] = y
+    ndf = spark.createDataFrame(pdf)
+    with pytest.raises(ValueError, match="unit"):
+        if scorer == "mi_matrices":
+            mi_matrices(ndf, cols, "label", unit="bits")
+        elif scorer == "gain_ratio":
+            gain_ratio(ndf, cols, "label", unit="bits")
+        else:
+            mrmr_select_matrix(spark, X, y, n_select=3, unit="bits")

@@ -251,6 +251,29 @@ def test_cfs_invalid_strategy():
         CFSSelector(strategy="entropy")
 
 
+@pytest.mark.parametrize("strategy", ["uniform", "kmeans", "quantile"])
+def test_cfs_stage_modes_identical(spark, cfs_recipe, strategy):
+    """The small path (collected matrix + broadcast pair job) and the staged
+    path (one-pass cube) build the same integer tables, so every SU value
+    and the selection are exactly equal."""
+    X, y = cfs_recipe
+    cols = [f"f{i}" for i in range(X.shape[1])] + ["d"]
+    pdf = pd.DataFrame(X, columns=cols[:-1])
+    pdf["d"] = ((np.arange(len(y)) * 7) % 5 + y).astype(np.int64)  # discrete
+    pdf["label"] = y
+    df = spark.createDataFrame(pdf).repartition(4)
+    fits = [
+        CFSSelector(n_bins=10, strategy=strategy, stage_mode=mode).fit(df, cols)
+        for mode in ("small", "staged")
+    ]
+    assert [m.effective_stage_mode_ for m in fits] == ["small", "staged"]
+    small, staged = fits
+    np.testing.assert_array_equal(small.r_cf_, staged.r_cf_)
+    np.testing.assert_array_equal(small.r_ff_, staged.r_ff_)
+    np.testing.assert_array_equal(small.selected_indices_, staged.selected_indices_)
+    assert small.merit_ == staged.merit_
+
+
 
 def _local_kmeans_edges(x, n_bins):
     """Faithful local replica of kmeans_bin_edges: nearest-center argmin

@@ -367,23 +367,20 @@ def main() -> int:
         "Exchange" not in p and len(re.findall(r"FileScan", p)) == 1,
     )
 
-    # 19. step-wise broadcast MI engine: a per-step column job must plan
-    # ZERO exchanges — native range partitioning straight into mapInPandas
-    # (the measured 3.5 s -> 0.5 s per-greedy-step win rests on this)
+    # 19. the pair job behind every pairwise scorer (full MI matrix,
+    # step-wise MI engine, CFS redundancy) must plan ZERO exchanges —
+    # native range partitioning straight into mapInPandas (the measured
+    # 3.5 s -> 0.41 s per-greedy-step win rests on this)
     import numpy as np
 
-    from fastselect_spark.selection.matrix import BroadcastMIEngine
+    from fastselect_spark.selection._agg import pair_frame
 
-    Xc = (np.arange(40, dtype=np.int64).reshape(10, 4)) % 3
-    eng = BroadcastMIEngine(spark, Xc, np.arange(10, dtype=np.int64) % 2)
-    frame, bc_P = eng.job_frame(eng._canonical(0, np.array([1, 2, 3])), True)
+    frame = pair_frame(spark, 10, lambda ids: ids.astype(np.float64), 4)
     p = plan_of(frame)
     failures += not check(
-        "stepwise MI column job plans zero exchanges",
+        "pair job plans zero exchanges",
         "Exchange" not in p and "Range" in p,
     )
-    bc_P.destroy()
-    eng.close()
 
     # 20. multi-horizon stats: every horizon rides the SAME conv_id
     # exchange + sort — adding horizons must not add exchanges
