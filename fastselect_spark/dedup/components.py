@@ -204,18 +204,22 @@ def connected_components(
     (doc_id, min-reachable-id) result, one collect instead of
     O(diameter) Spark jobs. ``driver_edge_cap=None`` forces the
     distributed path."""
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).persist()
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
     if driver_edge_cap is not None:
         # one count on the (persisted) edge list gates the fast path; the
         # distributed loop below reads the same cache, so the count is
-        # never wasted work
+        # never wasted work. It also fills fwd's cache: union-find is
+        # direction-agnostic, so the driver collects the forward pairs
+        # only (half the doubled rows) without re-running pairs' plan
         if edges.count() <= 2 * driver_edge_cap:
-            out = _components_driver(edges, "src", "dst")
+            out = _components_driver(fwd, "src", "dst")
             edges.unpersist()
+            fwd.unpersist()
             return out
+    fwd.unpersist()
     # per-round labels are eagerly localCheckpoint'd: persist alone leaves
     # the logical plan compounding ~2x per round (a full 25-round run OOMs
     # the JVM just EXPLAINING round 25's plan — measured); truncation keeps

@@ -110,6 +110,26 @@ def _melt_tagged(df: DataFrame, cols: list[str], g: int) -> DataFrame:
     )
 
 
+def _ks_block(pdf: pd.DataFrame, run: dict, tots: dict) -> pd.DataFrame:
+    """(feature, d): each feature's max CDF gap over a block of the sorted
+    (feature, v, c0, c1) table. ``run`` (updated in place) holds each
+    feature's counts below the block — the driver path passes it empty
+    with the whole sorted table as one block; ``tots`` its totals."""
+    feats, ds = [], []
+    for k, grp in pdf.groupby("feature", sort=False):
+        k = str(k)
+        st = run.setdefault(k, [0, 0])
+        cum0 = grp["c0"].to_numpy().cumsum() + st[0]
+        cum1 = grp["c1"].to_numpy().cumsum() + st[1]
+        st[0] = int(cum0[-1])
+        st[1] = int(cum1[-1])
+        n0, n1 = tots[k]
+        d = np.abs(cum0 / float(n0) - cum1 / float(n1))
+        feats.append(k)
+        ds.append(float(d.max()))
+    return pd.DataFrame({"feature": feats, "d": ds})
+
+
 def ks_statistics(
     ref: DataFrame,
     cur: DataFrame,
@@ -133,6 +153,9 @@ def ks_statistics(
        driver for exclusive prefix offsets; pass B turns local cumsums +
        offsets into CDF gaps and emits one per-batch max per feature.
 
+    Small inputs collect the count table once instead and run pass B's
+    kernel (:func:`_ks_block`) over it as one block from zero offsets.
+
     CDF values are quotients of exact integer counts, so the gap and its
     max are IEEE-identical cross-engine. Returns (feature, ks) — one row
     per feature."""
@@ -143,25 +166,23 @@ def ks_statistics(
         F.sum((F.col("__g") == 1).cast("long")).alias("c1"),
     )
 
-    # Small inputs: collect the distinct-value count table once and run the
-    # identical cumsum/gap arithmetic in NumPy — same integer counts, same
-    # cum/float(n) quotients, exact max, so the ks values are bit-identical
-    # to the two-pass kernel (round-6; the fdr_bh small-path discipline).
+    # Small inputs: collect the distinct-value count table once and run
+    # pass B's kernel on the sorted table as one block from zero counts —
+    # the same integer cumsums and quotients, so the ks values are
+    # bit-identical to the two-pass kernel.
     from fastselect_spark.selection._agg import plan_size_bytes
 
     if (plan_size_bytes(ref) + plan_size_bytes(cur)) <= (64 << 20):
         pdf = counts.toPandas().sort_values(["feature", "v"], kind="stable")
-        feats, ks_vals = [], []
-        for k, grp in pdf.groupby("feature", sort=True):
-            cum0 = grp["c0"].to_numpy(dtype=np.int64).cumsum()
-            cum1 = grp["c1"].to_numpy(dtype=np.int64).cumsum()
-            n0 = max(int(cum0[-1]), 1)
-            n1 = max(int(cum1[-1]), 1)
-            d = np.abs(cum0 / float(n0) - cum1 / float(n1))
-            feats.append(str(k))
-            ks_vals.append(float(d.max()))
+        tots = {
+            str(k): (max(int(s0), 1), max(int(s1), 1))
+            for k, s0, s1 in pdf.groupby("feature")[["c0", "c1"]]
+            .sum()
+            .itertuples()
+        }
         return spark.createDataFrame(
-            list(zip(feats, ks_vals)), schema="feature string, ks double"
+            _ks_block(pdf, {}, tots).rename(columns={"d": "ks"}),
+            schema="feature string, ks double",
         )
     if num_partitions:
         rng = counts.repartitionByRange(num_partitions, "feature", "v")
@@ -200,12 +221,12 @@ def ks_statistics(
     # pass A's per-partition sums double as the per-feature TOTALS — no
     # separate totals job (which would re-run the whole melt + reduction
     # upstream of the persist point)
-    offsets: dict[tuple[int, str], tuple[int, int]] = {}
+    offsets: dict[int, dict[str, tuple[int, int]]] = {}
     totals: dict[str, tuple[int, int]] = {}
     for k, lst in by_feat.items():
         run0 = run1 = 0
         for pid, s0, s1 in sorted(lst):
-            offsets[(pid, k)] = (run0, run1)
+            offsets.setdefault(pid, {})[k] = (run0, run1)
             run0 += s0
             run1 += s1
         totals[k] = (max(run0, 1), max(run1, 1))
@@ -215,23 +236,11 @@ def ks_statistics(
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         offs, tots = bc.value
-        run: dict[str, list[int]] = {}
+        # copied: a reused worker shares the broadcast value across tasks
+        run = {k: list(v) for k, v in offs.get(pid, {}).items()}
         for pdf in batches:
-            if pdf.empty:
-                continue
-            feats, ds = [], []
-            for k, grp in pdf.groupby("feature", sort=False):
-                k = str(k)
-                st = run.setdefault(k, list(offs.get((pid, k), (0, 0))))
-                cum0 = grp["c0"].to_numpy().cumsum() + st[0]
-                cum1 = grp["c1"].to_numpy().cumsum() + st[1]
-                st[0] = int(cum0[-1])
-                st[1] = int(cum1[-1])
-                n0, n1 = tots[k]
-                d = np.abs(cum0 / float(n0) - cum1 / float(n1))
-                feats.append(k)
-                ds.append(float(d.max()))
-            yield pd.DataFrame({"feature": feats, "d": ds})
+            if not pdf.empty:
+                yield _ks_block(pdf, run, tots)
 
     per_part = srt.mapInPandas(cdf_pass, schema="feature string, d double")
     out = per_part.groupBy("feature").agg(F.max("d").alias("ks"))

@@ -14,7 +14,9 @@ Python (BASELINE.json:6). Shape:
 
 Accumulators are integer counts or float64 partial sums, so the merged
 result is independent of partitioning (exact for ints; reordered float
-addition only at the final tiny merge).
+addition only at the final tiny merge). :func:`local_reducer` is the
+driver twin for small frames reduced once per iteration (Lloyd): one
+collect, the same partial function per partition, the same merge order.
 
 The pair-parallel axis (n bounded, p large) has no accumulator: every
 pairwise scorer — the full MI matrix, the step-wise MI engine and CFS
@@ -212,6 +214,34 @@ def tree_reduce_ndarrays(
 
     partials = df.mapInPandas(mapper, schema=_PARTIAL_SCHEMA)
     return _merge_partials(partials, df, fanin, direct_collect_threshold)
+
+
+def local_reducer(df: DataFrame) -> Callable[[Callable], dict[str, np.ndarray]]:
+    """Driver twin of :func:`tree_reduce_ndarrays` for small frames that an
+    iterative caller reduces many times: ``df`` is collected ONCE with its
+    partition ids, and the returned ``reduce(partial_fn)`` runs the
+    caller's own ``partial_fn`` over each partition's rows and merges the
+    partials in ascending partition order — the first assigns, later ones
+    add, exactly as the direct-collect branch of the tree reduction, so
+    the result is bit-identical without a job per call."""
+    pdf = df.select(F.spark_partition_id().alias("__pid"), *df.columns).toPandas()
+    pids = pdf.pop("__pid").to_numpy()
+    # collect keeps partition order, so each partition is one row range
+    cuts = [0, *(np.flatnonzero(np.diff(pids)) + 1).tolist(), len(pids)]
+    parts = [pdf.iloc[a:b] for a, b in zip(cuts, cuts[1:]) if b > a]
+
+    def reduce(partial_fn) -> dict[str, np.ndarray]:
+        out: dict[str, np.ndarray] = {}
+        # an empty frame still yields one (zero) partial, as its tasks do
+        for part in parts or [pdf]:
+            for name, arr in partial_fn(iter([part])).items():
+                if name in out:
+                    out[name] += arr
+                else:
+                    out[name] = arr
+        return out
+
+    return reduce
 
 
 def _merge_partials(

@@ -54,6 +54,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fastselect_spark.selection._agg import plan_size_bytes
+
 MID = "__mid"
 LABEL = "__label"
 PACKED = "__packed"
@@ -333,16 +335,6 @@ def _preflight(df: DataFrame, feature_cols: list[str], discrete_limit: int):
     return is_discrete, ranges
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's sizeInBytes estimate of the plan — a driver-side stat, no
-    job. Used ONLY as the small/staged gate: an overestimate stages (safe),
-    an underestimate collects a few× the threshold (bounded)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-
-
 def make_stage(
     df: DataFrame,
     feature_cols: list[str],
@@ -366,8 +358,10 @@ def make_stage(
         est = n_rows * (p + 2 + len(extra_cols)) * 8
         mode = "small" if est <= SMALL_BYTES else "staged"
     else:
-        est = _plan_size_bytes(narrow)
-        mode = "small" if est is not None and est <= SMALL_BYTES else "staged"
+        # a failed estimate reads as huge, so it stages (safe); an
+        # underestimate collects a few× the threshold (bounded)
+        est = plan_size_bytes(narrow)
+        mode = "small" if est <= SMALL_BYTES else "staged"
 
     if mode == "small":
         # Bare column refs + a direct Arrow collect, cast driver-side in

@@ -29,6 +29,10 @@ single-task funnel. Instead the same two-pass range-partition scheme as
    reverse-cummin of the step-up definition, with ONE range exchange
    total and no global funnel.
 
+Small tables take one collect instead: the driver sorts it and applies
+pass B's arithmetic (:func:`_bh_terms`) to the whole array as the only
+partition, so the carry is empty.
+
 The BH selection threshold is ``thr = max{p_(i) : p_(i) <= alpha*i/m}``
 (one filtered MAX aggregation); every feature with ``p <= thr`` is
 selected — the step-up rule without materializing the walk.
@@ -51,41 +55,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _fdr_bh_driver(spark, base: DataFrame, a: float) -> DataFrame:
-    """Driver replica of the two-pass BH kernel for small inputs — same
-    sort order (p asc, feature asc; pandas str comparison equals Spark's
-    binary UTF-8 order), same ``m*p/rank`` / ``a*rank/m`` operand order
-    and dtypes, exact-min suffix accumulation."""
-    pdf = base.toPandas()
-    m = len(pdf)
-    schema = (
-        "feature string, p_value double, rank long, "
-        "p_adj double, p_bonf double, selected int"
-    )
-    if m == 0:
-        return spark.createDataFrame([], schema=schema)
-    pdf = pdf.sort_values(["p", "feature"], kind="stable").reset_index(drop=True)
-    p = pdf["p"].to_numpy(dtype=np.float64)
-    rank = np.arange(1, m + 1, dtype=np.int64)
-    q = m * p / rank
+_SCHEMA = (
+    "feature string, p_value double, rank long, "
+    "p_adj double, p_bonf double, selected int"
+)
+
+
+def _bh_terms(p: np.ndarray, rank0: int, m: int, a: float):
+    """(rank, q, suffix-min q, step-up candidate) of a sorted p block
+    whose first row has global rank ``rank0 + 1`` — pass B's arithmetic,
+    shared by the driver path (the whole sorted array, ``rank0 = 0``)."""
+    rank = rank0 + np.arange(1, len(p) + 1, dtype=np.int64)
+    q = m * p / rank  # same operand order as the SQL oracle
     sfx = np.minimum.accumulate(q[::-1])[::-1]
-    cand = p <= a * rank / m
-    thr = p[cand].max() if cand.any() else None
-    out = pd.DataFrame(
-        {
-            "feature": pdf["feature"],
-            "p_value": p,
-            "rank": rank,
-            "p_adj": np.minimum(1.0, sfx),
-            "p_bonf": np.minimum(1.0, float(m) * p),
-            "selected": (
-                (p <= thr).astype(np.int32)
-                if thr is not None
-                else np.zeros(m, dtype=np.int32)
-            ),
-        }
-    )
-    return spark.createDataFrame(out, schema=schema)
+    return rank, q, sfx, p <= a * rank / m
 
 
 def fdr_bh(
@@ -113,14 +96,29 @@ def fdr_bh(
     ).where(F.col(p_col).isNotNull())
 
     # Small p-value tables skip the two-pass range machinery entirely: one
-    # Arrow collect + the identical NumPy expressions (same operand order,
-    # same dtypes) on the globally-sorted array — the per-partition suffix
-    # min + carry composition is an exact min, so values are bit-identical
-    # to the distributed result (round-6; the CFS-small-path discipline).
+    # Arrow collect, sorted on the driver, through pass B's own arithmetic
+    # as the only partition — the per-partition suffix min + carry is an
+    # exact min, so values are bit-identical to the distributed result.
     from fastselect_spark.selection._agg import small_frame
 
+    a = float(alpha)
     if small_frame(base, 64 << 20):
-        return _fdr_bh_driver(spark, base, float(alpha))
+        pdf = base.toPandas().sort_values(["p", "feature"], kind="stable")
+        p = pdf["p"].to_numpy(dtype=np.float64)
+        m = len(p)
+        rank, _, sfx, cand = _bh_terms(p, 0, m, a)
+        sel = p <= p[cand].max() if cand.any() else np.zeros(m, dtype=bool)
+        out = pd.DataFrame(
+            {
+                "feature": pdf["feature"],
+                "p_value": p,
+                "rank": rank,
+                "p_adj": np.minimum(1.0, sfx),
+                "p_bonf": np.minimum(1.0, float(m) * p),
+                "selected": sel.astype(np.int32),
+            }
+        )
+        return spark.createDataFrame(out, schema=_SCHEMA)
     if num_partitions:
         base = base.repartitionByRange(num_partitions, "p", "feature")
     else:
@@ -143,18 +141,13 @@ def fdr_bh(
     m = int(sum(counts.values()))
     if m == 0:
         srt.unpersist()
-        return spark.createDataFrame(
-            [],
-            schema="feature string, p_value double, rank long, "
-            "p_adj double, p_bonf double, selected int",
-        )
+        return spark.createDataFrame([], schema=_SCHEMA)
     offsets: dict[int, int] = {}
     run = 0
     for pid in sorted(counts):
         offsets[pid] = run
         run += counts[pid]
     bc = spark.sparkContext.broadcast(offsets)
-    a = float(alpha)
 
     # Pass B: global ranks, raw BH quotient, partition-local suffix min.
     def bh_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -165,10 +158,7 @@ def fdr_bh(
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
         p = pdf["p"].to_numpy(dtype=np.float64)
-        rank = bc.value.get(pid, 0) + np.arange(1, len(p) + 1, dtype=np.int64)
-        q = m * p / rank  # same operand order as the SQL oracle
-        sfx = np.minimum.accumulate(q[::-1])[::-1]
-        cand = p <= a * rank / m
+        rank, q, sfx, cand = _bh_terms(p, bc.value.get(pid, 0), m, a)
         yield pd.DataFrame(
             {
                 "pid": pid,

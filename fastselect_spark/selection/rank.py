@@ -20,6 +20,8 @@ prefix scheme, same family as asof.py's parallel-prefix carry):
    ``first_rn + (cnt - 1) / 2`` needs NO further shuffle.
 
 Total cost at any n: one range exchange + two scans of the sorted frame.
+Small inputs skip both passes: one collect, sorted on the driver, runs pass
+B's kernel (:func:`_rank_block`) as the only partition with no offsets.
 Ranks are 1-based; ties share the arithmetic mean of their positions
 (SQL: RANK() + (cnt_eq - 1)/2 — the oracle form). Ranks are integers or
 half-integers, exactly representable in float64, so downstream
@@ -36,37 +38,47 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _average_ranks_driver(
-    spark, base: DataFrame, key_col: str, value_col: str, id_col: str
-) -> DataFrame:
-    """Driver replica of the two-pass ranking: sort by (key, value), rank
-    1-based within key, tie groups (exact-equality runs; NaN never equals
-    NaN, matching the distributed kernel's ==-based grouping) share
-    ``first_rank + (size-1)/2.0``."""
-    schema = f"{key_col} string, {id_col} string, rank double"
-    pdf = base.toPandas()
-    if pdf.empty:
-        return spark.createDataFrame([], schema=schema)
-    pdf = pdf.sort_values([key_col, value_col], kind="stable").reset_index(
-        drop=True
-    )
+def _tie_starts(keys: np.ndarray, vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Starts of the key runs and of the (key, value) tie groups of a
+    sorted block. ``!=`` keeps NULL keys one run (None == None) and makes
+    every NaN value its own group (NaN != NaN)."""
+    kstart = np.ones(len(keys), dtype=bool)
+    kstart[1:] = keys[1:] != keys[:-1]
+    gstart = kstart.copy()
+    gstart[1:] |= vals[1:] != vals[:-1]
+    return kstart, gstart
+
+
+def _rank_block(
+    pdf: pd.DataFrame,
+    key_col: str,
+    value_col: str,
+    id_col: str,
+    off: dict,
+    pos: dict,
+) -> pd.DataFrame:
+    """Average ranks of a sorted block of complete (key, value) tie groups.
+    ``off`` maps a key to its rows in earlier partitions and ``pos`` (updated
+    in place) to the rows this partition already emitted; the driver path
+    passes both empty, its sorted frame being the only partition. A tie
+    group ranks ``first_rn + (size-1)/2.0``."""
     keys = pdf[key_col].to_numpy()
     vals = pdf[value_col].to_numpy(dtype=np.float64)
-    n = len(pdf)
-    idx = np.arange(n, dtype=np.int64)
-    kchange = keys[1:] != keys[:-1]
-    krun = np.concatenate([[0], np.cumsum(kchange)])
-    key_start = idx[np.concatenate([[True], kchange])]
-    rn = idx - key_start[krun] + 1  # 1-based row number within key
-    same = (~kchange) & (vals[1:] == vals[:-1])  # NaN breaks ties, as ==
-    grp = np.concatenate([[0], np.cumsum(~same)])
-    sizes = np.bincount(grp)
-    first_rn = rn[np.concatenate([[True], ~same])]
-    rank = first_rn[grp] + (sizes[grp] - 1) / 2.0
-    out = pd.DataFrame(
+    idx = np.arange(len(keys), dtype=np.int64)
+    kstart, gstart = _tie_starts(keys, vals)
+    run_keys, run_start = keys[kstart], idx[kstart]
+    base = np.array(
+        [off.get(k, 0) + pos.get(k, 0) for k in run_keys], dtype=np.int64
+    )
+    for k, c in zip(run_keys, np.diff(np.append(run_start, len(keys))).tolist()):
+        pos[k] = pos.get(k, 0) + c
+    krun = np.cumsum(kstart) - 1
+    rn = base[krun] + idx - run_start[krun] + 1  # 1-based global row number
+    grp = np.cumsum(gstart) - 1
+    rank = rn[gstart][grp] + (np.bincount(grp)[grp] - 1) / 2.0
+    return pd.DataFrame(
         {key_col: pdf[key_col], id_col: pdf[id_col], "rank": rank}
     )
-    return spark.createDataFrame(out, schema=schema)
 
 
 def average_ranks_long(
@@ -83,18 +95,24 @@ def average_ranks_long(
         F.col(value_col).isNotNull()
     )
 
-    # Small inputs: one Arrow collect + a vectorized NumPy ranking with the
-    # IDENTICAL tie-average arithmetic (first-rank int64 + (size-1)/2.0) —
-    # bit-identical ranks, no range exchange / two mapInPandas passes
-    # (round-6; shared by quantile_normalize, auc_scores and the
-    # correlation family). Gate is 8 MB: the ranked OUTPUT is as large as
-    # the input, so unlike the scalar-result fast paths the collect +
-    # rebuild round-trip stops paying quickly (measured: spearman's
-    # 1.6M-row melt was 4.9 s distributed vs 8.4 s collected).
+    # Small inputs: one Arrow collect, sorted as Spark sorts (NULL keys
+    # first, NaN values last), ranked by the executor kernel as one
+    # partition — no range exchange / two mapInPandas passes (shared by
+    # quantile_normalize, auc_scores and the correlation family). Gate is
+    # 8 MB: the ranked OUTPUT is as large as the input, so unlike the
+    # scalar-result fast paths the collect + rebuild round-trip stops
+    # paying quickly (measured: spearman's 1.6M-row melt was 4.9 s
+    # distributed vs 8.4 s collected).
     from fastselect_spark.selection._agg import plan_size_bytes
 
+    schema = f"{key_col} string, {id_col} string, rank double"
     if plan_size_bytes(base) <= (8 << 20):
-        return _average_ranks_driver(spark, base, key_col, value_col, id_col)
+        pdf = base.toPandas()
+        pdf = pdf.assign(__nn=pdf[key_col].notna()).sort_values(
+            ["__nn", key_col, value_col], kind="stable"
+        )
+        ranked = _rank_block(pdf, key_col, value_col, id_col, {}, {})
+        return spark.createDataFrame(ranked, schema=schema)
     if num_partitions:
         base = base.repartitionByRange(num_partitions, key_col, value_col)
     else:
@@ -108,7 +126,8 @@ def average_ranks_long(
         for pdf in batches:
             if pdf.empty:
                 continue
-            for k, c in pdf[key_col].value_counts().items():
+            # dropna=False: NULL keys are a key too (ranked first)
+            for k, c in pdf[key_col].value_counts(dropna=False).items():
                 counts[k] = counts.get(k, 0) + int(c)
         yield pd.DataFrame(
             {"pid": pid, "key": list(counts), "cnt": list(counts.values())}
@@ -123,18 +142,18 @@ def average_ranks_long(
     by_key: dict[str, list[tuple[int, int]]] = {}
     for r in rows:
         by_key.setdefault(r["key"], []).append((r["pid"], r["cnt"]))
-    offsets: dict[tuple[int, str], int] = {}
+    offsets: dict[int, dict[str, int]] = {}
     for k, lst in by_key.items():
         run = 0
         for pid, cnt in sorted(lst):
-            offsets[(pid, k)] = run
+            offsets.setdefault(pid, {})[k] = run
             run += cnt
     bc = spark.sparkContext.broadcast(offsets)
 
     def rank_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        off = bc.value
+        off = bc.value.get(pid, {})
         pos: dict[str, int] = {}  # rows of this key emitted so far (local)
         # tie-group carry across Arrow batches within the sorted partition
         carry: pd.DataFrame | None = None
@@ -145,73 +164,23 @@ def average_ranks_long(
                 pdf = pd.concat([carry, pdf], ignore_index=True)
             # hold back the final (key, value) group — it may continue in
             # the next batch
-            last_k = pdf[key_col].iloc[-1]
-            last_v = pdf[value_col].iloc[-1]
-            tail = (pdf[key_col] == last_k) & (pdf[value_col] == last_v)
-            carry = pdf[tail].copy()
-            head = pdf[~tail]
-            if not head.empty:
-                yield _rank_block(head, key_col, value_col, id_col, pid, off, pos)
-        if carry is not None and not carry.empty:
-            yield _rank_block(carry, key_col, value_col, id_col, pid, bc.value, pos)
+            _, gstart = _tie_starts(
+                pdf[key_col].to_numpy(), pdf[value_col].to_numpy()
+            )
+            cut = int(np.flatnonzero(gstart)[-1])
+            carry = pdf.iloc[cut:]
+            if cut:
+                yield _rank_block(
+                    pdf.iloc[:cut], key_col, value_col, id_col, off, pos
+                )
+        if carry is not None:
+            yield _rank_block(carry, key_col, value_col, id_col, off, pos)
 
-    out = srt.mapInPandas(
-        rank_pass,
-        schema=f"{key_col} string, {id_col} string, rank double",
-    )
+    out = srt.mapInPandas(rank_pass, schema=schema)
     # materialize before unpersisting the sorted branch
     out = out.localCheckpoint()
     srt.unpersist()
     return out
-
-
-def _rank_block(
-    pdf: pd.DataFrame,
-    key_col: str,
-    value_col: str,
-    id_col: str,
-    pid: int,
-    off: dict,
-    pos: dict,
-) -> pd.DataFrame:
-    """Assign average ranks to a block of complete (key, value) groups.
-    ``pos`` tracks per-key rows already emitted by this partition."""
-    import numpy as np
-
-    keys = pdf[key_col].to_numpy()
-    n = len(pdf)
-    local = np.empty(n, dtype=np.int64)
-    # local position within key, continuing from pos[]
-    start = 0
-    while start < n:
-        end = start
-        k = keys[start]
-        while end < n and keys[end] == k:
-            end += 1
-        base = pos.get(k, 0)
-        local[start:end] = base + np.arange(end - start)
-        pos[k] = base + (end - start)
-        start = end
-    rn = np.array(
-        [off.get((pid, k), 0) for k in keys], dtype=np.int64
-    ) + local + 1  # 1-based global row number
-    # tie-average per contiguous (key, value) group
-    vals = pdf[value_col].to_numpy()
-    rank = rn.astype(np.float64)
-    start = 0
-    while start < n:
-        end = start
-        while (
-            end < n and keys[end] == keys[start] and vals[end] == vals[start]
-        ):
-            end += 1
-        if end == start:  # NaN value: never ==-equal, rank as a singleton
-            end = start + 1
-        rank[start:end] = rn[start] + (end - start - 1) / 2.0
-        start = end
-    return pd.DataFrame(
-        {key_col: pdf[key_col], id_col: pdf[id_col], "rank": rank}
-    )
 
 
 def _row_key(id_cols: list[str]):

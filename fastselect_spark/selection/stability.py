@@ -21,8 +21,10 @@ Two pieces:
 Scale shape: the per-fold ranking is a Window partitioned BY FOLD — each
 fold's score column sorts in one task, which is exactly right here
 because folds (not features) are the parallelism axis and a fold's score
-table is p rows of (feature, double). The pair grid is F² (tiny) and the
-overlap join runs on the k·F surviving rows only. All overlap counts are
+table is p rows of (feature, double). The overlap join runs on the k·F
+surviving rows only and its F² intersection counts are collected. Small
+score tables pick the top-k sets with a driver sort instead of the
+Window; both paths then share one finalizer. All overlap counts are
 exact integers; Jaccard/Kuncheva are single-expression quotients —
 IEEE-identical cross-engine.
 """
@@ -69,10 +71,10 @@ def chi2_fold_scores(
             stats = chi2_stats_from_observed(obs, freqs, float(freqs.sum()))
         out += [(fold, c, float(s)) for c, s in zip(feature_cols, stats)]
     # pandas (Arrow) createDataFrame yields a LocalRelation with EXACT
-    # size stats, so downstream small-input gates (stability_topk) decide
-    # from the estimate instead of paying a probe job; a plain list lands
-    # as a stats-less LogicalRDD (round-6). No None values here, so the
-    # NaN-vs-NULL Arrow hazard does not apply.
+    # size stats, so stability_topk's small_frame gate reads the estimate
+    # and sends it down the driver path without a limit+count probe job; a
+    # plain list lands as a stats-less LogicalRDD. No None values here, so
+    # the NaN-vs-NULL Arrow hazard does not apply.
     import pandas as pd_
 
     pdf_out = pd_.DataFrame(out, columns=[fold_col, "feature", "score"])
@@ -81,48 +83,28 @@ def chi2_fold_scores(
     )
 
 
-def _stability_topk_driver(
-    scores: DataFrame,
-    k: int,
-    fold_col: str,
-    feature_col: str,
-    score_col: str,
-) -> DataFrame:
-    """Driver replica of stability_topk for small score tables — identical
-    values by construction: top-k per fold ordered by (score desc,
-    feature asc) over the same doubles, r exact integers, and the SAME
-    Python-float exp/denominator terms the distributed path folds in as
-    literals."""
-    pdf = scores.select(
-        F.col(fold_col).alias("f"),
-        F.col(feature_col).alias("x"),
-        F.col(score_col).cast("double").alias("s"),
-    ).toPandas()
-    p_cnt = pdf["x"].nunique()
-    sets: dict = {}
-    for f, grp in pdf.groupby("f", sort=True):
-        ordered = sorted(
-            zip(grp["x"].tolist(), grp["s"].tolist()),
-            key=lambda t: (-t[1], t[0]),
-        )
-        sets[f] = {x for x, _ in ordered[:k]}
-    fold_vals = sorted(sets)
+_SCHEMA = "fold_a int, fold_b int, n_common long, jaccard double, kuncheva double"
+
+
+def _overlap_rows(sizes: dict, common: dict, p_cnt: int) -> list[tuple]:
+    """Output rows of both paths from each fold's ACTUAL top-k set size
+    (a fold's score table can hold fewer than k features — the fixed
+    2k−r / k denominators would overstate overlap), each fold pair's
+    intersection count and the feature-universe size. r is an exact
+    integer; Jaccard and Kuncheva are Python-float quotients."""
+    folds = sorted(sizes)
     rows = []
-    for i, a in enumerate(fold_vals):
-        for b in fold_vals[i + 1 :]:
-            ka, kb = float(len(sets[a])), float(len(sets[b]))
-            r_int = len(sets[a] & sets[b])
+    for i, a in enumerate(folds):
+        for b in folds[i + 1 :]:
+            ka, kb = float(sizes[a]), float(sizes[b])
+            r_int = common.get((a, b), 0)
             r = float(r_int)
-            sz = len(sets[a]) + len(sets[b])
-            exp_ab = ka * kb / p_cnt
+            exp_ab = ka * kb / p_cnt  # Kuncheva chance term ka·kb/p
             den = min(ka, kb) - exp_ab
             kunch = (r - exp_ab) / den if den != 0.0 else None
-            rows.append((int(a), int(b), r_int, r / (float(sz) - r), kunch))
-    return scores.sparkSession.createDataFrame(
-        rows,
-        schema="fold_a int, fold_b int, n_common long, "
-        "jaccard double, kuncheva double",
-    )
+            jac = r / (float(sizes[a] + sizes[b]) - r)
+            rows.append((int(a), int(b), r_int, jac, kunch))
+    return rows
 
 
 def stability_topk(
@@ -139,13 +121,32 @@ def stability_topk(
     feature count; ``k == p`` makes Kuncheva undefined (NULL).
 
     Small score tables (fold-count × feature-count rows — usually tiny)
-    run entirely on the driver: same ordering (score desc, feature asc),
-    same double arithmetic, one collect instead of ~13 window/join/agg
-    jobs (round-6; the CFS-small-path discipline)."""
+    run entirely on the driver: one collect sorted in Spark's order
+    (score desc, feature asc) instead of the window/join/agg jobs, then
+    the same finalizer (:func:`_overlap_rows`)."""
     from fastselect_spark.selection._agg import small_frame
 
+    spark = scores.sparkSession
     if small_frame(scores, 32 << 20):
-        return _stability_topk_driver(scores, k, fold_col, feature_col, score_col)
+        pdf = scores.select(
+            F.col(fold_col).alias("f"),
+            F.col(feature_col).alias("x"),
+            F.col(score_col).cast("double").alias("s"),
+            F.col(score_col).isNull().alias("null"),
+        ).toPandas()
+        # Spark's desc(score): NaN is the greatest value, NULL sorts last
+        pdf["o"] = np.select([pdf["null"], np.isnan(pdf["s"])], [2, 0], 1)
+        pdf = pdf.sort_values(
+            ["f", "o", "s", "x"], ascending=[True, True, False, True],
+            kind="stable",
+        )
+        sets = {f: set(g["x"].head(k)) for f, g in pdf.groupby("f", sort=True)}
+        sizes = {f: len(x) for f, x in sets.items() if x}
+        common = {
+            (a, b): len(sets[a] & sets[b]) for a in sizes for b in sizes if a < b
+        }
+        rows = _overlap_rows(sizes, common, pdf["x"].nunique())
+        return spark.createDataFrame(rows, schema=_SCHEMA)
     p_cnt = scores.select(feature_col).distinct().count()
     w = Window.partitionBy(fold_col).orderBy(
         F.desc(score_col), F.asc(feature_col)
@@ -156,54 +157,21 @@ def stability_topk(
         .select(F.col(fold_col).alias("__fold"), F.col(feature_col).alias("__feat"))
         .persist()
     )
-    # the fold-pair grid is F² (tiny): build it driver-side rather than
-    # planning a nested-loop join. Per-fold ACTUAL selected-set sizes ride
-    # along: a fold's score table can hold fewer than k features, and the
-    # fixed 2k−r / k denominators silently overstate overlap then
-    # (round-5 ADVICE fix) — with every fold full the values are
-    # bit-identical to the fixed-k formulas.
-    size_of = {
+    sizes = {
         r["__fold"]: int(r["__n"])
         for r in top.groupBy("__fold").agg(F.count(F.lit(1)).alias("__n")).collect()
     }
-    fold_vals = sorted(size_of)
-    pair_rows = []
-    for i, a in enumerate(fold_vals):
-        for b in fold_vals[i + 1 :]:
-            ka, kb = float(size_of[a]), float(size_of[b])
-            exp_ab = ka * kb / p_cnt  # Kuncheva chance term ka·kb/p
-            denom = min(ka, kb) - exp_ab
-            pair_rows.append(
-                (a, b, size_of[a] + size_of[b], exp_ab, denom if denom != 0.0 else None)
-            )
-    pairs = scores.sparkSession.createDataFrame(
-        pair_rows,
-        schema="fold_a int, fold_b int, __sz long, __exp double, __den double",
-    )
-    inter = (
-        top.alias("a")
+    common = {
+        (r["a"], r["b"]): int(r["n"])
+        for r in top.alias("a")
         .join(
             top.alias("b"),
             (F.col("a.__feat") == F.col("b.__feat"))
             & (F.col("a.__fold") < F.col("b.__fold")),
         )
-        .groupBy(
-            F.col("a.__fold").alias("fold_a"), F.col("b.__fold").alias("fold_b")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
-    r = F.coalesce(F.col("n_common"), F.lit(0)).cast("double")
-    kunch = (r - F.col("__exp")) / F.col("__den")  # NULL __den -> NULL
-    out = (
-        pairs.join(F.broadcast(inter), ["fold_a", "fold_b"], "left")
-        .select(
-            "fold_a",
-            "fold_b",
-            F.coalesce(F.col("n_common"), F.lit(0)).cast("long").alias("n_common"),
-            (r / (F.col("__sz").cast("double") - r)).alias("jaccard"),
-            kunch.alias("kuncheva"),
-        )
-    )
-    out = out.localCheckpoint()
+        .groupBy(F.col("a.__fold").alias("a"), F.col("b.__fold").alias("b"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
     top.unpersist()
-    return out
+    return spark.createDataFrame(_overlap_rows(sizes, common, p_cnt), schema=_SCHEMA)

@@ -5,7 +5,9 @@ column — the centroid-partitioned scale path complementing the LSH variant
 Index = spherical k-means: unit-normalized centroids trained by distributed
 Lloyd iterations (each iteration is ONE ``mapInPandas`` pass accumulating
 per-cell (sum, count) via the tree reduction — no row ever reaches the
-driver; the driver holds only the (n_cells, dim) centroid matrix). Vectors
+driver; the driver holds only the (n_cells, dim) centroid matrix; small
+training frames run the same per-partition kernel on the driver over one
+collect, see :func:`lloyd_reducer`). Vectors
 are assigned to their max-dot-product cell; a query probes its ``nprobe``
 nearest cells and candidates are re-ranked exactly.
 
@@ -22,7 +24,6 @@ LSH path — a query touches nprobe/n_cells of the corpus.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -31,23 +32,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fastselect_spark.selection._agg import (
-    plan_size_bytes as _plan_size_bytes,
+    local_reducer,
+    plan_size_bytes,
+    tree_reduce_ndarrays,
 )
-from fastselect_spark.selection._agg import tree_reduce_ndarrays
 
-# Plan-size gate for the driver-side Lloyd fast path: when the (possibly
+# Plan-size gate for driver-side Lloyd reductions: when the (possibly
 # train_sample-bounded) training frame is estimated under this many bytes,
-# ONE Arrow collect + a NumPy loop replaces max_iter distributed jobs —
-# each Lloyd iteration is otherwise a full job whose ~0.5 s launch floor
-# dominates at small/sampled scale (measured 10.2 s for 20 iterations over
-# a 1 MB embeddings table). The emulation reproduces the distributed
-# reduction's partition-ordered partial sums exactly (see
-# _lloyd_driver), so centroids are bit-identical. At 100 TB the gate
-# falls through to the unchanged distributed loop unless train_sample
-# bounds the scan (which is the documented scale mode anyway).
-DRIVER_TRAIN_BYTES = int(
-    os.environ.get("FASTSELECT_KMEANS_DRIVER_BYTES", str(256 << 20))
-)
+# ONE Arrow collect + the same per-partition kernel on the driver replaces
+# max_iter distributed jobs — each Lloyd iteration is otherwise a full job
+# whose ~0.5 s launch floor dominates at small/sampled scale (measured
+# 10.2 s for 20 iterations over a 1 MB embeddings table). The local
+# reducer merges partials in the tree reduction's order, so centroids are
+# bit-identical. At 100 TB the gate falls through to the distributed loop
+# unless train_sample bounds the scan (the documented scale mode anyway).
+DRIVER_TRAIN_BYTES = 256 << 20
 
 
 def _normalize(M: np.ndarray) -> np.ndarray:
@@ -56,56 +55,13 @@ def _normalize(M: np.ndarray) -> np.ndarray:
     return M / norms
 
 
-
-
-def _lloyd_driver(
-    train: DataFrame,
-    centroids: np.ndarray,
-    emb_col: str,
-    max_iter: int,
-    tol: float,
-) -> np.ndarray:
-    """Driver-side replica of the distributed Lloyd loop, bit-identical by
-    construction: rows are collected ONCE with their scan partition id;
-    each iteration accumulates per-partition (sum, count) with the same
-    np.add.at/bincount kernel over rows in partition order, and merges the
-    partials in ascending-partition order exactly as the tree reduction's
-    direct-collect path does (first partial assigns, later partials add)."""
-    pdf = train.select(
-        F.spark_partition_id().alias("__pid"), F.col(emb_col).alias("__e")
-    ).toPandas()
-    if pdf.empty:
-        # mirrors the distributed path, which raises on a dict with no "s"
-        raise KeyError("s")
-    V = _normalize(np.stack(pdf["__e"].to_numpy()).astype(np.float64))
-    pids = pdf["__pid"].to_numpy()
-    # toPandas preserves partition order, so pids are non-decreasing;
-    # slice boundaries give the per-partition row ranges
-    bounds = [0, *(np.flatnonzero(np.diff(pids)) + 1).tolist(), len(pids)]
-    for _ in range(max_iter):
-        C = centroids
-        s_tot = None
-        cnt_tot = None
-        for i in range(len(bounds) - 1):
-            Vp = V[bounds[i] : bounds[i + 1]]
-            cell = np.argmax(Vp @ C.T, axis=1)
-            s = np.zeros_like(C)
-            np.add.at(s, cell, Vp)
-            cnt = np.bincount(cell, minlength=len(C)).astype(np.int64)
-            if s_tot is None:
-                s_tot, cnt_tot = s, cnt
-            else:
-                s_tot += s
-                cnt_tot += cnt
-        new = np.where(
-            cnt_tot[:, None] > 0, s_tot / np.maximum(cnt_tot, 1)[:, None], C
-        )
-        new = _normalize(new)
-        shift = float(((new - centroids) ** 2).sum())
-        centroids = new
-        if shift <= tol:
-            break
-    return centroids
+def lloyd_reducer(train: DataFrame):
+    """The per-iteration ``reduce(partial_fn)`` of a Lloyd loop over
+    ``train``: the driver-side :func:`local_reducer` under
+    DRIVER_TRAIN_BYTES, else one tree-reduced job per call."""
+    if plan_size_bytes(train) <= DRIVER_TRAIN_BYTES:
+        return local_reducer(train)
+    return lambda partial_fn: tree_reduce_ndarrays(train, partial_fn)
 
 
 def train_ivf_centroids(
@@ -116,7 +72,6 @@ def train_ivf_centroids(
     max_iter: int = 20,
     tol: float = 1e-4,
     train_sample: int | None = None,
-    driver_train_bytes: int | None = None,
 ) -> np.ndarray:
     """Unit-normalized (n_cells, dim) centroid matrix via distributed
     spherical k-means. ``train_sample`` bounds the training scan at scale
@@ -125,10 +80,9 @@ def train_ivf_centroids(
     which Spark executes by funneling the whole scan through a single
     partition (the round-3 finding).
 
-    When the training frame's estimated size is under
-    ``driver_train_bytes`` (default DRIVER_TRAIN_BYTES; 0 disables), the
-    Lloyd loop runs on the driver over one Arrow collect — bit-identical
-    centroids (see _lloyd_driver) without max_iter job launches."""
+    Small training frames reduce on the driver over one Arrow collect
+    (:func:`lloyd_reducer`) — bit-identical centroids without max_iter
+    job launches."""
     seed_rows = (
         # TakeOrderedAndProject: per-partition partial top-N merged on the
         # driver — distributed, collects only n_cells rows
@@ -150,10 +104,7 @@ def train_ivf_centroids(
                 seed=0,
             ).select(emb_col)
 
-    cap = DRIVER_TRAIN_BYTES if driver_train_bytes is None else driver_train_bytes
-    if cap and _plan_size_bytes(train) <= cap:
-        return _lloyd_driver(train, centroids, emb_col, max_iter, tol)
-
+    reduce = lloyd_reducer(train)
     for _ in range(max_iter):
         C = centroids  # captured by value in the closure below
 
@@ -171,7 +122,7 @@ def train_ivf_centroids(
                 cnt += np.bincount(cell, minlength=len(C))
             return {"s": s, "cnt": cnt}
 
-        merged = tree_reduce_ndarrays(train, partial)
+        merged = reduce(partial)
         s, cnt = merged["s"], merged["cnt"]
         new = np.where(cnt[:, None] > 0, s / np.maximum(cnt, 1)[:, None], C)
         new = _normalize(new)

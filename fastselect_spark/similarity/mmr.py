@@ -72,6 +72,10 @@ def pool_pair_sims(
         members = by_q[q]
         for i, a_id in enumerate(members):
             for b_id in members[i + 1 :]:
+                # join semantics: a pair needs two distinct members,
+                # each with a corpus embedding
+                if a_id == b_id or a_id not in e_of or b_id not in e_of:
+                    continue
                 lo, hi = (a_id, b_id) if a_id < b_id else (b_id, a_id)
                 rows.append((q, lo, hi, e_of[lo], e_of[hi]))
     q_t = pool_df.schema["query_id"].dataType

@@ -14,10 +14,12 @@ Scale shape (the 100 TB story):
 - Training: ONE tree-reduced ``mapInPandas`` pass per Lloyd iteration
   updates ALL m codebooks together (per-subspace assignment + exact-mean
   (sum, count) accumulators — selection/_agg.py); driver holds only the
-  (m, k, dim/m) codebook tensor. Deterministic: codebooks seed from the
-  k lowest-id vectors' subvectors, assignment ties take the lowest code,
-  so the independent NumPy replica retrains near-bit-identical codebooks
-  and the DuckDB gate recomputes encoding + ADC from codebook LITERALS.
+  (m, k, dim/m) codebook tensor. Small training frames run the same
+  kernel on the driver over one collect (ivf.lloyd_reducer).
+  Deterministic: codebooks seed from the k lowest-id vectors'
+  subvectors, assignment ties take the lowest code, so the independent
+  NumPy replica retrains near-bit-identical codebooks and the DuckDB
+  gate recomputes encoding + ADC from codebook LITERALS.
 - Encoding: one broadcast row-local scan -> narrow ``(id, codes)``.
 - Top-k: broadcast query LUTs over the CODES table (m bytes/row, not
   dim*4) + per-partition local top-k, merged like similarity/ann.py's
@@ -33,12 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from fastselect_spark.selection._agg import tree_reduce_ndarrays
-from fastselect_spark.similarity.ivf import (
-    DRIVER_TRAIN_BYTES,
-    _normalize,
-    _plan_size_bytes,
-)
+from fastselect_spark.similarity.ivf import _normalize, lloyd_reducer
 
 
 def _split(V: np.ndarray, m: int) -> np.ndarray:
@@ -101,47 +98,9 @@ def train_pq_codebooks(
             ).select(emb_col)
 
     dsub = dim // m
-    # Small/sampled training frames run the Lloyd loop on the driver over
-    # ONE Arrow collect — bit-identical codebooks (same per-partition
-    # np.add.at/bincount kernel, partials merged in ascending-partition
-    # order like the tree reduction's direct-collect path); each
-    # distributed iteration otherwise pays a full job launch (the
-    # train_ivf_centroids round-6 lesson).
-    if DRIVER_TRAIN_BYTES and _plan_size_bytes(train) <= DRIVER_TRAIN_BYTES:
-        pdf = train.select(
-            F.spark_partition_id().alias("__pid"), F.col(emb_col).alias("__e")
-        ).toPandas()
-        if not pdf.empty:
-            V_all = _normalize(np.stack(pdf["__e"].to_numpy()).astype(np.float64))
-            pids = pdf["__pid"].to_numpy()
-            bounds = [0, *(np.flatnonzero(np.diff(pids)) + 1).tolist(), len(pids)]
-            for _ in range(max_iter):
-                s_tot = cnt_tot = None
-                for i in range(len(bounds) - 1):
-                    Vp = V_all[bounds[i] : bounds[i + 1]]
-                    S = _split(Vp, m)
-                    codes = _assign_codes(S, C)
-                    s_acc = np.zeros_like(C)
-                    cnt = np.zeros((m, k), dtype=np.int64)
-                    for s in range(m):
-                        np.add.at(s_acc[s], codes[:, s], S[s])
-                        cnt[s] += np.bincount(codes[:, s], minlength=k)
-                    if s_tot is None:
-                        s_tot, cnt_tot = s_acc, cnt
-                    else:
-                        s_tot += s_acc
-                        cnt_tot += cnt
-                new = np.where(
-                    cnt_tot[:, :, None] > 0,
-                    s_tot / np.maximum(cnt_tot, 1)[:, :, None],
-                    C,
-                )
-                shift = float(((new - C) ** 2).sum())
-                C = new
-                if shift <= tol:
-                    break
-            return C
-
+    # small/sampled training frames reduce on the driver over one collect
+    # (the train_ivf_centroids gate) — bit-identical codebooks
+    reduce = lloyd_reducer(train)
     for _ in range(max_iter):
         CB = C
 
@@ -161,7 +120,7 @@ def train_pq_codebooks(
                     cnt[s] += np.bincount(codes[:, s], minlength=k)
             return {"s": s_acc.reshape(m * k, dsub), "cnt": cnt}
 
-        merged = tree_reduce_ndarrays(train, partial)
+        merged = reduce(partial)
         s_acc = merged["s"].reshape(m, k, dsub)
         cnt = merged["cnt"]
         new = np.where(

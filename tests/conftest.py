@@ -10,3 +10,24 @@ def spark():
     s = get_spark(app_name="fastselect-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def driver_calls(monkeypatch):
+    """``driver_calls(module, name)`` wraps a module function and returns
+    the list its calls in THIS process append to. Executor tasks run in
+    Python workers, so their calls never reach the list: a count tells
+    whether a path ran its kernel on the driver."""
+
+    def spy(module, name: str) -> list:
+        calls: list = []
+        real = getattr(module, name)
+
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, wrapper)
+        return calls
+
+    return spy

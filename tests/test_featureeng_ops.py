@@ -1172,6 +1172,27 @@ def test_mmr_rerank_string_ids(spark):
     assert got[1]["neighbor_id"] == "id-3"  # diversity pick, ids untouched
 
 
+def test_mmr_pool_pair_sims_skips_missing_and_repeated_ids(spark):
+    """A pool neighbour without a corpus embedding and a neighbour listed
+    twice yield no pair rows — no KeyError, no (x, x) self-pair — as the
+    former inner joins + id_a < id_b did."""
+    from fastselect_spark.similarity.mmr import pool_pair_sims
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    pool = spark.createDataFrame(
+        [(9, 1), (9, 2), (9, 2), (9, 404), (7, 3), (7, 1)],
+        "query_id long, neighbor_id long",
+    )
+    got = sorted(
+        (r["query_id"], r["id_a"], r["id_b"], r["sim"])
+        for r in pool_pair_sims(corpus, pool).collect()
+    )
+    assert got == [(7, 1, 3, 0.707107), (9, 1, 2, 0.0), (9, 1, 2, 0.0)]
+
+
 def test_quantile_normalize_delimiter_collision_ids(spark):
     # two-part ids engineered to collide under a ':' concat ("a:b"+"c" vs
     # "a"+"b:c") must stay distinct rows

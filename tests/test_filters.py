@@ -255,23 +255,28 @@ def test_fdr_bh_matches_oracle(spark):
     assert sorted(ranks) == list(range(1, m + 1))  # a permutation of 1..m
 
 
-def test_fdr_bh_driver_path_matches_distributed(spark, monkeypatch):
+def test_fdr_bh_driver_path_matches_distributed(spark, monkeypatch, driver_calls):
     """The small-input driver fast path must equal the two-pass
     range-partitioned kernel row-for-row (exact doubles)."""
     import fastselect_spark.selection._agg as aggmod
+    import fastselect_spark.selection.fdr as fdrmod
     from fastselect_spark.selection import fdr_bh
 
     pv = spark.range(5_000).selectExpr(
         "CAST(id AS STRING) AS feature",
         "((id * 2654435761) % 1000003) / 1000003.0 AS p_value",
     )
+    calls = driver_calls(fdrmod, "_bh_terms")
     fast = fdr_bh(pv, num_partitions=8).toPandas().sort_values(
         "feature"
     ).reset_index(drop=True)
+    assert calls, "the driver path did not run"
+    calls.clear()
     monkeypatch.setattr(aggmod, "small_frame", lambda *_a, **_k: False)
     slow = fdr_bh(pv, num_partitions=8).toPandas().sort_values(
         "feature"
     ).reset_index(drop=True)
+    assert not calls, "the distributed path ran its kernel on the driver"
     assert fast.equals(slow)
 
 
@@ -357,12 +362,32 @@ def test_chi2_fold_scores_matches_per_fold_chi2(spark):
             assert got[(f, f"f{i}")] == pytest.approx(float(s), rel=1e-12)
 
 
-def test_stability_driver_path_matches_distributed(spark, monkeypatch):
-    """The small-table driver fast path must return exactly the distributed
-    window/join rows (values compared exactly — same doubles)."""
+def _both_stability_paths(df, monkeypatch, k):
+    """stability_topk's driver and distributed rows, failing unless the
+    size gate sent the first call down the driver path."""
     import fastselect_spark.selection._agg as aggmod
     from fastselect_spark.selection import stability_topk
 
+    real, gates = aggmod.small_frame, []
+
+    def gate(*args, **kwargs):
+        gates.append(real(*args, **kwargs))
+        return gates[-1]
+
+    monkeypatch.setattr(aggmod, "small_frame", gate)
+    fast = stability_topk(df, k=k).toPandas()
+    assert gates == [True], "the driver path did not run"
+    monkeypatch.setattr(aggmod, "small_frame", lambda *_a, **_k: False)
+    slow = stability_topk(df, k=k).toPandas()
+    return [
+        out.sort_values(["fold_a", "fold_b"]).reset_index(drop=True)
+        for out in (fast, slow)
+    ]
+
+
+def test_stability_driver_path_matches_distributed(spark, monkeypatch):
+    """The small-table driver fast path must return exactly the distributed
+    window/join rows (values compared exactly — same doubles)."""
     rng = np.random.default_rng(3)
     rows = [
         (f, f"x{j}", float(rng.normal()))
@@ -370,14 +395,24 @@ def test_stability_driver_path_matches_distributed(spark, monkeypatch):
         for j in range(7)
     ]
     df = spark.createDataFrame(rows, "fold int, feature string, score double")
-    fast = stability_topk(df, k=3).toPandas().sort_values(
-        ["fold_a", "fold_b"]
-    ).reset_index(drop=True)
-    monkeypatch.setattr(aggmod, "small_frame", lambda *_a, **_k: False)
-    slow = stability_topk(df, k=3).toPandas().sort_values(
-        ["fold_a", "fold_b"]
-    ).reset_index(drop=True)
+    fast, slow = _both_stability_paths(df, monkeypatch, k=3)
     assert fast.equals(slow)
+
+
+def test_stability_nan_scores_both_paths(spark, monkeypatch):
+    """NaN scores sort as Spark's desc() sorts them — the greatest value,
+    selected first — on both paths; NULL scores sort last."""
+    nan = float("nan")
+    rows = [
+        (0, "a", nan), (0, "b", 3.0), (0, "c", 2.0), (0, "d", nan), (0, "e", 1.0),
+        (1, "a", 1.0), (1, "b", nan), (1, "c", 5.0), (1, "d", 4.0), (1, "e", None),
+        (2, "a", None), (2, "b", 0.5), (2, "c", nan), (2, "d", 0.1), (2, "e", 0.2),
+    ]
+    df = spark.createDataFrame(rows, "fold int, feature string, score double")
+    fast, slow = _both_stability_paths(df, monkeypatch, k=2)
+    assert fast.equals(slow)
+    # top-2: fold 0 {a, d} (NaN first), fold 1 {b, c}, fold 2 {b, c}
+    assert fast["n_common"].tolist() == [0, 0, 2]
 
 
 def test_stability_short_fold_uses_actual_sizes(spark):

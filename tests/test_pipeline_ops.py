@@ -757,35 +757,52 @@ def test_connected_components_long_chain_fallback(spark):
     assert (comp["comp"] == 0).all()
 
 
-def test_lloyd_driver_path_bit_identical(spark):
-    """The driver-side Lloyd fast path (round-6 optimization) must produce
-    BIT-identical centroids to the distributed tree-reduced loop — the
-    declared IVF/kmeans/SQ8 oracles embed these centroids as literals."""
+def _both_lloyd_paths(train, monkeypatch, driver_calls):
+    """A trainer's result on the driver-reduced and the tree-reduced path,
+    failing unless each call took its own path."""
+    import fastselect_spark.similarity.ivf as ivfmod
+
+    local = driver_calls(ivfmod, "local_reducer")
+    tree = driver_calls(ivfmod, "tree_reduce_ndarrays")
+    fast = train()
+    assert local and not tree, "the driver path did not run"
+    local.clear()
+    monkeypatch.setattr(ivfmod, "DRIVER_TRAIN_BYTES", 0)
+    slow = train()
+    assert tree and not local, "the distributed path did not run"
+    return fast, slow
+
+
+def test_lloyd_driver_path_bit_identical(spark, monkeypatch, driver_calls):
+    """The driver-side Lloyd reduction must produce BIT-identical
+    centroids to the distributed tree-reduced loop — the declared
+    IVF/kmeans/SQ8 oracles embed these centroids as literals."""
     import numpy as np
 
     from fastselect_spark.similarity import train_ivf_centroids
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     for n_cells in (4, 8):
-        fast = train_ivf_centroids(emb, n_cells=n_cells)
-        slow = train_ivf_centroids(emb, n_cells=n_cells, driver_train_bytes=0)
+        fast, slow = _both_lloyd_paths(
+            lambda: train_ivf_centroids(emb, n_cells=n_cells),
+            monkeypatch,
+            driver_calls,
+        )
         assert np.array_equal(fast, slow)
+        monkeypatch.undo()
 
 
-def test_pq_driver_path_bit_identical(spark, monkeypatch):
+def test_pq_driver_path_bit_identical(spark, monkeypatch, driver_calls):
     """train_pq_codebooks' driver fast path must match the distributed
     tree-reduced loop bit-for-bit (codebook literals feed the PQ oracles)."""
     import numpy as np
 
-    import fastselect_spark.similarity.ivf as ivfmod
-    import fastselect_spark.similarity.pq as pqmod
     from fastselect_spark.similarity.pq import train_pq_codebooks
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    fast = train_pq_codebooks(emb, m=8, k=8)
-    monkeypatch.setattr(ivfmod, "DRIVER_TRAIN_BYTES", 0)
-    monkeypatch.setattr(pqmod, "DRIVER_TRAIN_BYTES", 0)
-    slow = train_pq_codebooks(emb, m=8, k=8)
+    fast, slow = _both_lloyd_paths(
+        lambda: train_pq_codebooks(emb, m=8, k=8), monkeypatch, driver_calls
+    )
     assert np.array_equal(fast, slow)
 
 

@@ -4,67 +4,108 @@ carry across Arrow batch boundaries, and the Spearman replica."""
 
 from __future__ import annotations
 
-def test_average_ranks_driver_path_matches_distributed(spark, monkeypatch):
-    """The small-input driver ranking (round-6) must equal the
-    range-partitioned two-pass kernel row-for-row, ties and all."""
-    import numpy as np
-
-    import fastselect_spark.selection._agg as aggmod
-    from fastselect_spark.selection.rank import average_ranks_long
-
-    rng = np.random.default_rng(23)
-    rows = [
-        (f"f{j % 3}", float(rng.integers(0, 20)), str(i))
-        for i, j in enumerate(rng.integers(0, 3, 500))
-    ]
-    melted = spark.createDataFrame(rows, "feature string, value double, id string")
-    key = lambda r: (r["feature"], r["id"])  # noqa: E731
-    fast = sorted(
-        ((r["feature"], r["id"]), r["rank"])
-        for r in average_ranks_long(melted, num_partitions=8).collect()
-    )
-    monkeypatch.setattr(aggmod, "plan_size_bytes", lambda _df: 1 << 62)
-    slow = sorted(
-        ((r["feature"], r["id"]), r["rank"])
-        for r in average_ranks_long(melted, num_partitions=8).collect()
-    )
-    assert fast == slow
-
-
-def test_ks_driver_path_matches_distributed(spark, monkeypatch):
-    """ks_statistics' small-input path must equal the two-pass kernel."""
-    import numpy as np
-
-    import fastselect_spark.selection._agg as aggmod
-    from fastselect_spark.featurize import ks_statistics
-
-    rng = np.random.default_rng(29)
-    d0 = spark.createDataFrame(
-        [(float(v), float(v) * 2) for v in rng.integers(0, 50, 400)],
-        "a double, b double",
-    )
-    d1 = spark.createDataFrame(
-        [(float(v) + 3.0, float(v)) for v in rng.integers(0, 50, 300)],
-        "a double, b double",
-    )
-    fast = sorted(
-        (r["feature"], r["ks"])
-        for r in ks_statistics(d0, d1, ["a", "b"], num_partitions=8).collect()
-    )
-    monkeypatch.setattr(aggmod, "plan_size_bytes", lambda _df: 1 << 62)
-    slow = sorted(
-        (r["feature"], r["ks"])
-        for r in ks_statistics(d0, d1, ["a", "b"], num_partitions=8).collect()
-    )
-    assert fast == slow
-
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import fastselect_spark.featurize.drift as driftmod
+import fastselect_spark.selection._agg as aggmod
+import fastselect_spark.selection.rank as rankmod
+from fastselect_spark.featurize import ks_statistics
 from fastselect_spark.selection.correlation import spearman_matrix
 from fastselect_spark.selection.rank import average_ranks_long
+
+def _both_rank_paths(melted, monkeypatch, driver_calls):
+    """average_ranks_long's driver and distributed results (sorted rows),
+    failing unless each call took its own path."""
+    calls = driver_calls(rankmod, "_rank_block")
+    rows = []
+    for forced in (False, True):
+        if forced:
+            monkeypatch.setattr(aggmod, "plan_size_bytes", lambda _df: 1 << 62)
+        rows.append(
+            sorted(
+                ((r["feature"] or "", r["id"]), r["rank"])
+                for r in average_ranks_long(melted, num_partitions=8).collect()
+            )
+        )
+        # the driver path ranks in this process; the distributed one never
+        assert bool(calls) != forced
+        calls.clear()
+    return rows
+
+
+def test_average_ranks_driver_path_matches_distributed(
+    spark, monkeypatch, driver_calls
+):
+    """The small-input driver ranking must equal the range-partitioned
+    two-pass kernel row-for-row, ties and all. The input is built from
+    pandas (a LocalRelation with exact size stats), so the un-forced call
+    takes the driver path."""
+    rng = np.random.default_rng(23)
+    melted = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "feature": [f"f{j}" for j in rng.integers(0, 3, 500)],
+                "value": rng.integers(0, 20, 500).astype(float),
+                "id": [str(i) for i in range(500)],
+            }
+        )
+    )
+    fast, slow = _both_rank_paths(melted, monkeypatch, driver_calls)
+    assert fast == slow
+
+
+def test_average_ranks_null_keys_both_paths(spark, monkeypatch, driver_calls):
+    """NULL keys rank as one key, ordered first as Spark orders them, and
+    both paths return the same ranks — also when the NULL-key rows span
+    several range partitions."""
+    rng = np.random.default_rng(31)
+    keys = rng.choice(np.array(["a", "b", None], dtype=object), 600)
+    melted = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "feature": keys,
+                "value": rng.integers(0, 40, 600).astype(float),
+                "id": [str(i) for i in range(600)],
+            }
+        ),
+        "feature string, value double, id string",
+    )
+    fast, slow = _both_rank_paths(melted, monkeypatch, driver_calls)
+    assert fast == slow
+    got = dict(fast)
+    vals = pd.Series(melted.toPandas()["value"].to_numpy())
+    null_rows = [str(i) for i in range(600) if keys[i] is None]
+    exp = vals[[int(i) for i in null_rows]].rank(method="average")
+    assert [got[("", i)] for i in null_rows] == exp.tolist()
+
+
+def test_ks_driver_path_matches_distributed(spark, monkeypatch, driver_calls):
+    """ks_statistics' small-input path must equal the two-pass kernel; the
+    pandas-built inputs report exact size stats, so it takes the driver
+    path un-forced."""
+    rng = np.random.default_rng(29)
+    v0 = rng.integers(0, 50, 400).astype(float)
+    v1 = rng.integers(0, 50, 300).astype(float)
+    d0 = spark.createDataFrame(pd.DataFrame({"a": v0, "b": v0 * 2}))
+    d1 = spark.createDataFrame(pd.DataFrame({"a": v1 + 3.0, "b": v1}))
+    calls = driver_calls(driftmod, "_ks_block")
+    fast = sorted(
+        (r["feature"], r["ks"])
+        for r in ks_statistics(d0, d1, ["a", "b"], num_partitions=8).collect()
+    )
+    assert calls, "the driver path did not run"
+    calls.clear()
+    monkeypatch.setattr(aggmod, "plan_size_bytes", lambda _df: 1 << 62)
+    slow = sorted(
+        (r["feature"], r["ks"])
+        for r in ks_statistics(d0, d1, ["a", "b"], num_partitions=8).collect()
+    )
+    assert not calls, "the distributed path ran its kernel on the driver"
+    assert fast == slow
+
 
 COLS = ["a", "b", "c"]
 
