@@ -122,7 +122,7 @@ def _q_feature_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     feat = featurize_transcripts(_transcripts(spark, sf_dir))
-    corr = correlation_matrix(feat, _CORR_FEATURES, impl="agg")
+    corr = correlation_matrix(feat, _CORR_FEATURES)
     tbl = correlation_table(spark, corr, _CORR_FEATURES, round_to=None)
     return tbl.select(
         "feature_a", "feature_b", F.round("corr", 6).alias("corr")
@@ -1765,7 +1765,7 @@ def _q_partial_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("n_echars"),
     )
-    pc = partial_correlation_matrix(docs, _PCORR_COLS, impl="agg")
+    pc = partial_correlation_matrix(docs, _PCORR_COLS)
     tbl = correlation_table(spark, pc, _PCORR_COLS, round_to=None)
     return tbl.select(
         "feature_a", "feature_b", F.round("corr", 6).alias("partial_r")

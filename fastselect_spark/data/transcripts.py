@@ -104,23 +104,6 @@ def generate_transcripts_pandas(n_convs: int = 200, seed: int = 42) -> pd.DataFr
     )
 
 
-def generate_transcripts(
-    spark: SparkSession, n_convs: int = 200, seed: int = 42, partitions: int | None = None
-) -> DataFrame:
-    """Parallelize the seeded generator into a DataFrame.
-
-    At bench scale the pandas frame is built once on the driver (a few
-    million rows fits); at true 10^12-turn scale the generator would be
-    replaced by a ``spark.range(n_convs).mapInPandas`` per-conversation
-    generator — the per-conversation logic above is already shaped for that.
-    """
-    pdf = generate_transcripts_pandas(n_convs=n_convs, seed=seed)
-    df = spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
-    if partitions:
-        df = df.repartition(partitions, "conv_id")
-    return df
-
-
 def _gen_conv_block(conv_ids: np.ndarray, seed: int) -> pd.DataFrame:
     """Generate the turns of a block of conversations, one independent
     deterministic RNG stream per conversation (seeded by (seed, conv id)),

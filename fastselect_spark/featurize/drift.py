@@ -25,9 +25,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from fastselect_spark.selection import _agg
 
 PSI_EPS = 1e-6
 
@@ -110,22 +111,31 @@ def _melt_tagged(df: DataFrame, cols: list[str], g: int) -> DataFrame:
     )
 
 
-def _ks_block(pdf: pd.DataFrame, run: dict, tots: dict) -> pd.DataFrame:
+def _ks_counts(ref: DataFrame, cur: DataFrame, cols: list[str]) -> DataFrame:
+    """KS's scan input: the distinct (feature, v) table with each frame's
+    row count (c0 = ref, c1 = cur) — one melt + ONE groupBy with map-side
+    partials, orders smaller than the input."""
+    u = _melt_tagged(ref, cols, 0).unionByName(_melt_tagged(cur, cols, 1))
+    return u.groupBy("feature", "v").agg(
+        F.sum((F.col("__g") == 0).cast("long")).alias("c0"),
+        F.sum((F.col("__g") == 1).cast("long")).alias("c1"),
+    )
+
+
+def _ks_block(pdf: pd.DataFrame, run: dict, tot: dict) -> pd.DataFrame:
     """(feature, d): each feature's max CDF gap over a block of the sorted
-    (feature, v, c0, c1) table. ``run`` (updated in place) holds each
-    feature's counts below the block — the driver path passes it empty
-    with the whole sorted table as one block; ``tots`` its totals."""
+    (feature, v, c0, c1) table. ``run`` (updated in place) maps a feature
+    to its [c0, c1] counts below the block; ``tot`` is the scan's totals."""
     feats, ds = [], []
     for k, grp in pdf.groupby("feature", sort=False):
-        k = str(k)
         st = run.setdefault(k, [0, 0])
         cum0 = grp["c0"].to_numpy().cumsum() + st[0]
         cum1 = grp["c1"].to_numpy().cumsum() + st[1]
         st[0] = int(cum0[-1])
         st[1] = int(cum1[-1])
-        n0, n1 = tots[k]
+        n0, n1 = (max(int(t), 1) for t in tot[k][1:])
         d = np.abs(cum0 / float(n0) - cum1 / float(n1))
-        feats.append(k)
+        feats.append(str(k))
         ds.append(float(d.max()))
     return pd.DataFrame({"feature": feats, "d": ds})
 
@@ -142,112 +152,39 @@ def ks_statistics(
     did the histogram move", KS answers "what is the worst-case CDF gap"
     with no bin-edge convention to tune.
 
-    Distributed shape (the same two-pass range-partition prefix scheme as
-    selection/rank.py — a global ``Window.orderBy(v)`` would funnel every
-    row through ONE task):
-
-    1. melt + ONE ``groupBy(feature, v)`` count agg (map-side partials;
-       output is the DISTINCT-value table, orders smaller than the input).
-    2. ``repartitionByRange(feature, v)`` + sort, persisted; pass A sums
-       per-(partition, feature) counts — a (P × p) table collected to the
-       driver for exclusive prefix offsets; pass B turns local cumsums +
-       offsets into CDF gaps and emits one per-batch max per feature.
-
-    Small inputs collect the count table once instead and run pass B's
-    kernel (:func:`_ks_block`) over it as one block from zero offsets.
+    Distributed shape: the distinct-value count table
+    (:func:`_ks_counts`), then the ``_agg`` prefix scan
+    (:func:`~fastselect_spark.selection._agg.range_scan` — a global
+    ``Window.orderBy(v)`` would funnel every row through ONE task) in
+    (feature, v) order with per-feature (c0, c1) sums as offsets. Pass A's
+    totals double as the CDF denominators, so no separate totals job
+    re-runs the melt. The pass-B kernel turns local cumsums + offsets into
+    CDF gaps and emits one per-batch max per feature; small inputs run it
+    through :func:`~fastselect_spark.selection._agg.local_scan` over the
+    whole table as one block.
 
     CDF values are quotients of exact integer counts, so the gap and its
     max are IEEE-identical cross-engine. Returns (feature, ks) — one row
     per feature."""
-    spark = ref.sparkSession
-    u = _melt_tagged(ref, cols, 0).unionByName(_melt_tagged(cur, cols, 1))
-    counts = u.groupBy("feature", "v").agg(
-        F.sum((F.col("__g") == 0).cast("long")).alias("c0"),
-        F.sum((F.col("__g") == 1).cast("long")).alias("c1"),
-    )
+    counts = _ks_counts(ref, cur, cols)
 
-    # Small inputs: collect the distinct-value count table once and run
-    # pass B's kernel on the sorted table as one block from zero counts —
-    # the same integer cumsums and quotients, so the ks values are
-    # bit-identical to the two-pass kernel.
-    from fastselect_spark.selection._agg import plan_size_bytes
+    def kernel(batches: Iterator[pd.DataFrame], off: dict, tot: dict):
+        run = {k: [int(v[1]), int(v[2])] for k, v in off.items()}
+        for pdf in batches:
+            yield _ks_block(pdf, run, tot)
 
-    if (plan_size_bytes(ref) + plan_size_bytes(cur)) <= (64 << 20):
-        pdf = counts.toPandas().sort_values(["feature", "v"], kind="stable")
-        tots = {
-            str(k): (max(int(s0), 1), max(int(s1), 1))
-            for k, s0, s1 in pdf.groupby("feature")[["c0", "c1"]]
-            .sum()
-            .itertuples()
-        }
-        return spark.createDataFrame(
-            _ks_block(pdf, {}, tots).rename(columns={"d": "ks"}),
-            schema="feature string, ks double",
+    order, sums = ["feature", "v"], ["c0", "c1"]
+    # Small inputs: one block gives the same integer cumsums and quotients
+    if (_agg.plan_size_bytes(ref) + _agg.plan_size_bytes(cur)) <= (64 << 20):
+        ks, _ = _agg.local_scan(counts, order, "feature", sums, kernel)
+        return ref.sparkSession.createDataFrame(
+            ks.rename(columns={"d": "ks"}), schema="feature string, ks double"
         )
-    if num_partitions:
-        rng = counts.repartitionByRange(num_partitions, "feature", "v")
-    else:
-        rng = counts.repartitionByRange("feature", "v")
-    srt = rng.sortWithinPartitions("feature", "v").persist()
-
-    def sums_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        acc: dict[str, list[int]] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for k, grp in pdf.groupby("feature", sort=False):
-                s = acc.setdefault(str(k), [0, 0])
-                s[0] += int(grp["c0"].sum())
-                s[1] += int(grp["c1"].sum())
-        yield pd.DataFrame(
-            {
-                "pid": pid,
-                "feature": list(acc),
-                "s0": [v[0] for v in acc.values()],
-                "s1": [v[1] for v in acc.values()],
-            }
-        ) if acc else pd.DataFrame(
-            {"pid": [], "feature": [], "s0": [], "s1": []}
-        ).astype({"pid": "int64", "feature": "string", "s0": "int64", "s1": "int64"})
-
-    rows = srt.mapInPandas(
-        sums_pass, schema="pid int, feature string, s0 long, s1 long"
-    ).collect()
-    by_feat: dict[str, list[tuple[int, int, int]]] = {}
-    for r in rows:
-        by_feat.setdefault(r["feature"], []).append((r["pid"], r["s0"], r["s1"]))
-    # pass A's per-partition sums double as the per-feature TOTALS — no
-    # separate totals job (which would re-run the whole melt + reduction
-    # upstream of the persist point)
-    offsets: dict[int, dict[str, tuple[int, int]]] = {}
-    totals: dict[str, tuple[int, int]] = {}
-    for k, lst in by_feat.items():
-        run0 = run1 = 0
-        for pid, s0, s1 in sorted(lst):
-            offsets.setdefault(pid, {})[k] = (run0, run1)
-            run0 += s0
-            run1 += s1
-        totals[k] = (max(run0, 1), max(run1, 1))
-    bc = spark.sparkContext.broadcast((offsets, totals))
-
-    def cdf_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        offs, tots = bc.value
-        # copied: a reused worker shares the broadcast value across tasks
-        run = {k: list(v) for k, v in offs.get(pid, {}).items()}
-        for pdf in batches:
-            if not pdf.empty:
-                yield _ks_block(pdf, run, tots)
-
-    per_part = srt.mapInPandas(cdf_pass, schema="feature string, d double")
-    out = per_part.groupBy("feature").agg(F.max("d").alias("ks"))
-    # p-row result: materialize before unpersisting the sorted branch
-    out = out.localCheckpoint()
-    srt.unpersist()
-    return out
+    per_part, _ = _agg.range_scan(
+        counts, order, "feature", sums, kernel, "feature string, d double",
+        num_partitions,
+    )
+    return per_part.groupBy("feature").agg(F.max("d").alias("ks"))
 
 
 def psi_scores(

@@ -18,6 +18,15 @@ addition only at the final tiny merge). :func:`local_reducer` is the
 driver twin for small frames reduced once per iteration (Lloyd): one
 collect, the same partial function per partition, the same merge order.
 
+Order statistics (average ranks, BH-FDR, exact KS) need a running count
+along a global sort, which Spark only offers as a single-partition
+``Window.orderBy`` funnel. :func:`range_scan` is the one distributed
+prefix scan behind them: range-partition + sort within partitions, a pass
+A of per-(partition, key) totals, a driver exclusive prefix, and the
+caller's pass-B kernel over each sorted partition with its offsets.
+:func:`local_scan` is its driver twin: one collect, sorted as Spark
+sorts, through the same kernel as the only partition.
+
 The pair-parallel axis (n bounded, p large) has no accumulator: every
 pairwise scorer — the full MI matrix, the step-wise MI engine and CFS
 redundancy — runs :func:`pair_job`, one vectorized ``mapInPandas`` kernel
@@ -27,6 +36,7 @@ over a range of pair ids, with :func:`triu_pair` mapping ids to pairs.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+import pickle
 from contextlib import contextmanager
 
 import numpy as np
@@ -65,6 +75,12 @@ def small_frame(df: DataFrame, max_bytes: int, probe_rows: int = 200_000) -> boo
     if est >= _STATS_UNKNOWN:
         return df.limit(probe_rows + 1).count() <= probe_rows
     return False
+
+
+def _pid() -> int:
+    """The running task's partition id; 0 on the driver."""
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else 0
 
 
 def _pack(name: str, arr: np.ndarray, merge_key: int) -> dict:
@@ -178,10 +194,8 @@ def tree_reduce_ndarrays_arrow(
     )
 
     def mapper(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
         acc = partial_fn(batches)
-        rows = [_pack(name, arr, pid % fanin) for name, arr in acc.items()]
+        rows = [_pack(name, arr, _pid() % fanin) for name, arr in acc.items()]
         yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
     partials = df.mapInArrow(mapper, schema=_PARTIAL_SCHEMA)
@@ -204,10 +218,8 @@ def tree_reduce_ndarrays(
     """
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
         acc = partial_fn(batches)
-        rows = [_pack(name, arr, pid % fanin) for name, arr in acc.items()]
+        rows = [_pack(name, arr, _pid() % fanin) for name, arr in acc.items()]
         yield pd.DataFrame(rows) if rows else pd.DataFrame(
             columns=["merge_key", "name", "dtype", "shape", "data"]
         )
@@ -286,6 +298,115 @@ def _merge_partials(
     return out
 
 
+def range_sort(
+    df: DataFrame, order: list[str], num_partitions: int | None = None
+) -> DataFrame:
+    """The scan's sort step: range-partition on ``order`` (into
+    ``num_partitions`` only when given) and sort within partitions, so the
+    partitions are globally ordered and rows equal on ``order`` share one."""
+    if num_partitions:
+        df = df.repartitionByRange(num_partitions, *order)
+    else:
+        df = df.repartitionByRange(*order)
+    return df.sortWithinPartitions(*order)
+
+
+def _key_sums(pdf: pd.DataFrame, key: str | None, sums: list[str], acc: dict) -> dict:
+    """Add a sorted block's per-key int64 ``[rows, *sums]`` totals into
+    ``acc`` — pass A's reduction and :func:`local_scan`'s totals. Keys are
+    the block's raw values (a NULL key is ``None``, one run as Spark sorts
+    NULLs together); ``key=None`` makes the block one group keyed ``None``,
+    present even when empty."""
+    vals = np.column_stack(
+        [np.ones(len(pdf), np.int64), *(pdf[c].to_numpy(np.int64) for c in sums)]
+    )
+    if key is None:
+        keys, runs = [None], [vals.sum(axis=0)]
+    else:
+        k = pdf[key].to_numpy()
+        run = np.ones(len(k), dtype=bool)
+        run[1:] = k[1:] != k[:-1]
+        starts = np.flatnonzero(run)
+        keys, runs = k[starts].tolist(), np.add.reduceat(vals, starts, axis=0)
+    for k, v in zip(keys, runs):
+        acc[k] = acc[k] + v if k in acc else v
+    return acc
+
+
+def range_scan(
+    df: DataFrame,
+    order: list[str],
+    key: str | None,
+    sums: list[str],
+    kernel: Callable[[Iterator[pd.DataFrame], dict, dict], Iterator[pd.DataFrame]],
+    schema: str,
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, dict]:
+    """The distributed prefix scan over ``df`` in ``order``.
+
+    :func:`range_sort` + persist; pass A (one job) reports each
+    partition's per-``key`` ``[rows, *sums]`` totals; the driver turns
+    them into exclusive prefixes in partition order and broadcasts them;
+    pass B runs ``kernel(batches, off, tot)`` over each sorted partition,
+    where ``off`` maps a key to its totals in EARLIER partitions (absent =
+    zero) and ``tot`` to its grand totals. The pass-B output (``schema``)
+    is checkpointed before the sorted frame is unpersisted. Returns
+    ``(out, tot)``. Kernels must not mutate ``off``/``tot``: a reused
+    worker shares the broadcast value across tasks."""
+    srt = range_sort(df, order, num_partitions).persist()
+
+    def pass_a(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: dict = {}
+        for pdf in batches:
+            _key_sums(pdf, key, sums, acc)
+        yield pd.DataFrame({"pid": [_pid()], "acc": [pickle.dumps(acc)]})
+
+    accs = {
+        r["pid"]: pickle.loads(r["acc"])
+        for r in srt.mapInPandas(pass_a, "pid int, acc binary").collect()
+    }
+    offsets: dict[int, dict] = {}
+    totals: dict = {}
+    for pid in sorted(accs):
+        offsets[pid] = {k: totals[k] for k in accs[pid] if k in totals}
+        for k, v in accs[pid].items():
+            totals[k] = totals[k] + v if k in totals else v
+    bc = df.sparkSession.sparkContext.broadcast((offsets, totals))
+
+    def pass_b(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        off, tot = bc.value
+        return kernel(batches, off.get(_pid(), {}), tot)
+
+    out = srt.mapInPandas(pass_b, schema).localCheckpoint()
+    srt.unpersist()
+    return out, totals
+
+
+def local_scan(
+    df: DataFrame,
+    order: list[str],
+    key: str | None,
+    sums: list[str],
+    kernel: Callable[[Iterator[pd.DataFrame], dict, dict], Iterator[pd.DataFrame]],
+) -> tuple[pd.DataFrame, dict]:
+    """Driver twin of :func:`range_scan` for small frames: ONE collect,
+    sorted as Spark sorts ascending (string NULLs first, NaN after every
+    number — callers filter NULL doubles out), the totals from pass A's own
+    :func:`_key_sums`, and the SAME ``kernel`` over the whole frame as
+    partition 0 with empty offsets. The kernel must yield at least one
+    frame for its one batch. Returns ``(pandas_out, tot)``."""
+    pdf = df.toPandas()
+    keys = {}
+    for i, c in enumerate(order):
+        if pdf[c].dtype == object:  # pandas would put NULL strings last
+            keys[f"n{i}"] = pdf[c].notna()
+        keys[f"v{i}"] = pdf[c]
+    pdf = pdf.loc[pd.DataFrame(keys).sort_values(list(keys), kind="stable").index]
+    totals = _key_sums(pdf, key, sums, {})
+    out = pd.concat(list(kernel(iter([pdf]), {}, totals)), ignore_index=True)
+    return out, totals
+
+
 def triu_pair(r: np.ndarray, p: int) -> tuple[np.ndarray, np.ndarray]:
     """Row-major upper-triangle index -> (i, j), i < j, of a p×p matrix —
     the order of ``np.triu_indices(p, 1)``. Derived arithmetically so no
@@ -303,6 +424,17 @@ def triu_pair(r: np.ndarray, p: int) -> tuple[np.ndarray, np.ndarray]:
     i[under] += 1
     start[under] = i[under] * (2 * p - i[under] - 1) // 2
     return i, r - start + i + 1
+
+
+def symmetric_from_triu(vals, p: int) -> np.ndarray:
+    """Symmetric (p, p) float64 matrix with a zero diagonal from its upper
+    triangle in ``np.triu_indices(p, 1)`` order — the :func:`triu_pair`
+    order every pair job returns."""
+    iu, ju = np.triu_indices(p, k=1)
+    out = np.zeros((p, p), dtype=np.float64)
+    out[iu, ju] = vals
+    out[ju, iu] = vals
+    return out
 
 
 def pair_frame(

@@ -43,7 +43,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fastselect_spark.selection._agg import pair_job, tree_reduce_ndarrays, triu_pair
+from fastselect_spark.selection._agg import (
+    pair_job,
+    symmetric_from_triu,
+    tree_reduce_ndarrays,
+    triu_pair,
+)
 from fastselect_spark.selection._validate import validate_transform_input
 
 
@@ -240,10 +245,7 @@ def su_matrix(p: int, table_of) -> np.ndarray:
         symmetrical_uncertainty(table_of(n, i, j))
         for n, (i, j) in enumerate(zip(iu.tolist(), ju.tolist()))
     ]
-    r = np.zeros((p, p), dtype=np.float64)
-    r[iu, ju] = su
-    r[ju, iu] = su
-    return r
+    return symmetric_from_triu(su, p)
 
 
 def _su_redundancy_broadcast(
@@ -275,11 +277,7 @@ def _su_redundancy_broadcast(
 
     su = pair_job(spark, p * (p - 1) // 2, score, tasks_per_core=4)
     bc.destroy()
-    iu, ju = np.triu_indices(p, k=1)
-    r_ff = np.zeros((p, p), dtype=np.float64)
-    r_ff[iu, ju] = su
-    r_ff[ju, iu] = su
-    return r_ff
+    return symmetric_from_triu(su, p)
 
 
 class CFSSelector:

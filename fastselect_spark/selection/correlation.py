@@ -1,18 +1,17 @@
-"""Pearson correlation matrix + correlation-based redundancy pruning.
+"""Pearson correlation matrix as one sufficient-statistics pass.
 
 The reference scores feature redundancy with discrete MI/SU over coded
 columns (mRMR.py, CFS.py); for CONTINUOUS features the standard cheap
 redundancy screen is |Pearson r| — this module provides it as one
 sufficient-statistics pass, never a p² set of per-pair jobs.
 
-Two implementations share the same closure math:
+Two physical paths share the same closure math, chosen by p alone:
 
-- ``impl='agg'`` (p <= AGG_P): ONE JVM aggregation with p sums, p
-  sums-of-squares, and p(p-1)/2 cross sums — all inside whole-stage
-  codegen, one scan, no Python. The expression count grows O(p²), so
-  past AGG_P the codegen cost dominates (the CLAUDE.md p-branch lesson)
-  and we switch to:
-- ``impl='arrow'``: the tree-reduced X^T X pass shared with PCA training
+- p <= AGG_P: ONE JVM aggregation with p sums, p sums-of-squares, and
+  p(p-1)/2 cross sums — all inside whole-stage codegen, one scan, no
+  Python. The expression count grows O(p²), so past AGG_P the codegen
+  cost dominates and we switch to:
+- p > AGG_P: the tree-reduced X^T X pass shared with PCA training
   (similarity/pca.py) — per-partition (p, p) partials, driver ingress
   bounded by the fan-in, one scan at any p.
 
@@ -50,14 +49,10 @@ def _corr_from_stats(
     return r
 
 
-def correlation_matrix(
-    df: DataFrame, feature_cols: list[str], impl: str = "auto"
-) -> np.ndarray:
+def correlation_matrix(df: DataFrame, feature_cols: list[str]) -> np.ndarray:
     """(p, p) Pearson correlation matrix from one pass over ``df``."""
     p = len(feature_cols)
-    if impl == "auto":
-        impl = "agg" if p <= AGG_P else "arrow"
-    if impl == "agg":
+    if p <= AGG_P:
         aggs = [F.count(F.lit(1)).alias("__n")]
         cols = [F.col(c).cast("double") for c in feature_cols]
         for i, c in enumerate(feature_cols):
@@ -66,13 +61,15 @@ def correlation_matrix(
             for j in range(i, p):
                 aggs.append(F.sum(cols[i] * cols[j]).alias(f"__x_{i}_{j}"))
         r = df.agg(*aggs).collect()[0]
+        if r["__n"] == 0:
+            raise ValueError("correlation_matrix: input DataFrame is empty")
         n = float(r["__n"])
         s = np.array([float(r[f"__s_{i}"]) for i in range(p)])
         xtx = np.zeros((p, p))
         for i in range(p):
             for j in range(i, p):
                 xtx[i, j] = xtx[j, i] = float(r[f"__x_{i}_{j}"])
-    elif impl == "arrow":
+    else:
 
         def partial(batches: Iterator[pd.DataFrame]) -> dict[str, np.ndarray]:
             cnt, s, xtx = 0, None, None
@@ -95,8 +92,6 @@ def correlation_matrix(
         if "cnt" not in merged:
             raise ValueError("correlation_matrix: input DataFrame is empty")
         n, s, xtx = float(merged["cnt"][0]), merged["s"], merged["xtx"]
-    else:
-        raise ValueError(f"impl must be 'auto', 'agg' or 'arrow', got {impl!r}")
     return _corr_from_stats(n, s, xtx)
 
 
@@ -124,31 +119,10 @@ def correlation_table(
     )
 
 
-def correlation_prune(
-    corr: np.ndarray, feature_cols: list[str], threshold: float = 0.9
-) -> tuple[list[str], dict[str, str]]:
-    """Greedy redundancy prune in column order: drop a feature whose
-    |r| with an earlier KEPT feature exceeds ``threshold`` (caret's
-    findCorrelation 'exact=FALSE' shape, deterministic by input order).
-    Returns (kept, dropped -> blamed kept feature)."""
-    kept: list[int] = []
-    dropped: dict[str, str] = {}
-    for j in range(len(feature_cols)):
-        hit = next(
-            (i for i in kept if abs(corr[i, j]) > threshold), None
-        )
-        if hit is None:
-            kept.append(j)
-        else:
-            dropped[feature_cols[j]] = feature_cols[hit]
-    return [feature_cols[i] for i in kept], dropped
-
-
 def spearman_matrix(
     df: DataFrame,
     feature_cols: list[str],
     id_cols: list[str],
-    impl: str = "auto",
 ) -> np.ndarray:
     """(p, p) Spearman rank correlation: distributed average ranks
     (selection/rank.py — range-partitioned two-pass, no single-partition
@@ -179,12 +153,10 @@ def spearman_matrix(
         .pivot("feature", feature_cols)
         .agg(F.first("rank"))
     )
-    return correlation_matrix(wide, feature_cols, impl)
+    return correlation_matrix(wide, feature_cols)
 
 
-def partial_correlation_matrix(
-    df: DataFrame, feature_cols: list[str], impl: str = "auto"
-) -> np.ndarray:
+def partial_correlation_matrix(df: DataFrame, feature_cols: list[str]) -> np.ndarray:
     """(p, p) partial correlation matrix: the correlation between every
     feature pair CONTROLLING for all other features — the standard way to
     separate direct linear relationships from ones routed through a
@@ -200,7 +172,7 @@ def partial_correlation_matrix(
     Cost: identical to :func:`correlation_matrix` (one sufficient-stats
     pass); the inverse is O(p³) driver work. Raises the multivariate
     singularity contract error on exactly collinear features."""
-    corr = correlation_matrix(df, feature_cols, impl)
+    corr = correlation_matrix(df, feature_cols)
     # explicit conditioning guard: LAPACK only raises on an exactly-zero
     # pivot, which is environment-dependent for collinear inputs (observed:
     # the same [[1,1],[1,1]] raises in one process and "inverts" to garbage

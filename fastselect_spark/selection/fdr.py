@@ -11,27 +11,19 @@ the distributed equivalent of ``statsmodels.stats.multitest.multipletests
 (method='fdr_bh')`` semantics.
 
 Scale design — the naive form is a global ``Window.orderBy(p)``: a
-single-task funnel. Instead the same two-pass range-partition scheme as
-``rank.py``/``ks_statistics``:
-
-1. ``repartitionByRange(p, feature)`` + ``sortWithinPartitions`` —
-   partitions are globally ordered by p; the sorted frame is persisted
-   and read by both passes.
-2. Pass A: per-partition row counts -> driver exclusive prefix sums ->
-   broadcast rank offsets (P integers).
-3. Pass B: each task assigns global ranks (offset + local position,
-   1-based), computes the raw BH quotient ``q = m*p/rank`` and its
-   partition-local SUFFIX minimum (the partition is buffered — it is a
-   (feature, p) table, a few MB per task even at 10^7 features).
-4. The cross-partition suffix carry is a per-partition MIN(q) table (P
-   rows, driver-side suffix min over later partitions) broadcast-joined
-   back: ``p_adj = min(1, local_suffix_min, carry)`` — the exact
-   reverse-cummin of the step-up definition, with ONE range exchange
-   total and no global funnel.
-
-Small tables take one collect instead: the driver sorts it and applies
-pass B's arithmetic (:func:`_bh_terms`) to the whole array as the only
-partition, so the carry is empty.
+single-task funnel. Instead BH runs on the ``_agg`` prefix scan
+(:func:`~fastselect_spark.selection._agg.range_scan`) in (p, feature)
+order as one global group, so each partition's offset is the rank of its
+first row and the totals give ``m``. The pass-B kernel computes the raw
+BH quotient ``q = m*p/rank`` and its partition-local SUFFIX minimum (the
+partition is buffered — a (feature, p) table, a few MB per task even at
+10^7 features). The cross-partition suffix carry is a per-partition
+MIN(q) table (P rows, driver-side suffix min over later partitions)
+broadcast-joined back: ``p_adj = min(1, local_suffix_min, carry)`` — the
+exact reverse-cummin of the step-up definition, with ONE range exchange
+total and no global funnel. Small tables run the same kernel through
+:func:`~fastselect_spark.selection._agg.local_scan` as the only partition,
+so the carry is empty.
 
 The BH selection threshold is ``thr = max{p_(i) : p_(i) <= alpha*i/m}``
 (one filtered MAX aggregation); every feature with ``p <= thr`` is
@@ -50,10 +42,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fastselect_spark.selection import _agg
 
 _SCHEMA = (
     "feature string, p_value double, rank long, "
@@ -63,8 +55,7 @@ _SCHEMA = (
 
 def _bh_terms(p: np.ndarray, rank0: int, m: int, a: float):
     """(rank, q, suffix-min q, step-up candidate) of a sorted p block
-    whose first row has global rank ``rank0 + 1`` — pass B's arithmetic,
-    shared by the driver path (the whole sorted array, ``rank0 = 0``)."""
+    whose first row has global rank ``rank0 + 1`` — pass B's arithmetic."""
     rank = rank0 + np.arange(1, len(p) + 1, dtype=np.int64)
     q = m * p / rank  # same operand order as the SQL oracle
     sfx = np.minimum.accumulate(q[::-1])[::-1]
@@ -84,7 +75,7 @@ def fdr_bh(
     ``(feature, p_value, rank, p_adj, p_bonf, selected)``:
 
     - ``rank``      1-based ascending rank of p (ties broken by feature
-                    name — deterministic cross-engine order);
+                    name, NULL first — deterministic cross-engine order);
     - ``p_adj``     BH adjusted p-value ``min(1, min_{j>=i} m*p_(j)/j)``;
     - ``p_bonf``    Bonferroni ``min(1, m*p)``;
     - ``selected``  1 iff p <= the BH step-up threshold at ``alpha``.
@@ -94,74 +85,19 @@ def fdr_bh(
         F.col(feature_col).cast("string").alias("feature"),
         F.col(p_col).cast("double").alias("p"),
     ).where(F.col(p_col).isNotNull())
-
-    # Small p-value tables skip the two-pass range machinery entirely: one
-    # Arrow collect, sorted on the driver, through pass B's own arithmetic
-    # as the only partition — the per-partition suffix min + carry is an
-    # exact min, so values are bit-identical to the distributed result.
-    from fastselect_spark.selection._agg import small_frame
-
     a = float(alpha)
-    if small_frame(base, 64 << 20):
-        pdf = base.toPandas().sort_values(["p", "feature"], kind="stable")
-        p = pdf["p"].to_numpy(dtype=np.float64)
-        m = len(p)
-        rank, _, sfx, cand = _bh_terms(p, 0, m, a)
-        sel = p <= p[cand].max() if cand.any() else np.zeros(m, dtype=bool)
-        out = pd.DataFrame(
-            {
-                "feature": pdf["feature"],
-                "p_value": p,
-                "rank": rank,
-                "p_adj": np.minimum(1.0, sfx),
-                "p_bonf": np.minimum(1.0, float(m) * p),
-                "selected": sel.astype(np.int32),
-            }
-        )
-        return spark.createDataFrame(out, schema=_SCHEMA)
-    if num_partitions:
-        base = base.repartitionByRange(num_partitions, "p", "feature")
-    else:
-        base = base.repartitionByRange("p", "feature")
-    srt = base.sortWithinPartitions("p", "feature").persist()
 
-    # Pass A: per-partition counts -> exclusive prefix offsets.
-    def count_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        n = 0
-        for pdf in batches:
-            n += len(pdf)
-        yield pd.DataFrame({"pid": [pid], "cnt": [n]})
-
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in srt.mapInPandas(count_pass, schema="pid int, cnt long").collect()
-    }
-    m = int(sum(counts.values()))
-    if m == 0:
-        srt.unpersist()
-        return spark.createDataFrame([], schema=_SCHEMA)
-    offsets: dict[int, int] = {}
-    run = 0
-    for pid in sorted(counts):
-        offsets[pid] = run
-        run += counts[pid]
-    bc = spark.sparkContext.broadcast(offsets)
-
-    # Pass B: global ranks, raw BH quotient, partition-local suffix min.
-    def bh_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        parts = [pdf for pdf in batches if not pdf.empty]
+    def kernel(batches: Iterator[pd.DataFrame], off: dict, tot: dict):
+        parts = list(batches)
         if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
         p = pdf["p"].to_numpy(dtype=np.float64)
-        rank, q, sfx, cand = _bh_terms(p, bc.value.get(pid, 0), m, a)
+        rank0 = int(off[None][0]) if off else 0  # ranks in earlier partitions
+        rank, q, sfx, cand = _bh_terms(p, rank0, int(tot[None][0]), a)
         yield pd.DataFrame(
             {
-                "pid": pid,
+                "rank0": rank0,
                 "feature": pdf["feature"],
                 "p_value": p,
                 "rank": rank,
@@ -171,42 +107,57 @@ def fdr_bh(
             }
         )
 
-    z = srt.mapInPandas(
-        bh_pass,
-        schema="pid int, feature string, p_value double, rank long, "
+    order = ["p", "feature"]
+    # Small p-value tables: the per-partition suffix min + carry is an
+    # exact min, so one partition gives bit-identical values.
+    if _agg.small_frame(base, 64 << 20):
+        z, tot = _agg.local_scan(base, order, None, [], kernel)
+        m = int(tot[None][0])
+        p, cand = z["p_value"].to_numpy(), z["cand"].to_numpy(dtype=bool)
+        sel = p <= p[cand].max() if cand.any() else np.zeros(m, dtype=bool)
+        out = z[["feature", "p_value", "rank"]].assign(
+            p_adj=np.minimum(1.0, z["sfx_local"].to_numpy()),
+            p_bonf=np.minimum(1.0, float(m) * p),
+            selected=sel.astype(np.int32),
+        )
+        return spark.createDataFrame(out, schema=_SCHEMA)
+    z, tot = _agg.range_scan(
+        base,
+        order,
+        None,
+        [],
+        kernel,
+        "rank0 long, feature string, p_value double, rank long, "
         "q_raw double, sfx_local double, cand boolean",
-    ).localCheckpoint()
-    srt.unpersist()
+        num_partitions,
+    )
+    m = int(tot.get(None, [0])[0])  # no None group: no partition had rows
 
-    # Cross-partition suffix carry + step-up threshold: P-row driver work.
+    # Cross-partition suffix carry + step-up threshold: P-row driver work;
+    # a non-empty partition is named by its rank offset.
     # (thr via when(): false-branch is NULL, which max() skips — never NaN,
     # which Spark's max would propagate as the largest double.)
-    stats = (
-        z.groupBy("pid")
+    stats = sorted(
+        z.groupBy("rank0")
         .agg(
             F.min("q_raw").alias("qmin"),
             F.max(F.when(F.col("cand"), F.col("p_value"))).alias("thr"),
         )
-        .collect()
+        .collect(),
+        key=lambda r: r["rank0"],
     )
-    pids = sorted(r["pid"] for r in stats)
-    qmin = {r["pid"]: r["qmin"] for r in stats}
-    carry: dict[int, float] = {}
+    carry: list[tuple[int, float]] = []
     run_min = float("inf")
-    for pid in reversed(pids):
-        carry[pid] = run_min  # min q over strictly-later partitions
-        v = qmin[pid]
-        if v is not None and v < run_min:
-            run_min = float(v)
-    thr_vals = [r["thr"] for r in stats if r["thr"] is not None]
-    thr = max(thr_vals) if thr_vals else None
+    for r in reversed(stats):
+        carry.append((r["rank0"], run_min))  # min q over strictly-later partitions
+        if r["qmin"] is not None and r["qmin"] < run_min:
+            run_min = float(r["qmin"])
+    thr = max((r["thr"] for r in stats if r["thr"] is not None), default=None)
 
     carry_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, carry[pid]) for pid in pids], schema="pid int, carry double"
-        )
+        spark.createDataFrame(carry, schema="rank0 long, carry double")
     )
-    out = z.join(carry_df, "pid")
+    out = z.join(carry_df, "rank0")
     sel = (
         (F.col("p_value") <= F.lit(float(thr))).cast("int")
         if thr is not None

@@ -41,6 +41,7 @@ from fastselect_spark.selection._agg import (
     bounded_arrow_batches,
     list_matrix_view,
     pair_job,
+    symmetric_from_triu,
     tree_reduce_ndarrays_arrow,
     triu_pair,
 )
@@ -350,12 +351,9 @@ def mi_matrices_broadcast(
         n_red = p * (p - 1) // 2 if compute_redundancy else 0
         mi = engine._run(p + n_red, pairs_of, joint=False, tasks_per_core=4)
     relevance = mi[:p].copy()
-    redundancy = np.zeros((p, p), dtype=np.float64)
-    if compute_redundancy:
-        iu, ju = np.triu_indices(p, k=1)
-        redundancy[iu, ju] = mi[p:]
-        redundancy[ju, iu] = mi[p:]
-    return relevance, redundancy
+    if not compute_redundancy:
+        return relevance, np.zeros((p, p), dtype=np.float64)
+    return relevance, symmetric_from_triu(mi[p:], p)
 
 
 def encode_shared(X: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -4,28 +4,15 @@ primitive for: a global ``Window.orderBy`` puts the ENTIRE column in one
 partition (Spark even warns "No Partition Defined for Window operation"),
 which is a single-task funnel at any real scale.
 
-Two-pass range-partition ranking instead (the classic distributed sort
-prefix scheme, same family as asof.py's parallel-prefix carry):
-
-1. ``repartitionByRange(key, value)`` + ``sortWithinPartitions`` — equal
-   (key, value) rows land in ONE partition, partitions are globally
-   ordered. The frame is persisted: both passes read it.
-2. Pass A: each task reports its per-key row count — a (P × distinct
-   keys) table, tiny, collected to the driver, turned into per-(partition,
-   key) rank offsets (exclusive prefix sums per key).
-3. Pass B: each task assigns global row numbers (offset + local position)
-   and tie-averages them per (key, value) group — tie groups are
-   contiguous within the sorted partition (and never span partitions,
-   because range partitioning keys on the value), so the average rank
-   ``first_rn + (cnt - 1) / 2`` needs NO further shuffle.
-
-Total cost at any n: one range exchange + two scans of the sorted frame.
-Small inputs skip both passes: one collect, sorted on the driver, runs pass
-B's kernel (:func:`_rank_block`) as the only partition with no offsets.
-Ranks are 1-based; ties share the arithmetic mean of their positions
-(SQL: RANK() + (cnt_eq - 1)/2 — the oracle form). Ranks are integers or
-half-integers, exactly representable in float64, so downstream
-sufficient-statistics closures stay bit-identical cross-engine."""
+Ranking is the ``_agg`` prefix scan (``_agg.range_scan``; its driver twin
+``_agg.local_scan`` for small inputs) in (key, value) order with the
+per-key row count as the offset. Range partitioning keys on the value
+too, so a (key, value) tie group never spans partitions, and the pass-B
+kernel ranks it ``first_rn + (cnt - 1) / 2`` with NO further shuffle. Ranks are 1-based;
+ties share the arithmetic mean of their positions (SQL: RANK() +
+(cnt_eq - 1)/2 — the oracle form). Ranks are integers or half-integers,
+exactly representable in float64, so downstream sufficient-statistics
+closures stay bit-identical cross-engine."""
 
 from __future__ import annotations
 
@@ -33,9 +20,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from fastselect_spark.selection import _agg
 
 
 def _tie_starts(keys: np.ndarray, vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -50,26 +38,18 @@ def _tie_starts(keys: np.ndarray, vals: np.ndarray) -> tuple[np.ndarray, np.ndar
 
 
 def _rank_block(
-    pdf: pd.DataFrame,
-    key_col: str,
-    value_col: str,
-    id_col: str,
-    off: dict,
-    pos: dict,
+    pdf: pd.DataFrame, key_col: str, value_col: str, id_col: str, pos: dict
 ) -> pd.DataFrame:
     """Average ranks of a sorted block of complete (key, value) tie groups.
-    ``off`` maps a key to its rows in earlier partitions and ``pos`` (updated
-    in place) to the rows this partition already emitted; the driver path
-    passes both empty, its sorted frame being the only partition. A tie
-    group ranks ``first_rn + (size-1)/2.0``."""
+    ``pos`` (updated in place) maps a key to its rows before this block —
+    in earlier partitions and earlier blocks. A tie group ranks
+    ``first_rn + (size-1)/2.0``."""
     keys = pdf[key_col].to_numpy()
     vals = pdf[value_col].to_numpy(dtype=np.float64)
     idx = np.arange(len(keys), dtype=np.int64)
     kstart, gstart = _tie_starts(keys, vals)
     run_keys, run_start = keys[kstart], idx[kstart]
-    base = np.array(
-        [off.get(k, 0) + pos.get(k, 0) for k in run_keys], dtype=np.int64
-    )
+    base = np.array([pos.get(k, 0) for k in run_keys], dtype=np.int64)
     for k, c in zip(run_keys, np.diff(np.append(run_start, len(keys))).tolist()):
         pos[k] = pos.get(k, 0) + c
     krun = np.cumsum(kstart) - 1
@@ -90,76 +70,15 @@ def average_ranks_long(
 ) -> DataFrame:
     """(key, id, rank) for every non-null value row of the long-form
     input; rank is the 1-based average rank of the value within its key."""
-    spark = melted.sparkSession
     base = melted.select(key_col, value_col, id_col).where(
         F.col(value_col).isNotNull()
     )
 
-    # Small inputs: one Arrow collect, sorted as Spark sorts (NULL keys
-    # first, NaN values last), ranked by the executor kernel as one
-    # partition — no range exchange / two mapInPandas passes (shared by
-    # quantile_normalize, auc_scores and the correlation family). Gate is
-    # 8 MB: the ranked OUTPUT is as large as the input, so unlike the
-    # scalar-result fast paths the collect + rebuild round-trip stops
-    # paying quickly (measured: spearman's 1.6M-row melt was 4.9 s
-    # distributed vs 8.4 s collected).
-    from fastselect_spark.selection._agg import plan_size_bytes
-
-    schema = f"{key_col} string, {id_col} string, rank double"
-    if plan_size_bytes(base) <= (8 << 20):
-        pdf = base.toPandas()
-        pdf = pdf.assign(__nn=pdf[key_col].notna()).sort_values(
-            ["__nn", key_col, value_col], kind="stable"
-        )
-        ranked = _rank_block(pdf, key_col, value_col, id_col, {}, {})
-        return spark.createDataFrame(ranked, schema=schema)
-    if num_partitions:
-        base = base.repartitionByRange(num_partitions, key_col, value_col)
-    else:
-        base = base.repartitionByRange(key_col, value_col)
-    srt = base.sortWithinPartitions(key_col, value_col).persist()
-
-    def count_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        counts: dict[str, int] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # dropna=False: NULL keys are a key too (ranked first)
-            for k, c in pdf[key_col].value_counts(dropna=False).items():
-                counts[k] = counts.get(k, 0) + int(c)
-        yield pd.DataFrame(
-            {"pid": pid, "key": list(counts), "cnt": list(counts.values())}
-        ) if counts else pd.DataFrame({"pid": [], "key": [], "cnt": []}).astype(
-            {"pid": "int64", "key": "string", "cnt": "int64"}
-        )
-
-    rows = srt.mapInPandas(
-        count_pass, schema="pid int, key string, cnt long"
-    ).collect()
-    # exclusive prefix sum per key across partition ids
-    by_key: dict[str, list[tuple[int, int]]] = {}
-    for r in rows:
-        by_key.setdefault(r["key"], []).append((r["pid"], r["cnt"]))
-    offsets: dict[int, dict[str, int]] = {}
-    for k, lst in by_key.items():
-        run = 0
-        for pid, cnt in sorted(lst):
-            offsets.setdefault(pid, {})[k] = run
-            run += cnt
-    bc = spark.sparkContext.broadcast(offsets)
-
-    def rank_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        off = bc.value.get(pid, {})
-        pos: dict[str, int] = {}  # rows of this key emitted so far (local)
+    def kernel(batches: Iterator[pd.DataFrame], off: dict, _tot: dict):
+        pos = {k: int(v[0]) for k, v in off.items()}
         # tie-group carry across Arrow batches within the sorted partition
         carry: pd.DataFrame | None = None
         for pdf in batches:
-            if pdf.empty:
-                continue
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
             # hold back the final (key, value) group — it may continue in
@@ -167,20 +86,25 @@ def average_ranks_long(
             _, gstart = _tie_starts(
                 pdf[key_col].to_numpy(), pdf[value_col].to_numpy()
             )
-            cut = int(np.flatnonzero(gstart)[-1])
+            cut = int(np.flatnonzero(gstart)[-1]) if len(pdf) else 0
             carry = pdf.iloc[cut:]
             if cut:
-                yield _rank_block(
-                    pdf.iloc[:cut], key_col, value_col, id_col, off, pos
-                )
+                yield _rank_block(pdf.iloc[:cut], key_col, value_col, id_col, pos)
         if carry is not None:
-            yield _rank_block(carry, key_col, value_col, id_col, off, pos)
+            yield _rank_block(carry, key_col, value_col, id_col, pos)
 
-    out = srt.mapInPandas(rank_pass, schema=schema)
-    # materialize before unpersisting the sorted branch
-    out = out.localCheckpoint()
-    srt.unpersist()
-    return out
+    schema = f"{key_col} string, {id_col} string, rank double"
+    order = [key_col, value_col]
+    # Small inputs skip the range exchange and both passes (shared by
+    # quantile_normalize, auc_scores and the correlation family). Gate is
+    # 8 MB: the ranked OUTPUT is as large as the input, so unlike the
+    # scalar-result fast paths the collect + rebuild round-trip stops
+    # paying quickly (measured: spearman's 1.6M-row melt was 4.9 s
+    # distributed vs 8.4 s collected).
+    if _agg.plan_size_bytes(base) <= (8 << 20):
+        ranked, _ = _agg.local_scan(base, order, key_col, [], kernel)
+        return base.sparkSession.createDataFrame(ranked, schema=schema)
+    return _agg.range_scan(base, order, key_col, [], kernel, schema, num_partitions)[0]
 
 
 def _row_key(id_cols: list[str]):

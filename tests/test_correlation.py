@@ -1,6 +1,6 @@
-"""Correlation matrix/pruning tests: np.corrcoef parity, agg==arrow
-bit-identity on integer-valued features, zero-variance NULL convention,
-and the greedy redundancy prune."""
+"""Correlation matrix tests: np.corrcoef parity, agg==arrow bit-identity
+on integer-valued features, the zero-variance NULL convention, and the
+Kendall tau-b matrix."""
 
 from __future__ import annotations
 
@@ -8,9 +8,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
+import fastselect_spark.selection.correlation as corrmod
 from fastselect_spark.selection.correlation import (
     correlation_matrix,
-    correlation_prune,
     correlation_table,
 )
 
@@ -30,47 +30,41 @@ def corr_df(spark):
 
 def test_matches_numpy_corrcoef(corr_df):
     df, pdf = corr_df
-    r = correlation_matrix(df, COLS, impl="agg")
+    r = correlation_matrix(df, COLS)
     expect = np.corrcoef(pdf[COLS].to_numpy().T)
     assert np.allclose(r, expect, atol=1e-12)
     assert r[0, 1] > 0.99  # planted
 
 
-def test_agg_and_arrow_bit_identical(corr_df):
+def test_agg_and_arrow_bit_identical(corr_df, monkeypatch):
     """Integer-valued features make every sufficient statistic exact, so
-    the two physical strategies must agree to the last bit."""
+    the two physical strategies must agree to the last bit. AGG_P = 0
+    sends the p = 4 input down the Arrow X^T X path."""
     df, _ = corr_df
-    ra = correlation_matrix(df, COLS, impl="agg")
-    rw = correlation_matrix(df.repartition(7), COLS, impl="arrow")
+    ra = correlation_matrix(df, COLS)
+    monkeypatch.setattr(corrmod, "AGG_P", 0)
+    rw = correlation_matrix(df.repartition(7), COLS)
     assert (ra == rw).all()
 
 
 def test_zero_variance_is_null(spark):
     pdf = pd.DataFrame({"x": [1.0, 2.0, 3.0], "k": [5.0, 5.0, 5.0]})
     df = spark.createDataFrame(pdf)
-    r = correlation_matrix(df, ["x", "k"], impl="agg")
+    r = correlation_matrix(df, ["x", "k"])
     assert np.isnan(r[0, 1])
     tbl = correlation_table(spark, r, ["x", "k"]).collect()
     assert len(tbl) == 1 and tbl[0]["corr"] is None
 
 
-def test_correlation_prune(corr_df):
+def test_empty_input_raises(corr_df, monkeypatch):
+    """Both paths reject an empty frame with the same error."""
     df, _ = corr_df
-    r = correlation_matrix(df, COLS, impl="agg")
-    kept, dropped = correlation_prune(r, COLS, threshold=0.9)
-    assert kept == ["a", "c", "d"]
-    assert dropped == {"b": "a"}
-    kept_all, dropped_all = correlation_prune(r, COLS, threshold=1.1)
-    assert kept_all == COLS and dropped_all == {}
-
-
-def test_empty_and_bad_impl(spark, corr_df):
-    df, _ = corr_df
-    with pytest.raises(ValueError, match="impl"):
-        correlation_matrix(df, COLS, impl="bogus")
     empty = df.where("a < -1")
     with pytest.raises(ValueError, match="empty"):
-        correlation_matrix(empty, COLS, impl="arrow")
+        correlation_matrix(empty, COLS)
+    monkeypatch.setattr(corrmod, "AGG_P", 0)
+    with pytest.raises(ValueError, match="empty"):
+        correlation_matrix(empty, COLS)
 
 
 # ------------------------------------------------------------- kendall --

@@ -779,8 +779,8 @@ def test_partial_correlation_explains_away_confounder(spark):
     )
 
     d = spark.createDataFrame(pdf).repartition(4)
-    corr = correlation_matrix(d, ["x", "y", "z"], impl="agg")
-    pc = partial_correlation_matrix(d, ["x", "y", "z"], impl="agg")
+    corr = correlation_matrix(d, ["x", "y", "z"])
+    pc = partial_correlation_matrix(d, ["x", "y", "z"])
     # marginal x-y correlation is strong; controlling for z kills it
     assert corr[0, 1] > 0.8
     assert abs(pc[0, 1]) < 0.15
@@ -801,7 +801,7 @@ def test_partial_correlation_singular_raises(spark):
 
     with pytest.raises(ValueError, match="singular correlation"):
         partial_correlation_matrix(
-            spark.createDataFrame(pdf), ["a", "b"], impl="agg"
+            spark.createDataFrame(pdf), ["a", "b"]
         )
 
 

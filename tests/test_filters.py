@@ -280,6 +280,31 @@ def test_fdr_bh_driver_path_matches_distributed(spark, monkeypatch, driver_calls
     assert fast.equals(slow)
 
 
+def test_fdr_bh_null_feature_both_paths(spark, monkeypatch, driver_calls):
+    """A NULL feature id ranks first among equal p-values on both paths,
+    as Spark sorts it. The pandas-built input has exact size stats, so the
+    un-forced call takes the driver path."""
+    import fastselect_spark.selection._agg as aggmod
+    import fastselect_spark.selection.fdr as fdrmod
+    from fastselect_spark.selection import fdr_bh
+
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {"feature": ["b", None, "a", "c"], "p_value": [0.01, 0.01, 0.02, 0.5]}
+        ),
+        "feature string, p_value double",
+    )
+    calls = driver_calls(fdrmod, "_bh_terms")
+    fast = sorted(fdr_bh(df).collect(), key=lambda r: r["rank"])
+    assert calls, "the driver path did not run"
+    calls.clear()
+    monkeypatch.setattr(aggmod, "small_frame", lambda *_a, **_k: False)
+    slow = sorted(fdr_bh(df).collect(), key=lambda r: r["rank"])
+    assert not calls, "the distributed path ran its kernel on the driver"
+    assert fast == slow
+    assert [r["feature"] for r in fast] == [None, "b", "a", "c"]
+
+
 def test_fdr_bh_none_selected(spark):
     from fastselect_spark.selection import fdr_bh
 

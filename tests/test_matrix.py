@@ -237,14 +237,22 @@ def test_stepwise_engine_rejects_oversize_broadcast(spark, monkeypatch):
 def test_triu_pair_matches_triu_indices():
     """The pair-id decoder walks np.triu_indices(p, 1) order exactly; at
     large p the row starts ±1 and the last id exercise the float-sqrt
-    fixups."""
-    from fastselect_spark.selection._agg import triu_pair
+    fixups. symmetric_from_triu fills a matrix from a vector in that
+    order, mirrored, with a zero diagonal."""
+    from fastselect_spark.selection._agg import symmetric_from_triu, triu_pair
 
     for p in range(2, 301):
         iu, ju = np.triu_indices(p, k=1)
         i, j = triu_pair(np.arange(len(iu)), p)
         np.testing.assert_array_equal(i, iu)
         np.testing.assert_array_equal(j, ju)
+    for p in (1, 2, 7):
+        vals = np.arange(1.0, p * (p - 1) // 2 + 1)
+        m = symmetric_from_triu(vals, p)
+        i, j = triu_pair(np.arange(len(vals)), p)
+        np.testing.assert_array_equal(m[i, j], vals)
+        np.testing.assert_array_equal(m, m.T)
+        assert m.dtype == np.float64 and not np.diag(m).any()
     for p in (5_000, 100_003, 1_000_003):
         rows = np.arange(p - 1, dtype=np.int64)
         starts = rows * (2 * p - rows - 1) // 2

@@ -421,12 +421,10 @@ def main() -> int:
     )
     rk = average_ranks_long(melted, num_partitions=8)
     p = plan_of(rk)
-    # the returned frame is checkpointed; audit the sorted sub-plan instead
-    sorted_plan = plan_of(
-        melted.repartitionByRange(8, "feature", "value").sortWithinPartitions(
-            "feature", "value"
-        )
-    )
+    # the returned frame is checkpointed; audit the scan's own sort step
+    from fastselect_spark.selection._agg import range_sort
+
+    sorted_plan = plan_of(range_sort(melted, ["feature", "value"], 8))
     failures += not check(
         "average ranks use range partitioning (no global-window funnel)",
         "rangepartitioning" in sorted_plan and "SinglePartition" not in sorted_plan
@@ -468,17 +466,12 @@ def main() -> int:
         F.col("n_chars").cast("double").alias("n_chars")
     )
     ks = ks_statistics(ref_d, cur_d, ["n_chars"], num_partitions=8)
-    # result is checkpointed (tiny); audit the hand-built sorted sub-plan
-    from fastselect_spark.featurize.drift import _melt_tagged
+    # the scan output is checkpointed; audit KS's own count table through
+    # the scan's own sort step
+    from fastselect_spark.featurize.drift import _ks_counts
 
-    u = _melt_tagged(ref_d, ["n_chars"], 0).unionByName(
-        _melt_tagged(cur_d, ["n_chars"], 1)
-    )
-    cts = u.groupBy("feature", "v").agg(F.sum("__g").alias("c"))
     sub = plan_of(
-        cts.repartitionByRange(8, "feature", "v").sortWithinPartitions(
-            "feature", "v"
-        )
+        range_sort(_ks_counts(ref_d, cur_d, ["n_chars"]), ["feature", "v"], 8)
     )
     failures += not check(
         "KS prefix passes are range-partitioned (no global-window funnel)",
