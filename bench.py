@@ -1185,7 +1185,7 @@ def scorers_mode() -> None:
             " a full GC (System.gc() mid-session restored 48.8 s → 8.8 s)."
             " Fix: zero-copy Arrow-flat kernels (mapInArrow +"
             " list_matrix_view, ~1 MB column-chunk math) + per-operator"
-            " Arrow batch caps of ~8 MB (bounded_arrow_batches). Measured"
+            " Arrow batch caps of ~8 MB (now get_spark's maxBytesPerBatch). Measured"
             " after: 4 in-session reps [13.9, 8.6, 14.0, 9.6] s — spread"
             " 1.6x (residual VM noise; fresh-process medians remain the"
             " comparable evidence), vs [24.5-80.5] s spread 3.3x before."

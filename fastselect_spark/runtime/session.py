@@ -102,8 +102,16 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Deterministic timestamp handling regardless of host TZ.
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow batch size bounds pandas-UDF memory per task.
+        # Arrow batch size bounds pandas-UDF memory per task: a row cap
+        # for narrow rows, a byte cap for wide ones. At p=200k the row cap
+        # alone gave ~100 MB batches, G1 humongous allocations whose
+        # fragmentation built up in a long-lived JVM until a full GC and
+        # slowed the same wide-matrix job 3-6x within one session
+        # (BENCH/SCORERS.md, round 5); 8 MB batches stay below the
+        # humongous threshold at 32 g heaps and held the in-session spread
+        # to <= 1.5x. Operators never change these per call.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", "8m")
         .config("spark.driver.memory", os.environ.get("FASTSELECT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Short-lived availableNow streaming queries don't benefit from

@@ -7,16 +7,22 @@ Python (BASELINE.json:6). Shape:
   stage 1 (map):    ``mapInPandas`` — each task streams its Arrow batches
                     through a vectorized ``partial_fn`` and emits ONE row per
                     named accumulator (int64/float64 ndarray, serialized).
-  stage 2 (combine): partials are grouped by ``partition_id % fanin`` and
+  stage 2 (combine): partials are grouped by ``partition_id % FANIN`` and
                     summed with ``applyInPandas`` — the tree level that keeps
                     driver ingress bounded at 1000-executor scale.
-  stage 3 (reduce): the <= fanin rows per name are summed on the driver.
+  stage 3 (reduce): the <= FANIN rows per name are summed on the driver.
 
 Accumulators are integer counts or float64 partial sums, so the merged
 result is independent of partitioning (exact for ints; reordered float
-addition only at the final tiny merge). :func:`local_reducer` is the
-driver twin for small frames reduced once per iteration (Lloyd): one
-collect, the same partial function per partition, the same merge order.
+addition only at the final tiny merge). Partials merge by name only, so
+a kernel whose accumulators depend on the data names them by value (the
+per-class sums of ``matrix._class_moments``) and the driver orders
+them after the merge — no separate scan for the keys. Wide rows reach
+:func:`tree_reduce_ndarrays_arrow` in batches of at most ~8 MB: the byte
+cap is session configuration set once in ``runtime.session.get_spark``,
+never changed per call. :func:`local_reducer` is the driver twin for
+small frames reduced once per iteration (Lloyd): one collect, the same
+partial function per partition, the same merge order.
 
 Order statistics (average ranks, BH-FDR, exact KS) need a running count
 along a global sort, which Spark only offers as a single-partition
@@ -37,7 +43,6 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 import pickle
-from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -46,6 +51,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _PARTIAL_SCHEMA = "merge_key int, name string, dtype string, shape string, data binary"
+# tree shape: partials combine in FANIN groups, and jobs of at most
+# DIRECT_COLLECT partitions skip the combine level
+FANIN = 16
+DIRECT_COLLECT = 64
 
 
 def plan_size_bytes(df: DataFrame) -> int:
@@ -99,37 +108,6 @@ def _unpack(row) -> np.ndarray:
     return np.frombuffer(row["data"], dtype=row["dtype"]).reshape(shape).copy()
 
 
-@contextmanager
-def bounded_arrow_batches(df: DataFrame, features_col: str, target_bytes: int = 8 << 20):
-    """Cap Arrow IPC batch size to ~``target_bytes`` for the duration of a
-    wide-matrix job (rows-per-batch = target / (8·p)).
-
-    Root cause this fixes (measured, BENCH/SCORERS.md round-5 note): at
-    p=200k the default 65536-record cap yields ~100 MB Arrow batches —
-    G1 humongous allocations whose fragmentation accumulates across reps
-    in a long-lived JVM until a full GC, degrading the same job 3-6x
-    within one session (System.gc() restored 48.8 s → 8.8 s). 8 MB
-    batches stay under the humongous threshold at 32 g heaps: measured
-    in-session spread drops to ≤1.5x with no steady-state cost."""
-    spark = df.sparkSession
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    row = df.select(F.size(F.col(features_col)).alias("p")).first()
-    p = int(row["p"]) if row is not None and row["p"] is not None else 0
-    rows = max(1, min(65536, target_bytes // max(1, 8 * p)))
-    spark.conf.set(key, str(rows))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
 def list_matrix_view(batch, features_col: str, label_col: str | None):
     """Zero-copy ``(n_rows, p)`` float64 view over an Arrow batch's
     ``list<double>`` column, plus the label column as a NumPy array.
@@ -170,12 +148,7 @@ def list_matrix_view(batch, features_col: str, label_col: str | None):
     return X, y
 
 
-def tree_reduce_ndarrays_arrow(
-    df: DataFrame,
-    partial_fn,
-    fanin: int = 16,
-    direct_collect_threshold: int = 64,
-) -> dict[str, np.ndarray]:
+def tree_reduce_ndarrays_arrow(df: DataFrame, partial_fn) -> dict[str, np.ndarray]:
     """Arrow-batch variant of :func:`tree_reduce_ndarrays`: ``partial_fn``
     receives ``Iterator[pyarrow.RecordBatch]`` (use :func:`list_matrix_view`
     for wide array columns) and the map stage runs through ``mapInArrow``,
@@ -195,37 +168,35 @@ def tree_reduce_ndarrays_arrow(
 
     def mapper(batches):
         acc = partial_fn(batches)
-        rows = [_pack(name, arr, _pid() % fanin) for name, arr in acc.items()]
+        rows = [_pack(name, arr, _pid() % FANIN) for name, arr in acc.items()]
         yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
     partials = df.mapInArrow(mapper, schema=_PARTIAL_SCHEMA)
-    return _merge_partials(partials, df, fanin, direct_collect_threshold)
+    return _merge_partials(partials, df)
 
 
 def tree_reduce_ndarrays(
     df: DataFrame,
     partial_fn: Callable[[Iterator[pd.DataFrame]], dict[str, np.ndarray]],
-    fanin: int = 16,
-    direct_collect_threshold: int = 64,
 ) -> dict[str, np.ndarray]:
     """Reduce ``partial_fn``'s per-partition accumulator dict by elementwise
     sum across all partitions of ``df``. Returns the merged dict.
 
     With few partitions (local mode / small jobs) the intermediate combine
     stage is pure overhead — partials are collected and summed on the driver
-    directly. Above ``direct_collect_threshold`` partitions (real cluster),
-    the tree combine level bounds driver ingress to ``fanin`` rows per name.
+    directly. Above ``DIRECT_COLLECT`` partitions (real cluster), the tree
+    combine level bounds driver ingress to ``FANIN`` rows per name.
     """
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc = partial_fn(batches)
-        rows = [_pack(name, arr, _pid() % fanin) for name, arr in acc.items()]
+        rows = [_pack(name, arr, _pid() % FANIN) for name, arr in acc.items()]
         yield pd.DataFrame(rows) if rows else pd.DataFrame(
             columns=["merge_key", "name", "dtype", "shape", "data"]
         )
 
     partials = df.mapInPandas(mapper, schema=_PARTIAL_SCHEMA)
-    return _merge_partials(partials, df, fanin, direct_collect_threshold)
+    return _merge_partials(partials, df)
 
 
 def local_reducer(df: DataFrame) -> Callable[[Callable], dict[str, np.ndarray]]:
@@ -256,14 +227,9 @@ def local_reducer(df: DataFrame) -> Callable[[Callable], dict[str, np.ndarray]]:
     return reduce
 
 
-def _merge_partials(
-    partials: DataFrame,
-    df: DataFrame,
-    fanin: int,
-    direct_collect_threshold: int,
-) -> dict[str, np.ndarray]:
+def _merge_partials(partials: DataFrame, df: DataFrame) -> dict[str, np.ndarray]:
     n_parts = df.rdd.getNumPartitions()
-    if n_parts <= direct_collect_threshold:
+    if n_parts <= DIRECT_COLLECT:
         out: dict[str, np.ndarray] = {}
         for row in partials.collect():
             arr = _unpack(row)

@@ -1,5 +1,6 @@
 """Pure-NumPy statistical finalizers run on the DRIVER over small merged
-sufficient statistics (contingency tables, observed matrices).
+sufficient statistics (contingency tables, observed matrices, per-class
+moments).
 
 scipy is unavailable in this environment, so the chi-square survival
 function is implemented from scratch via the regularized incomplete gamma
@@ -56,6 +57,26 @@ def chi2_stats_from_observed(
     stats = term.sum(axis=0)
     stats[feature_counts == 0] = 0.0
     return stats
+
+
+def fisher_from_moments(n_c: np.ndarray, s: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Fisher score per feature from per-class count ``(K,)``, sum and
+    sum-of-squares ``(K, p)``: between-class variance over pooled
+    within-class population variance. Zero within-class variance scores
+    +inf when the class means differ, 0 when constant; fewer than two
+    classes score 0. Both layouts' Fisher scorers finalize here."""
+    if len(n_c) < 2:
+        return np.zeros(s.shape[1], dtype=np.float64)
+    n = n_c.sum()
+    mu_c = s / n_c[:, None]
+    var_c = np.maximum(q / n_c[:, None] - mu_c**2, 0.0)
+    mu = s.sum(axis=0) / n
+    between = (n_c[:, None] * (mu_c - mu[None, :]) ** 2).sum(axis=0)
+    within = (n_c[:, None] * var_c).sum(axis=0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(
+            within > 0, between / within, np.where(between > 0, np.inf, 0.0)
+        )
 
 
 # --- regularized incomplete gamma (for the chi-square survival function) ---

@@ -11,7 +11,8 @@ reaches the driver; chi2 math + p-values are driver-side NumPy.
 Semantics reproduced exactly:
 - value-weighted observed counts (not occurrence counts);
 - negative feature values raise ValueError (Chi2.py:71-72);
-- single-class y returns (zeros, ones) (Chi2.py:78-79);
+- single-class y returns (zeros, ones) (Chi2.py:78-79); NULL/NaN labels
+  raise ValueError (``_validate.check_labels``);
 - zero-sum features score 0 (skip), expected cells <= 1e-12 skipped;
 - dof = n_classes - 1; p-values via the chi-square survival function.
 """
@@ -23,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastselect_spark.selection._stats import chi2_sf, chi2_stats_from_observed
+from fastselect_spark.selection._validate import class_rows
 
 
 def chi2(
@@ -36,7 +38,7 @@ def chi2(
     aggs += [F.sum(F.col(c).cast("double")).alias(f"__s_{c}") for c in feature_cols]
     if validate:
         aggs += [F.min(F.col(c).cast("double")).alias(f"__m_{c}") for c in feature_cols]
-    rows = df.groupBy(F.col(label_col).alias("__y")).agg(*aggs).collect()
+    rows = class_rows(df, label_col, aggs)
 
     if validate:
         for r in rows:
@@ -45,8 +47,6 @@ def chi2(
                 if m is not None and m < 0:
                     raise ValueError("Input matrix X must contain non-negative values.")
 
-    # np.unique ordering (sorted labels) for class order parity.
-    rows.sort(key=lambda r: r["__y"])
     p = len(feature_cols)
     n_classes = len(rows)
     if n_classes < 2:

@@ -8,12 +8,17 @@ ONE ``array<double>`` column holding the feature vector. Two distribution
 axes, matching how the work actually scales:
 
 - **Row-parallel** (any n, p up to millions): sufficient statistics whose
-  size is independent of n — the chi2 observed matrix ``(K, p)`` and the MI
+  size is independent of n — the per-class moments ``(K, p)`` and the MI
   relevance histograms ``(p, k, k)`` — accumulated per partition in NumPy
   (vectorized scatter-adds over Arrow batches) and merged by the tree
-  reduction in ``_agg.py``. This is the reference's single-pass kernel
-  (Chi2.py:7-22, mutual_information.py:49-55) re-expressed as a
-  partition-parallel reduction.
+  reduction in ``_agg.py``, each scorer ONE Spark job. This is the
+  reference's single-pass kernel (Chi2.py:7-22, mutual_information.py:49-55)
+  re-expressed as a partition-parallel reduction. chi2 and Fisher run one
+  kernel, :func:`_class_moments` (per-class count and sum, plus the sum of
+  squares for Fisher), keyed by label value so no class scan runs first;
+  they differ only in their driver finalizer. Arrow batches of wide rows
+  are capped at ~8 MB by the session's ``maxBytesPerBatch``
+  (``runtime.session.get_spark``), not per call.
 - **Pair-parallel** (the reference benchmark regime: n bounded, p large):
   the p×p MI redundancy matrix needs a contingency per feature PAIR —
   p(p−1)/2 of them. :class:`BroadcastMIEngine` broadcasts the coded matrix
@@ -38,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fastselect_spark.selection._agg import (
-    bounded_arrow_batches,
     list_matrix_view,
     pair_job,
     symmetric_from_triu,
@@ -48,9 +52,11 @@ from fastselect_spark.selection._agg import (
 from fastselect_spark.selection._stats import (
     chi2_sf,
     chi2_stats_from_observed,
+    fisher_from_moments,
     log_base,
     mi_from_contingency,
 )
+from fastselect_spark.selection._validate import check_labels
 from fastselect_spark.selection.cmim import cmim_loop
 from fastselect_spark.selection.jmi import jmi_loop
 from fastselect_spark.selection.mi import check_states
@@ -83,22 +89,23 @@ def matrix_table(
     ).repartition(n_partitions)
 
 
-def _classes_of(df: DataFrame, label_col: str) -> np.ndarray:
-    rows = df.select(F.col(label_col).cast("double")).distinct().collect()
-    return np.sort(np.array([r[0] for r in rows], dtype=np.float64))
-
-
-def chi2_matrix(
+def _class_moments(
     df: DataFrame,
-    features_col: str = "features",
-    label_col: str = "y",
-    validate: bool = True,
-) -> tuple[np.ndarray, np.ndarray]:
-    """chi2 over an array-column feature matrix: ONE row-parallel pass
-    accumulating the value-weighted observed matrix (K, p) + class counts;
-    driver finalization identical to the narrow-column scorer."""
-    classes = _classes_of(df, label_col)
-    n_classes = len(classes)
+    features_col: str,
+    label_col: str,
+    name: str,
+    squares: bool,
+    validate: bool = False,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """Per-class ``(count (K,), sum (K, p), sum-of-squares (K, p) or None)``
+    over an array-column matrix in ONE row-parallel job, classes in
+    ascending order — the kernel behind both chi2 and Fisher.
+
+    No class scan: each task keys its partials by the label values it sees
+    (``cnt:<label>`` and ``m:<label>``, the stacked sum[/sum-of-squares]
+    rows), the tree reduction sums them by name, and the driver orders the
+    classes; a NULL/NaN label raises. ``validate`` adds chi2's
+    non-negativity flag count (min is not sum-mergeable)."""
     proj = df.select(
         F.col(features_col).alias("features"),
         F.col(label_col).cast("double").alias("y"),
@@ -109,48 +116,78 @@ def chi2_matrix(
         # column's values buffer — no np.stack 100 MB copy per batch (the
         # round-4 3x within-session drift was allocator churn from exactly
         # those temporaries). Per-class sums are one small one-hot gemm per
-        # ~1 MB column chunk, so peak temporary stays cache-sized.
-        obs = None
-        cnt = np.zeros(n_classes, dtype=np.float64)
+        # ~1 MB column chunk, and the sum of squares is taken while the
+        # chunk is cache-hot — one effective memory pass (a second pass
+        # made Fisher ~1.6x chi2 at p=200k; bandwidth, not flops).
+        out: dict[str, np.ndarray] = {}
         neg = 0.0
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             Xb, yv = list_matrix_view(batch, "features", "y")
-            yb = np.searchsorted(classes, np.asarray(yv, dtype=np.float64))
+            # + 0.0 folds -0.0 into 0.0: one key per class, as Spark groups
+            cls, yb = np.unique(
+                np.asarray(yv, dtype=np.float64) + 0.0, return_inverse=True
+            )
             nb, p_b = Xb.shape
-            if obs is None:
-                obs = np.zeros((n_classes, p_b), dtype=np.float64)
-            onehot = (yb[:, None] == np.arange(n_classes)[None, :]).astype(
+            onehot = (yb[:, None] == np.arange(len(cls))[None, :]).astype(
                 np.float64
             )
-            cnt += onehot.sum(axis=0)
+            cnt = onehot.sum(axis=0)
+            accs = []  # per batch class: its (sum[, sum-of-squares]) rows
+            for i, c in enumerate(cls):
+                key = repr(float(c))
+                if f"cnt:{key}" not in out:
+                    out[f"cnt:{key}"] = np.zeros(1, dtype=np.float64)
+                    out[f"m:{key}"] = np.zeros((1 + squares, p_b), dtype=np.float64)
+                out[f"cnt:{key}"] += cnt[i]
+                accs.append(out[f"m:{key}"])
             step = max(1, (1 << 17) // max(1, nb))
             for c0 in range(0, p_b, step):
                 blk = Xb[:, c0 : c0 + step]
-                obs[:, c0 : c0 + step] += onehot.T @ blk
+                g = [onehot.T @ blk]
+                if squares:
+                    g.append(onehot.T @ (blk * blk))
+                for i, acc in enumerate(accs):
+                    for j, gj in enumerate(g):
+                        acc[j, c0 : c0 + step] += gj[i]
                 if validate and blk.min() < 0:
                     neg += 1.0
-        out: dict[str, np.ndarray] = {}
-        if obs is not None:
-            out["obs"] = obs
-            out["cnt"] = cnt
-            if validate:
-                # min is not sum-mergeable; ship a non-negativity FLAG count
-                out["neg"] = np.array([neg])
+        if validate and out:
+            out["neg"] = np.array([neg])
         return out
 
-    with bounded_arrow_batches(proj, "features"):
-        merged = tree_reduce_ndarrays_arrow(proj, partial)
-    if "obs" not in merged:
-        raise ValueError("chi2_matrix: input DataFrame is empty")
-    if validate and merged.get("neg", np.zeros(1))[0] > 0:
+    merged = tree_reduce_ndarrays_arrow(proj, partial)
+    keys = [k[4:] for k in merged if k.startswith("cnt:")]
+    if not keys:
+        raise ValueError(f"{name}: input DataFrame is empty")
+    check_labels([float(k) for k in keys], label_col)
+    if validate and merged["neg"][0] > 0:
         raise ValueError("Input matrix X must contain non-negative values.")
-    p = merged["obs"].shape[1]
+    keys.sort(key=float)
+    n_c = np.concatenate([merged[f"cnt:{k}"] for k in keys])
+    m = np.stack([merged[f"m:{k}"] for k in keys])  # (K, 1 + squares, p)
+    return n_c, m[:, 0], m[:, 1] if squares else None
+
+
+def chi2_matrix(
+    df: DataFrame,
+    features_col: str = "features",
+    label_col: str = "y",
+    validate: bool = True,
+) -> tuple[np.ndarray, np.ndarray]:
+    """chi2 over an array-column feature matrix: ONE row-parallel pass
+    (:func:`_class_moments`) accumulating the value-weighted observed
+    matrix (K, p) + class counts; driver finalization identical to the
+    narrow-column scorer."""
+    class_freqs, obs, _ = _class_moments(
+        df, features_col, label_col, "chi2_matrix", squares=False, validate=validate
+    )
+    p = obs.shape[1]
+    n_classes = len(class_freqs)
     if n_classes < 2:
         return np.zeros(p, dtype=np.float64), np.ones(p, dtype=np.float64)
-    class_freqs = merged["cnt"]
-    stats = chi2_stats_from_observed(merged["obs"], class_freqs, class_freqs.sum())
+    stats = chi2_stats_from_observed(obs, class_freqs, class_freqs.sum())
     return stats, chi2_sf(stats, dof=n_classes - 1)
 
 
@@ -159,64 +196,14 @@ def fisher_matrix(
     features_col: str = "features",
     label_col: str = "y",
 ) -> np.ndarray:
-    """Fisher score over an array-column matrix: one row-parallel pass
-    accumulating per-class (count, sum, sum-of-squares) per feature —
-    identical finalization semantics to selection/fisher.py (between-class
+    """Fisher score over an array-column matrix: the chi2 pass
+    (:func:`_class_moments`) with per-class sums of squares, finalized by
+    the narrow scorer's own ``_stats.fisher_from_moments`` (between-class
     variance over pooled within-class population variance; +inf on
     zero-within with differing means, 0 when constant)."""
-    classes = _classes_of(df, label_col)
-    n_classes = len(classes)
-    proj = df.select(
-        F.col(features_col).alias("features"),
-        F.col(label_col).cast("double").alias("y"),
+    return fisher_from_moments(
+        *_class_moments(df, features_col, label_col, "fisher_matrix", squares=True)
     )
-
-    def partial(batches) -> dict[str, np.ndarray]:
-        # Arrow-flat kernel (see chi2_matrix): zero-copy X view + one-hot
-        # gemms per ~1 MB column chunk, computing sum and sum-of-squares
-        # while the chunk is cache-hot — one effective memory pass (the
-        # naive second pass made Fisher ~1.6x chi2 at p=200k; bandwidth,
-        # not flops) and no 100 MB np.stack temporaries.
-        s = q = None
-        cnt = np.zeros(n_classes, dtype=np.float64)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            Xb, yv = list_matrix_view(batch, "features", "y")
-            yb = np.searchsorted(classes, np.asarray(yv, dtype=np.float64))
-            nb, p_b = Xb.shape
-            if s is None:
-                s = np.zeros((n_classes, p_b), dtype=np.float64)
-                q = np.zeros_like(s)
-            onehot = (yb[:, None] == np.arange(n_classes)[None, :]).astype(
-                np.float64
-            )
-            cnt += onehot.sum(axis=0)
-            step = max(1, (1 << 17) // max(1, nb))
-            for c0 in range(0, p_b, step):
-                blk = Xb[:, c0 : c0 + step]
-                s[:, c0 : c0 + step] += onehot.T @ blk
-                q[:, c0 : c0 + step] += onehot.T @ (blk * blk)
-        return {"s": s, "q": q, "cnt": cnt} if s is not None else {}
-
-    with bounded_arrow_batches(proj, "features"):
-        merged = tree_reduce_ndarrays_arrow(proj, partial)
-    if "s" not in merged:
-        raise ValueError("fisher_matrix: input DataFrame is empty")
-    s, q, n_c = merged["s"], merged["q"], merged["cnt"]
-    p = s.shape[1]
-    if n_classes < 2:
-        return np.zeros(p, dtype=np.float64)
-    n = n_c.sum()
-    mu_c = s / n_c[:, None]
-    var_c = np.maximum(q / n_c[:, None] - mu_c**2, 0.0)
-    mu = s.sum(axis=0) / n
-    between = (n_c[:, None] * (mu_c - mu[None, :]) ** 2).sum(axis=0)
-    within = (n_c[:, None] * var_c).sum(axis=0)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(
-            within > 0, between / within, np.where(between > 0, np.inf, 0.0)
-        )
 
 
 def mi_relevance_matrix(
@@ -265,8 +252,7 @@ def mi_relevance_matrix(
                     hist[c0 + f] += np.bincount(fused[:, f], minlength=k * k)
         return {"hist": hist} if hist is not None else {}
 
-    with bounded_arrow_batches(proj, "features"):
-        merged = tree_reduce_ndarrays_arrow(proj, partial)
+    merged = tree_reduce_ndarrays_arrow(proj, partial)
     if "hist" not in merged:
         raise ValueError("mi_relevance_matrix: input DataFrame is empty")
     hist = merged["hist"]

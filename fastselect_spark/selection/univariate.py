@@ -15,6 +15,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fastselect_spark.selection.fisher import class_moments
+
 
 def anova_f_score(
     df: DataFrame, feature_cols: list[str], label_col: str = "label"
@@ -24,23 +26,15 @@ def anova_f_score(
 
         F = (SS_between / (k-1)) / (SS_within / (n-k))
 
-    Same per-class count/sum/sumsq aggregation as :func:`fisher_score`;
+    The per-class count/sum/sumsq aggregation is ``fisher.class_moments``;
     only the degrees-of-freedom scaling differs. Zero within-class variance
     scores +inf when class means differ, 0 when the feature is constant.
     """
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in feature_cols:
-        d = F.col(c).cast("double")
-        aggs += [F.sum(d).alias(f"__s_{c}"), F.sum(d * d).alias(f"__q_{c}")]
-    rows = df.groupBy(F.col(label_col).alias("__y")).agg(*aggs).collect()
-    rows.sort(key=lambda r: r["__y"])
+    n_c, s, q = class_moments(df, feature_cols, label_col)
     p = len(feature_cols)
-    k = len(rows)
+    k = len(n_c)
     if k < 2:
         return np.zeros(p, dtype=np.float64)
-    n_c = np.array([r["__n"] for r in rows], dtype=np.float64)
-    s = np.array([[r[f"__s_{c}"] or 0.0 for c in feature_cols] for r in rows])
-    q = np.array([[r[f"__q_{c}"] or 0.0 for c in feature_cols] for r in rows])
     n = n_c.sum()
     if n <= k:
         return np.zeros(p, dtype=np.float64)

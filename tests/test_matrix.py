@@ -33,8 +33,39 @@ def coded(spark):
     return X, y, matrix_table(spark, X, y, n_partitions=6)
 
 
-def test_chi2_matrix_matches_oracle(spark, coded):
-    X, y, df = coded
+@pytest.fixture(scope="module")
+def odd_labels(spark):
+    """Non-integer and negative labels, one class in a single partition:
+    the per-partition class keying must merge and order classes a task
+    never saw."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(11)
+    n, p = 300, 6
+    X = rng.integers(0, 5, (n, p)).astype(np.float64)
+    y = np.where(rng.random(n) < 0.5, -1.0, 2.5)
+    y[200:] = np.where(X[200:, 1] > 1, 7.0, y[200:])
+    X[:, 0] += y == 7.0
+    df = (
+        matrix_table(spark, X, y, n_partitions=3)
+        .withColumn("part", (F.col("id") >= 200).cast("int"))
+        .repartition(3, "part")
+        .drop("part")
+    )
+    parts = {
+        r["y"]: r["n"]
+        for r in df.withColumn("pid", F.spark_partition_id())
+        .groupBy("y")
+        .agg(F.countDistinct("pid").alias("n"))
+        .collect()
+    }
+    assert parts[7.0] == 1 and max(parts.values()) > 1
+    return X, y, df
+
+
+@pytest.mark.parametrize("data", ["coded", "odd_labels"])
+def test_chi2_matrix_matches_oracle(spark, data, request):
+    X, y, df = request.getfixturevalue(data)
     stats, pvals = chi2_matrix(df)
     np.testing.assert_allclose(stats, chi2_oracle(X, y), rtol=1e-10, atol=1e-12)
     assert np.all((pvals >= 0) & (pvals <= 1))
@@ -65,8 +96,9 @@ def test_mi_matrices_broadcast_matches_oracle(spark, coded):
     assert np.allclose(red, red.T) and np.all(np.diag(red) == 0)
 
 
-def test_fisher_matrix_matches_column_mode(spark, coded):
-    X, y, df = coded
+@pytest.mark.parametrize("data", ["coded", "odd_labels"])
+def test_fisher_matrix_matches_column_mode(spark, data, request):
+    X, y, df = request.getfixturevalue(data)
     got = fisher_matrix(df)
     cols = [f"f{i}" for i in range(X.shape[1])]
     import pandas as pd
@@ -76,6 +108,70 @@ def test_fisher_matrix_matches_column_mode(spark, coded):
     ndf = spark.createDataFrame(pdf)
     want = fisher_score(ndf, cols, "label")
     np.testing.assert_allclose(got, want, rtol=1e-10, atol=1e-12)
+
+
+@pytest.mark.parametrize(
+    "scorer",
+    [chi2_matrix, fisher_matrix, lambda df: mi_relevance_matrix(df, n_states=5)],
+    ids=["chi2_matrix", "fisher_matrix", "mi_relevance_matrix"],
+)
+def test_wide_scorers_run_one_job(spark, coded, scorer):
+    """One Spark job per call: no class scan, no batch-size probe."""
+    sc = spark.sparkContext
+    df = coded[2].persist()
+    df.count()
+    group = f"one-job-{id(scorer)}"
+    sc.setJobGroup(group, group)
+    try:
+        scorer(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        df.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_session_caps_wide_arrow_batches(spark):
+    """get_spark's byte cap splits a ~20 MB partition of wide rows into
+    Arrow batches of at most ~8 MB, with no per-call configuration."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    def sizes(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pylist(
+                [{"rows": b.num_rows, "bytes": b.nbytes}],
+                schema=pa.schema([("rows", pa.int64()), ("bytes", pa.int64())]),
+            )
+
+    df = spark.range(0, 1300, 1, 1).select(
+        F.array_repeat(F.col("id").cast("double"), 2000).alias("features")
+    )
+    got = df.mapInArrow(sizes, "rows long, bytes long").collect()
+    assert sum(r["rows"] for r in got) == 1300
+    assert len(got) > 1
+    assert max(r["bytes"] for r in got) <= 9 << 20
+
+
+@pytest.mark.parametrize("bad", [None, float("nan")], ids=["null", "nan"])
+@pytest.mark.parametrize(
+    "scorer", ["chi2", "fisher_score", "anova_f_score", "chi2_matrix", "fisher_matrix"]
+)
+def test_per_class_scorers_reject_null_labels(spark, scorer, bad):
+    from fastselect_spark import selection
+
+    labels = [0.0, 1.0, bad, 0.0, 1.0, bad, 0.0, 1.0]
+    rows = [(i, [float(i % 3), float(i % 2)], lab) for i, lab in enumerate(labels)]
+    if scorer.endswith("_matrix"):
+        df = spark.createDataFrame(rows, "id long, features array<double>, cls double")
+        args, kwargs = (df,), {"label_col": "cls"}
+    else:
+        df = spark.createDataFrame(
+            [(a, b, lab) for _, (a, b), lab in rows], "f0 double, f1 double, cls double"
+        )
+        args, kwargs = (df, ["f0", "f1"], "cls"), {}
+    with pytest.raises(ValueError, match="label column 'cls' has NULL or NaN"):
+        getattr(selection, scorer)(*args, **kwargs)
 
 
 def test_mrmr_matrix_matches_oracle_greedy(spark, coded):
