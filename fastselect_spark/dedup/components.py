@@ -31,13 +31,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Edge-count gate for the driver union-find fast path: below this many
-# (undirected) input pairs the component computation is driver-finalize
-# work (one Arrow collect + linear union-find), not cluster work — the
-# same bounded-driver discipline as the mRMR/MDR greedy loops. 2M pairs
-# is ~100-200 MB of id columns on the driver; above it, the distributed
-# min-label/star path runs unchanged.
-DRIVER_EDGE_CAP = 2_000_000
+from fastselect_spark.runtime import gates
 
 
 def _components_driver(
@@ -46,7 +40,7 @@ def _components_driver(
     """(doc_id, comp) via driver-side union-find over the collected pair
     list — bit-identical to min-label propagation's fixpoint (comp = min
     id reachable through the pair graph) by construction. Arrow transfer
-    both ways; only called under DRIVER_EDGE_CAP."""
+    both ways; only called within the components gate budget."""
     from pyspark.sql import types as T
 
     pdf = pairs.select(id_a, id_b).toPandas()
@@ -189,7 +183,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     star_fallback: bool = True,
-    driver_edge_cap: int | None = DRIVER_EDGE_CAP,
 ) -> DataFrame:
     """(doc_id, component) for every node in ``pairs``; component = min id
     reachable through the pair graph. If max_iter rounds of min-label
@@ -198,27 +191,23 @@ def connected_components(
     (:func:`connected_components_star`) — or warns and returns the
     partial labels when ``star_fallback=False``.
 
-    Small graphs (≤ ``driver_edge_cap`` pairs — the normal case: verified
-    near-dup pair lists are bounded candidates, not the corpus) skip the
-    per-round join jobs entirely and run union-find on the driver — same
-    (doc_id, min-reachable-id) result, one collect instead of
-    O(diameter) Spark jobs. ``driver_edge_cap=None`` forces the
-    distributed path."""
+    Small graphs (the normal case: verified near-dup pair lists are
+    bounded candidates, not the corpus) skip the per-round join jobs
+    entirely and run union-find on the driver — same (doc_id,
+    min-reachable-id) result, one collect instead of O(diameter) Spark
+    jobs."""
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).persist()
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
-    if driver_edge_cap is not None:
-        # one count on the (persisted) edge list gates the fast path; the
-        # distributed loop below reads the same cache, so the count is
-        # never wasted work. It also fills fwd's cache: union-find is
-        # direction-agnostic, so the driver collects the forward pairs
-        # only (half the doubled rows) without re-running pairs' plan
-        if edges.count() <= 2 * driver_edge_cap:
-            out = _components_driver(fwd, "src", "dst")
-            edges.unpersist()
-            fwd.unpersist()
-            return out
+    # the exact count also fills the edge cache the distributed loop reads,
+    # and fwd's: union-find is direction-agnostic, so the driver collects
+    # the forward pairs only without re-running pairs' plan
+    if gates.use_driver(edges, "components", rows=edges.count()):
+        out = _components_driver(fwd, "src", "dst")
+        edges.unpersist()
+        fwd.unpersist()
+        return out
     fwd.unpersist()
     # per-round labels are eagerly localCheckpoint'd: persist alone leaves
     # the logical plan compounding ~2x per round (a full 25-round run OOMs

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fastselect_spark.runtime import gates
 from fastselect_spark.selection import _agg
 
 PSI_EPS = 1e-6
@@ -175,7 +176,9 @@ def ks_statistics(
 
     order, sums = ["feature", "v"], ["c0", "c1"]
     # Small inputs: one block gives the same integer cumsums and quotients
-    if (_agg.plan_size_bytes(ref) + _agg.plan_size_bytes(cur)) <= (64 << 20):
+    vals = [F.col(c).cast("double") for c in cols]
+    pooled = ref.select(*vals).unionByName(cur.select(*vals))
+    if gates.use_driver(pooled, "ks", num_partitions=num_partitions):
         ks, _ = _agg.local_scan(counts, order, "feature", sums, kernel)
         return ref.sparkSession.createDataFrame(
             ks.rename(columns={"d": "ks"}), schema="feature string, ks double"

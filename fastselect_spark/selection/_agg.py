@@ -57,35 +57,6 @@ FANIN = 16
 DIRECT_COLLECT = 64
 
 
-def plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for a frame (py4j hands back an int — the
-    round-3 lesson); failures map to a huge number so small-input gates
-    fail safe to the distributed path."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover — estimation must never break an op
-        return 1 << 62
-
-
-_STATS_UNKNOWN = 1 << 62  # LogicalRDD / parallelized driver rows report Long.Max
-
-
-def small_frame(df: DataFrame, max_bytes: int, probe_rows: int = 200_000) -> bool:
-    """True when ``df`` is provably small enough for a driver fast path.
-
-    Uses the free Catalyst size estimate when available; frames built from
-    driver rows (LogicalRDD) report Long.Max, so those get ONE bounded
-    limit+count probe — cheap (partition-local short-circuit) and only
-    paid where the estimate is unknown. probe_rows assumes narrow rows;
-    callers with wide payloads should gate on bytes only."""
-    est = plan_size_bytes(df)
-    if est <= max_bytes:
-        return True
-    if est >= _STATS_UNKNOWN:
-        return df.limit(probe_rows + 1).count() <= probe_rows
-    return False
-
-
 def _pid() -> int:
     """The running task's partition id; 0 on the driver."""
     ctx = TaskContext.get()

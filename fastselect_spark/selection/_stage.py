@@ -4,13 +4,10 @@ The Relief family and MDR need every task to see the full (parity-scale)
 sample matrix. Two physical strategies behind one handle
 (:class:`MatrixStage`), size-gated by ``make_stage``:
 
-- **small** (projected matrix <= ``SMALL_BYTES``, default 4 MiB, env
-  ``FS_STAGE_SMALL_BYTES``): Arrow ``toPandas`` of the narrow projection +
-  ``sc.broadcast`` — one job, no filesystem round-trip. The staged write
-  costs a fixed ~1.5-2.5 s (parquet writer setup + read-back + extra jobs)
-  that measured a 2-3.4x regression on kilobyte-scale fits, a pure loss
-  when the matrix fits in a driver page cache anyway.
-- **staged** (above the threshold): the narrow numeric projection is
+- **small** (``gates.use_driver(narrow, "stage")``): Arrow ``toPandas``
+  of the narrow projection + ``sc.broadcast`` — one job, no filesystem
+  round-trip (parquet writer setup + read-back + extra jobs).
+- **staged** (above the budget): the narrow numeric projection is
   written distributed (executors -> scratch storage, never through the
   driver), then read back by each Python worker directly from storage and
   cached per worker process — the executor-side equivalent of a broadcast
@@ -54,7 +51,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fastselect_spark.selection._agg import plan_size_bytes
+from fastselect_spark.runtime import gates
 
 MID = "__mid"
 LABEL = "__label"
@@ -66,9 +63,6 @@ PACKED = "__packed"
 # and wide codegen), the packed layout ~1s. Narrow stages keep real columns
 # so Spark aggregations (class stats, preflight min/max) stay available.
 WIDE_P = 64
-
-# make_stage small/staged size gate (estimated n*(p+2)*8 matrix bytes)
-SMALL_BYTES = int(os.environ.get("FS_STAGE_SMALL_BYTES", str(4 << 20)))
 
 # per-python-worker cache: one stage at a time (a Relief/MDR fit makes many
 # tasks hit the same stage; keeping only the newest bounds worker memory)
@@ -340,28 +334,19 @@ def make_stage(
     feature_cols: list[str],
     label_col: str,
     extra_cols: tuple[str, ...] = (),
-    n_rows: int | None = None,
     force: str | None = None,
 ) -> MatrixStage:
     """Materialize the narrow numeric projection behind a MatrixStage.
 
-    The gate needs NO job: ``n_rows`` (if the caller knows it) gives the
-    exact matrix bytes, otherwise Catalyst's plan-size estimate of the
-    narrow projection decides (unknown/huge -> staged). ``force``
-    ('small'|'staged') overrides — tests and callers that know better."""
+    ``gates.use_driver`` sizes the narrow projection; ``force``
+    ('small'|'staged') overrides — the selectors' ``stage_mode``."""
     spark = df.sparkSession
     p = len(feature_cols)
     narrow = df.select(*feature_cols, F.col(label_col).alias(LABEL), *extra_cols)
     if force is not None:
         mode = force
-    elif n_rows is not None:
-        est = n_rows * (p + 2 + len(extra_cols)) * 8
-        mode = "small" if est <= SMALL_BYTES else "staged"
     else:
-        # a failed estimate reads as huge, so it stages (safe); an
-        # underestimate collects a few× the threshold (bounded)
-        est = plan_size_bytes(narrow)
-        mode = "small" if est <= SMALL_BYTES else "staged"
+        mode = "small" if gates.use_driver(narrow, "stage") else "staged"
 
     if mode == "small":
         # Bare column refs + a direct Arrow collect, cast driver-side in
@@ -392,6 +377,5 @@ def make_stage(
     path = stage_matrix(df, feature_cols, label_col, extra_cols)
     staged_df = spark.read.parquet(path)
     return MatrixStage(
-        spark, feature_cols, "staged", path=path, staged_df=staged_df,
-        n_rows=n_rows,
+        spark, feature_cols, "staged", path=path, staged_df=staged_df
     )

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fastselect_spark.runtime import gates
 from fastselect_spark.selection._agg import (
     pair_job,
     symmetric_from_triu,
@@ -281,10 +282,6 @@ def _su_redundancy_broadcast(
 
 
 class CFSSelector:
-    # auto stage gate: collect the coded matrix when n*(p+1) cells fit
-    # comfortably in a driver Arrow pull (the relief.py small-path analogue)
-    SMALL_CELLS = 50_000_000
-
     def __init__(
         self, n_bins: int = 10, strategy: str = "uniform", stage_mode: str = "auto"
     ) -> None:
@@ -321,22 +318,17 @@ class CFSSelector:
         )
 
         # --- stage gate (decided FIRST so metadata can come off the
-        # collected matrix): the one-pass cube's flat ff accumulator is
-        # Σ k_i·k_j over p(p−1)/2 pairs (~100 MB PER PARTITION at p=500,
-        # n_bins=10) — allocated, populated with p(p−1)/2 bincounts per
-        # batch, and tree-merged by every worker. When the coded matrix is
-        # small (n·(p+1) cells under the Arrow-collect gate), collecting it
-        # once and scoring pairs from a broadcast is strictly cheaper —
-        # and the per-column metadata (min/max, vocabularies) comes from
-        # the matrix for free instead of a p-branch min/max agg plus a
-        # p-branch collect_set agg (the CLAUDE.md countDistinct/Expand
-        # lesson: wide multi-branch aggs cost seconds of codegen alone).
-        # Beyond the gate the n-independent cube is the only row-scalable
-        # option and its partial size is the documented cost.
-        force = None if self.stage_mode == "auto" else self.stage_mode
-        n_rows = df.count()
+        # collected matrix): a collected coded matrix scores pairs from a
+        # broadcast, and its per-column metadata (min/max, vocabularies)
+        # is free instead of a p-branch min/max agg plus a p-branch
+        # collect_set agg (wide multi-branch aggs cost seconds of codegen
+        # alone). Beyond the gate the n-independent one-pass cube is the
+        # only row-scalable option; its flat ff accumulator, Σ k_i·k_j
+        # over p(p−1)/2 pairs, is the documented cost.
         use_small = (
-            force == "small" if force else n_rows * (p + 1) <= self.SMALL_CELLS
+            gates.use_driver(proj, "cfs")
+            if self.stage_mode == "auto"
+            else self.stage_mode == "small"
         )
         self.effective_stage_mode_ = "small" if use_small else "staged"
         arr: np.ndarray | None = None

@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fastselect_spark.runtime import gates
 from fastselect_spark.selection import _agg
 
 _SCHEMA = (
@@ -110,7 +111,7 @@ def fdr_bh(
     order = ["p", "feature"]
     # Small p-value tables: the per-partition suffix min + carry is an
     # exact min, so one partition gives bit-identical values.
-    if _agg.small_frame(base, 64 << 20):
+    if gates.use_driver(base, "fdr", num_partitions=num_partitions):
         z, tot = _agg.local_scan(base, order, None, [], kernel)
         m = int(tot[None][0])
         p, cand = z["p_value"].to_numpy(), z["cand"].to_numpy(dtype=bool)

@@ -223,18 +223,20 @@ def mi_relevance_matrix(
     k = int(n_states)
     proj = df.select(
         F.col(features_col).alias("features"),
-        F.col(label_col).cast("long").alias("y"),
+        F.col(label_col).cast("double").alias("y"),
     )
 
     def partial(batches) -> dict[str, np.ndarray]:
         # Arrow-flat kernel: the int64 cast happens per ~1 MB column chunk
         # of the zero-copy float64 view, never as a whole-batch copy.
-        hist = None
+        hist, bad = None, 0
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             Xv, yv = list_matrix_view(batch, "features", "y")
-            yb = np.asarray(yv, dtype=np.int64)
+            yf = np.asarray(yv, dtype=np.float64)  # a NULL label arrives as NaN
+            bad += int(np.isnan(yf).any())  # raised on the driver
+            yb = np.nan_to_num(yf).astype(np.int64)  # truncates, as a cast to long
             if (yb < 0).any() or (yb >= k).any():
                 raise ValueError("codes out of [0, n_states) for MI relevance")
             nb, p = Xv.shape
@@ -250,11 +252,13 @@ def mi_relevance_matrix(
                 # bincount beats np.add.at ~10x on fused codes)
                 for f in range(fused.shape[1]):
                     hist[c0 + f] += np.bincount(fused[:, f], minlength=k * k)
-        return {"hist": hist} if hist is not None else {}
+        return {"hist": hist, "bad": np.array([bad])} if hist is not None else {}
 
     merged = tree_reduce_ndarrays_arrow(proj, partial)
     if "hist" not in merged:
         raise ValueError("mi_relevance_matrix: input DataFrame is empty")
+    if merged["bad"][0]:
+        check_labels([None], label_col)
     hist = merged["hist"]
     p = hist.shape[0]
     return np.array(

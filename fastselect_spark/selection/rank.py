@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fastselect_spark.runtime import gates
 from fastselect_spark.selection import _agg
 
 
@@ -96,12 +97,8 @@ def average_ranks_long(
     schema = f"{key_col} string, {id_col} string, rank double"
     order = [key_col, value_col]
     # Small inputs skip the range exchange and both passes (shared by
-    # quantile_normalize, auc_scores and the correlation family). Gate is
-    # 8 MB: the ranked OUTPUT is as large as the input, so unlike the
-    # scalar-result fast paths the collect + rebuild round-trip stops
-    # paying quickly (measured: spearman's 1.6M-row melt was 4.9 s
-    # distributed vs 8.4 s collected).
-    if _agg.plan_size_bytes(base) <= (8 << 20):
+    # quantile_normalize, auc_scores and the correlation family)
+    if gates.use_driver(base, "ranks", num_partitions=num_partitions):
         ranked, _ = _agg.local_scan(base, order, key_col, [], kernel)
         return base.sparkSession.createDataFrame(ranked, schema=schema)
     return _agg.range_scan(base, order, key_col, [], kernel, schema, num_partitions)[0]

@@ -35,6 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fastselect_spark.runtime import gates
 from fastselect_spark.selection._stats import chi2_stats_from_observed
 
 
@@ -71,7 +72,7 @@ def chi2_fold_scores(
             stats = chi2_stats_from_observed(obs, freqs, float(freqs.sum()))
         out += [(fold, c, float(s)) for c, s in zip(feature_cols, stats)]
     # pandas (Arrow) createDataFrame yields a LocalRelation with EXACT
-    # size stats, so stability_topk's small_frame gate reads the estimate
+    # size stats, so stability_topk's driver gate reads the estimate
     # and sends it down the driver path without a limit+count probe job; a
     # plain list lands as a stats-less LogicalRDD. No None values here, so
     # the NaN-vs-NULL Arrow hazard does not apply.
@@ -124,10 +125,8 @@ def stability_topk(
     run entirely on the driver: one collect sorted in Spark's order
     (score desc, feature asc) instead of the window/join/agg jobs, then
     the same finalizer (:func:`_overlap_rows`)."""
-    from fastselect_spark.selection._agg import small_frame
-
     spark = scores.sparkSession
-    if small_frame(scores, 32 << 20):
+    if gates.use_driver(scores, "stability"):
         pdf = scores.select(
             F.col(fold_col).alias("f"),
             F.col(feature_col).alias("x"),

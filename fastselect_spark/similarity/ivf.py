@@ -31,22 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from fastselect_spark.selection._agg import (
-    local_reducer,
-    plan_size_bytes,
-    tree_reduce_ndarrays,
-)
-
-# Plan-size gate for driver-side Lloyd reductions: when the (possibly
-# train_sample-bounded) training frame is estimated under this many bytes,
-# ONE Arrow collect + the same per-partition kernel on the driver replaces
-# max_iter distributed jobs — each Lloyd iteration is otherwise a full job
-# whose ~0.5 s launch floor dominates at small/sampled scale (measured
-# 10.2 s for 20 iterations over a 1 MB embeddings table). The local
-# reducer merges partials in the tree reduction's order, so centroids are
-# bit-identical. At 100 TB the gate falls through to the distributed loop
-# unless train_sample bounds the scan (the documented scale mode anyway).
-DRIVER_TRAIN_BYTES = 256 << 20
+from fastselect_spark.runtime import gates
+from fastselect_spark.selection._agg import local_reducer, tree_reduce_ndarrays
 
 
 def _normalize(M: np.ndarray) -> np.ndarray:
@@ -56,10 +42,10 @@ def _normalize(M: np.ndarray) -> np.ndarray:
 
 
 def lloyd_reducer(train: DataFrame):
-    """The per-iteration ``reduce(partial_fn)`` of a Lloyd loop over
-    ``train``: the driver-side :func:`local_reducer` under
-    DRIVER_TRAIN_BYTES, else one tree-reduced job per call."""
-    if plan_size_bytes(train) <= DRIVER_TRAIN_BYTES:
+    """One Lloyd iteration's ``reduce(partial_fn)`` over ``train``: the
+    driver-side :func:`local_reducer` for a small frame (the tree's merge
+    order: bit-identical centroids), else one tree-reduced job per call."""
+    if gates.use_driver(train, "lloyd"):
         return local_reducer(train)
     return lambda partial_fn: tree_reduce_ndarrays(train, partial_fn)
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import pytest
 
+from fastselect_spark.runtime import gates
 from fastselect_spark.runtime.session import get_spark
 
 
@@ -31,3 +32,25 @@ def driver_calls(monkeypatch):
         return calls
 
     return spy
+
+
+@pytest.fixture
+def force_path(monkeypatch):
+    """``force_path(path)`` replaces ``gates.use_driver``: "driver" or
+    "distributed" pins every decision, "auto" keeps the real policy. It
+    returns the list each later decision is appended to."""
+    real = gates.use_driver
+
+    def force(path: str) -> list:
+        decisions: list = []
+
+        def gate(df, op, **kwargs):
+            decisions.append(
+                real(df, op, **kwargs) if path == "auto" else path == "driver"
+            )
+            return decisions[-1]
+
+        monkeypatch.setattr(gates, "use_driver", gate)
+        return decisions
+
+    return force

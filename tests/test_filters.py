@@ -255,10 +255,9 @@ def test_fdr_bh_matches_oracle(spark):
     assert sorted(ranks) == list(range(1, m + 1))  # a permutation of 1..m
 
 
-def test_fdr_bh_driver_path_matches_distributed(spark, monkeypatch, driver_calls):
+def test_fdr_bh_driver_path_matches_distributed(spark, force_path, driver_calls):
     """The small-input driver fast path must equal the two-pass
     range-partitioned kernel row-for-row (exact doubles)."""
-    import fastselect_spark.selection._agg as aggmod
     import fastselect_spark.selection.fdr as fdrmod
     from fastselect_spark.selection import fdr_bh
 
@@ -267,12 +266,10 @@ def test_fdr_bh_driver_path_matches_distributed(spark, monkeypatch, driver_calls
         "((id * 2654435761) % 1000003) / 1000003.0 AS p_value",
     )
     calls = driver_calls(fdrmod, "_bh_terms")
-    fast = fdr_bh(pv, num_partitions=8).toPandas().sort_values(
-        "feature"
-    ).reset_index(drop=True)
+    fast = fdr_bh(pv).toPandas().sort_values("feature").reset_index(drop=True)
     assert calls, "the driver path did not run"
     calls.clear()
-    monkeypatch.setattr(aggmod, "small_frame", lambda *_a, **_k: False)
+    force_path("distributed")
     slow = fdr_bh(pv, num_partitions=8).toPandas().sort_values(
         "feature"
     ).reset_index(drop=True)
@@ -280,11 +277,10 @@ def test_fdr_bh_driver_path_matches_distributed(spark, monkeypatch, driver_calls
     assert fast.equals(slow)
 
 
-def test_fdr_bh_null_feature_both_paths(spark, monkeypatch, driver_calls):
+def test_fdr_bh_null_feature_both_paths(spark, force_path, driver_calls):
     """A NULL feature id ranks first among equal p-values on both paths,
     as Spark sorts it. The pandas-built input has exact size stats, so the
     un-forced call takes the driver path."""
-    import fastselect_spark.selection._agg as aggmod
     import fastselect_spark.selection.fdr as fdrmod
     from fastselect_spark.selection import fdr_bh
 
@@ -298,7 +294,7 @@ def test_fdr_bh_null_feature_both_paths(spark, monkeypatch, driver_calls):
     fast = sorted(fdr_bh(df).collect(), key=lambda r: r["rank"])
     assert calls, "the driver path did not run"
     calls.clear()
-    monkeypatch.setattr(aggmod, "small_frame", lambda *_a, **_k: False)
+    force_path("distributed")
     slow = sorted(fdr_bh(df).collect(), key=lambda r: r["rank"])
     assert not calls, "the distributed path ran its kernel on the driver"
     assert fast == slow
@@ -387,22 +383,15 @@ def test_chi2_fold_scores_matches_per_fold_chi2(spark):
             assert got[(f, f"f{i}")] == pytest.approx(float(s), rel=1e-12)
 
 
-def _both_stability_paths(df, monkeypatch, k):
+def _both_stability_paths(df, force_path, k):
     """stability_topk's driver and distributed rows, failing unless the
     size gate sent the first call down the driver path."""
-    import fastselect_spark.selection._agg as aggmod
     from fastselect_spark.selection import stability_topk
 
-    real, gates = aggmod.small_frame, []
-
-    def gate(*args, **kwargs):
-        gates.append(real(*args, **kwargs))
-        return gates[-1]
-
-    monkeypatch.setattr(aggmod, "small_frame", gate)
+    gates = force_path("auto")
     fast = stability_topk(df, k=k).toPandas()
     assert gates == [True], "the driver path did not run"
-    monkeypatch.setattr(aggmod, "small_frame", lambda *_a, **_k: False)
+    force_path("distributed")
     slow = stability_topk(df, k=k).toPandas()
     return [
         out.sort_values(["fold_a", "fold_b"]).reset_index(drop=True)
@@ -410,7 +399,7 @@ def _both_stability_paths(df, monkeypatch, k):
     ]
 
 
-def test_stability_driver_path_matches_distributed(spark, monkeypatch):
+def test_stability_driver_path_matches_distributed(spark, force_path):
     """The small-table driver fast path must return exactly the distributed
     window/join rows (values compared exactly — same doubles)."""
     rng = np.random.default_rng(3)
@@ -420,11 +409,11 @@ def test_stability_driver_path_matches_distributed(spark, monkeypatch):
         for j in range(7)
     ]
     df = spark.createDataFrame(rows, "fold int, feature string, score double")
-    fast, slow = _both_stability_paths(df, monkeypatch, k=3)
+    fast, slow = _both_stability_paths(df, force_path, k=3)
     assert fast.equals(slow)
 
 
-def test_stability_nan_scores_both_paths(spark, monkeypatch):
+def test_stability_nan_scores_both_paths(spark, force_path):
     """NaN scores sort as Spark's desc() sorts them — the greatest value,
     selected first — on both paths; NULL scores sort last."""
     nan = float("nan")
@@ -434,7 +423,7 @@ def test_stability_nan_scores_both_paths(spark, monkeypatch):
         (2, "a", None), (2, "b", 0.5), (2, "c", nan), (2, "d", 0.1), (2, "e", 0.2),
     ]
     df = spark.createDataFrame(rows, "fold int, feature string, score double")
-    fast, slow = _both_stability_paths(df, monkeypatch, k=2)
+    fast, slow = _both_stability_paths(df, force_path, k=2)
     assert fast.equals(slow)
     # top-2: fold 0 {a, d} (NaN first), fold 1 {b, c}, fold 2 {b, c}
     assert fast["n_common"].tolist() == [0, 0, 2]

@@ -155,7 +155,15 @@ def test_session_caps_wide_arrow_batches(spark):
 
 @pytest.mark.parametrize("bad", [None, float("nan")], ids=["null", "nan"])
 @pytest.mark.parametrize(
-    "scorer", ["chi2", "fisher_score", "anova_f_score", "chi2_matrix", "fisher_matrix"]
+    "scorer",
+    [
+        "chi2",
+        "fisher_score",
+        "anova_f_score",
+        "chi2_matrix",
+        "fisher_matrix",
+        "mi_relevance_matrix",
+    ],
 )
 def test_per_class_scorers_reject_null_labels(spark, scorer, bad):
     from fastselect_spark import selection
@@ -165,6 +173,8 @@ def test_per_class_scorers_reject_null_labels(spark, scorer, bad):
     if scorer.endswith("_matrix"):
         df = spark.createDataFrame(rows, "id long, features array<double>, cls double")
         args, kwargs = (df,), {"label_col": "cls"}
+        if scorer == "mi_relevance_matrix":
+            kwargs["n_states"] = 3
     else:
         df = spark.createDataFrame(
             [(a, b, lab) for _, (a, b), lab in rows], "f0 double, f1 double, cls double"

@@ -689,7 +689,7 @@ def test_connected_components_string_ids(spark):
     }
 
 
-def test_connected_components_max_iter_warns(spark):
+def test_connected_components_max_iter_warns(spark, force_path):
     """Exhausting max_iter without a fixpoint must WARN (silently returning
     partially-propagated labels splits long chains) when the star fallback
     is opted out."""
@@ -701,11 +701,10 @@ def test_connected_components_max_iter_warns(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "id_a long, id_b long"
     )
+    force_path("distributed")
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        connected_components(
-            pairs, max_iter=2, star_fallback=False, driver_edge_cap=None
-        ).count()
+        connected_components(pairs, max_iter=2, star_fallback=False).count()
     assert any("did not converge" in str(r.message) for r in rec)
 
 
@@ -739,7 +738,7 @@ def test_connected_components_star_matches_union_find(spark):
     assert got == expect
 
 
-def test_connected_components_long_chain_fallback(spark):
+def test_connected_components_long_chain_fallback(spark, force_path):
     """A 500-node chain (diameter 499 ≫ max_iter 25) must converge via the
     automatic large-star/small-star fallback: every node labeled 0."""
     import warnings as _w
@@ -749,15 +748,16 @@ def test_connected_components_long_chain_fallback(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(499)], "id_a long, id_b long"
     )
+    force_path("distributed")
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        comp = connected_components(pairs, driver_edge_cap=None).toPandas()
+        comp = connected_components(pairs).toPandas()
     assert any("falling back" in str(r.message) for r in rec)
     assert len(comp) == 500
     assert (comp["comp"] == 0).all()
 
 
-def _both_lloyd_paths(train, monkeypatch, driver_calls):
+def _both_lloyd_paths(train, force_path, driver_calls):
     """A trainer's result on the driver-reduced and the tree-reduced path,
     failing unless each call took its own path."""
     import fastselect_spark.similarity.ivf as ivfmod
@@ -767,13 +767,15 @@ def _both_lloyd_paths(train, monkeypatch, driver_calls):
     fast = train()
     assert local and not tree, "the driver path did not run"
     local.clear()
-    monkeypatch.setattr(ivfmod, "DRIVER_TRAIN_BYTES", 0)
+    force_path("distributed")
     slow = train()
     assert tree and not local, "the distributed path did not run"
     return fast, slow
 
 
-def test_lloyd_driver_path_bit_identical(spark, monkeypatch, driver_calls):
+def test_lloyd_driver_path_bit_identical(
+    spark, monkeypatch, force_path, driver_calls
+):
     """The driver-side Lloyd reduction must produce BIT-identical
     centroids to the distributed tree-reduced loop — the declared
     IVF/kmeans/SQ8 oracles embed these centroids as literals."""
@@ -785,14 +787,14 @@ def test_lloyd_driver_path_bit_identical(spark, monkeypatch, driver_calls):
     for n_cells in (4, 8):
         fast, slow = _both_lloyd_paths(
             lambda: train_ivf_centroids(emb, n_cells=n_cells),
-            monkeypatch,
+            force_path,
             driver_calls,
         )
         assert np.array_equal(fast, slow)
         monkeypatch.undo()
 
 
-def test_pq_driver_path_bit_identical(spark, monkeypatch, driver_calls):
+def test_pq_driver_path_bit_identical(spark, force_path, driver_calls):
     """train_pq_codebooks' driver fast path must match the distributed
     tree-reduced loop bit-for-bit (codebook literals feed the PQ oracles)."""
     import numpy as np
@@ -801,15 +803,18 @@ def test_pq_driver_path_bit_identical(spark, monkeypatch, driver_calls):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     fast, slow = _both_lloyd_paths(
-        lambda: train_pq_codebooks(emb, m=8, k=8), monkeypatch, driver_calls
+        lambda: train_pq_codebooks(emb, m=8, k=8), force_path, driver_calls
     )
     assert np.array_equal(fast, slow)
 
 
-def test_connected_components_driver_path_matches_distributed(spark):
+def test_connected_components_driver_path_matches_distributed(
+    spark, force_path, driver_calls
+):
     """The driver union-find fast path (round-6 optimization) must return
     exactly the distributed min-label rows — mixed components, a chain,
     a triangle, string ids, and duplicate/reversed pairs."""
+    import fastselect_spark.dedup.components as compmod
     from fastselect_spark.dedup import connected_components
 
     edges = [
@@ -819,14 +824,19 @@ def test_connected_components_driver_path_matches_distributed(spark):
         ("lone1", "lone2"),
     ]
     pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+    calls = driver_calls(compmod, "_components_driver")
     fast = (
         connected_components(pairs)
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
+    assert calls, "the driver path did not run"
+    calls.clear()
+    force_path("distributed")
     slow = (
-        connected_components(pairs, driver_edge_cap=None)
+        connected_components(pairs)
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
+    assert not calls, "the distributed path ran union-find on the driver"
     assert fast.equals(slow)
 
 

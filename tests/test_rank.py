@@ -10,25 +10,22 @@ import pytest
 from pyspark.sql import functions as F
 
 import fastselect_spark.featurize.drift as driftmod
-import fastselect_spark.selection._agg as aggmod
 import fastselect_spark.selection.rank as rankmod
 from fastselect_spark.featurize import ks_statistics
 from fastselect_spark.selection.correlation import spearman_matrix
 from fastselect_spark.selection.rank import average_ranks_long
 
-def _both_rank_paths(melted, monkeypatch, driver_calls):
+def _both_rank_paths(melted, force_path, driver_calls):
     """average_ranks_long's driver and distributed results (sorted rows),
     failing unless each call took its own path."""
     calls = driver_calls(rankmod, "_rank_block")
     rows = []
     for forced in (False, True):
         if forced:
-            monkeypatch.setattr(aggmod, "plan_size_bytes", lambda _df: 1 << 62)
+            force_path("distributed")
+        ranks = average_ranks_long(melted, num_partitions=8 if forced else None)
         rows.append(
-            sorted(
-                ((r["feature"] or "", r["id"]), r["rank"])
-                for r in average_ranks_long(melted, num_partitions=8).collect()
-            )
+            sorted(((r["feature"] or "", r["id"]), r["rank"]) for r in ranks.collect())
         )
         # the driver path ranks in this process; the distributed one never
         assert bool(calls) != forced
@@ -37,7 +34,7 @@ def _both_rank_paths(melted, monkeypatch, driver_calls):
 
 
 def test_average_ranks_driver_path_matches_distributed(
-    spark, monkeypatch, driver_calls
+    spark, force_path, driver_calls
 ):
     """The small-input driver ranking must equal the range-partitioned
     two-pass kernel row-for-row, ties and all. The input is built from
@@ -53,11 +50,11 @@ def test_average_ranks_driver_path_matches_distributed(
             }
         )
     )
-    fast, slow = _both_rank_paths(melted, monkeypatch, driver_calls)
+    fast, slow = _both_rank_paths(melted, force_path, driver_calls)
     assert fast == slow
 
 
-def test_average_ranks_null_keys_both_paths(spark, monkeypatch, driver_calls):
+def test_average_ranks_null_keys_both_paths(spark, force_path, driver_calls):
     """NULL keys rank as one key, ordered first as Spark orders them, and
     both paths return the same ranks — also when the NULL-key rows span
     several range partitions."""
@@ -73,7 +70,7 @@ def test_average_ranks_null_keys_both_paths(spark, monkeypatch, driver_calls):
         ),
         "feature string, value double, id string",
     )
-    fast, slow = _both_rank_paths(melted, monkeypatch, driver_calls)
+    fast, slow = _both_rank_paths(melted, force_path, driver_calls)
     assert fast == slow
     got = dict(fast)
     vals = pd.Series(melted.toPandas()["value"].to_numpy())
@@ -82,7 +79,7 @@ def test_average_ranks_null_keys_both_paths(spark, monkeypatch, driver_calls):
     assert [got[("", i)] for i in null_rows] == exp.tolist()
 
 
-def test_ks_driver_path_matches_distributed(spark, monkeypatch, driver_calls):
+def test_ks_driver_path_matches_distributed(spark, force_path, driver_calls):
     """ks_statistics' small-input path must equal the two-pass kernel; the
     pandas-built inputs report exact size stats, so it takes the driver
     path un-forced."""
@@ -94,11 +91,11 @@ def test_ks_driver_path_matches_distributed(spark, monkeypatch, driver_calls):
     calls = driver_calls(driftmod, "_ks_block")
     fast = sorted(
         (r["feature"], r["ks"])
-        for r in ks_statistics(d0, d1, ["a", "b"], num_partitions=8).collect()
+        for r in ks_statistics(d0, d1, ["a", "b"]).collect()
     )
     assert calls, "the driver path did not run"
     calls.clear()
-    monkeypatch.setattr(aggmod, "plan_size_bytes", lambda _df: 1 << 62)
+    force_path("distributed")
     slow = sorted(
         (r["feature"], r["ks"])
         for r in ks_statistics(d0, d1, ["a", "b"], num_partitions=8).collect()

@@ -17,7 +17,8 @@ from fastselect_spark.selection import (
     ReliefFSelector,
     TuRFSelector,
 )
-from fastselect_spark.selection._stage import SMALL_BYTES, make_stage
+from fastselect_spark.runtime import gates
+from fastselect_spark.selection._stage import make_stage
 
 
 def _df(spark, n=60, p=6, seed=0):
@@ -69,9 +70,9 @@ def test_small_vs_staged_identical_scores(spark):
 def test_size_gate_thresholds(spark):
     df, cols = _df(spark, n=50, p=4)
     st = make_stage(df, cols, "label")
-    assert st.mode == "small"  # 50*6*8 bytes << SMALL_BYTES
+    assert st.mode == "small"  # 50*6*8 bytes << the stage budget
     st.cleanup()
-    assert 50 * (4 + 2) * 8 <= SMALL_BYTES
+    assert 50 * (4 + 2) * 8 <= gates.BUDGETS["stage"]
 
 
 def test_stage_dirs_removed_eagerly(spark):

@@ -8,12 +8,13 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from fastselect_spark.runtime.session import get_spark  # noqa: E402
@@ -39,7 +40,12 @@ def main() -> int:
 
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=16)
-    con = duckdb.connect()
+    # bounded: DuckDB's defaults (80% of RAM, one thread per core, spill
+    # without limit) starve the Spark JVM that shares the host and can
+    # fill the disk, and the run is killed mid-way
+    con = duckdb.connect(
+        config={"memory_limit": "3GB", "threads": 4, "max_temp_directory_size": "4GB"}
+    )
     for t in entrymod.TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -50,11 +56,16 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        spark_pdf = fn(spark, sf_dir).toPandas()
-        if name not in oracles:
-            print(f"{name:24s} rows-only: {len(spark_pdf)} rows")
+        try:
+            spark_pdf = fn(spark, sf_dir).toPandas()
+            if name not in oracles:
+                print(f"{name:24s} rows-only: {len(spark_pdf)} rows")
+                continue
+            duck_pdf = con.sql(oracles[name]).df()
+        except Exception as e:  # one failing query must not end the run
+            failures += 1
+            print(f"{name:24s} ERROR: {type(e).__name__}: {str(e)[:200]}")
             continue
-        duck_pdf = con.sql(oracles[name]).df()
         a, b = normalize(spark_pdf), normalize(duck_pdf)
         status = []
         if len(a) != len(b):

@@ -629,17 +629,9 @@ def main() -> int:
         "CAST(id AS STRING) AS feature",
         "((id * 37) % 101) / 101.0 AS p_value",
     )
-    # force the DISTRIBUTED kernel (small inputs take the driver fast path
-    # since round 6 — the audit verifies the scale plan shape)
-    import fastselect_spark.selection._agg as _aggmod
-
-    _psb = _aggmod.small_frame
-    _aggmod.small_frame = lambda *_a, **_k: False
-    try:
-        fd = fdr_bh(pv31, num_partitions=4)
-        p = plan_of(fd)
-    finally:
-        _aggmod.small_frame = _psb
+    # an explicit num_partitions selects the distributed (scale) plan
+    fd = fdr_bh(pv31, num_partitions=4)
+    p = plan_of(fd)
     failures += not check(
         "fdr_bh: no global-window funnel, broadcast carry join",
         "Window" not in p and "BroadcastHashJoin" in p,
