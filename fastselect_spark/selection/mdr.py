@@ -8,11 +8,13 @@ executor-side, never collected to the driver — see ``_stage.py``) for ALL
 folds in one vectorized pass (fold-offset bincount of 3^k cell ids — better
 than the reference's per-fold re-scan, SURVEY.md §4.1), returning only cv
 kernel-BA floats per combo. After the per-fold argmax (first-index
-tie-break like np.argmax), a second tiny task fetches the (cv, 3^k) count
-tensors for just the <=cv fold-best combos; the per-fold LUT construction,
-test evaluation, CV-consistency vote, and final full-data LUT are all
-computed from those tensors — the driver never holds a row of X, and its
-ingress is cv floats per combo plus a handful of 3^k tensors.
+tie-break like np.argmax), one ``MatrixStage.run`` computes the (cv, 3^k)
+count tensors for just the <=cv fold-best combos — on the driver's copy of
+a small stage, in one executor task for a staged one; the per-fold LUT
+construction, test evaluation, CV-consistency vote, and final full-data LUT
+are all computed from those tensors. On the staged path the driver never
+holds a row of X, and its ingress is cv floats per combo plus a handful of
+3^k tensors.
 
 Reference semantics reproduced:
 - genotypes must be 0/1/2 (ValueError otherwise); y must be binary 0/1;
@@ -45,13 +47,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-
-from fastselect_spark.selection._stage import (
-    LABEL,
-    PACKED,
-    WIDE_P,
-    make_stage,
-)
+from fastselect_spark.selection._stage import make_stage
 from fastselect_spark.selection._validate import validate_transform_input
 
 
@@ -147,43 +143,30 @@ class MDRClassifier:
         spark = stage.spark
         load = stage.loader()
 
-        # input validation (reference raises on bad codes, MDR.py:220-235).
-        # One vectorized pass per partition — a p-term OR predicate would
-        # plan a 3000-node boolean expression whose codegen alone costs
-        # ~10s at p=1000. Small mode: the matrix is already on the driver.
-        if stage.mode == "small":
-            _, Xv, yv, _ = stage.bc.value
-            if not np.isin(Xv, (0.0, 1.0, 2.0)).all():
-                raise ValueError("MDR requires genotype features coded 0/1/2.")
-            if not np.isin(yv, (0.0, 1.0)).all():
-                raise ValueError("MDR requires binary labels coded 0/1.")
-        else:
-            def validate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                bad_x = bad_y = False
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    if PACKED in pdf.columns:
-                        Xb = np.frombuffer(
-                            b"".join(pdf[PACKED].tolist()), dtype=np.float64
-                        ).reshape(len(pdf), p)
-                    else:
-                        Xb = pdf[feature_cols].to_numpy(dtype=np.float64)
-                    yb = pdf[LABEL].to_numpy(dtype=np.float64)
-                    if not np.isin(Xb, (0.0, 1.0, 2.0)).all():
-                        bad_x = True
-                    if not np.isin(yb, (0.0, 1.0)).all():
-                        bad_y = True
-                yield pd.DataFrame({"bad_x": [bad_x], "bad_y": [bad_y]})
+        # input validation (reference raises on bad codes, MDR.py:220-235):
+        # one whole-matrix pass returns flags and the driver raises, so both
+        # stage modes raise the same ValueError (a p-term OR predicate would
+        # plan a 3000-node boolean expression whose codegen alone costs ~10s
+        # at p=1000). The sklearn-parity fold path takes the label vector
+        # from the same pass.
+        def check(X, y, extras):
+            bad_fold = fold_col is not None and not np.isin(
+                extras[fold_col], np.arange(cv)
+            ).all()
+            return (
+                not np.isin(X, (0.0, 1.0, 2.0)).all(),
+                not np.isin(y, (0.0, 1.0)).all(),
+                bad_fold,
+                y if fold_col is None else None,
+            )
 
-            val_cols = [PACKED] if p > WIDE_P else list(feature_cols)
-            flags = stage.staged_df.select(*val_cols, LABEL).mapInPandas(
-                validate, schema="bad_x boolean, bad_y boolean"
-            ).collect()
-            if any(r["bad_x"] for r in flags):
-                raise ValueError("MDR requires genotype features coded 0/1/2.")
-            if any(r["bad_y"] for r in flags):
-                raise ValueError("MDR requires binary labels coded 0/1.")
+        bad_x, bad_y, bad_fold, labels = stage.run(check)
+        if bad_x:
+            raise ValueError("MDR requires genotype features coded 0/1/2.")
+        if bad_y:
+            raise ValueError("MDR requires binary labels coded 0/1.")
+        if bad_fold:
+            raise ValueError(f"fold_col values must be in [0, {cv})")
 
         combos = list(combinations(range(p), k))
         n_combos = len(combos)
@@ -192,7 +175,7 @@ class MDRClassifier:
         folds_bc = None
         if fold_col is None:
             # sklearn-parity path: label column (only) to the driver
-            test_folds = stratified_kfold_assign(stage.labels(), cv, seed=42)
+            test_folds = stratified_kfold_assign(labels, cv, seed=42)
             folds_bc = spark.sparkContext.broadcast(test_folds.astype(np.int8))
 
         # distribute combo chunks
@@ -200,12 +183,8 @@ class MDRClassifier:
         combo_df = spark.range(0, n_combos, 1, parts)  # born partitioned, no Exchange
 
         def _load_folds(extras) -> np.ndarray:
-            if fold_col is not None:
-                folds = extras[fold_col].astype(np.int64)
-                if folds.min() < 0 or folds.max() >= cv:
-                    raise ValueError(f"fold_col values must be in [0, {cv})")
-                return folds
-            return folds_bc.value.astype(np.int64)
+            folds = extras[fold_col] if fold_col is not None else folds_bc.value
+            return folds.astype(np.int64)
 
         def _combo_tensors(Xi, yi, folds, cid) -> tuple[np.ndarray, np.ndarray]:
             cells = _cells_for_combo(Xi, tuple(int(v) for v in combos_arr[cid]))
@@ -268,7 +247,7 @@ class MDRClassifier:
             return np.where(ok, ba, 0.0)  # (B, cv)
 
         def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            _, X, y, extras = load()
+            X, y, extras = load()
             Xi = X.astype(np.int64)
             yi = y.astype(np.int64)
             folds = _load_folds(extras)
@@ -297,40 +276,18 @@ class MDRClassifier:
             arr[sub["combo_id"].to_numpy()] = sub["ba"].to_numpy()
             fold_best_cids.append(int(np.argmax(arr)))
 
-        # phase 2: count tensors for just the <=cv fold-best combos (one
-        # tiny executor task; the driver never holds a row of X)
+        # phase 2: count tensors for just the <=cv fold-best combos, from
+        # one whole-matrix pass (on the driver's copy for a small stage, one
+        # executor task for a staged one)
         need = sorted(set(fold_best_cids))
 
-        def tensor_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for _ in batches:
-                pass
-            _, X, y, extras = load()
+        def fold_tensors(X, y, extras):
             Xi = X.astype(np.int64)
             yi = y.astype(np.int64)
             folds = _load_folds(extras)
-            rows = []
-            for cid in need:
-                case_fc, ctrl_fc = _combo_tensors(Xi, yi, folds, cid)
-                rows.append(
-                    {
-                        "combo_id": int(cid),
-                        "case": case_fc.astype(np.int64).tobytes(),
-                        "ctrl": ctrl_fc.astype(np.int64).tobytes(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["combo_id", "case", "ctrl"])
+            return {cid: _combo_tensors(Xi, yi, folds, cid) for cid in need}
 
-        tensors: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for r in (
-            spark.range(1)
-            .coalesce(1)
-            .mapInPandas(tensor_task, schema="combo_id long, case binary, ctrl binary")
-            .collect()
-        ):
-            tensors[int(r["combo_id"])] = (
-                np.frombuffer(r["case"], dtype=np.int64).reshape(cv, n_cells),
-                np.frombuffer(r["ctrl"], dtype=np.int64).reshape(cv, n_cells),
-            )
+        tensors = stage.run(fold_tensors)
 
         fold_best_models: list[tuple[int, ...]] = []
         fold_test_bas: list[float] = []

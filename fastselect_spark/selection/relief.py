@@ -7,9 +7,9 @@ numeric projection is materialized behind a size-gated
 :class:`~fastselect_spark.selection._stage.MatrixStage` (collect+broadcast
 for kilobyte matrices, distributed parquet stage above — the driver never
 materializes a row on the scale path); the PER-SAMPLE outer loop is then
-distributed via ``mapInPandas`` over a one-column probe stream, with each
-task reading the full reference matrix executor-side (cached per worker
-process) and emitting one per-feature partial score vector, merged by
+distributed via ``mapInPandas`` over a ``spark.range`` of row indices,
+with each task reading the full reference matrix executor-side (cached per
+worker process) and emitting one per-feature partial score vector, merged by
 summation (the distributed equivalent of the reference's thread-private
 ``temp[n, p]`` accumulator, ReliefF.py:141,219-220). Probe rows are
 processed in row chunks sized so the distance block stays ~8 MB; the
@@ -40,10 +40,12 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from fastselect_spark.selection._stage import MID, MatrixStage, make_stage
-from fastselect_spark.selection._validate import validate_transform_input
+from fastselect_spark.selection._stage import MatrixStage, make_stage
+from fastselect_spark.selection._validate import (
+    check_labels,
+    validate_transform_input,
+)
 
 
 def _dist_block(
@@ -76,34 +78,34 @@ _TARGET_BLOCK_BYTES = 8 << 20
 
 
 def _distribute_row_blocks(
-    stage: MatrixStage, subset: list[str] | None, prep_fn, kernel
+    stage: MatrixStage, n: int, subset: list[str] | None, prep_fn, kernel
 ) -> np.ndarray:
-    """Distribute the per-sample outer loop over the stage's probe stream.
-    Each task: loads the reference matrix executor-side (cached per worker,
-    column-sliced to ``subset`` if given), runs ``prep_fn(X, y) -> ctx``
-    once, maps its probe mids to global row indices, and streams
-    ``kernel(idx_chunk, ctx)`` partials — chunked so the (chunk, n) distance
-    block stays ~8 MB. The driver only ever receives per-task p-sized
-    vectors."""
+    """Distribute the per-sample outer loop over a stream of the ``n`` row
+    indices. Each task: loads the reference matrix executor-side (cached per
+    worker, column-sliced to ``subset`` if given), runs
+    ``prep_fn(X, y) -> ctx`` once, and streams ``kernel(idx_chunk, ctx)``
+    partials over its probe row indices — chunked so the (chunk, n)
+    distance block stays ~8 MB. The driver only ever receives per-task
+    p-sized vectors."""
     load = stage.loader(subset)
+    chunk = max(1, _TARGET_BLOCK_BYTES // (8 * max(n, 1)))
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mid, X, y, _ = load()
-        n = len(mid)
+        X, y, _ = load()
         ctx = prep_fn(X, y)
-        chunk = max(1, _TARGET_BLOCK_BYTES // (8 * max(n, 1)))
         total = None
         for pdf in batches:
-            if pdf.empty:
-                continue
-            probe = np.searchsorted(mid, pdf[MID].to_numpy(dtype=np.int64))
+            probe = pdf["id"].to_numpy(dtype=np.int64)
             for s in range(0, len(probe), chunk):
                 part = kernel(probe[s : s + chunk], ctx)
                 total = part if total is None else total + part
         if total is not None:
             yield pd.DataFrame({"data": [total.tobytes()]})
 
-    rows = stage.probe_df().mapInPandas(mapper, schema="data binary").collect()
+    # range is born partitioned — no Exchange needed
+    parts = max(stage.spark.sparkContext.defaultParallelism, 4)
+    probes = stage.spark.range(0, n, 1, parts)
+    rows = probes.mapInPandas(mapper, schema="data binary").collect()
     out = None
     for r in rows:
         arr = np.frombuffer(r["data"], dtype=np.float64)
@@ -171,8 +173,8 @@ class _ReliefBase:
         _stage: MatrixStage | None,
     ):
         """Shared fit preamble: stage materialization + class stats (free on
-        the small path — from the collected label vector).
-        Returns (stage, owns, classes, counts, n)."""
+        the small path — from the collected label vector); a NULL or NaN
+        label raises. Returns (stage, owns, classes, counts, n)."""
         owns = _stage is None
         force = None if self.stage_mode == "auto" else self.stage_mode
         stage = (
@@ -182,6 +184,7 @@ class _ReliefBase:
         )
         self.effective_stage_mode_ = stage.mode
         classes, counts = stage.class_stats()
+        check_labels(classes, label_col)
         return stage, owns, classes, counts, int(counts.sum())
 
 
@@ -275,7 +278,7 @@ class ReliefFSelector(_ReliefBase):
                     acc += update
                 return acc
 
-            scores = _distribute_row_blocks(stage, feature_cols, prep, kernel) / n
+            scores = _distribute_row_blocks(stage, n, feature_cols, prep, kernel) / n
             self._finalize(scores, n_select)
             return self
         finally:
@@ -344,7 +347,7 @@ class SURFSelector(_ReliefBase):
                     acc += upd
                 return acc
 
-            scores = _distribute_row_blocks(stage, feature_cols, prep, kernel) / n
+            scores = _distribute_row_blocks(stage, n, feature_cols, prep, kernel) / n
             self._finalize(scores, n_select)
             return self
         finally:
@@ -431,7 +434,7 @@ class MultiSURFSelector(_ReliefBase):
                     acc += miss_diffs - hit_diffs
                 return acc
 
-            scores = _distribute_row_blocks(stage, feature_cols, prep, kernel) / n
+            scores = _distribute_row_blocks(stage, n, feature_cols, prep, kernel) / n
             self._finalize(scores, n_select)
             return self
         finally:

@@ -194,31 +194,29 @@ def test_mrmr_matrix_matches_oracle_greedy(spark, coded):
 
 # ---------- staged-matrix layout roundtrip ----------
 
-def test_stage_roundtrip_narrow_and_packed(spark):
-    """stage_matrix writes scalar columns below WIDE_P and a packed binary
-    block above it; load_staged must reconstruct the identical (X, y) in
-    mid order either way."""
+def test_stage_roundtrip_packed(spark):
+    """stage_matrix packs the features into one binary block at any width;
+    load_staged must reconstruct the identical (X, y) in mid order, narrow
+    (p=4) or wide (p=69)."""
     import pandas as pd
 
-    from fastselect_spark.selection._stage import (
-        WIDE_P,
-        load_staged,
-        stage_matrix,
-    )
+    from fastselect_spark.selection._stage import load_staged, stage_matrix
 
     rng = np.random.default_rng(3)
-    for p in (4, WIDE_P + 5):
+    for p in (4, 69):
         n = 50
         X = rng.standard_normal((n, p))
         y = rng.integers(0, 3, n)
         cols = [f"f{i}" for i in range(p)]
         pdf = pd.DataFrame(X, columns=cols)
         pdf["label"] = y
-        df = spark.createDataFrame(pdf).repartition(4)
+        df = spark.createDataFrame(pdf).repartition(4).persist()
         path = stage_matrix(df, cols, "label")
-        mid, Xs, ys, extras = load_staged(path, cols)
+        Xs, ys, extras = load_staged(path, cols)
         assert Xs.shape == (n, p)
-        assert (np.diff(mid) > 0).all()  # sorted, unique
+        # mid order is the frame's partition order, as an Arrow collect sees it
+        np.testing.assert_array_equal(Xs, df.toPandas()[cols].to_numpy())
+        df.unpersist()
         # same multiset of rows (order differs: partition order vs input)
         got = np.concatenate([Xs, ys[:, None]], axis=1)
         exp = np.concatenate([X, y[:, None].astype(float)], axis=1)
@@ -237,7 +235,7 @@ def test_stage_extra_cols_preserved(spark):
     )
     df = spark.createDataFrame(pdf)
     path = stage_matrix(df, ["f0"], "label", extra_cols=("fold",))
-    mid, X, y, extras = load_staged(path, ["f0"])
+    X, y, extras = load_staged(path, ["f0"])
     by_val = dict(zip(X[:, 0], extras["fold"]))
     assert by_val == {1.0: 2, 2.0: 0, 3.0: 1}
 

@@ -1,5 +1,6 @@
 """Size-gated MatrixStage behavior: small (broadcast) vs staged (parquet)
-mode equivalence, eager stage cleanup, and TuRF's stage-once contract."""
+mode equivalence, the same input errors in both modes, jobs per fit, eager
+stage cleanup, and TuRF's stage-once contract."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ from fastselect_spark.selection import (
     MDRClassifier,
     MultiSURFSelector,
     ReliefFSelector,
+    SURFSelector,
     TuRFSelector,
 )
 from fastselect_spark.runtime import gates
@@ -31,40 +33,40 @@ def _df(spark, n=60, p=6, seed=0):
     return spark.createDataFrame(pdf).coalesce(2), cols
 
 
-def test_small_vs_staged_identical_scores(spark):
-    """The size gate is a physical choice only: both modes present the same
-    deterministic row order, so Relief scores agree to float64 epsilon (the
-    probe partitioning differs, so cross-task partial-sum ORDER may)."""
+@pytest.fixture(scope="module")
+def both_stages(spark):
+    """One frame staged both ways, shared by the per-variant comparisons."""
     df, cols = _df(spark)
     df = df.persist()
     df.count()
-    try:
-        small = make_stage(df, cols, "label", force="small")
-        staged = make_stage(df, cols, "label", force="staged")
-        try:
-            s1 = ReliefFSelector(n_features_to_select=2).fit(
-                df, cols, "label", _stage=small
-            )
-            s2 = ReliefFSelector(n_features_to_select=2).fit(
-                df, cols, "label", _stage=staged
-            )
-            np.testing.assert_allclose(
-                s1.feature_importances_, s2.feature_importances_, rtol=1e-12
-            )
-            m1 = MultiSURFSelector(n_features_to_select=2).fit(
-                df, cols, "label", _stage=small
-            )
-            m2 = MultiSURFSelector(n_features_to_select=2).fit(
-                df, cols, "label", _stage=staged
-            )
-            np.testing.assert_allclose(
-                m1.feature_importances_, m2.feature_importances_, rtol=1e-12
-            )
-        finally:
-            small.cleanup()
-            staged.cleanup()
-    finally:
-        df.unpersist()
+    small = make_stage(df, cols, "label", force="small")
+    staged = make_stage(df, cols, "label", force="staged")
+    yield df, cols, small, staged
+    small.cleanup()
+    staged.cleanup()
+    df.unpersist()
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        lambda: ReliefFSelector(n_features_to_select=2),
+        lambda: SURFSelector(n_features_to_select=2),
+        lambda: SURFSelector(n_features_to_select=2, use_star=True),
+        lambda: MultiSURFSelector(n_features_to_select=2),
+        lambda: MultiSURFSelector(n_features_to_select=2, use_star=True),
+    ],
+    ids=["ReliefF", "SURF", "SURFstar", "MultiSURF", "MultiSURFstar"],
+)
+def test_small_vs_staged_identical_scores(both_stages, make):
+    """The size gate is a physical choice only: both modes present the same
+    row order and the same probe partitioning, so every Relief variant's
+    scores are bit-identical."""
+    df, cols, small, staged = both_stages
+    s1 = make().fit(df, cols, "label", _stage=small)
+    s2 = make().fit(df, cols, "label", _stage=staged)
+    np.testing.assert_array_equal(s1.feature_importances_, s2.feature_importances_)
+    np.testing.assert_array_equal(s1.is_discrete_, s2.is_discrete_)
 
 
 def test_size_gate_thresholds(spark):
@@ -165,9 +167,9 @@ def test_mdr_small_and_staged_agree(spark):
 
 
 def test_wide_packed_stage_subset_slicing(spark):
-    """Above WIDE_P the staged layout packs features into one binary
-    column; column-subset loaders must slice the unpacked matrix correctly
-    (TuRF over a wide matrix exercises exactly this)."""
+    """The staged layout packs features into one binary column;
+    column-subset loaders must slice the unpacked matrix correctly (TuRF
+    over a wide matrix exercises exactly this)."""
     df, cols = _df(spark, n=40, p=70, seed=13)
     subset = cols[::3]
     st = make_stage(df, cols, "label", force="staged")
@@ -200,6 +202,87 @@ def test_stage_mode_contract(spark):
         df, cols, "label"
     )
     assert forced.effective_stage_mode_ == "staged"
-    np.testing.assert_allclose(
-        sel.feature_importances_, forced.feature_importances_, rtol=1e-12
+    np.testing.assert_array_equal(sel.feature_importances_, forced.feature_importances_)
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+@pytest.mark.parametrize(
+    "bad, match",
+    [
+        (("g0", 3), "genotype features coded 0/1/2"),
+        (("label", 2), "binary labels coded 0/1"),
+        (("fold", 7), r"fold_col values must be in \[0, 3\)"),
+    ],
+    ids=["genotype3", "label2", "fold7"],
+)
+def test_mdr_input_errors_raise_on_driver(spark, force_path, path, bad, match):
+    """MDR's input contract is checked in one whole-matrix pass and raised
+    on the driver, so both stage modes raise the same ValueError."""
+    pdf = pd.DataFrame({f"g{i}": np.arange(12) % 3 for i in range(3)})
+    pdf["label"] = np.arange(12) % 2
+    pdf["fold"] = np.arange(12) % 3
+    col, value = bad
+    pdf.loc[5, col] = value
+    decisions = force_path(path)
+    with pytest.raises(ValueError, match=match):
+        MDRClassifier(k=2, cv=3).fit(
+            spark.createDataFrame(pdf), ["g0", "g1", "g2"], "label", fold_col="fold"
+        )
+    assert decisions == [path == "driver"]
+
+
+@pytest.mark.parametrize("stage_mode", ["small", "staged"])
+@pytest.mark.parametrize(
+    "col, match",
+    [
+        ("f0", r"feature columns \['f0'\] have NULL or NaN"),
+        ("label", "label column 'label' has NULL or NaN"),
+    ],
+    ids=["feature", "label"],
+)
+def test_relief_rejects_null_inputs(spark, stage_mode, col, match):
+    """A NULL feature or label raises the same ValueError in both modes
+    instead of scoring differently per mode."""
+    rng = np.random.RandomState(1)
+    rows = [[float(v) for v in rng.randint(0, 5, 4)] + [i % 2.0] for i in range(60)]
+    rows[7][0 if col == "f0" else 4] = None
+    df = spark.createDataFrame(
+        rows, "f0 double, f1 double, f2 double, f3 double, label double"
     )
+    with pytest.raises(ValueError, match=match):
+        ReliefFSelector(n_features_to_select=2, stage_mode=stage_mode).fit(
+            df, ["f0", "f1", "f2", "f3"], "label"
+        )
+
+
+def _fit_mdr(df, cols):
+    return MDRClassifier(k=2, cv=3).fit(df, cols, "label", fold_col="fold")
+
+
+@pytest.mark.parametrize(
+    "fit, jobs",
+    [
+        (_fit_mdr, 2),
+        (lambda df, cols: ReliefFSelector(2, stage_mode="small").fit(df, cols), 2),
+        (lambda df, cols: ReliefFSelector(2, stage_mode="staged").fit(df, cols), 4),
+    ],
+    ids=["mdr_small", "relieff_small", "relieff_staged"],
+)
+def test_jobs_per_fit(spark, fit, jobs):
+    """Stage, whole-matrix reads and the one distributed kernel: a small
+    fit runs its reads on the driver; a staged one runs each in one task."""
+    pdf = pd.DataFrame({f"g{i}": np.arange(30) * (i + 1) % 3 for i in range(4)})
+    pdf["label"] = np.arange(30) % 2
+    pdf["fold"] = np.arange(30) % 3
+    df = spark.createDataFrame(pdf).persist()
+    df.count()
+    sc = spark.sparkContext
+    group = f"jobs-per-fit-{id(fit)}"
+    sc.setJobGroup(group, group)
+    try:
+        fit(df, ["g0", "g1", "g2", "g3"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        df.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
