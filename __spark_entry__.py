@@ -5520,7 +5520,9 @@ w2 AS (
 mk3 AS (SELECT m.mask - (1 << (SELECT fid FROM w2)) AS mask FROM mk2 m)
 SELECT CAST(f.fid AS INT) AS feature_idx, f.feature
 FROM feats f, mk3 m WHERE (m.mask >> f.fid) % 2 = 1
-"""
+""".replace(
+    " AS (", " AS MATERIALIZED ("
+)  # each elimination round reuses dp/dist/sc*: inlined, they recompute
 
 
 # CFS (reference CFS.py:246-429) on all-integer code columns: unique-coded

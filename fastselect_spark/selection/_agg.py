@@ -35,8 +35,12 @@ sorts, through the same kernel as the only partition.
 
 The pair-parallel axis (n bounded, p large) has no accumulator: every
 pairwise scorer — the full MI matrix, the step-wise MI engine and CFS
-redundancy — runs :func:`pair_job`, one vectorized ``mapInPandas`` kernel
-over a range of pair ids, with :func:`triu_pair` mapping ids to pairs.
+redundancy — runs :func:`pair_job` over a range of pair ids, with
+:func:`triu_pair` mapping ids to pairs. Within the ``pairs`` gate (pairs ×
+n pair-cells) its driver twin calls the caller's kernel once over the
+whole range in-process; beyond it the kernel is one vectorized
+``mapInPandas`` job (:func:`pair_frame`) over a :class:`LazyBroadcast` of
+its arrays.
 """
 
 from __future__ import annotations
@@ -49,6 +53,8 @@ import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fastselect_spark.runtime import gates
 
 _PARTIAL_SCHEMA = "merge_key int, name string, dtype string, shape string, data binary"
 # tree shape: partials combine in FANIN groups, and jobs of at most
@@ -401,16 +407,56 @@ def pair_frame(
     )
 
 
+class LazyBroadcast:
+    """A driver-held value that :func:`pair_job` broadcasts only on its
+    first executor run, then reuses; a driver-path run reads ``value``
+    in place. :meth:`destroy` (or leaving the ``with`` block) releases
+    only a broadcast that was created."""
+
+    def __init__(self, spark: SparkSession, value) -> None:
+        self._sc = spark.sparkContext
+        self.value = value
+        self._bc = None
+
+    def on_executors(self):
+        if self._bc is None:
+            self._bc = self._sc.broadcast(self.value)
+        return self._bc
+
+    def destroy(self) -> None:
+        if self._bc is not None:
+            self._bc.destroy()
+            self._bc = None
+
+    def __enter__(self) -> "LazyBroadcast":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.destroy()
+
+
 def pair_job(
     spark: SparkSession,
     n_pairs: int,
-    score: Callable[[np.ndarray], np.ndarray],
+    score: Callable[[np.ndarray, object], np.ndarray],
+    data: LazyBroadcast,
+    n_rows: int,
     tasks_per_core: int,
 ) -> np.ndarray:
-    """Run :func:`pair_frame` and collect it into a dense vector by id."""
+    """Pair ids ``0..n_pairs-1`` scored by ``score(ids, data.value) ->
+    float64[]`` into a dense vector by id. Within the ``pairs`` gate
+    (``n_pairs × n_rows`` pair-cells) the driver twin runs ``score`` once
+    over the whole range in-process — no broadcast, no job; else
+    :func:`pair_frame` runs it on the executors over ``data``'s broadcast."""
     out = np.zeros(n_pairs, dtype=np.float64)
     if n_pairs == 0:
         return out
-    res = pair_frame(spark, n_pairs, score, tasks_per_core).toPandas()
+    if gates.use_driver(None, "pairs", rows=n_pairs * n_rows):
+        out[:] = score(np.arange(n_pairs, dtype=np.int64), data.value)
+        return out
+    bc = data.on_executors()
+    res = pair_frame(
+        spark, n_pairs, lambda ids: score(ids, bc.value), tasks_per_core
+    ).toPandas()
     out[res["id"].to_numpy(dtype=np.int64)] = res["score"].to_numpy(dtype=np.float64)
     return out

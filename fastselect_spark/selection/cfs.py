@@ -45,6 +45,7 @@ from pyspark.sql import types as T
 
 from fastselect_spark.runtime import gates
 from fastselect_spark.selection._agg import (
+    LazyBroadcast,
     pair_job,
     symmetric_from_triu,
     tree_reduce_ndarrays,
@@ -256,19 +257,20 @@ def _su_redundancy_broadcast(
     over the upper triangle — the p-large diet for the redundancy pass (the
     one-pass cube's flat ff accumulator is Σ k_i·k_j over all p(p−1)/2
     pairs: ~100 MB per partition at p=500, allocated AND tree-merged by
-    every worker). The coded matrix is broadcast once; each task decodes its
-    pair ids with :func:`triu_pair` and ships back only their SU floats.
+    every worker). Within the ``pairs`` gate the kernel runs in-process on
+    the coded matrix; beyond it the matrix is broadcast once, each task
+    decodes its pair ids with :func:`triu_pair` and ships back only their SU
+    floats, and the broadcast is released even when the job raises.
     Each pair's integer contingency table is identical to the cube path's
     (counts are partition-invariant), and the scalar
     :func:`symmetrical_uncertainty` is reused per pair, so the SU values are
     bit-identical — the selection result cannot differ between the two
     stages."""
     codes = np.ascontiguousarray(codes.T)  # (p, n): pair gather = 2 row copies
-    p = codes.shape[0]
-    bc = spark.sparkContext.broadcast((codes, n_states.astype(np.int64)))
+    p, n = codes.shape
 
-    def score(ids: np.ndarray) -> np.ndarray:
-        Xt, ns = bc.value
+    def score(ids: np.ndarray, data) -> np.ndarray:
+        Xt, ns = data
         out = np.empty(len(ids), dtype=np.float64)
         for t, (i, j) in enumerate(zip(*triu_pair(ids, p))):
             ki, kj = int(ns[i]), int(ns[j])
@@ -276,8 +278,8 @@ def _su_redundancy_broadcast(
             out[t] = symmetrical_uncertainty(table)
         return out
 
-    su = pair_job(spark, p * (p - 1) // 2, score, tasks_per_core=4)
-    bc.destroy()
+    with LazyBroadcast(spark, (codes, n_states.astype(np.int64))) as data:
+        su = pair_job(spark, p * (p - 1) // 2, score, data, n, tasks_per_core=4)
     return symmetric_from_triu(su, p)
 
 

@@ -21,14 +21,16 @@ axes, matching how the work actually scales:
   (``runtime.session.get_spark``), not per call.
 - **Pair-parallel** (the reference benchmark regime: n bounded, p large):
   the p×p MI redundancy matrix needs a contingency per feature PAIR —
-  p(p−1)/2 of them. :class:`BroadcastMIEngine` broadcasts the coded matrix
-  once and every request — the full matrix, a relevance vector, a
-  step-wise greedy column — is one run of the package's single pair job
-  (``_agg.pair_job``, also behind CFS redundancy): tasks own contiguous
-  pair-id ranges (SURVEY.md §3.2 "pair-chunked job"; the distributed
-  equivalent of the reference's ``prange`` over pairs,
-  mutual_information.py:56-63). Accumulator-free: each task emits only its
-  pairs' MI floats.
+  p(p−1)/2 of them. :class:`BroadcastMIEngine` holds the coded matrix and
+  every request — the full matrix, a relevance vector, a step-wise greedy
+  column — is one run of the package's single pair kernel
+  (``_agg.pair_job``, also behind CFS redundancy). Within the ``pairs``
+  gate (pairs × n pair-cells) it runs in-process over the whole pair
+  range, as the reference's ``prange`` over pairs does
+  (mutual_information.py:56-63), so a small greedy selection launches no
+  job. Above it the matrix is broadcast once and one job's tasks own
+  contiguous pair-id ranges (SURVEY.md §3.2 "pair-chunked job"),
+  accumulator-free: each task emits only its pairs' MI floats.
 
 Numeric semantics are identical to the narrow-column scorers (shared X∪y
 vocabulary per mRMR.py:90, eps placement per mutual_information.py:40-45,
@@ -43,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fastselect_spark.selection._agg import (
+    LazyBroadcast,
     list_matrix_view,
     pair_job,
     symmetric_from_triu,
@@ -322,7 +325,7 @@ def mi_matrices_broadcast(
     unit: str = "bit",
     compute_redundancy: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(relevance[p], redundancy[p, p]) as ONE pair job of
+    """(relevance[p], redundancy[p, p]) as ONE :func:`pair_job` of
     :class:`BroadcastMIEngine` — the reference-benchmark regime (n bounded,
     p large; p(p−1)/2 contingencies). Pair ids below p are the relevance
     pairs (f, label); the rest walk the upper triangle row-major through
@@ -359,17 +362,19 @@ def encode_shared(X: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray,
 
 
 class BroadcastMIEngine:
-    """Broadcast-once, score-on-demand MI engine: the transposed coded
-    matrix and the labels are broadcast ONCE, then every request is one
-    :func:`pair_job` over the block kernels (:func:`_pair_mi_block` /
-    :func:`_joint_mi_block`).
+    """Score-on-demand MI engine: every request is one :func:`pair_job`
+    over the block kernels (:func:`_pair_mi_block` /
+    :func:`_joint_mi_block`) on the transposed coded matrix and the labels.
+    A request within the ``pairs`` gate runs in-process on the driver's
+    arrays; the first one beyond it broadcasts them ONCE (a
+    :class:`LazyBroadcast`) for that and every later executor request.
 
     Greedy selectors (mRMR, JMI, CMIM) never need the full p×p pair
     statistics — each step only scores the remaining candidates against the
     feature just selected, so the whole selection touches O(p·K) pairs, not
     O(p²). At the reference's mRMR benchmark config (n=1000, p=5000, K=10)
     this replaces 12.5M pair contingencies with ~50k. The full matrix
-    (:func:`mi_matrices_broadcast`) is one job of the same engine, so lazy
+    (:func:`mi_matrices_broadcast`) is one pair job of the same engine, so lazy
     columns are bit-identical to full-matrix columns."""
 
     def __init__(
@@ -384,11 +389,11 @@ class BroadcastMIEngine:
         self.n, self.p = X_codes.shape
         self.k = int(max(X_codes.max(initial=0), y_codes.max(initial=0))) + 1
         check_states(self.k)
-        # wide-matrix regime contract: the coded matrix is broadcast once
-        # to every executor. Refuse clearly past the budget instead of
-        # letting the JVM OOM mid-broadcast — at that size the row-parallel
-        # path (mi_relevance_matrix) or the DataFrame cube selectors are
-        # the right tool, not a driver-resident matrix.
+        # wide-matrix regime contract: beyond the pairs gate the coded
+        # matrix is broadcast once to every executor. Refuse clearly past
+        # the budget instead of letting the JVM OOM mid-broadcast — at that
+        # size the row-parallel path (mi_relevance_matrix) or the DataFrame
+        # cube selectors are the right tool, not a driver-resident matrix.
         if X_codes.nbytes > MAX_BROADCAST_BYTES:
             raise ValueError(
                 f"coded matrix is {X_codes.nbytes / (1 << 30):.1f} GiB "
@@ -399,18 +404,16 @@ class BroadcastMIEngine:
             )
         self.spark = spark
         self.log_base = log_base(unit)
-        sc = spark.sparkContext
-        # broadcast TRANSPOSED (p, n): a pair gather is then two contiguous
+        # held TRANSPOSED (p, n): a pair gather is then two contiguous
         # row copies instead of a strided column walk (one cache miss per
         # element — measured ~10x slower at p=5000)
-        self._bc_X = sc.broadcast(np.ascontiguousarray(X_codes.T))
-        self._bc_y = sc.broadcast(y_codes)
+        self._data = LazyBroadcast(spark, (np.ascontiguousarray(X_codes.T), y_codes))
 
     def _run(
         self, n_pairs: int, pairs_of, joint: bool, tasks_per_core: int
     ) -> np.ndarray:
         """MI of pair ids ``0..n_pairs-1`` in one :func:`pair_job`;
-        ``pairs_of(ids)`` maps ids to (m, 2) pair rows on the executors."""
+        ``pairs_of(ids)`` maps ids to (m, 2) pair rows wherever it runs."""
         k, base = self.k, self.log_base
         fn = _joint_mi_block if joint else _pair_mi_block
         # pairs per inner block: keep every temp (~n*block int64) around 1MB
@@ -420,25 +423,24 @@ class BroadcastMIEngine:
         # single-process; the joint contingency is k× larger (k²·k cells)
         cells = k * k * (k if joint else 1)
         block = max(1, (1 << 14) // cells * max(1, 1000 // max(1, self.n)))
-        bc_X, bc_y = self._bc_X, self._bc_y
 
-        def score(ids: np.ndarray) -> np.ndarray:
-            Xm, ym = bc_X.value, bc_y.value
+        def score(ids: np.ndarray, data) -> np.ndarray:
+            Xm, ym = data
             out = np.empty(len(ids), dtype=np.float64)
             for s in range(0, len(ids), block):
                 out[s : s + block] = fn(Xm, ym, pairs_of(ids[s : s + block]), k, base)
             return out
 
-        return pair_job(self.spark, n_pairs, score, tasks_per_core)
+        return pair_job(self.spark, n_pairs, score, self._data, self.n, tasks_per_core)
 
     def _column(self, s: int, cand: np.ndarray, joint: bool) -> np.ndarray:
-        """One greedy-step job over (min, max)-oriented pairs; 1 task per
-        core."""
+        """One greedy-step :func:`pair_job` over (min, max)-oriented pairs;
+        1 task per core when it runs distributed."""
         pairs = self._canonical(s, cand)
         return self._run(len(pairs), lambda ids: pairs[ids], joint, tasks_per_core=1)
 
     def relevance(self) -> np.ndarray:
-        """I(X_f; Y) for every feature — one job, p pairs."""
+        """I(X_f; Y) for every feature — one :func:`pair_job`, p pairs."""
 
         def pairs_of(ids: np.ndarray) -> np.ndarray:
             return np.stack([ids, np.full(len(ids), -1, np.int64)], axis=1)
@@ -466,8 +468,7 @@ class BroadcastMIEngine:
         return self._column(s, cand, joint=True)
 
     def close(self) -> None:
-        self._bc_X.destroy()
-        self._bc_y.destroy()
+        self._data.destroy()
 
     def __enter__(self) -> "BroadcastMIEngine":
         return self
@@ -477,9 +478,11 @@ class BroadcastMIEngine:
 
 
 # above this many feature pairs the full p×p redundancy matrix costs more
-# kernel time than K step-wise columns plus K job round-trips (~0.1-0.3 s
-# each on warm workers) — measured crossover is well below 2M pairs at the
-# bench configs, but the full path keeps its exact-matrix return contract
+# kernel time than K step-wise columns: O(p²) contingencies against O(p·K).
+# Beyond the "pairs" gate each column is also a job round-trip (~0.1-0.3 s
+# on warm workers); within it no step launches one. The measured crossover
+# is well below 2M pairs at the bench configs, but the full path keeps its
+# exact-matrix return contract
 _STEPWISE_PAIR_THRESHOLD = 2_000_000
 
 
@@ -497,7 +500,7 @@ def mrmr_select_matrix(
     Returns (selected_idx, relevance, redundancy).
 
     ``strategy``: ``'full'`` materializes the p×p redundancy matrix in one
-    job; ``'stepwise'`` computes only the O(p·K) candidate-vs-selected
+    pair job; ``'stepwise'`` computes only the O(p·K) candidate-vs-selected
     columns (bit-identical selection — same kernel, and the greedy loop
     never reads any other entry); ``'auto'`` picks stepwise once p(p-1)/2
     exceeds 2M pairs. Stepwise returns a PARTIAL redundancy matrix: only

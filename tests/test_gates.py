@@ -50,12 +50,12 @@ def test_explicit_num_partitions_runs_distributed(spark, driver_calls, kernel, c
     assert not calls, "an explicit num_partitions took the driver path"
 
 
-def _gate_jobs(spark, group, df, **kwargs):
-    """``gates.use_driver(df, "ranks", **kwargs)`` and the Spark jobs it ran."""
+def _gate_jobs(spark, group, df, op="ranks", **kwargs):
+    """``gates.use_driver(df, op, **kwargs)`` and the Spark jobs it ran."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        decision = gates.use_driver(df, "ranks", **kwargs)
+        decision = gates.use_driver(df, op, **kwargs)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -71,3 +71,13 @@ def test_unknown_stats_pay_one_probe(spark):
     assert _gate_jobs(spark, "gate-pandas", pdf) == (True, 0)
     assert _gate_jobs(spark, "gate-rows", rows) == (True, 1)
     assert _gate_jobs(spark, "gate-partitions", rows, num_partitions=2) == (False, 0)
+
+
+def test_driver_held_input_sized_at_8_bytes_per_row(spark):
+    """``df=None`` (arrays the driver already holds): ``rows`` x 8 B
+    against the budget, with no job; without ``rows`` it raises."""
+    k = gates.BUDGETS["pairs"] // 8
+    assert _gate_jobs(spark, "gate-none-in", None, "pairs", rows=k) == (True, 0)
+    assert _gate_jobs(spark, "gate-none-out", None, "pairs", rows=k + 1) == (False, 0)
+    with pytest.raises(ValueError, match="needs rows"):
+        gates.use_driver(None, "pairs")
