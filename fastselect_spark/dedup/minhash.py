@@ -1,10 +1,13 @@
 """MinHash + LSH near-duplicate detection.
 
 Pipeline: token shingles -> per-permutation min of a seeded hash (the
-minhash signature) -> band hashes -> bucket self-join on
-(band, band_hash) -> exact shingle-Jaccard verification of candidates.
-Banding, the bucket join and verification are JVM expressions; the
-default signature is a vectorized Arrow kernel (see below).
+minhash signature), computed ONCE into one persisted narrow table
+(id, shingles, minhash) -> band hashes of that table -> bucket self-join
+on (band, band_hash) -> exact string-shingle Jaccard of the candidates,
+both sides' shingles joined from the same table -> one localCheckpoint
+of the result. Banding, the bucket join and verification are JVM
+expressions; the default signature is a vectorized Arrow kernel (see
+below), run over slot-sized partitions (:func:`ensure_parallelism`).
 
 Two hash families, identical banding/join/verification pipeline:
 
@@ -27,9 +30,12 @@ Two hash families, identical banding/join/verification pipeline:
 
 Scale notes: the only shuffles are the bucket join (keys are band hashes —
 uniformly distributed, skew-free by construction unless a shingle-set is
-pathologically common, which the exact-dup pass upstream removes) and the
-final distinct on pairs. Candidate count is bounded by bucket sizes, never
-O(n²).
+pathologically common, which the exact-dup pass upstream removes), the
+distinct on pairs and the two shingle fetches by id. Candidate count is
+bounded by bucket sizes, never O(n²). The persisted table holds each
+doc's shingle strings once; the band explode and the bucket join carry
+no array. If shingle storage matters at scale, persist (id, text,
+minhash) instead and shingle on each fetch side.
 """
 
 from __future__ import annotations
@@ -37,18 +43,33 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fastselect_spark.runtime import gates
+
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Signature computation is embarrassingly parallel but PARTITION-bound:
-    a single-file scan gives ONE task, serializing the whole corpus through
-    one core (measured 230 s for a 5k-doc signature that takes ~8 s spread
-    across the cluster). Repartition when the input has far fewer
-    partitions than cores; at real scale inputs arrive in many files and
-    this is a no-op."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
+    """Size a frame's partitions to the slots before a row-local kernel.
+
+    Below half the slots (a single-file scan gives ONE task, measured 230 s
+    for a 5k-doc signature that takes ~8 s spread across the cluster) it
+    repartitions up to ``defaultParallelism``. Above the slots it
+    ``coalesce``s down, without a shuffle, to the larger of
+    ``defaultParallelism`` and Catalyst's size estimate over
+    ``spark.sql.files.maxPartitionBytes``, the sizing Spark's file scans
+    use. Every Python task pays a fixed launch cost (an identity Arrow pass
+    over 400 cached rows: ~2 s as 32 tasks, ~0.35 s as 4, local[4]), and a
+    persisted frame keeps all its shuffle partitions because AQE does not
+    coalesce a cached plan. A frame Catalyst cannot size is left as it is."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    n = df.rdd.getNumPartitions()
+    if n < max(2, target // 2):
         return df.repartition(target)
+    if n > target:
+        size = gates.plan_size_bytes(df)
+        if size is not None:
+            conf = df.sparkSession._jsparkSession.sessionState().conf()
+            want = max(target, -(-size // conf.filesMaxPartitionBytes()))
+            if want < n:
+                return df.coalesce(want)
     return df
 
 
@@ -165,9 +186,9 @@ def _band_table(
     """(id, [keep_cols...,] band, band_hash) rows — deliberately WITHOUT
     the shingle arrays: the band explode replicates every row ×bands, so
     carrying shingles here would amplify the self-join shuffle by the band
-    count. Shingles are re-joined onto the (bounded) candidate pairs
-    afterwards instead. ``keep_cols`` carries additional NARROW columns
-    (e.g. the event-time column the streaming stage watermarks on)."""
+    count. Verification fetches each candidate side's shingles from the
+    signature table by id instead. ``keep_cols`` carries additional NARROW
+    columns (e.g. the event-time column the streaming stage watermarks on)."""
     band_hash = F.xxhash64 if hash_family == "xxhash64" else _md5_60bit
     band_ids = F.sequence(F.lit(0), F.lit(bands - 1))
     banded = df.select(
@@ -191,33 +212,11 @@ def _band_table(
     return banded
 
 
-def verify_candidate_pairs(
-    df: DataFrame,
-    cand: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-    threshold: float = 0.7,
+def _verified(
+    cand: DataFrame, sh: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
-    """Exact Jaccard verification of bare (id_a, id_b) candidate pairs
-    against the static corpus ``df`` — shingles are recomputed ONLY for
-    docs appearing in a candidate (semi-join first; the naive join-back
-    re-shingles the whole corpus per fetch branch). Shared by the batch
-    LSH self-join and the streaming ingest-time candidate stage
-    (streaming/minhash.py), so both paths verify identically."""
-    cand_ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .unionByName(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    cand_docs = df.select(id_col, text_col).join(cand_ids, id_col, "left_semi")
-    # localCheckpoint: sh feeds BOTH the id_a and id_b fetch joins below,
-    # and two DIFFERENT projections of one frame each re-execute its whole
-    # plan per join side (round-5 lesson) — without this the semi-join +
-    # shingling of the candidate docs runs twice.
-    sh = cand_docs.select(
-        F.col(id_col), _shingles(F.col(text_col), shingle_k).alias("shingles")
-    ).localCheckpoint()
+    """Exact string-shingle Jaccard of (id_a, id_b) pairs, each side's
+    ``shingles`` fetched from ``sh`` (id_col, shingles) by one join."""
     cand = cand.join(
         sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
         "id_a",
@@ -232,6 +231,37 @@ def verify_candidate_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+def verify_candidate_pairs(
+    df: DataFrame,
+    cand: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_k: int = 3,
+    threshold: float = 0.7,
+) -> DataFrame:
+    """Exact Jaccard verification of bare (id_a, id_b) candidate pairs
+    against the static corpus ``df`` — shingles are computed ONLY for docs
+    appearing in a candidate (semi-join first; the naive join-back
+    re-shingles the whole corpus per fetch branch). For candidates that
+    come from outside the corpus's own signature table: the streaming
+    ingest-time candidate stage (streaming/minhash.py). The Jaccard is the
+    batch operator's :func:`_verified`, so both paths verify identically."""
+    cand_ids = (
+        cand.select(F.col("id_a").alias(id_col))
+        .unionByName(cand.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    cand_docs = df.select(id_col, text_col).join(cand_ids, id_col, "left_semi")
+    # localCheckpoint: sh feeds BOTH the id_a and id_b fetch joins, and two
+    # DIFFERENT projections of one frame each re-execute its whole plan per
+    # join side (round-5 lesson) — without this the semi-join + shingling
+    # of the candidate docs runs twice.
+    sh = cand_docs.select(
+        F.col(id_col), _shingles(F.col(text_col), shingle_k).alias("shingles")
+    ).localCheckpoint()
+    return _verified(cand, sh, id_col, threshold)
 
 
 def minhash_near_duplicates(
@@ -251,14 +281,18 @@ def minhash_near_duplicates(
     """
     rows_per_band = num_hashes // bands
     sig = add_minhash_signature(
-        ensure_parallelism(df), text_col, shingle_k, num_hashes, hash_family
+        ensure_parallelism(df.select(id_col, text_col)),
+        text_col,
+        shingle_k,
+        num_hashes,
+        hash_family,
     )
-    # the narrow (id, band, band_hash) table feeds BOTH sides of the bucket
-    # self-join; unpersisted, the whole signature computation re-executes
-    # per side (measured: 2/3 of minhash wall time was duplicate signature
-    # evaluation). 16 small rows per doc — cheap to cache, evictable.
-    banded = _band_table(sig, id_col, bands, rows_per_band, hash_family).persist()
-
+    # ONE persisted narrow table feeds every read: both sides of the bucket
+    # self-join (through the band explode) and both shingle fetches of the
+    # verification. Unpersisted, each of those four different projections
+    # re-executes the signature kernel.
+    table = sig.select(id_col, "shingles", "minhash").persist()
+    banded = _band_table(table, id_col, bands, rows_per_band, hash_family)
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
     cand = (
@@ -267,24 +301,11 @@ def minhash_near_duplicates(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # exact verification: recompute shingles ONLY for docs that appear in a
-    # candidate pair (semi-join first) — the naive "join back to the shingle
-    # frame" re-evaluates normalization+shingling for the WHOLE corpus on
-    # both fetch branches (only identical subtrees are reused across join
-    # sides); with candidates << corpus this is the difference between
-    # O(candidates) and 2x O(corpus) shingling work. The bare id-pair list
-    # is PERSISTED at the branch point (it feeds both the semi-join and the
-    # final verification join; unpersisted, the whole signature+bucket-join
-    # plan re-executes per branch — measured 60s -> 225s on the pipeline).
-    # It is bounded by the banded candidate count — small relative to the
-    # corpus by construction — and evictable (MEMORY_AND_DISK default).
-    cand = cand.persist()
-    result = verify_candidate_pairs(df, cand, text_col, id_col, shingle_k, threshold)
-    # Materialize the (bounded) verified pair list, then RELEASE the
-    # branch-point caches — persists that outlive the operator accumulate
-    # for the session lifetime (the repo's persist-hygiene rule). The
-    # function is therefore EAGER; callers get a lineage-free frame.
+    result = _verified(cand, table, id_col, threshold)
+    # Materialize the (bounded) verified pair list, then RELEASE the table —
+    # persists that outlive the operator accumulate for the session
+    # lifetime (the repo's persist-hygiene rule). The function is therefore
+    # EAGER; callers get a lineage-free frame.
     result = result.localCheckpoint()
-    banded.unpersist()
-    cand.unpersist()
+    table.unpersist()
     return result

@@ -113,7 +113,10 @@ def streaming_minhash_candidates(
     """Bare (id_a, id_b) near-dup candidate pairs from a document stream
     (cross-band duplicates included — dedup downstream, then verify with
     :func:`fastselect_spark.dedup.minhash.verify_candidate_pairs` against
-    the accumulated corpus)."""
+    the accumulated corpus: it shingles only the candidates' docs and
+    scores them with the batch operator's own Jaccard, so the verified
+    pairs equal :func:`~fastselect_spark.dedup.minhash_near_duplicates`
+    on the union while the bucket state outlives the run)."""
     rows_per_band = num_hashes // bands
     sig = add_minhash_signature(
         stream.select(

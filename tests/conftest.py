@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from fastselect_spark.runtime import gates
@@ -54,3 +56,43 @@ def force_path(monkeypatch):
         return decisions
 
     return force
+
+
+@pytest.fixture(scope="module")
+def near_dup_corpus(spark):
+    """50 base docs + exact dups of 0..4 + near dups (1 token changed) of 5..9."""
+    rng = np.random.default_rng(7)
+    base = [
+        " ".join(f"w{rng.integers(0, 400)}" for _ in range(40)) for _ in range(50)
+    ]
+    texts = list(base)
+    ids = list(range(50))
+    nid = 100
+    for i in range(5):  # exact duplicates
+        texts.append(base[i])
+        ids.append(nid)
+        nid += 1
+    for i in range(5, 10):  # near duplicates: replace last token
+        toks = base[i].split()
+        toks[-1] = "CHANGED"
+        texts.append(" ".join(toks))
+        ids.append(nid)
+        nid += 1
+    return spark.createDataFrame(pd.DataFrame({"doc_id": ids, "text": texts}))
+
+
+@pytest.fixture(scope="module")
+def messy_docs(spark):
+    rows = [
+        {"doc_id": 0, "text": None},
+        {"doc_id": 1, "text": ""},
+        {"doc_id": 2, "text": "   "},
+        {"doc_id": 3, "text": "single"},
+        {"doc_id": 4, "text": "two tokens"},
+        {"doc_id": 5, "text": "a b c d e normal document here"},
+        {"doc_id": 6, "text": "a b c d e normal document here"},  # exact dup
+        {"doc_id": 7, "text": "tab\tand\nnewline   spacing"},
+    ]
+    return spark.createDataFrame(
+        pd.DataFrame(rows), "doc_id long, text string"
+    )

@@ -4,25 +4,7 @@ tokens, no-pair graphs — the shapes real crawled corpora are full of."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def messy_docs(spark):
-    rows = [
-        {"doc_id": 0, "text": None},
-        {"doc_id": 1, "text": ""},
-        {"doc_id": 2, "text": "   "},
-        {"doc_id": 3, "text": "single"},
-        {"doc_id": 4, "text": "two tokens"},
-        {"doc_id": 5, "text": "a b c d e normal document here"},
-        {"doc_id": 6, "text": "a b c d e normal document here"},  # exact dup
-        {"doc_id": 7, "text": "tab\tand\nnewline   spacing"},
-    ]
-    return spark.createDataFrame(
-        pd.DataFrame(rows), "doc_id long, text string"
-    )
 
 
 def test_minhash_handles_null_and_short_texts(messy_docs):

@@ -106,29 +106,6 @@ def test_fingerprint_normalization(spark):
 
 # ---------- dedup ----------
 
-@pytest.fixture(scope="module")
-def near_dup_corpus(spark):
-    """50 base docs + exact dups of 0..4 + near dups (1 token changed) of 5..9."""
-    rng = np.random.default_rng(7)
-    base = [
-        " ".join(f"w{rng.integers(0, 400)}" for _ in range(40)) for _ in range(50)
-    ]
-    texts = list(base)
-    ids = list(range(50))
-    nid = 100
-    for i in range(5):  # exact duplicates
-        texts.append(base[i])
-        ids.append(nid)
-        nid += 1
-    for i in range(5, 10):  # near duplicates: replace last token
-        toks = base[i].split()
-        toks[-1] = "CHANGED"
-        texts.append(" ".join(toks))
-        ids.append(nid)
-        nid += 1
-    return spark.createDataFrame(pd.DataFrame({"doc_id": ids, "text": texts}))
-
-
 def test_exact_dedup(near_dup_corpus):
     groups = exact_duplicate_groups(near_dup_corpus).toPandas()
     assert len(groups) == 5

@@ -43,17 +43,20 @@ def main() -> None:
     dump("bm25_scored_subplan", scored)
     postings.unpersist()
 
-    # minhash verify plan (pre-checkpoint): signature -> bands -> bucket
-    # join -> candidate pairs -> jaccard verification
+    # minhash verify plan (pre-checkpoint): signature table -> bands ->
+    # bucket join -> candidate pairs -> jaccard verification off the table
     from fastselect_spark.dedup.minhash import (
         _band_table,
+        _verified,
         add_minhash_signature,
         ensure_parallelism,
-        verify_candidate_pairs,
     )
 
-    sig = add_minhash_signature(ensure_parallelism(docs), "text", 3, 64, "md5")
-    banded = _band_table(sig, "doc_id", 16, 4, "md5")
+    sig = add_minhash_signature(
+        ensure_parallelism(docs.select("doc_id", "text")), "text", 3, 64, "md5"
+    )
+    table = sig.select("doc_id", "shingles", "minhash").persist()
+    banded = _band_table(table, "doc_id", 16, 4, "md5")
     a = banded.select(F.col("doc_id").alias("id_a"), "band", "band_hash")
     b = banded.select(F.col("doc_id").alias("id_b"), "band", "band_hash")
     cand = (
@@ -62,7 +65,8 @@ def main() -> None:
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    dump("minhash_verify_subplan", verify_candidate_pairs(docs, cand, "text", "doc_id", 3, 0.5))
+    dump("minhash_verify_subplan", _verified(cand, table, "doc_id", 0.5))
+    table.unpersist()
 
     spark.stop()
 
