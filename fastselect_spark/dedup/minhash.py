@@ -58,9 +58,11 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     use. Every Python task pays a fixed launch cost (an identity Arrow pass
     over 400 cached rows: ~2 s as 32 tasks, ~0.35 s as 4, local[4]), and a
     persisted frame keeps all its shuffle partitions because AQE does not
-    coalesce a cached plan. A frame Catalyst cannot size is left as it is."""
+    coalesce a cached plan. A frame Catalyst cannot size is left as it is.
+    The count is read from the plan (``gates.plan_partitions``), so a
+    shuffled input runs no job here."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    n = df.rdd.getNumPartitions()
+    n = gates.plan_partitions(df)
     if n < max(2, target // 2):
         return df.repartition(target)
     if n > target:

@@ -38,17 +38,25 @@ def token_count(col: str | Column = "text") -> Column:
     return F.size(F.split(c, r"\s+"))
 
 
+def _stable_order() -> dict[str, Column]:
+    return {"turn_seq": F.row_number().over(_conv_window())}
+
+
 def add_stable_order(df: DataFrame) -> DataFrame:
     """row_number over (conv_id, turn_idx) — the stable per-turn identity
     (per-row invariant: text equality under this ordering, BASELINE.json:15)."""
-    return df.withColumn("turn_seq", F.row_number().over(_conv_window()))
+    return df.withColumns(_stable_order())
+
+
+def _turn_gap() -> dict[str, Column]:
+    w = _conv_window()
+    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+    return {"turn_gap_s": F.coalesce(gap.cast("double"), F.lit(0.0))}
 
 
 def add_turn_gap(df: DataFrame) -> DataFrame:
     """Seconds since previous turn in the conversation (null -> 0 on first)."""
-    w = _conv_window()
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    return df.withColumn("turn_gap_s", F.coalesce(gap.cast("double"), F.lit(0.0)))
+    return df.withColumns(_turn_gap())
 
 
 def add_lag_lead(df: DataFrame, cols: list[str], offsets: tuple[int, ...] = (1,)) -> DataFrame:
@@ -61,23 +69,47 @@ def add_lag_lead(df: DataFrame, cols: list[str], offsets: tuple[int, ...] = (1,)
     return df
 
 
-def add_sessions(df: DataFrame, gap_seconds: float = SESSION_GAP_SECONDS) -> DataFrame:
-    """Gap-based sessionization: a new session starts when the time since
-    the previous turn exceeds ``gap_seconds``; session_id is the running
-    count of session starts (cumulative sum over an at-or-before frame —
-    never looks ahead)."""
-    w = _conv_window()
-    prev_ts = F.lag("ts").over(w)
+def _cum() -> WindowSpec:
+    return _conv_window().rowsBetween(Window.unboundedPreceding, 0)
+
+
+def _sessions(gap_seconds: float) -> tuple[dict[str, Column], dict[str, Column]]:
+    prev_ts = F.lag("ts").over(_conv_window())
     is_start = F.when(
         prev_ts.isNull()
         | ((F.unix_timestamp("ts") - F.unix_timestamp(prev_ts)) > gap_seconds),
         F.lit(1),
     ).otherwise(F.lit(0))
-    df = df.withColumn("session_start", is_start)
-    cum = Window.partitionBy("conv_id").orderBy("turn_idx").rowsBetween(
-        Window.unboundedPreceding, 0
+    return (
+        {"session_start": is_start},
+        {"session_id": F.sum("session_start").over(_cum()) - 1},
     )
-    return df.withColumn("session_id", F.sum("session_start").over(cum) - 1)
+
+
+def add_sessions(df: DataFrame, gap_seconds: float = SESSION_GAP_SECONDS) -> DataFrame:
+    """Gap-based sessionization: a new session starts when the time since
+    the previous turn exceeds ``gap_seconds``; session_id is the running
+    count of session starts (cumulative sum over an at-or-before frame —
+    never looks ahead)."""
+    starts, ids = _sessions(gap_seconds)
+    return df.withColumns(starts).withColumns(ids)
+
+
+def _role_runs() -> tuple[dict[str, Column], dict[str, Column]]:
+    w = _conv_window()
+    changed = F.when(
+        F.lag("role").over(w).isNull() | (F.col("role") != F.lag("role").over(w)),
+        F.lit(1),
+    ).otherwise(F.lit(0))
+    seq = F.row_number().over(w)
+    run_start_seq = F.max(F.when(F.col("role_changed") == 1, seq)).over(_cum())
+    return (
+        {"role_changed": changed},
+        {
+            "role_run_id": F.sum("role_changed").over(_cum()) - 1,
+            "role_run_len": (seq - run_start_seq + F.lit(1)).cast("long"),
+        },
+    )
 
 
 def add_role_runs(df: DataFrame) -> DataFrame:
@@ -88,41 +120,37 @@ def add_role_runs(df: DataFrame) -> DataFrame:
     as everything else — current row_number minus the row_number at the
     run's start — so Catalyst fuses it into the shared Window node instead
     of planning an extra full-table Sort on (conv_id, role_run_id)."""
-    w = _conv_window()
-    changed = F.when(
-        F.lag("role").over(w).isNull() | (F.col("role") != F.lag("role").over(w)),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    df = df.withColumn("role_changed", changed)
-    cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    df = df.withColumn("role_run_id", F.sum("role_changed").over(cum) - 1)
-    seq = F.row_number().over(w)
-    run_start_seq = F.max(F.when(F.col("role_changed") == 1, seq)).over(cum)
-    return df.withColumn(
-        "role_run_len", (seq - run_start_seq + F.lit(1)).cast("long")
+    changed, runs = _role_runs()
+    return df.withColumns(changed).withColumns(runs)
+
+
+def _n_tokens() -> dict[str, Column]:
+    return {"n_tokens": token_count("text").cast("double")}
+
+
+def _rolling_token_stats(k: int) -> dict[str, Column]:
+    row_w = _conv_window().rowsBetween(-k, 0)
+    range_w = (
+        Window.partitionBy("conv_id")
+        .orderBy(F.unix_timestamp("ts"))
+        .rangeBetween(-600, 0)
     )
+    return {
+        f"tokens_sum_{k}": F.sum("n_tokens").over(row_w),
+        f"tokens_avg_{k}": F.avg("n_tokens").over(row_w),
+        f"tokens_std_{k}": F.coalesce(
+            F.stddev_samp("n_tokens").over(row_w), F.lit(0.0)
+        ),
+        "tokens_sum_10m": F.sum("n_tokens").over(range_w),
+    }
 
 
 def add_rolling_token_stats(df: DataFrame, k: int = 5) -> DataFrame:
     """Token count per turn + rolling sum/avg/stddev over the last ``k+1``
     turns (row frame) and over the trailing 10 minutes (range frame)."""
     if "n_tokens" not in df.columns:
-        df = df.withColumn("n_tokens", token_count("text").cast("double"))
-    row_w = _conv_window().rowsBetween(-k, 0)
-    df = (
-        df.withColumn(f"tokens_sum_{k}", F.sum("n_tokens").over(row_w))
-        .withColumn(f"tokens_avg_{k}", F.avg("n_tokens").over(row_w))
-        .withColumn(
-            f"tokens_std_{k}",
-            F.coalesce(F.stddev_samp("n_tokens").over(row_w), F.lit(0.0)),
-        )
-    )
-    range_w = (
-        Window.partitionBy("conv_id")
-        .orderBy(F.unix_timestamp("ts"))
-        .rangeBetween(-600, 0)
-    )
-    return df.withColumn("tokens_sum_10m", F.sum("n_tokens").over(range_w))
+        df = df.withColumns(_n_tokens())
+    return df.withColumns(_rolling_token_stats(k))
 
 
 def add_multi_horizon_stats(
@@ -175,13 +203,17 @@ def add_backfill(df: DataFrame, cols: list[str]) -> DataFrame:
     return df
 
 
+def _tool_call_counts() -> dict[str, Column]:
+    return {
+        "tool_calls_so_far": F.sum(
+            F.when(F.col("tool").isNotNull(), 1).otherwise(0)
+        ).over(_cum())
+    }
+
+
 def add_tool_call_counts(df: DataFrame) -> DataFrame:
     """Cumulative count of tool calls up to and including the current turn."""
-    cum = _conv_window().rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(
-        "tool_calls_so_far",
-        F.sum(F.when(F.col("tool").isNotNull(), 1).otherwise(0)).over(cum),
-    )
+    return df.withColumns(_tool_call_counts())
 
 
 DEFAULT_FEATURE_COLS = [
@@ -213,22 +245,30 @@ def featurize_transcripts(
     # Catalyst prunes it out of the conv_id Exchange — at 10^12 turns the
     # text column is ~25x the bytes of every other column combined, and
     # this keeps it off the wire entirely for numeric-feature pipelines.
-    df = df.withColumn("n_tokens", token_count("text").cast("double"))
-    df = add_stable_order(df)
-    df = add_turn_gap(df)
-    df = add_sessions(df, gap_seconds)
-    df = add_role_runs(df)
-    df = add_rolling_token_stats(df, k)
-    df = add_tool_call_counts(df)
+    df = df.withColumns(_n_tokens())
+    # Then one withColumns per Window operator of the plan, in output
+    # order: each call is a driver-side analysis (0.27-0.39 s warm on a
+    # backfill cell), and one per column was 16 of them. Merging these
+    # groups further changes how Catalyst splits the Window operators.
     w = _conv_window()
-    df = df.withColumn(
-        "n_tokens_lag1", F.coalesce(F.lag("n_tokens").over(w), F.lit(0.0))
-    )
-    df = df.withColumn(
-        "role_match_lag1",
-        F.when(F.lag("role").over(w) == F.col("role"), 1.0).otherwise(0.0),
-    )
-    df = df.withColumn(
-        "label", F.when(F.col("tool").isNotNull(), 1).otherwise(0)
-    )
+    session_starts, session_ids = _sessions(gap_seconds)
+    role_changed, role_runs = _role_runs()
+    rolling = _rolling_token_stats(k)
+    range_sum = {"tokens_sum_10m": rolling.pop("tokens_sum_10m")}
+    for level in (
+        {**_stable_order(), **_turn_gap(), **session_starts},
+        {**session_ids, **role_changed},
+        {"role_run_id": role_runs["role_run_id"]},
+        {"role_run_len": role_runs["role_run_len"], **rolling},
+        range_sum,
+        {
+            **_tool_call_counts(),
+            "n_tokens_lag1": F.coalesce(F.lag("n_tokens").over(w), F.lit(0.0)),
+            "role_match_lag1": F.when(
+                F.lag("role").over(w) == F.col("role"), 1.0
+            ).otherwise(0.0),
+        },
+        {"label": F.when(F.col("tool").isNotNull(), 1).otherwise(0)},
+    ):
+        df = df.withColumns(level)
     return df

@@ -20,9 +20,12 @@ per-class sums of ``matrix._class_moments``) and the driver orders
 them after the merge — no separate scan for the keys. Wide rows reach
 :func:`tree_reduce_ndarrays_arrow` in batches of at most ~8 MB: the byte
 cap is session configuration set once in ``runtime.session.get_spark``,
-never changed per call. :func:`local_reducer` is the driver twin for
-small frames reduced once per iteration (Lloyd): one collect, the same
-partial function per partition, the same merge order.
+never changed per call. Small frames run no Python job: within the
+``moments`` gate :func:`tree_reduce_ndarrays_arrow` collects the frame
+once with Arrow (a JVM-only job) and runs the same partial function per
+partition in-process, and :func:`local_reducer` is the pandas twin for
+frames reduced once per iteration (Lloyd). Both split the collect by
+partition id (:func:`_partitions`) and merge in partition order.
 
 Order statistics (average ranks, BH-FDR, exact KS) need a running count
 along a global sort, which Spark only offers as a single-partition
@@ -130,8 +133,16 @@ def tree_reduce_ndarrays_arrow(df: DataFrame, partial_fn) -> dict[str, np.ndarra
     receives ``Iterator[pyarrow.RecordBatch]`` (use :func:`list_matrix_view`
     for wide array columns) and the map stage runs through ``mapInArrow``,
     skipping the Arrow→pandas object-column materialization entirely.
-    Combine/collect stages are shared with the pandas path."""
+    Combine/collect stages are shared with the pandas path.
+
+    Within the ``moments`` gate the driver twin runs instead: ONE Arrow
+    collect tagged with partition ids (a JVM-only job), the same
+    ``partial_fn`` over each partition's record batches, merged in
+    ascending partition order as the direct-collect branch merges."""
     import pyarrow as pa
+
+    if gates.use_driver(df, "moments"):
+        return _reduce_local(_partitions(df, arrow=True), partial_fn)
 
     out_schema = pa.schema(
         [
@@ -176,36 +187,53 @@ def tree_reduce_ndarrays(
     return _merge_partials(partials, df)
 
 
+def _partitions(df: DataFrame, arrow: bool) -> list[list]:
+    """``df`` collected ONCE with its partition ids, as one batch list per
+    non-empty partition in ascending partition order: a pandas frame, or
+    an Arrow table's record batches for ``arrow``. An empty frame is one
+    empty partition, as its tasks still yield one (zero) partial."""
+    tagged = df.select(F.spark_partition_id().alias("__pid"), "*")
+    if arrow:
+        tbl = tagged.toArrow()
+        pids = tbl.column(0).to_numpy()
+        data = tbl.remove_column(0)
+        part = lambda a, b: data.slice(a, b - a).to_batches()  # noqa: E731
+    else:
+        data = tagged.toPandas()
+        pids = data.pop("__pid").to_numpy()
+        part = lambda a, b: [data.iloc[a:b]]  # noqa: E731
+    # collect keeps partition order, so each partition is one row range
+    cuts = [0, *(np.flatnonzero(np.diff(pids)) + 1).tolist(), len(pids)]
+    return [part(a, b) for a, b in zip(cuts, cuts[1:]) if b > a] or [part(0, 0)]
+
+
+def _reduce_local(parts: list[list], partial_fn) -> dict[str, np.ndarray]:
+    """``partial_fn`` over each partition's batches, merged in partition
+    order — the first partial assigns, later ones add, exactly as the
+    direct-collect branch of :func:`_merge_partials`."""
+    out: dict[str, np.ndarray] = {}
+    for batches in parts:
+        for name, arr in partial_fn(iter(batches)).items():
+            if name in out:
+                out[name] += arr
+            else:
+                out[name] = arr
+    return out
+
+
 def local_reducer(df: DataFrame) -> Callable[[Callable], dict[str, np.ndarray]]:
     """Driver twin of :func:`tree_reduce_ndarrays` for small frames that an
     iterative caller reduces many times: ``df`` is collected ONCE with its
     partition ids, and the returned ``reduce(partial_fn)`` runs the
     caller's own ``partial_fn`` over each partition's rows and merges the
-    partials in ascending partition order — the first assigns, later ones
-    add, exactly as the direct-collect branch of the tree reduction, so
-    the result is bit-identical without a job per call."""
-    pdf = df.select(F.spark_partition_id().alias("__pid"), *df.columns).toPandas()
-    pids = pdf.pop("__pid").to_numpy()
-    # collect keeps partition order, so each partition is one row range
-    cuts = [0, *(np.flatnonzero(np.diff(pids)) + 1).tolist(), len(pids)]
-    parts = [pdf.iloc[a:b] for a, b in zip(cuts, cuts[1:]) if b > a]
-
-    def reduce(partial_fn) -> dict[str, np.ndarray]:
-        out: dict[str, np.ndarray] = {}
-        # an empty frame still yields one (zero) partial, as its tasks do
-        for part in parts or [pdf]:
-            for name, arr in partial_fn(iter([part])).items():
-                if name in out:
-                    out[name] += arr
-                else:
-                    out[name] = arr
-        return out
-
-    return reduce
+    partials in ascending partition order, so the result is bit-identical
+    without a job per call."""
+    parts = _partitions(df, arrow=False)
+    return lambda partial_fn: _reduce_local(parts, partial_fn)
 
 
 def _merge_partials(partials: DataFrame, df: DataFrame) -> dict[str, np.ndarray]:
-    n_parts = df.rdd.getNumPartitions()
+    n_parts = gates.plan_partitions(df)
     if n_parts <= DIRECT_COLLECT:
         out: dict[str, np.ndarray] = {}
         for row in partials.collect():

@@ -21,7 +21,7 @@ stage's ``monotonically_increasing_id`` sort reconstructs), so kernels
 address rows by their index in that order and results are bit-identical
 across modes.
 
-Two ways to read a stage, the same in both modes:
+Three ways to read a stage:
 
 - ``loader(subset)`` returns a picklable closure that distributed kernels
   call inside their tasks. Column subsets let an iterative wrapper (TuRF)
@@ -34,6 +34,10 @@ Two ways to read a stage, the same in both modes:
   the staged parquet with Spark. ``fn`` reports bad input as a returned
   value and the caller raises on the driver, so both modes raise the same
   ``ValueError``.
+- ``map_ids(n, ...)`` scores ids ``0..n-1`` (Relief probe rows, MDR
+  combos) over the ``spark.range`` partitions, batches and chunks of one
+  job; on a small stage within the ``pairs`` gate the same loop runs in
+  this process, bit-identically and without a job.
 
 Stages are removed eagerly by ``MatrixStage.cleanup()`` when the owning fit
 returns (atexit-only cleanup accumulated a parquet copy of the input per
@@ -210,6 +214,70 @@ class MatrixStage:
         one = self.spark.range(0, 1, 1, 1).mapInPandas(task, "value binary")
         return pickle.loads(one.collect()[0]["value"])
 
+    def map_ids(
+        self,
+        n_ids: int,
+        op: str,
+        cells: int,
+        prep: Callable,
+        kernel: Callable,
+        chunk: int,
+        reduce: bool,
+        subset: list[str] | None = None,
+    ) -> np.ndarray | None:
+        """Ids ``0..n_ids-1`` scored over the stage: ``prep(X, y, extras)``
+        once per task, then ``kernel(ids, ctx) -> float64 ndarray`` over
+        chunks of at most ``chunk`` ids of each Arrow batch of each
+        ``spark.range(0, n_ids, 1, parts)`` partition. ``reduce`` sums the
+        chunk outputs within a partition and the partition sums in order;
+        else the chunk rows are stacked in id order. None when no id ran.
+
+        On a small stage whose ``cells`` of work are within gate ``op``
+        the same partitions, batches and chunks run in this process on the
+        driver's copy, so the result is bit-identical with no job; else one
+        ``mapInPandas`` job whose tasks each return one pickled array."""
+        load = self.loader(subset)
+        sc = self.spark.sparkContext
+        parts = min(max(sc.defaultParallelism, 4), max(n_ids, 1))
+
+        def run_part(batches, ctx):
+            return _combine(
+                [
+                    kernel(ids[s : s + chunk], ctx)
+                    for ids in batches
+                    for s in range(0, len(ids), chunk)
+                ],
+                reduce,
+            )
+
+        if self.mode == "small" and gates.use_driver(None, op, rows=cells):
+            ctx = prep(*load())
+            cap = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+            results = []
+            for i in range(parts):
+                lo, hi = i * n_ids // parts, (i + 1) * n_ids // parts
+                step = cap if cap > 0 else max(hi - lo, 1)
+                ids = np.arange(lo, hi, dtype=np.int64)
+                results.append(
+                    run_part([ids[a : a + step] for a in range(0, hi - lo, step)], ctx)
+                )
+        else:
+
+            def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                ctx = prep(*load())
+                ids = (pdf["id"].to_numpy(dtype=np.int64) for pdf in batches)
+                out = run_part(ids, ctx)
+                if out is not None:
+                    yield pd.DataFrame({"value": [pickle.dumps(out)]})
+
+            rows = (
+                self.spark.range(0, n_ids, 1, parts)  # born partitioned, no Exchange
+                .mapInPandas(task, "value binary")
+                .collect()
+            )
+            results = [pickle.loads(r["value"]) for r in rows]
+        return _combine(results, reduce)
+
     def class_stats(self) -> tuple[np.ndarray, np.ndarray]:
         """Sorted class values + counts (memoized — iterative wrappers like
         TuRF call per-round fits against one shared stage). A NULL or NaN
@@ -246,6 +314,19 @@ class MatrixStage:
                 pass
         elif self.path:
             shutil.rmtree(self.path, ignore_errors=True)
+
+
+def _combine(outs: list, reduce: bool) -> np.ndarray | None:
+    """Stack ``outs`` (skipping None) in order, or sum them left to right."""
+    outs = [o for o in outs if o is not None]
+    if not outs:
+        return None
+    if not reduce:
+        return np.concatenate(outs)
+    total = outs[0]
+    for o in outs[1:]:
+        total = total + o
+    return total
 
 
 def _class_counts(X: np.ndarray, y: np.ndarray, extras: dict):

@@ -11,7 +11,8 @@ axes, matching how the work actually scales:
   size is independent of n — the per-class moments ``(K, p)`` and the MI
   relevance histograms ``(p, k, k)`` — accumulated per partition in NumPy
   (vectorized scatter-adds over Arrow batches) and merged by the tree
-  reduction in ``_agg.py``, each scorer ONE Spark job. This is the
+  reduction in ``_agg.py``, each scorer ONE Spark job (within the
+  ``moments`` gate, one Arrow collect with no Python task). This is the
   reference's single-pass kernel (Chi2.py:7-22, mutual_information.py:49-55)
   re-expressed as a partition-parallel reduction. chi2 and Fisher run one
   kernel, :func:`_class_moments` (per-class count and sum, plus the sum of

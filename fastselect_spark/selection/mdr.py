@@ -141,14 +141,13 @@ class MDRClassifier:
         cv = self.cv
         n_cells = 3**k
         spark = stage.spark
-        load = stage.loader()
 
         # input validation (reference raises on bad codes, MDR.py:220-235):
         # one whole-matrix pass returns flags and the driver raises, so both
         # stage modes raise the same ValueError (a p-term OR predicate would
         # plan a 3000-node boolean expression whose codegen alone costs ~10s
         # at p=1000). The sklearn-parity fold path takes the label vector
-        # from the same pass.
+        # from the same pass, and the row count sizes the phase-1 gate.
         def check(X, y, extras):
             bad_fold = fold_col is not None and not np.isin(
                 extras[fold_col], np.arange(cv)
@@ -158,9 +157,10 @@ class MDRClassifier:
                 not np.isin(y, (0.0, 1.0)).all(),
                 bad_fold,
                 y if fold_col is None else None,
+                len(y),
             )
 
-        bad_x, bad_y, bad_fold, labels = stage.run(check)
+        bad_x, bad_y, bad_fold, labels, n_rows = stage.run(check)
         if bad_x:
             raise ValueError("MDR requires genotype features coded 0/1/2.")
         if bad_y:
@@ -178,10 +178,6 @@ class MDRClassifier:
             test_folds = stratified_kfold_assign(labels, cv, seed=42)
             folds_bc = spark.sparkContext.broadcast(test_folds.astype(np.int8))
 
-        # distribute combo chunks
-        parts = min(max(spark.sparkContext.defaultParallelism, 4), n_combos)
-        combo_df = spark.range(0, n_combos, 1, parts)  # born partitioned, no Exchange
-
         def _load_folds(extras) -> np.ndarray:
             folds = extras[fold_col] if fold_col is not None else folds_bc.value
             return folds.astype(np.int64)
@@ -197,8 +193,9 @@ class MDRClassifier:
             )
             return case_fc, ctrl_fc
 
-        # phase 1: per-(combo, fold) kernel BAs, computed DISTRIBUTED — only
-        # cv floats per combo reach the driver (at p=1000 that is 500k
+        # phase 1: per-(combo, fold) kernel BAs over combo ids — in-process
+        # on a small stage within the ``pairs`` gate (combos × n cells), else
+        # ONE distributed job; only cv floats per combo reach the driver (at p=1000 that is 500k
         # combos; shipping their full count tensors measured 720MB of
         # driver ingress and a 14x wall regression). Combos are scored in
         # BATCHES: one fancy-index cell computation and one flat bincount
@@ -246,35 +243,20 @@ class MDRClassifier:
                 ba = 0.5 * (tp / tot_case + tn / tot_ctrl)
             return np.where(ok, ba, 0.0)  # (B, cv)
 
-        def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            X, y, extras = load()
-            Xi = X.astype(np.int64)
-            yi = y.astype(np.int64)
-            folds = _load_folds(extras)
-            for pdf_b in batches:
-                ids = pdf_b["id"].to_numpy(dtype=np.int64)
-                for s in range(0, len(ids), _BATCH):
-                    cids = ids[s : s + _BATCH]
-                    bas = _batch_bas(Xi, yi, folds, cids)  # (B, cv)
-                    yield pd.DataFrame(
-                        {
-                            "combo_id": np.repeat(cids, cv),
-                            "fold": np.tile(np.arange(cv, dtype=np.int32), len(cids)),
-                            "ba": bas.ravel(),
-                        }
-                    )
+        def prep(X, y, extras):
+            return X.astype(np.int64), y.astype(np.int64), _load_folds(extras)
 
-        bas = combo_df.mapInPandas(
-            mapper, schema="combo_id long, fold int, ba double"
-        ).toPandas()
-
+        bas = stage.map_ids(
+            n_combos,
+            "pairs",
+            n_combos * n_rows,
+            prep,
+            lambda cids, ctx: _batch_bas(*ctx, cids),
+            chunk=_BATCH,
+            reduce=False,
+        )  # (n_combos, cv)
         # per-fold argmax with first-index tie-break (np.argmax semantics)
-        fold_best_cids: list[int] = []
-        for fold in range(cv):
-            sub = bas[bas["fold"] == fold]
-            arr = np.full(n_combos, -np.inf, dtype=np.float64)
-            arr[sub["combo_id"].to_numpy()] = sub["ba"].to_numpy()
-            fold_best_cids.append(int(np.argmax(arr)))
+        fold_best_cids = [int(np.argmax(bas[:, fold])) for fold in range(cv)]
 
         # phase 2: count tensors for just the <=cv fold-best combos, from
         # one whole-matrix pass (on the driver's copy for a small stage, one

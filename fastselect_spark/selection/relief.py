@@ -7,8 +7,8 @@ numeric projection is materialized behind a size-gated
 :class:`~fastselect_spark.selection._stage.MatrixStage` (collect+broadcast
 for kilobyte matrices, distributed parquet stage above — the driver never
 materializes a row on the scale path); the PER-SAMPLE outer loop is then
-distributed via ``mapInPandas`` over a ``spark.range`` of row indices,
-with each task reading the full reference matrix executor-side (cached per
+``MatrixStage.map_ids`` over the row indices (in-process on a small stage
+within the ``pairs`` gate, else one ``mapInPandas`` job), with each task reading the full reference matrix executor-side (cached per
 worker process) and emitting one per-feature partial score vector, merged by
 summation (the distributed equivalent of the reference's thread-private
 ``temp[n, p]`` accumulator, ReliefF.py:141,219-220). Probe rows are
@@ -35,10 +35,7 @@ Numeric parity notes (the allclose traps, SURVEY.md §2.2):
 from __future__ import annotations
 
 import warnings
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from fastselect_spark.selection._stage import MatrixStage, make_stage
@@ -77,40 +74,25 @@ def _feature_diffs(
 _TARGET_BLOCK_BYTES = 8 << 20
 
 
-def _distribute_row_blocks(
-    stage: MatrixStage, n: int, subset: list[str] | None, prep_fn, kernel
+def _score_rows(
+    stage: MatrixStage, n: int, subset: list[str], prep_fn, kernel
 ) -> np.ndarray:
-    """Distribute the per-sample outer loop over a stream of the ``n`` row
-    indices. Each task: loads the reference matrix executor-side (cached per
-    worker, column-sliced to ``subset`` if given), runs
-    ``prep_fn(X, y) -> ctx`` once, and streams ``kernel(idx_chunk, ctx)``
-    partials over its probe row indices — chunked so the (chunk, n)
-    distance block stays ~8 MB. The driver only ever receives per-task
-    p-sized vectors."""
-    load = stage.loader(subset)
-    chunk = max(1, _TARGET_BLOCK_BYTES // (8 * max(n, 1)))
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        X, y, _ = load()
-        ctx = prep_fn(X, y)
-        total = None
-        for pdf in batches:
-            probe = pdf["id"].to_numpy(dtype=np.int64)
-            for s in range(0, len(probe), chunk):
-                part = kernel(probe[s : s + chunk], ctx)
-                total = part if total is None else total + part
-        if total is not None:
-            yield pd.DataFrame({"data": [total.tobytes()]})
-
-    # range is born partitioned — no Exchange needed
-    parts = max(stage.spark.sparkContext.defaultParallelism, 4)
-    probes = stage.spark.range(0, n, 1, parts)
-    rows = probes.mapInPandas(mapper, schema="data binary").collect()
-    out = None
-    for r in rows:
-        arr = np.frombuffer(r["data"], dtype=np.float64)
-        out = arr.copy() if out is None else out + arr
-    return out
+    """The per-sample outer loop over the ``n`` probe rows, summed:
+    ``prep_fn(X, y)`` once per task over the stage (column-sliced to
+    ``subset``), then ``kernel(idx_chunk, ctx)`` partials, chunked so the
+    (chunk, n) distance block stays ~8 MB. In-process within the ``pairs``
+    gate (n × n × p distance cells), else one job whose tasks each return
+    one p-sized vector."""
+    return stage.map_ids(
+        n,
+        "pairs",
+        n * n * len(subset),
+        lambda X, y, extras: prep_fn(X, y),
+        kernel,
+        chunk=max(1, _TARGET_BLOCK_BYTES // (8 * max(n, 1))),
+        reduce=True,
+        subset=subset,
+    )
 
 
 def _resolve_n_select(n_features_to_select, p: int) -> int:
@@ -278,7 +260,7 @@ class ReliefFSelector(_ReliefBase):
                     acc += update
                 return acc
 
-            scores = _distribute_row_blocks(stage, n, feature_cols, prep, kernel) / n
+            scores = _score_rows(stage, n, feature_cols, prep, kernel) / n
             self._finalize(scores, n_select)
             return self
         finally:
@@ -347,7 +329,7 @@ class SURFSelector(_ReliefBase):
                     acc += upd
                 return acc
 
-            scores = _distribute_row_blocks(stage, n, feature_cols, prep, kernel) / n
+            scores = _score_rows(stage, n, feature_cols, prep, kernel) / n
             self._finalize(scores, n_select)
             return self
         finally:
@@ -434,7 +416,7 @@ class MultiSURFSelector(_ReliefBase):
                     acc += miss_diffs - hit_diffs
                 return acc
 
-            scores = _distribute_row_blocks(stage, n, feature_cols, prep, kernel) / n
+            scores = _score_rows(stage, n, feature_cols, prep, kernel) / n
             self._finalize(scores, n_select)
             return self
         finally:

@@ -255,29 +255,103 @@ def test_relief_rejects_null_inputs(spark, stage_mode, col, match):
         )
 
 
+@pytest.mark.parametrize(
+    "make",
+    [
+        lambda: ReliefFSelector(n_features_to_select=2),
+        lambda: SURFSelector(n_features_to_select=2),
+        lambda: MultiSURFSelector(n_features_to_select=2, use_star=True),
+    ],
+    ids=["ReliefF", "SURF", "MultiSURFstar"],
+)
+def test_relief_in_process_matches_job(both_stages, force_path, driver_calls, make):
+    """The id-scoring kernel in-process iterates the job's own partitions,
+    batches and chunks, so the scores are bit-identical to the job's."""
+    import fastselect_spark.selection._stage as stage_mod
+
+    df, cols, small, _ = both_stages
+    combine = driver_calls(stage_mod, "_combine")
+    force_path("distributed")
+    job = make().fit(df, cols, "label", _stage=small)
+    in_job = len(combine)
+    force_path("driver")
+    local = make().fit(df, cols, "label", _stage=small)
+    assert len(combine) > in_job + 1, "the kernel did not run in-process"
+    np.testing.assert_array_equal(job.feature_importances_, local.feature_importances_)
+
+
+def test_mdr_in_process_matches_job(spark, force_path):
+    rng = np.random.RandomState(5)
+    pdf = pd.DataFrame({f"g{i}": rng.randint(0, 3, 90) for i in range(5)})
+    pdf["label"] = ((pdf["g0"] + pdf["g1"]) % 2).astype(int)
+    cols = [f"g{i}" for i in range(5)]
+    df = spark.createDataFrame(pdf)
+    st = make_stage(df, cols, "label", force="small")
+    try:
+        fits = []
+        for path in ("distributed", "driver"):
+            force_path(path)
+            m = MDRClassifier(k=2, cv=3)
+            m.feature_cols_ = cols
+            fits.append(m._fit_on_stage(st, None))
+        a, b = fits
+        assert a.best_interaction_ == b.best_interaction_
+        assert a.best_cvc_ == b.best_cvc_
+        assert a.best_mean_testing_ba_ == b.best_mean_testing_ba_
+        np.testing.assert_array_equal(
+            a.best_model_lookup_table_, b.best_model_lookup_table_
+        )
+    finally:
+        st.cleanup()
+
+
 def _fit_mdr(df, cols):
     return MDRClassifier(k=2, cv=3).fit(df, cols, "label", fold_col="fold")
 
 
+_relieff_small = lambda df, cols: ReliefFSelector(2, stage_mode="small").fit(df, cols)  # noqa: E731
+
+
 @pytest.mark.parametrize(
-    "fit, jobs",
+    "fit, path, jobs",
     [
-        (_fit_mdr, 2),
-        (lambda df, cols: ReliefFSelector(2, stage_mode="small").fit(df, cols), 2),
-        (lambda df, cols: ReliefFSelector(2, stage_mode="staged").fit(df, cols), 4),
+        (_fit_mdr, "distributed", 2),
+        (_relieff_small, "distributed", 2),
+        (
+            lambda df, cols: ReliefFSelector(2, stage_mode="staged").fit(df, cols),
+            "auto",
+            4,
+        ),
+        (_fit_mdr, "driver", 1),
+        (_relieff_small, "driver", 1),
     ],
-    ids=["mdr_small", "relieff_small", "relieff_staged"],
+    ids=[
+        "mdr_small",
+        "relieff_small",
+        "relieff_staged",
+        "mdr_small_in_process",
+        "relieff_small_in_process",
+    ],
 )
-def test_jobs_per_fit(spark, fit, jobs):
-    """Stage, whole-matrix reads and the one distributed kernel: a small
-    fit runs its reads on the driver; a staged one runs each in one task."""
+def test_jobs_per_fit(spark, monkeypatch, fit, path, jobs):
+    """Stage, whole-matrix reads and the id-scoring kernel: a small fit
+    runs its reads on the driver and its kernel in one job, or in-process
+    within the ``pairs`` gate; a staged one runs each in one task."""
+    real = gates.use_driver
+
+    def gate(df, op, **kwargs):
+        if op == "pairs" and path != "auto":
+            return path == "driver"
+        return real(df, op, **kwargs)
+
+    monkeypatch.setattr(gates, "use_driver", gate)
     pdf = pd.DataFrame({f"g{i}": np.arange(30) * (i + 1) % 3 for i in range(4)})
     pdf["label"] = np.arange(30) % 2
     pdf["fold"] = np.arange(30) % 3
     df = spark.createDataFrame(pdf).persist()
     df.count()
     sc = spark.sparkContext
-    group = f"jobs-per-fit-{id(fit)}"
+    group = f"jobs-per-fit-{id(fit)}-{path}"
     sc.setJobGroup(group, group)
     try:
         fit(df, ["g0", "g1", "g2", "g3"])
