@@ -59,10 +59,11 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     over 400 cached rows: ~2 s as 32 tasks, ~0.35 s as 4, local[4]), and a
     persisted frame keeps all its shuffle partitions because AQE does not
     coalesce a cached plan. A frame Catalyst cannot size is left as it is.
-    The count is read from the plan (``gates.plan_partitions``), so a
-    shuffled input runs no job here."""
+    The count is read from the plan (``gates.plan_partitions``): a shuffle
+    that has not run counts as the partitions AQE is expected to coalesce
+    it to, so a sized shuffled input runs no job here."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    n = gates.plan_partitions(df)
+    n = gates.plan_partitions(df, coalesced=True)
     if n < max(2, target // 2):
         return df.repartition(target)
     if n > target:

@@ -8,7 +8,7 @@ numeric projection is materialized behind a size-gated
 for kilobyte matrices, distributed parquet stage above — the driver never
 materializes a row on the scale path); the PER-SAMPLE outer loop is then
 ``MatrixStage.map_ids`` over the row indices (in-process on a small stage
-within the ``pairs`` gate, else one ``mapInPandas`` job), with each task reading the full reference matrix executor-side (cached per
+within the ``relief`` gate, else one ``mapInPandas`` job), with each task reading the full reference matrix executor-side (cached per
 worker process) and emitting one per-feature partial score vector, merged by
 summation (the distributed equivalent of the reference's thread-private
 ``temp[n, p]`` accumulator, ReliefF.py:141,219-220). Probe rows are
@@ -80,12 +80,12 @@ def _score_rows(
     """The per-sample outer loop over the ``n`` probe rows, summed:
     ``prep_fn(X, y)`` once per task over the stage (column-sliced to
     ``subset``), then ``kernel(idx_chunk, ctx)`` partials, chunked so the
-    (chunk, n) distance block stays ~8 MB. In-process within the ``pairs``
+    (chunk, n) distance block stays ~8 MB. In-process within the ``relief``
     gate (n × n × p distance cells), else one job whose tasks each return
     one p-sized vector."""
     return stage.map_ids(
         n,
-        "pairs",
+        "relief",
         n * n * len(subset),
         lambda X, y, extras: prep_fn(X, y),
         kernel,

@@ -32,6 +32,34 @@ def test_generator_deterministic():
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_featurize_plan_shape(spark, transcripts_pdf):
+    """The whole feature stack shares ONE conv_id exchange, three sorts and
+    six Window operators, and emits its columns in a fixed order. The
+    columns are added one ``withColumns`` per Window operator, so a change
+    in how Catalyst groups them shows here first."""
+    import re
+
+    df = spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPT_SCHEMA)
+    feat = featurize_transcripts(df)
+    plan = feat._jdf.queryExecution().executedPlan().toString()
+    shape = {
+        op: len(re.findall(pattern, plan))
+        for op, pattern in [
+            ("exchange", r"\bExchange "),
+            ("sort", r"\bSort \["),
+            ("window", r"\bWindow \["),
+        ]
+    }
+    assert shape == {"exchange": 1, "sort": 3, "window": 6}
+    assert feat.columns == [
+        *TRANSCRIPT_SCHEMA.fieldNames(),
+        "n_tokens", "turn_seq", "turn_gap_s", "session_start", "session_id",
+        "role_changed", "role_run_id", "role_run_len", "tokens_sum_5",
+        "tokens_avg_5", "tokens_std_5", "tokens_sum_10m", "tool_calls_so_far",
+        "n_tokens_lag1", "role_match_lag1", "label",
+    ]
+
+
 def test_text_equality_invariant(transcripts_pdf, feat_pdf):
     """Per-turn text byte-equality under stable (conv_id, turn_idx) order."""
     src = transcripts_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)

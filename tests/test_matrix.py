@@ -34,6 +34,17 @@ def coded(spark):
 
 
 @pytest.fixture(scope="module")
+def wide_real(spark):
+    """Real-valued wide rows over six partitions: the job's Arrow batches
+    (capped in bytes) and the collect's differ, so float sums can too."""
+    rng = np.random.default_rng(5)
+    n, p = 400, 2000
+    X = rng.random((n, p)) * 4
+    y = rng.integers(0, 3, n).astype(np.float64)
+    return X, y, matrix_table(spark, X, y, n_partitions=6)
+
+
+@pytest.fixture(scope="module")
 def odd_labels(spark):
     """Non-integer and negative labels, one class in a single partition:
     the per-partition class keying must merge and order classes a task
@@ -110,17 +121,19 @@ def test_fisher_matrix_matches_column_mode(spark, data, request):
     np.testing.assert_allclose(got, want, rtol=1e-10, atol=1e-12)
 
 
-@pytest.mark.parametrize(
-    "scorer",
-    [chi2_matrix, fisher_matrix, lambda df: mi_relevance_matrix(df, n_states=5)],
-    ids=["chi2_matrix", "fisher_matrix", "mi_relevance_matrix"],
-)
-def test_wide_scorers_run_one_job(spark, coded, scorer):
-    """One Spark job per call: no class scan, no batch-size probe."""
+_MOMENT_SCORERS = [
+    chi2_matrix,
+    fisher_matrix,
+    lambda df: mi_relevance_matrix(df, n_states=5),
+]
+_MOMENT_IDS = ["chi2_matrix", "fisher_matrix", "mi_relevance_matrix"]
+
+
+def _jobs_of(spark, df, scorer, path: str) -> int:
     sc = spark.sparkContext
-    df = coded[2].persist()
+    df = df.persist()
     df.count()
-    group = f"one-job-{id(scorer)}"
+    group = f"one-job-{path}-{id(scorer)}"
     sc.setJobGroup(group, group)
     try:
         scorer(df)
@@ -128,7 +141,83 @@ def test_wide_scorers_run_one_job(spark, coded, scorer):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         df.unpersist()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("scorer", _MOMENT_SCORERS, ids=_MOMENT_IDS)
+def test_wide_scorers_run_one_job(spark, coded, scorer):
+    """One Spark job per call: no class scan, no batch-size probe."""
+    assert _jobs_of(spark, coded[2], scorer, "auto") == 1
+
+
+@pytest.mark.parametrize("scorer", _MOMENT_SCORERS, ids=_MOMENT_IDS)
+def test_wide_scorers_distributed_run_one_job(spark, coded, force_path, scorer):
+    """Beyond the ``moments`` gate the kernel is one mapInArrow job."""
+    force_path("distributed")
+    assert _jobs_of(spark, coded[2], scorer, "distributed") == 1
+
+
+@pytest.mark.parametrize(
+    "scorer, data",
+    [
+        ("chi2_matrix", "coded"),
+        ("chi2_matrix", "odd_labels"),
+        ("fisher_matrix", "coded"),
+        ("fisher_matrix", "odd_labels"),
+        ("mi_relevance_matrix", "coded"),
+        ("chi2_matrix", "wide_real"),
+        ("fisher_matrix", "wide_real"),
+    ],
+)
+def test_moments_paths_agree(request, force_path, driver_calls, scorer, data):
+    """The in-process twin runs the job's own partial per partition and
+    merges in partition order. Integer-coded inputs match bit for bit; on
+    real-valued wide rows the two paths batch the rows differently and the
+    sums differ in the last bits (measured up to 4.6e-13 relative at
+    2000 x 2000, local[4]), so the bound is 1e-12."""
+    import fastselect_spark.selection._agg as aggmod
+
+    fn = dict(zip(_MOMENT_IDS, _MOMENT_SCORERS))[scorer]
+    df = request.getfixturevalue(data)[2]
+    local = driver_calls(aggmod, "_reduce_local")
+    out = {}
+    for path in ("distributed", "driver"):
+        force_path(path)
+        res = fn(df)
+        out[path] = res[0] if isinstance(res, tuple) else res
+        assert len(local) == (path == "driver"), f"{path} ran the wrong kernel"
+    np.testing.assert_allclose(out["driver"], out["distributed"], rtol=1e-12, atol=0)
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+@pytest.mark.parametrize(
+    "scorer, bad",
+    [(s, b) for s in _MOMENT_IDS for b in ("null", "nan", "empty")]
+    + [("chi2_matrix", "negative")],
+)
+def test_moments_bad_input_raises_on_both_paths(spark, force_path, scorer, bad, path):
+    """NULL/NaN labels, an empty frame and (chi2) a negative value raise
+    the same ValueError in and beyond the ``moments`` gate."""
+    labels = [0.0, 1.0, 2.0, 0.0, 1.0, 2.0]
+    if bad in ("null", "nan"):
+        labels[2] = None if bad == "null" else float("nan")
+    rows = [
+        (i, [float(i % 3), float(-1 if bad == "negative" else i % 2)], lab)
+        for i, lab in enumerate(labels)
+    ]
+    df = spark.createDataFrame(
+        [] if bad == "empty" else rows, "id long, features array<double>, y double"
+    )
+    match = {
+        "null": "label column 'y' has NULL or NaN",
+        "nan": "label column 'y' has NULL or NaN",
+        "empty": "input DataFrame is empty",
+        "negative": "non-negative",
+    }[bad]
+    force_path(path)
+    fn = dict(zip(_MOMENT_IDS, _MOMENT_SCORERS))[scorer]
+    with pytest.raises(ValueError, match=match):
+        fn(df)
 
 
 def test_session_caps_wide_arrow_batches(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import itertools
 
 import pytest
+from pyspark.sql import functions as F
 
 from fastselect_spark.dedup.minhash import (
     add_minhash_signature,
@@ -50,6 +51,39 @@ def test_ensure_parallelism_sizes_to_slots(spark, monkeypatch):
         slots, slots, 32, 32, 100
     ]
     cached.unpersist()
+
+
+def test_ensure_parallelism_unpersisted_shuffle_runs_no_job(spark):
+    """An unpersisted ``dedup_exact`` output has a shuffle that has not
+    run: asking its RDD for the count would run the map stage as a job.
+    The plan's count is read instead, and a shuffle AQE would coalesce to
+    one partition still takes the repartition-to-slots branch. Once the
+    frame has run, its final plan reports the coalesced count. (A frame
+    Catalyst cannot size still asks the RDD, keeping today's decision.)"""
+    from fastselect_spark.dedup.exact import dedup_exact
+
+    sc = spark.sparkContext
+    docs = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.format_string("doc %d text", F.col("id") % 7).alias("text"),
+    )
+    kept = dedup_exact(docs)
+    group = "ensure-parallelism-shuffle"
+    sc.setJobGroup(group, group)
+    try:
+        planned = gates.plan_partitions(kept)
+        expected = gates.plan_partitions(kept, coalesced=True)
+        out = ensure_parallelism(kept)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert (planned, expected) == (8, 1)
+    assert "Repartition" in out._jdf.queryExecution().optimizedPlan().toString()
+    assert _parts(out) == sc.defaultParallelism
+    assert out.count() == 7
+    kept.collect()
+    assert gates.plan_partitions(kept) == gates.plan_partitions(kept, coalesced=True) == 1
 
 
 def _brute_force(df, threshold, num_hashes, bands, hash_family):

@@ -336,11 +336,12 @@ _relieff_small = lambda df, cols: ReliefFSelector(2, stage_mode="small").fit(df,
 def test_jobs_per_fit(spark, monkeypatch, fit, path, jobs):
     """Stage, whole-matrix reads and the id-scoring kernel: a small fit
     runs its reads on the driver and its kernel in one job, or in-process
-    within the ``pairs`` gate; a staged one runs each in one task."""
+    within its gate (``relief`` or ``pairs``); a staged one runs each in
+    one task."""
     real = gates.use_driver
 
     def gate(df, op, **kwargs):
-        if op == "pairs" and path != "auto":
+        if op in ("relief", "pairs") and path != "auto":
             return path == "driver"
         return real(df, op, **kwargs)
 
