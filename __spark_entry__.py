@@ -1459,20 +1459,20 @@ def _q_cmim_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_fcbf_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FCBF (Yu & Liu 2003): rank by SU(f;Y), eliminate features whose
     surviving predecessor correlates with them more than the label does.
-    SU reuses the CFS scalar; joint tables reuse the JMI single pass. The
+    One fit: the joint tables come from the JMI single pass, and SU(f;Y)
+    is the fit's ``su_y_`` from the shared stacked SU finalizer. The
     oracle recomputes SU (no-eps MI + entropies) and unrolls the
     rank/eliminate recursion for the 4-feature contract."""
-    from fastselect_spark.selection import fcbf_select
-    from fastselect_spark.selection.cfs import symmetrical_uncertainty
-    from fastselect_spark.selection.jmi import _joint_tables
+    from fastselect_spark.selection import FCBFSelector
 
     _register(spark, sf_dir, "lineitem")
     m = spark.sql(_LINEITEM_CODES_SQL)
-    idx = fcbf_select(m, _MI_FEATURES, "y")
-    rel_t, _, _, _ = _joint_tables(m, _MI_FEATURES, "y")
-    su_y = [symmetrical_uncertainty(rel_t[f]) for f in range(len(_MI_FEATURES))]
+    fit = FCBFSelector().fit(m, _MI_FEATURES, "y")
     df = spark.createDataFrame(
-        [(r, _MI_FEATURES[i], float(su_y[i])) for r, i in enumerate(idx)],
+        [
+            (r, _MI_FEATURES[i], float(fit.su_y_[i]))
+            for r, i in enumerate(fit.top_features_)
+        ],
         schema="rank int, feature string, su double",
     )
     return df.select("rank", "feature", F.round("su", 6).alias("su"))
@@ -4978,8 +4978,8 @@ FROM (
 ) rk JOIN feats f USING (fid)
 """
 
-# FCBF (Yu & Liu 2003): SU = 2*I/(Hx+Hy) with the CFS scalar's no-eps MI
-# (cfs.symmetrical_uncertainty), NOT the rel CTE's eps form — recomputed
+# FCBF (Yu & Liu 2003): SU = 2*I/(Hx+Hy) with CFS's no-eps MI
+# (_stats.su_tables), NOT the rel CTE's eps form — recomputed
 # here from the same count tables. Rank by SU(f;Y) desc, then the
 # predominance elimination is unrolled per rank: rank j survives iff no
 # SURVIVING rank i<j has SU(i,j) >= SU(j;Y).

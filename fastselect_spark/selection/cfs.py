@@ -4,8 +4,10 @@
 Distributed part: discretize/encode columns (uniform binning from one
 min/max agg; per-column distinct vocab for non-float columns) and build ALL
 feature-class + feature-feature joint histograms in one vectorized pass
-(flat-packed int64 count arrays merged by the tree reduction). Driver part:
-symmetrical uncertainty, best-first search with the 0.1 relevance floor,
+(one int64 ``_stats.contingency_tables`` stack per table shape, merged by
+the tree reduction). Driver part: symmetrical uncertainty (one
+``_stats.su_tables`` call per table shape, on both stages and both pair-job
+paths), best-first search with the 0.1 relevance floor,
 redundancy pruning, merit — exactly the reference's search semantics
 (CFS.py:114-162, 106-112, 11-23).
 
@@ -51,7 +53,13 @@ from fastselect_spark.selection._agg import (
     tree_reduce_ndarrays,
     triu_pair,
 )
+from fastselect_spark.selection._stats import (
+    contingency_tables,
+    su_tables,
+    table_blocks,
+)
 from fastselect_spark.selection._validate import validate_transform_input
+from fastselect_spark.selection.mi import _label_and_pairs, _split_pairs
 
 
 def cfs_merit(sum_r_cf: float, k: int, sum_r_ff: float) -> float:
@@ -61,36 +69,6 @@ def cfs_merit(sum_r_cf: float, k: int, sum_r_ff: float) -> float:
     r_ff_avg = (2.0 * sum_r_ff) / (k * (k - 1)) if k > 1 else 0.0
     denom = math.sqrt(k + k * (k - 1) * r_ff_avg)
     return (k * r_cf_avg / denom) if denom > 1e-12 else 0.0
-
-
-def _entropy(counts: np.ndarray) -> float:
-    n = counts.sum()
-    if n == 0:
-        return 0.0
-    p = counts / n
-    p = p[p > 1e-12]
-    return float(-(p * np.log2(p)).sum())
-
-
-def _mi_log2(table: np.ndarray) -> float:
-    n = table.sum()
-    if n == 0:
-        return 0.0
-    p = table / n
-    px = p.sum(axis=1)
-    py = p.sum(axis=0)
-    mask = (p > 1e-12) & (px[:, None] > 1e-12) & (py[None, :] > 1e-12)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        contrib = p * np.log2(p / (px[:, None] * py[None, :]))
-    return float(contrib[mask].sum())
-
-
-def symmetrical_uncertainty(table: np.ndarray) -> float:
-    h_x = _entropy(table.sum(axis=1))
-    h_y = _entropy(table.sum(axis=0))
-    if h_x + h_y < 1e-12:
-        return 0.0
-    return 2.0 * _mi_log2(table) / (h_x + h_y)
 
 
 def best_first_search(
@@ -238,48 +216,73 @@ def kmeans_bin_edges(
     return edges
 
 
-def su_matrix(p: int, table_of) -> np.ndarray:
-    """Symmetric (p, p) SU matrix with a zero diagonal from per-pair count
-    tables: ``table_of(n, i, j)`` is the table of the n-th upper-triangle
-    pair (i, j), in ``np.triu_indices(p, 1)`` order."""
-    iu, ju = np.triu_indices(p, k=1)
-    su = [
-        symmetrical_uncertainty(table_of(n, i, j))
-        for n, (i, j) in enumerate(zip(iu.tolist(), ju.tolist()))
-    ]
-    return symmetric_from_triu(su, p)
+def _shape_groups(ns: np.ndarray, I: np.ndarray, J: np.ndarray) -> dict:
+    """{(k_i, k_j): positions t} of the row pairs (I[t], J[t]) by the shape
+    of their table, row r having ``ns[r]`` states. Each shape is stacked
+    and finalized on its own: zero-padding a table to a larger shape
+    changes its summation order, hence its SU bits."""
+    ki, kj = ns[I], ns[J]
+    return {
+        (a, b): np.flatnonzero((ki == a) & (kj == b))
+        for a, b in sorted(set(zip(ki.tolist(), kj.tolist())))
+    }
 
 
-def _su_redundancy_broadcast(
-    spark, codes: np.ndarray, n_states: np.ndarray
-) -> np.ndarray:
-    """(p, p) symmetrical-uncertainty redundancy as one :func:`pair_job`
-    over the upper triangle — the p-large diet for the redundancy pass (the
-    one-pass cube's flat ff accumulator is Σ k_i·k_j over all p(p−1)/2
-    pairs: ~100 MB per partition at p=500, allocated AND tree-merged by
-    every worker). Within the ``pairs`` gate the kernel runs in-process on
-    the coded matrix; beyond it the matrix is broadcast once, each task
-    decodes its pair ids with :func:`triu_pair` and ships back only their SU
-    floats, and the broadcast is released even when the job raises.
-    Each pair's integer contingency table is identical to the cube path's
-    (counts are partition-invariant), and the scalar
-    :func:`symmetrical_uncertainty` is reused per pair, so the SU values are
-    bit-identical — the selection result cannot differ between the two
-    stages."""
-    codes = np.ascontiguousarray(codes.T)  # (p, n): pair gather = 2 row copies
-    p, n = codes.shape
+def _count_tables(groups: dict, I: np.ndarray, J: np.ndarray, code_rows) -> dict:
+    """(k_i, k_j) -> int64 count stack of the joint tables of the row
+    pairs (I[t], J[t]) of ``groups``, summed over an iterable of (rows, n)
+    code matrices: one :func:`contingency_tables` call per block of one
+    shape."""
+    acc = {
+        (a, b): np.zeros((len(pos), a, b), dtype=np.int64)
+        for (a, b), pos in groups.items()
+    }
+    for Xt in code_rows:
+        for (a, b), pos in groups.items():
+            for blk in table_blocks(len(pos), a * b, Xt.shape[1]):
+                acc[a, b][blk] += contingency_tables(
+                    Xt[I[pos[blk]]], Xt[J[pos[blk]]], a, b
+                )
+    return acc
+
+
+def _su_of(groups: dict, tables: dict, m: int) -> np.ndarray:
+    """SU of ``m`` pair tables from their per-shape stacks: one
+    :func:`su_tables` call per shape."""
+    su = np.empty(m, dtype=np.float64)
+    for key, pos in groups.items():
+        su[pos] = su_tables(tables[key])
+    return su
+
+
+def _su_pairs(Xt: np.ndarray, ns: np.ndarray, I: np.ndarray, J: np.ndarray):
+    """SU of the code-row pairs (I[t], J[t]), row r having ``ns[r]``
+    states."""
+    groups = _shape_groups(ns, I, J)
+    return _su_of(groups, _count_tables(groups, I, J, [Xt]), len(I))
+
+
+def _su_redundancy_broadcast(spark, Xt: np.ndarray, ns: np.ndarray, p: int) -> np.ndarray:
+    """(p, p) symmetrical-uncertainty redundancy of the first p rows of the
+    (rows, n) code matrix ``Xt`` as one :func:`pair_job` over the upper
+    triangle — the p-large diet for the redundancy pass (the one-pass
+    cube's ff accumulator is Σ k_i·k_j over all p(p−1)/2 pairs: ~100 MB
+    per partition at p=500, allocated AND tree-merged by every worker).
+    Within the ``pairs`` gate the kernel runs in-process on the coded
+    matrix; beyond it the matrix is broadcast once, each task decodes its
+    pair ids with :func:`triu_pair` and ships back only their SU floats,
+    and the broadcast is released even when the job raises. Each pair's
+    integer table is identical to the cube path's (counts are
+    partition-invariant) and both paths finalize it with :func:`su_tables`
+    at its own shape, which gives a table the same bits at any position of
+    any stack — so the selection cannot differ between the two stages or
+    the two gate paths."""
 
     def score(ids: np.ndarray, data) -> np.ndarray:
-        Xt, ns = data
-        out = np.empty(len(ids), dtype=np.float64)
-        for t, (i, j) in enumerate(zip(*triu_pair(ids, p))):
-            ki, kj = int(ns[i]), int(ns[j])
-            table = np.bincount(Xt[i] * kj + Xt[j], minlength=ki * kj).reshape(ki, kj)
-            out[t] = symmetrical_uncertainty(table)
-        return out
+        return _su_pairs(*data, *triu_pair(ids, p))
 
-    with LazyBroadcast(spark, (codes, n_states.astype(np.int64))) as data:
-        su = pair_job(spark, p * (p - 1) // 2, score, data, n, tasks_per_core=4)
+    with LazyBroadcast(spark, (Xt, ns)) as data:
+        su = pair_job(spark, p * (p - 1) // 2, score, data, Xt.shape[1], tasks_per_core=4)
     return symmetric_from_triu(su, p)
 
 
@@ -325,8 +328,8 @@ class CFSSelector:
         # is free instead of a p-branch min/max agg plus a p-branch
         # collect_set agg (wide multi-branch aggs cost seconds of codegen
         # alone). Beyond the gate the n-independent one-pass cube is the
-        # only row-scalable option; its flat ff accumulator, Σ k_i·k_j
-        # over p(p−1)/2 pairs, is the documented cost.
+        # only row-scalable option; its pair-table stacks, Σ k_i·k_j cells
+        # over p(p−1)/2 pairs, are the documented cost.
         use_small = (
             gates.use_driver(proj, "cfs")
             if self.stage_mode == "auto"
@@ -433,78 +436,51 @@ class CFSSelector:
             n_states[i] = self.n_bins if is_cont[i] else len(vocabs[i])
         n_y = len(y_vocab)
 
-        def encode_rows(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-            """(n, p+1) raw float64 -> (codes (n, p) int64, y codes) — the
-            single coding rule shared by both stages, so their integer
-            contingency tables (and hence every SU value) are identical."""
-            codes = np.empty((len(arr), p), dtype=np.int64)
+        def encode_rows(arr: np.ndarray) -> np.ndarray:
+            """(n, p+1) raw float64 -> (p+1, n) int64 code rows, the label
+            last (it has ``n_y`` states) — the single coding rule shared by
+            both stages, so their integer contingency tables (and hence
+            every SU value) are identical."""
+            Xt = np.empty((p + 1, len(arr)), dtype=np.int64)
             for i in range(p):
                 if is_cont[i]:
                     e = edges[i]
-                    codes[:, i] = np.clip(
+                    Xt[i] = np.clip(
                         np.searchsorted(e[1:-1], arr[:, i], side="right"),
                         0,
                         max(len(e) - 2, 0),
                     )
                 else:
-                    codes[:, i] = np.searchsorted(vocabs[i], arr[:, i])
-            return codes, np.searchsorted(y_vocab, arr[:, p])
+                    Xt[i] = np.searchsorted(vocabs[i], arr[:, i])
+            Xt[p] = np.searchsorted(y_vocab, arr[:, p])
+            return Xt
 
+        ns = np.append(n_states, n_y)
         if use_small:
-            codes, yc = encode_rows(arr)
-            r_cf = np.zeros(p, dtype=np.float64)
-            for i in range(p):
-                table = np.bincount(
-                    codes[:, i] * n_y + yc, minlength=int(n_states[i] * n_y)
-                ).reshape(int(n_states[i]), n_y)
-                r_cf[i] = symmetrical_uncertainty(table)
+            Xt = encode_rows(arr)
+            r_cf = _su_pairs(Xt, ns, np.arange(p), np.full(p, p))
             if p > 1:
-                r_ff = _su_redundancy_broadcast(
-                    df.sparkSession, codes, n_states
-                )
+                r_ff = _su_redundancy_broadcast(df.sparkSession, Xt, ns, p)
             else:
                 r_ff = np.zeros((p, p), dtype=np.float64)
         else:
-            # --- flat-packed histogram layout (n-scalable cube) ---
-            pairs = [(i, j) for i in range(p) for j in range(i + 1, p)]
-            cf_sizes = [int(n_states[i] * n_y) for i in range(p)]
-            ff_sizes = [int(n_states[i] * n_states[j]) for i, j in pairs]
-            cf_off = np.concatenate([[0], np.cumsum(cf_sizes)])
-            ff_off = np.concatenate([[0], np.cumsum(ff_sizes)])
-            total_cf, total_ff = int(cf_off[-1]), int(ff_off[-1])
+            # --- n-scalable cube: one count stack per table shape ---
+            I, J = _label_and_pairs(p, True)
+            groups = _shape_groups(ns, I, J)
 
             def partial(batches: Iterator[pd.DataFrame]) -> dict[str, np.ndarray]:
-                cf = np.zeros(total_cf, dtype=np.int64)
-                ff = np.zeros(total_ff, dtype=np.int64)
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    codes, yc = encode_rows(pdf.to_numpy(dtype=np.float64))
-                    for i in range(p):
-                        size = int(cf_off[i + 1] - cf_off[i])
-                        cf[cf_off[i] : cf_off[i + 1]] += np.bincount(
-                            codes[:, i] * n_y + yc, minlength=size
-                        )
-                    for pi, (i, j) in enumerate(pairs):
-                        size = int(ff_off[pi + 1] - ff_off[pi])
-                        ff[ff_off[pi] : ff_off[pi + 1]] += np.bincount(
-                            codes[:, i] * n_states[j] + codes[:, j], minlength=size
-                        )
-                return {"cf": cf, "ff": ff}
+                code_rows = (
+                    encode_rows(pdf.to_numpy(dtype=np.float64))
+                    for pdf in batches
+                    if not pdf.empty
+                )
+                acc = _count_tables(groups, I, J, code_rows)
+                return {f"{a}x{b}": T for (a, b), T in acc.items()}
 
             merged = tree_reduce_ndarrays(proj, partial)
-            cf, ff = merged["cf"], merged["ff"]
-
-            r_cf = np.zeros(p, dtype=np.float64)
-            for i in range(p):
-                table = cf[cf_off[i] : cf_off[i + 1]].reshape(n_states[i], n_y)
-                r_cf[i] = symmetrical_uncertainty(table)
-            r_ff = su_matrix(
-                p,
-                lambda n, i, j: ff[ff_off[n] : ff_off[n + 1]].reshape(
-                    n_states[i], n_states[j]
-                ),
-            )
+            tables = {(a, b): merged[f"{a}x{b}"] for a, b in groups}
+            su = _su_of(groups, tables, len(I))
+            r_cf, r_ff = _split_pairs(su, p, True)
 
         self.r_cf_ = r_cf
         self.r_ff_ = r_ff

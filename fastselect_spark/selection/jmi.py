@@ -27,13 +27,13 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fastselect_spark.selection._stats import mi_from_contingency
-from fastselect_spark.selection.mi import (
-    _pair_index,
-    check_states,
-    shared_vocabulary,
-    value_cube,
+from fastselect_spark.selection._agg import symmetric_from_triu
+from fastselect_spark.selection._stats import (
+    contingency_tables,
+    mi_tables,
+    table_blocks,
 )
+from fastselect_spark.selection.mi import check_states, shared_vocabulary, value_cube
 from fastselect_spark.selection._validate import validate_transform_input
 
 
@@ -41,7 +41,8 @@ def _joint_tables_cube(
     df: DataFrame, feature_cols: list[str], label_col: str
 ) -> tuple[np.ndarray, np.ndarray, int, int] | None:
     """Cube-first build: ONE value cube, vocabularies derived FROM the
-    cube, every relevance/pair table a weighted-bincount marginalization.
+    cube, every relevance/pair table a cube-count-weighted
+    ``contingency_tables`` stack.
     Returns None when the joint cube exceeds the cap (caller falls back to
     melt)."""
     p = len(feature_cols)
@@ -53,20 +54,17 @@ def _joint_tables_cube(
     yvocab = np.unique(raw[:, p])
     k, ky = len(fvocab), len(yvocab)
     check_states(k)
-    fcodes = np.searchsorted(fvocab, raw[:, :p])
+    fcodes = np.ascontiguousarray(np.searchsorted(fvocab, raw[:, :p]).T)
     ycodes = np.searchsorted(yvocab, raw[:, p])
-    rel = np.zeros((p, k, ky), dtype=np.int64)
-    for f in range(p):
-        rel[f] = np.bincount(
-            fcodes[:, f] * ky + ycodes, weights=counts, minlength=k * ky
-        ).reshape(k, ky)
-    pairs = _pair_index(p)
-    pair = np.zeros((len(pairs), k * k, ky), dtype=np.int64)
-    for n, (i, j) in enumerate(pairs):
-        fused = (fcodes[:, i] * k + fcodes[:, j]) * ky + ycodes
-        pair[n] = np.bincount(
-            fused, weights=counts, minlength=k * k * ky
-        ).reshape(k * k, ky)
+    n = len(counts)
+    rel = np.empty((p, k, ky), dtype=np.int64)
+    for b in table_blocks(p, k * ky, n):
+        rel[b] = contingency_tables(fcodes[b], ycodes, k, ky, weights=counts)
+    iu, ju = np.triu_indices(p, 1)
+    pair = np.empty((len(iu), k * k, ky), dtype=np.int64)
+    for b in table_blocks(len(iu), k * k * ky, n):
+        fused = fcodes[iu[b]] * k + fcodes[ju[b]]
+        pair[b] = contingency_tables(fused, ycodes, k * k, ky, weights=counts)
     return rel, pair, k, ky
 
 
@@ -98,7 +96,7 @@ def _joint_tables(
         yarr = F.array(*[F.lit(float(v)) for v in yvocab])
         ycode = (F.array_position(yarr, ycol) - 1).cast("long")
 
-    pairs = _pair_index(p)
+    pairs = [(i, j) for i in range(p) for j in range(i + 1, p)]
     slots = []
     for f in range(p):
         slots.append(
@@ -132,14 +130,8 @@ def joint_mi_matrices(
     """(relevance[p], joint_mi[p, p]) with relevance[f] = I(X_f; Y) and
     joint_mi[i, j] = I((X_i, X_j); Y), symmetric, from one joint-table
     pass."""
-    p = len(feature_cols)
     rel_t, pair_t, _, _ = _joint_tables(df, feature_cols, label_col)
-    relevance = np.array([mi_from_contingency(rel_t[f], unit=unit) for f in range(p)])
-    joint_mi = np.zeros((p, p))
-    for n, (i, j) in enumerate(_pair_index(p)):
-        m = mi_from_contingency(pair_t[n], unit=unit)
-        joint_mi[i, j] = joint_mi[j, i] = m
-    return relevance, joint_mi
+    return mi_tables(rel_t, unit), symmetric_from_triu(mi_tables(pair_t, unit), len(rel_t))
 
 
 def jmi_loop(

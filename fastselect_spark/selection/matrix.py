@@ -56,9 +56,11 @@ from fastselect_spark.selection._agg import (
 from fastselect_spark.selection._stats import (
     chi2_sf,
     chi2_stats_from_observed,
+    contingency_tables,
     fisher_from_moments,
     log_base,
-    mi_from_contingency,
+    mi_tables,
+    table_blocks,
 )
 from fastselect_spark.selection._validate import check_labels
 from fastselect_spark.selection.cmim import cmim_loop
@@ -245,17 +247,13 @@ def mi_relevance_matrix(
                 raise ValueError("codes out of [0, n_states) for MI relevance")
             nb, p = Xv.shape
             if hist is None:
-                hist = np.zeros((p, k * k), dtype=np.int64)
+                hist = np.zeros((p, k, k), dtype=np.int64)
             step = max(1, (1 << 17) // max(1, nb))
             for c0 in range(0, p, step):
                 Xb = Xv[:, c0 : c0 + step].astype(np.int64)
                 if (Xb < 0).any() or (Xb >= k).any():
                     raise ValueError("codes out of [0, n_states) for MI relevance")
-                fused = Xb * k + yb[:, None]  # (nb, chunk)
-                # one bincount per feature over fused codes (CLAUDE.md:
-                # bincount beats np.add.at ~10x on fused codes)
-                for f in range(fused.shape[1]):
-                    hist[c0 + f] += np.bincount(fused[:, f], minlength=k * k)
+                hist[c0 : c0 + step] += contingency_tables(Xb.T, yb, k, k)
         return {"hist": hist, "bad": np.array([bad])} if hist is not None else {}
 
     merged = tree_reduce_ndarrays_arrow(proj, partial)
@@ -263,60 +261,27 @@ def mi_relevance_matrix(
         raise ValueError("mi_relevance_matrix: input DataFrame is empty")
     if merged["bad"][0]:
         check_labels([None], label_col)
-    hist = merged["hist"]
-    p = hist.shape[0]
-    return np.array(
-        [mi_from_contingency(hist[f].reshape(k, k), unit=unit) for f in range(p)]
-    )
+    return mi_tables(merged["hist"], unit)
 
 
-def _mi_rows(X, Y, kx, ky, base):
-    """MI per row of two code arrays broadcasting to (m, n): one bincount
-    of the fused codes ``X*ky + Y`` builds the m (kx, ky) joint tables, then
-    the reference's eps placement (mutual_information.py:40-45) per table.
-    The finalizer both block kernels share."""
-    m, n_rows = X.shape
-    cells = kx * ky
-    eps = 1e-12
-    flat = (np.arange(m, dtype=np.int64)[:, None] * cells + (X * ky + Y)).ravel()
-    T = (
-        np.bincount(flat, minlength=m * cells)
-        .reshape(m, kx, ky)
-        .astype(np.float64)
-    )
-    Pm = T / n_rows
-    px = Pm.sum(axis=2, keepdims=True)
-    py = Pm.sum(axis=1, keepdims=True)
-    denom = px * py + eps
-    mask = Pm > eps
-    contrib = np.zeros_like(Pm)
-    np.log(np.where(mask, Pm / denom, 1.0), out=contrib, where=mask)
-    return (Pm * contrib).sum(axis=(1, 2)) / base
-
-
-def _pair_mi_block(Xt, ym, P, k, base):
+def _pair_mi_block(Xt, P, k, unit):
     """I(X_i; X_j) for a block of pairs over the SHARED 0..k-1 code space.
 
-    ``Xt`` is the transposed (p, n) coded matrix, ``P`` an (m, 2) int64 pair
-    array; a second index of -1 means "the label" (relevance pair). Returns
-    the (m,) MI vector. The full p×p matrix and the step-wise columns are
-    both jobs of :class:`BroadcastMIEngine` over this kernel, so lazy
-    columns are bit-identical to full-matrix columns by construction."""
-    A = Xt[P[:, 0]]  # (m, n) contiguous row gather
-    B = np.empty_like(A)
-    feat = P[:, 1] >= 0
-    if feat.any():
-        B[feat] = Xt[P[feat, 1]]
-    if (~feat).any():
-        B[~feat] = ym[None, :]
-    return _mi_rows(A, B, k, k, base)
+    ``Xt`` is the transposed (p+1, n) coded matrix with the label as its
+    last row, ``P`` an (m, 2) int64 pair array; a second index of p is a
+    relevance pair (f, label). Returns the (m,) MI vector. The full p×p
+    matrix and the step-wise columns are both jobs of
+    :class:`BroadcastMIEngine` over this kernel, so lazy columns are
+    bit-identical to full-matrix columns by construction."""
+    return mi_tables(contingency_tables(Xt[P[:, 0]], Xt[P[:, 1]], k, k), unit)
 
 
-def _joint_mi_block(Xt, ym, P, k, base):
+def _joint_mi_block(Xt, P, k, unit):
     """Vectorized I((X_i, X_j); Y) for a block of pairs — the JMI/CMIM
     statistic (Yang & Moody 1999). The fused (x_i, x_j) pair state is one
     axis (k² states in the shared code space), the label the other."""
-    return _mi_rows(Xt[P[:, 0]] * k + Xt[P[:, 1]], ym[None, :], k * k, k, base)
+    fused = Xt[P[:, 0]] * k + Xt[P[:, 1]]
+    return mi_tables(contingency_tables(fused, Xt[-1], k * k, k), unit)
 
 
 def mi_matrices_broadcast(
@@ -336,7 +301,7 @@ def mi_matrices_broadcast(
         p = engine.p
 
         def pairs_of(ids: np.ndarray) -> np.ndarray:
-            out = np.full((len(ids), 2), -1, dtype=np.int64)
+            out = np.full((len(ids), 2), p, dtype=np.int64)
             rel = ids < p
             out[rel, 0] = ids[rel]
             out[~rel, 0], out[~rel, 1] = triu_pair(ids[~rel] - p, p)
@@ -404,32 +369,27 @@ class BroadcastMIEngine:
                 "DataFrame selectors for row-scale inputs."
             )
         self.spark = spark
-        self.log_base = log_base(unit)
-        # held TRANSPOSED (p, n): a pair gather is then two contiguous
-        # row copies instead of a strided column walk (one cache miss per
-        # element — measured ~10x slower at p=5000)
-        self._data = LazyBroadcast(spark, (np.ascontiguousarray(X_codes.T), y_codes))
+        log_base(unit)  # an unknown unit raises here, not in a task
+        self.unit = unit
+        # held TRANSPOSED (p+1, n), the label last: a pair gather is then
+        # two contiguous row copies instead of a strided column walk (one
+        # cache miss per element — measured ~10x slower at p=5000)
+        self._data = LazyBroadcast(spark, np.vstack([X_codes.T, y_codes]))
 
     def _run(
         self, n_pairs: int, pairs_of, joint: bool, tasks_per_core: int
     ) -> np.ndarray:
         """MI of pair ids ``0..n_pairs-1`` in one :func:`pair_job`;
         ``pairs_of(ids)`` maps ids to (m, 2) pair rows wherever it runs."""
-        k, base = self.k, self.log_base
+        k, unit, n = self.k, self.unit, self.n
         fn = _joint_mi_block if joint else _pair_mi_block
-        # pairs per inner block: keep every temp (~n*block int64) around 1MB
-        # so concurrent workers stay inside their malloc arenas — large
-        # blocks mmap/munmap tens of MB each and the page-fault churn across
-        # processes measured 5-8x slower than the same kernel
-        # single-process; the joint contingency is k× larger (k²·k cells)
+        # the joint contingency is k× larger (k²·k cells)
         cells = k * k * (k if joint else 1)
-        block = max(1, (1 << 14) // cells * max(1, 1000 // max(1, self.n)))
 
-        def score(ids: np.ndarray, data) -> np.ndarray:
-            Xm, ym = data
+        def score(ids: np.ndarray, Xt) -> np.ndarray:
             out = np.empty(len(ids), dtype=np.float64)
-            for s in range(0, len(ids), block):
-                out[s : s + block] = fn(Xm, ym, pairs_of(ids[s : s + block]), k, base)
+            for b in table_blocks(len(ids), cells, n):
+                out[b] = fn(Xt, pairs_of(ids[b]), k, unit)
             return out
 
         return pair_job(self.spark, n_pairs, score, self._data, self.n, tasks_per_core)
@@ -443,10 +403,12 @@ class BroadcastMIEngine:
     def relevance(self) -> np.ndarray:
         """I(X_f; Y) for every feature — one :func:`pair_job`, p pairs."""
 
-        def pairs_of(ids: np.ndarray) -> np.ndarray:
-            return np.stack([ids, np.full(len(ids), -1, np.int64)], axis=1)
+        p = self.p
 
-        return self._run(self.p, pairs_of, joint=False, tasks_per_core=1)
+        def pairs_of(ids: np.ndarray) -> np.ndarray:
+            return np.stack([ids, np.full(len(ids), p, np.int64)], axis=1)
+
+        return self._run(p, pairs_of, joint=False, tasks_per_core=1)
 
     @staticmethod
     def _canonical(s: int, cand: np.ndarray) -> np.ndarray:

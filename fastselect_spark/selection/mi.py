@@ -4,10 +4,10 @@
 Every MI scorer here is a function of ONE joint-count table: the value cube
 ``groupBy(all code columns).count()`` (:func:`value_cube`), a single
 partial+final hash aggregation bounded by the code-space product, not by
-the row count. Every relevance/redundancy table is a weighted-bincount
-marginalization of that cube on the driver (:func:`cube_mi`), and the MI
-arithmetic runs over the tiny tables with the reference's exact eps
-placement.
+the row count. The relevance/redundancy tables are cube-count-weighted
+stacks of ``_stats.contingency_tables`` on the driver (:func:`cube_mi`),
+and ``_stats.mi_tables`` finalizes each stack with the reference's exact
+eps placement.
 
 Encoding mirrors the reference's shared X∪y vocabulary
 (mRMR.py:90, ``np.searchsorted``). The cube holds every distinct value, so
@@ -17,7 +17,7 @@ over the data.
 Above the cube's cell cap, :func:`mi_matrices` falls back to ONE vectorized
 treeAggregate pass: per partition, integer joint-count histograms for every
 (feature, label) pair and every (feature_i, feature_j) i<j pair —
-``np.bincount`` on fused codes inside Arrow batches — merged by the tree
+stacked ``contingency_tables`` blocks inside Arrow batches — merged by the tree
 reduction in ``_agg.py``. Its vocabulary is a global distinct-union
 (``collect_set`` per column, bounded by cardinality, not rows) broadcast
 into the kernel closure. Both paths count exact integers, so their tables
@@ -26,15 +26,20 @@ into the kernel closure. Both paths count exact integers, so their tables
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fastselect_spark.selection._agg import tree_reduce_ndarrays
-from fastselect_spark.selection._stats import log_base, mi_from_contingency
+from fastselect_spark.selection._agg import symmetric_from_triu, tree_reduce_ndarrays
+from fastselect_spark.selection._stats import (
+    contingency_tables,
+    log_base,
+    mi_tables,
+    table_blocks,
+)
 
 MAX_STATES = 512
 # cells of the joint value cube collected to the driver; above it a caller
@@ -52,10 +57,6 @@ def shared_vocabulary(
     ).collect()[0]
     vals = np.unique(np.concatenate([np.asarray(row[c], dtype=np.float64) for c in cols]))
     return vals
-
-
-def _pair_index(p: int) -> list[tuple[int, int]]:
-    return [(i, j) for i in range(p) for j in range(i + 1, p)]
 
 
 def check_states(k: int) -> None:
@@ -106,32 +107,20 @@ def _shared_codes(raw: np.ndarray) -> tuple[np.ndarray, int]:
     return np.searchsorted(vocab, raw), len(vocab)
 
 
-def _cube_table(
-    codes: np.ndarray, counts: np.ndarray, k: int, a: int, b: int
-) -> np.ndarray:
-    """(k, k) joint count table of cube columns ``a`` and ``b``."""
-    return np.bincount(
-        codes[:, a] * k + codes[:, b], weights=counts, minlength=k * k
-    ).reshape(k, k)
+def _label_and_pairs(p: int, redundancy: bool) -> tuple[np.ndarray, np.ndarray]:
+    """(I, J) rows of a (p+1)-row code matrix whose last row is the label:
+    the p relevance pairs (f, label), then, with ``redundancy``, the
+    feature pairs i < j in ``np.triu_indices(p, 1)`` order."""
+    iu, ju = np.triu_indices(p, 1) if redundancy else (np.empty(0, np.int64),) * 2
+    return np.concatenate([np.arange(p), iu]), np.concatenate([np.full(p, p), ju])
 
 
-def _mi_from_tables(
-    table: Callable[[int, int], np.ndarray],
-    p: int,
-    unit: str,
-    pairs: list[tuple[int, int]],
-) -> tuple[np.ndarray, np.ndarray]:
-    """(relevance[p], redundancy[p, p]) from ``table(a, b)``, the contingency
-    of features a and b, where b == p names the label."""
-    relevance = np.array(
-        [mi_from_contingency(table(f, p), unit=unit) for f in range(p)]
-    )
-    redundancy = np.zeros((p, p), dtype=np.float64)
-    for i, j in pairs:
-        mi = mi_from_contingency(table(i, j), unit=unit)
-        redundancy[i, j] = mi
-        redundancy[j, i] = mi
-    return relevance, redundancy
+def _split_pairs(mi: np.ndarray, p: int, redundancy: bool) -> tuple[np.ndarray, np.ndarray]:
+    """(relevance[p], redundancy[p, p]) from MI in :func:`_label_and_pairs`
+    order; the redundancy is all zeros when it was not asked for."""
+    if not redundancy:
+        return mi[:p], np.zeros((p, p), dtype=np.float64)
+    return mi[:p], symmetric_from_triu(mi[p:], p)
 
 
 def cube_mi(
@@ -141,15 +130,17 @@ def cube_mi(
     compute_redundancy: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(relevance[p], redundancy[p, p]) marginalized from a value cube whose
-    last column is the label."""
+    last column is the label: every table is a cube-count-weighted
+    :func:`contingency_tables` stack, finalized block by block."""
     p = raw.shape[1] - 1
     codes, k = _shared_codes(raw)
-    return _mi_from_tables(
-        lambda a, b: _cube_table(codes, counts, k, a, b),
-        p,
-        unit,
-        _pair_index(p) if compute_redundancy else [],
-    )
+    Ct = np.ascontiguousarray(codes.T)
+    I, J = _label_and_pairs(p, compute_redundancy)
+    mi = np.empty(len(I), dtype=np.float64)
+    for b in table_blocks(len(I), k * k, len(counts)):
+        T = contingency_tables(Ct[I[b]], Ct[J[b]], k, k, weights=counts)
+        mi[b] = mi_tables(T, unit)
+    return _split_pairs(mi, p, compute_redundancy)
 
 
 def mi_matrices(
@@ -176,7 +167,7 @@ def mi_matrices(
     if cube is not None:
         return cube_mi(*cube, unit=unit, compute_redundancy=compute_redundancy)
 
-    pairs = _pair_index(p) if compute_redundancy else []
+    I, J = _label_and_pairs(p, compute_redundancy)
     vocab = shared_vocabulary(df, cols)
     k = len(vocab)
     check_states(k)
@@ -189,8 +180,7 @@ def mi_matrices(
     proj = df.select(*[F.col(c).cast(cast_type) for c in cols])
 
     def partial(batches: Iterator[pd.DataFrame]) -> dict[str, np.ndarray]:
-        rel = np.zeros((p, k, k), dtype=np.int64)
-        red = np.zeros((len(pairs), k, k), dtype=np.int64) if pairs else None
+        tables = np.zeros((len(I), k, k), dtype=np.int64)
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -198,30 +188,13 @@ def mi_matrices(
                 codes = pdf.to_numpy(dtype=np.int64)
             else:
                 codes = np.searchsorted(vocab, pdf.to_numpy(dtype=np.float64))
-            y = codes[:, p]
-            kk = k * k
-            # np.bincount on fused codes is ~10x faster than np.add.at
-            for f in range(p):
-                rel[f] += np.bincount(
-                    codes[:, f] * k + y, minlength=kk
-                ).reshape(k, k)
-            for idx, (i, j) in enumerate(pairs):
-                red[idx] += np.bincount(
-                    codes[:, i] * k + codes[:, j], minlength=kk
-                ).reshape(k, k)
-        out = {"rel": rel}
-        if red is not None:
-            out["red"] = red
-        return out
+            Ct = np.ascontiguousarray(codes.T)
+            for b in table_blocks(len(I), k * k, len(codes)):
+                tables[b] += contingency_tables(Ct[I[b]], Ct[J[b]], k, k)
+        return {"tables": tables}
 
     merged = tree_reduce_ndarrays(proj, partial)
-    slot = {pair: idx for idx, pair in enumerate(pairs)}
-    return _mi_from_tables(
-        lambda a, b: merged["rel"][a] if b == p else merged["red"][slot[a, b]],
-        p,
-        unit,
-        pairs,
-    )
+    return _split_pairs(mi_tables(merged["tables"], unit), p, compute_redundancy)
 
 
 def mi_pair(
@@ -242,10 +215,10 @@ def mi_pair(
     b_vals = sorted({r["__b"] for r in rows})
     ai = {v: i for i, v in enumerate(a_vals)}
     bi = {v: i for i, v in enumerate(b_vals)}
-    table = np.zeros((len(a_vals), len(b_vals)), dtype=np.float64)
+    table = np.zeros((1, len(a_vals), len(b_vals)), dtype=np.float64)
     for r in rows:
-        table[ai[r["__a"]], bi[r["__b"]]] = r["count"]
-    return mi_from_contingency(table, unit=unit)
+        table[0, ai[r["__a"]], bi[r["__b"]]] = r["count"]
+    return float(mi_tables(table, unit)[0])
 
 
 def gain_ratio(
@@ -270,16 +243,16 @@ def gain_ratio(
     if cube is None:
         raise ValueError("joint value cube exceeds the cap; bin features first")
     raw, counts = cube
-    n = float(counts.sum())
     codes, k = _shared_codes(raw)
-    ig = np.empty(p, dtype=np.float64)
-    si = np.empty(p, dtype=np.float64)
-    for f in range(p):
-        table = _cube_table(codes, counts, k, f, p)
-        ig[f] = mi_from_contingency(table, unit=unit)
-        marg = table.sum(axis=1)
-        px = marg[marg > 0] / n
-        si[f] = float(-(px * np.log(px)).sum() / base)
+    Ct = np.ascontiguousarray(codes.T)
+    T = np.empty((p, k, k), dtype=np.float64)
+    for b in table_blocks(p, k * k, len(counts)):
+        T[b] = contingency_tables(Ct[:p][b], Ct[p], k, k, weights=counts)
+    ig = mi_tables(T, unit)
+    px = T.sum(axis=2) / counts.sum()
+    lg = np.zeros_like(px)
+    np.log(px, out=lg, where=px > 0)
+    si = -(px * lg).sum(axis=1) / base
     ratio = np.where(si > 0, ig / np.where(si > 0, si, 1.0), 0.0)
     return ig, si, ratio
 

@@ -8,7 +8,8 @@ marginalizations of the SAME joint value cube ``groupBy(all code columns)
   count(cell) · cell_code_f`` over cells with ``cell_y = c`` (the codes ARE
   the values — Chi2.py:7-22 semantics exactly);
 - class frequencies / priors: cube counts grouped by the y code;
-- every MI relevance / redundancy table: weighted bincounts of cube cells
+- every MI relevance / redundancy table: cube-count-weighted
+  ``contingency_tables`` stacks finalized by ``mi_tables``
   (mutual_information.py:25-63 semantics via the shared X∪y vocabulary).
 
 So one hash aggregation over the data (partial+final, whole-stage codegen)

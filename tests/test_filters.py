@@ -17,7 +17,9 @@ from fastselect_spark.selection import (
     feature_variances,
     variance_threshold,
 )
+from fastselect_spark.selection._stats import contingency_tables, mi_tables, su_tables
 from tests.oracle_numpy import mi_oracle
+from tests.test_pair_paths import _jobs
 
 
 def _to_df(spark, X, y, partitions=4):
@@ -156,6 +158,87 @@ def test_fcbf_delta_floor_and_constant(spark):
     assert sel.top_features_.tolist() == [0]
     with pytest.raises(ValueError, match="features"):
         sel.transform(df.drop("f1"))
+
+
+def _finalizer_case(name):
+    """(table stack (1, ka, kb), a codes, b codes) for the oracle; the codes
+    are None for the all-zero table."""
+    rng = np.random.default_rng(17)
+    if name == "all_zero":
+        return np.zeros((1, 4, 3), dtype=np.int64), None, None
+    if name == "cube_weighted":
+        # a value cube's distinct cells, weighted by float cell counts
+        cells = np.array([[0, 0], [0, 2], [1, 1], [2, 0], [2, 2], [3, 1]])
+        counts = np.array([5.0, 1.0, 7.0, 2.0, 9.0, 3.0])
+        a, b = cells[:, 0], cells[:, 1]
+        T = contingency_tables(a[None], b[None], 4, 3, weights=counts[None])
+        reps = counts.astype(int)
+        return T, np.repeat(a, reps), np.repeat(b, reps)
+    if name == "empty_rows_cols":
+        a, b, ka, kb = rng.choice([0, 2, 5], 300), rng.choice([1, 3], 300), 7, 5
+    elif name == "constant_column":
+        a, b, ka, kb = np.full(120, 2), rng.integers(0, 3, 120), 4, 3
+    else:
+        a, b, ka, kb = rng.integers(0, 9, 400), rng.integers(0, 6, 400), 9, 6
+    return contingency_tables(a[None], b[None], ka, kb), a, b
+
+
+@pytest.mark.parametrize(
+    "case", ["empty_rows_cols", "all_zero", "constant_column", "cube_weighted", "dense"]
+)
+def test_finalizers_match_oracles(case):
+    """mi_tables and su_tables against the per-vector oracles, and the same
+    bits for a table alone and at any position of a larger stack of its
+    shape. ``_su_oracle`` takes the eps-form MI, whose +1e-12 in each
+    cell's denominator CFS's SU leaves out: that moves SU by about 1e-12
+    per occupied cell, so SU is held to 1e-10 and MI to 1e-12."""
+    T, a, b = _finalizer_case(case)
+    mi, su = mi_tables(T)[0], su_tables(T)[0]
+    if a is None:
+        assert mi == 0.0 and su == 0.0
+    else:
+        assert abs(mi - mi_oracle(a, b)) <= 1e-12
+        assert abs(su - _su_oracle(a, b)) <= 1e-10
+    if case == "constant_column":
+        assert su == 0.0 and abs(mi) < 1e-10  # the reference eps leaves ~1e-12
+    rng = np.random.default_rng(3)
+    others = rng.integers(0, 40, (6,) + T.shape[1:]).astype(T.dtype)
+    for pos in range(len(others) + 1):
+        stack = np.concatenate([others[:pos], T, others[pos:]])
+        assert mi_tables(stack)[pos] == mi
+        assert su_tables(stack)[pos] == su
+
+
+def test_fcbf_query_runs_one_cube(spark, driver_calls, tmp_path):
+    """The fcbf_selection query reads SU(f;Y) off its fit (``su_y_``), so
+    it runs the value-cube aggregation once: its jobs are the parquet
+    registration's plus one cube's."""
+    import __spark_entry__ as entry
+    from fastselect_spark.selection import jmi, mi
+
+    rng = np.random.default_rng(9)
+    n = 400
+    lineitem = pd.DataFrame(
+        {
+            "l_linenumber": rng.integers(1, 8, n),
+            "l_quantity": rng.integers(1, 51, n).astype(float),
+            "l_discount": rng.integers(0, 11, n) / 100.0,
+            "l_tax": rng.integers(0, 9, n) / 100.0,
+            "l_returnflag": rng.choice(["A", "N", "R"], n),
+        }
+    )
+    sf = str(tmp_path)
+    spark.createDataFrame(lineitem).write.parquet(f"{sf}/lineitem.parquet")
+    register_jobs = _jobs(
+        spark, "fcbf-register", lambda: entry._register(spark, sf, "lineitem")
+    )
+    m = spark.sql(entry._LINEITEM_CODES_SQL)
+    cols = entry._MI_FEATURES + ["y"]
+    cube_jobs = _jobs(spark, "fcbf-cube", lambda: mi.value_cube(m, cols))
+    cubes = driver_calls(jmi, "value_cube")
+    query_jobs = _jobs(spark, "fcbf-query", lambda: entry._q_fcbf_selection(spark, sf))
+    assert cubes == ["value_cube"]
+    assert cube_jobs > 0 and query_jobs == register_jobs + cube_jobs
 
 
 # ------------------------------------------------------- ANOVA / variance --

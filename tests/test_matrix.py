@@ -332,23 +332,23 @@ def test_stage_extra_cols_preserved(spark):
 # ---------- step-wise broadcast greedy engine ----------
 
 def test_joint_mi_block_matches_contingency_oracle(coded):
-    """_joint_mi_block's fused-triple-code MI must equal mi_from_contingency
-    over the explicit (pair-state × label) count table, pair by pair."""
-    from fastselect_spark.selection._stats import mi_from_contingency
+    """_joint_mi_block's fused-triple-code MI must equal mi_tables over the
+    explicit (pair-state × label) count table, pair by pair — exactly, as
+    both run the one MI finalizer."""
+    from fastselect_spark.selection._stats import mi_tables
     from fastselect_spark.selection.matrix import _joint_mi_block
 
     X, y, _ = coded
     Xc, yc, _ = encode_shared(X, y)
     k = int(max(Xc.max(), yc.max())) + 1
-    Xt = np.ascontiguousarray(Xc.T)
+    Xt = np.vstack([Xc.T, yc])
     pairs = np.array([[0, 3], [1, 2], [5, 11], [7, 0]], dtype=np.int64)
-    got = _joint_mi_block(Xt, yc, pairs, k, np.log(2.0))
+    got = _joint_mi_block(Xt, pairs, k, "bit")
     for m, (i, j) in enumerate(pairs):
         fused = Xc[:, i] * k + Xc[:, j]
-        table = np.zeros((k * k, k), dtype=np.int64)
-        np.add.at(table, (fused, yc), 1)
-        want = mi_from_contingency(table, unit="bit")
-        np.testing.assert_allclose(got[m], want, rtol=1e-10, atol=1e-12)
+        table = np.zeros((1, k * k, k), dtype=np.int64)
+        np.add.at(table, (0, fused, yc), 1)
+        assert got[m] == mi_tables(table, "bit")[0]
 
 
 def test_mrmr_stepwise_matches_full(spark, coded):

@@ -30,13 +30,32 @@ def _Xy(n: int = 80, p: int = 7, seed: int = 3):
     return X, y
 
 
-def _cfs(spark, X, y):
-    cols = [f"f{i}" for i in range(X.shape[1])]
-    pdf = pd.DataFrame(X, columns=cols)
-    pdf["label"] = y
+def _cfs_fit(spark, pdf, y):
+    cols = list(pdf.columns)
+    pdf = pdf.assign(label=y)
     # stage_mode="small" pins the CFS stage so only the pairs gate decides
     m = CFSSelector(stage_mode="small").fit(spark.createDataFrame(pdf), cols, "label")
     return m.support_mask_, m.r_cf_, m.r_ff_, m.merit_
+
+
+def _cfs(spark, X, y):
+    return _cfs_fit(spark, pd.DataFrame(X, columns=[f"f{i}" for i in range(X.shape[1])]), y)
+
+
+def _cfs_mixed(spark, X, y):
+    """CFS over mixed table shapes: a float column binned to n_bins (10)
+    and discrete columns with 2, 3 and 5 states, so the pair kernel
+    stacks several (k_i, k_j) shapes in one call."""
+    noise = np.random.default_rng(5).normal(0, 0.4, len(y))
+    pdf = pd.DataFrame(
+        {
+            "x": X[:, 0] + noise,
+            "b2": X[:, 1] % 2,
+            "c3": X[:, 2],
+            "c5": (X[:, 3] + 2 * X[:, 4]) % 5,
+        }
+    )
+    return _cfs_fit(spark, pdf, y)
 
 
 CALLS = {
@@ -52,6 +71,7 @@ CALLS = {
     "jmi": lambda spark, X, y: jmi_select_matrix(spark, X, y, 3),
     "cmim": lambda spark, X, y: cmim_select_matrix(spark, X, y, 3),
     "cfs": _cfs,
+    "cfs_mixed": _cfs_mixed,
 }
 
 
